@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.yaml.snakeyaml.Yaml
 import graft.model.Point
-import graft.sources.{ActorPushSource, AmqpPushSource, LiveSource, ReplaySource, SpoolSource, TelemetrySource}
+import graft.sources.{ActorPushSource, AmqpPushSource, LiveSource, ReplaySource, SpoolBacked, SpoolFanIn, SpoolSource, TelemetrySource}
 import graft.sinks.TelemetrySink
 import graft.streaming.StreamOps
 
@@ -180,11 +180,16 @@ final class Engine(spark: SparkSession) {
     built
   }
 
-  /** Per-source tag merge (source-level tags + source name tag, mirroring
-    * source.py:98-99) then global normalize (T11). */
+  /** Every spool-backed source through one file stream ([[SpoolFanIn]],
+    * which merges their configured `tags` and `bucket`), every other
+    * source as its own stream with its `tags` merged over its points' and
+    * its `bucket` filling theirs (source.py:98-99); then the global
+    * normalize (T11). */
   def unifiedStream(config: Config): DataFrame = {
     import org.apache.spark.sql.functions._
-    val streams = sharedSources(config).map { s =>
+    val sources = sharedSources(config)
+    val spools = sources.collect { case s: SpoolBacked => s.spool() }
+    val others = sources.filterNot(_.isInstanceOf[SpoolBacked]).map { s =>
       val base = s.stream(spark)
       val withSrcTags =
         if (s.tags.isEmpty) base
@@ -194,8 +199,8 @@ final class Engine(spark: SparkSession) {
       s.bucket.map(b => withSrcTags.withColumn(Point.Bucket,
         coalesce(col(Point.Bucket), lit(b)))).getOrElse(withSrcTags)
     }
-    val unioned = streams.reduce(_ unionByName _)
-    StreamOps.normalize(config.tags)(unioned)
+    val fanIn = if (spools.isEmpty) Nil else Seq(SpoolFanIn.stream(spark, spools))
+    StreamOps.normalize(config.tags)((fanIn ++ others).reduce(_ unionByName _))
   }
 
   private var workDir: String = _
@@ -204,7 +209,10 @@ final class Engine(spark: SparkSession) {
     conf = config
     this.workDir = workDir
     built = Nil // new config -> new source instances
-    config.observers.foreach(startObserver)
+    // a source rejected after another's poller started must not leave
+    // that poller conversing with its device
+    try config.observers.foreach(startObserver)
+    catch { case e: Throwable => stopPolling(); throw e }
   }
 
   private def startObserver(o: ObserverConf): Unit = {
@@ -253,12 +261,13 @@ final class Engine(spark: SparkSession) {
 
   def stop(name: String): Unit = queries.get(name).foreach(_.stop())
 
-  /** Stop live sources' poll threads (spools stay readable) — call before
-    * draining with `processAllAvailable`, which can never settle while a
-    * poller keeps appending spool files. */
+  /** Stop live sources' poll and consumer threads (spools stay
+    * readable) — call before draining with `processAllAvailable`, which
+    * can never settle while a poller keeps appending spool files. */
   def stopPolling(): Unit = built.foreach {
-    case l: graft.sources.LiveSource => l.stopPolling()
-    case a: graft.sources.ActorPushSource => a.stopPush()
+    case l: LiveSource => l.stopPolling()
+    case a: ActorPushSource => a.stopPush()
+    case a: AmqpPushSource => a.stopConsuming()
     case _ => ()
   }
 

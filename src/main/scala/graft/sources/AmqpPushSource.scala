@@ -2,7 +2,6 @@ package graft.sources
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.util.concurrent.atomic.AtomicBoolean
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.control.EngineConfig.SourceConf
 
 /** S11 from YAML — the live RabbitMQ source (`AMQP.py:85-216`): an
@@ -30,7 +29,7 @@ import graft.control.EngineConfig.SourceConf
   * message after reconnect is possible — the sink's idempotent dedup
   * absorbs it, same contract as every push source here.
   */
-final case class AmqpPushSource(conf: SourceConf) extends TelemetrySource {
+final case class AmqpPushSource(conf: SourceConf) extends SpoolBacked {
   def name: String = conf.name
   def bucket: Option[String] = conf.bucket
   def tags: Map[String, String] = conf.tags
@@ -116,14 +115,12 @@ final case class AmqpPushSource(conf: SourceConf) extends TelemetrySource {
     if (conn != null) conn.close()
   }
 
-  def stream(spark: SparkSession): DataFrame = {
+  def spool(): SpoolSource = {
     val keywords = conf.options.get("keywords")
       .map(_.asInstanceOf[Seq[Any]].map(_.toString)).getOrElse(Seq.empty)
     require(keywords.nonEmpty,
       s"$name: 'keywords' is required (dotted body paths — the engine's " +
         "static form of the reference's dynamic flatten, like T3's whitelist)")
-    val groupers = conf.options.get("groupers")
-      .map(_.asInstanceOf[Seq[Any]].map(_.toString)).getOrElse(Seq.empty)
     req("exchange") // validate before the daemon starts
     // the streaming text read rejects a missing path — create it before
     // the first delivery does
@@ -134,14 +131,23 @@ final case class AmqpPushSource(conf: SourceConf) extends TelemetrySource {
       thread.setDaemon(true)
       thread.start()
     }
-    val raw = SpoolSource(conf.copy(options =
+    SpoolSource(conf.copy(options =
       conf.options + ("path" -> spoolDir) + ("parser" -> "amqp")))
-    raw.stream(spark)
   }
 
+  /** Stop the consumer and wait for its thread, so "stopped" means the
+    * spool is frozen (spool and stream remain readable). */
   def stopConsuming(): Unit = {
     running.set(false)
-    if (thread != null) thread.interrupt()
+    val t = thread
+    if (t != null) {
+      t.interrupt()
+      // unblocks a consume wait mid-read
+      val c = conn
+      if (c != null) c.close()
+      if (t != Thread.currentThread())
+        try t.join(5000) catch { case _: InterruptedException => () }
+    }
     started.set(false)
   }
 }

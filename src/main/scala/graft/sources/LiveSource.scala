@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.util.concurrent.atomic.AtomicBoolean
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.control.EngineConfig.SourceConf
 
 /** Config-driven LIVE device source — the YAML-expressible form of the
@@ -24,11 +23,11 @@ import graft.control.EngineConfig.SourceConf
   * parser when it names a known device protocol, or given explicitly via
   * `request` / `terminator` options for a generic line device. `delay`
   * is seconds between polls (reference `TCPSource.delay`, default 1 s).
-  * The poller starts on the first `stream()` call (engine start) and is
+  * The poller starts on the first `spool()` call (engine start) and is
   * a daemon thread; failures back off ×e and never kill it
   * ([[PollingSource]]'s isolation contract).
   */
-final case class LiveSource(conf: SourceConf) extends TelemetrySource {
+final case class LiveSource(conf: SourceConf) extends SpoolBacked {
   def name: String = conf.name
   def bucket: Option[String] = conf.bucket
   def tags: Map[String, String] = conf.tags
@@ -94,7 +93,7 @@ final case class LiveSource(conf: SourceConf) extends TelemetrySource {
     }
   }
 
-  def stream(spark: SparkSession): DataFrame = {
+  def spool(): SpoolSource = {
     // Validate the WHOLE chain before any side effect: a config the
     // downstream SpoolSource will reject (no 'parser' — nothing could
     // turn replies into points) must fail here, NOT after the poll
@@ -102,21 +101,24 @@ final case class LiveSource(conf: SourceConf) extends TelemetrySource {
     // orphan (stopPolling is never reached on a failed start).
     val p = parser
     val fn = pollFn()
-    // idempotent across engine restarts: restart() re-calls stream(),
+    // idempotent across engine restarts: restart() re-calls spool(),
     // which must not spawn a second poller onto the same spool
+    val retentionMs = opt("retention_ms").map(_.toLong).getOrElse(0L)
     if (started.compareAndSet(false, true)) {
       val delayMs = opt("delay").map(s => (s.toDouble * 1000).toLong).getOrElse(1000L)
       poller = new PollingSource(name, spoolDir, fn, delayMs,
         bucket = bucket, tags = tags,
         // retention_ms bounds a long-running daemon's spool (the sweep
-        // contract is on SpoolRetention); pair with read-side
-        // max_file_age / clean_source for the exactly-once-safe half
-        retentionMs = opt("retention_ms").map(_.toLong).getOrElse(0L))
+        // contract is on SpoolRetention)
+        retentionMs = retentionMs)
       poller.start()
     }
-    SpoolSource(conf.copy(options =
-        conf.options + ("path" -> spoolDir) + ("parser" -> p)))
-      .stream(spark)
+    // A reader lagging past the window can have a file listed by the
+    // source log and swept before the read opens it; without
+    // ignoreMissingFiles that kills the query (FAILED_READ_FILE) — see
+    // PollingSource.rawStream
+    SpoolSource(conf.copy(options = conf.options + ("path" -> spoolDir) + ("parser" -> p)),
+      readOptions = if (retentionMs > 0) Map("ignoreMissingFiles" -> "true") else Map.empty)
   }
 
   /** Stop the poll thread (spool and stream remain readable). */

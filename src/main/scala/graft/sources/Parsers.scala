@@ -8,13 +8,26 @@ import graft.model.Point
 /** Wire-protocol parsers for the reference's sensor sources, re-expressed
   * as pure `DataFrame => DataFrame` transforms over a frame of raw replies
   * (`raw STRING, recv_time TIMESTAMP`, plus any per-source columns). Each
-  * returns rows in the uniform point schema ([[graft.model.Point]]).
+  * returns rows in the uniform point schema ([[graft.model.Point]]), with
+  * the input's other columns carried through after it.
+  *
+  * Per-source options are `Column`s, so one parse serves many sources
+  * when each option is a lookup keyed by a carried source column
+  * ([[SpoolFanIn]]); an option column may reference carried columns
+  * only. Each parser has one body; its `String` form wraps the options
+  * in literals.
   *
   * Splitting protocol *parsing* from socket *polling* is the executor/driver
   * boundary of SURVEY.md §3.1: a driver-side poller only appends raw reply
   * lines; all parsing is distributed, codegen'd column work.
   */
 object Parsers {
+
+  /** The input's columns other than the `consumed` ones, carried through. */
+  private def carried(df: DataFrame, consumed: String*): Seq[Column] =
+    df.columns.toSeq.filterNot(consumed.contains).map(col)
+
+  private def rawCarried(raw: DataFrame): Seq[Column] = carried(raw, "raw", "recv_time")
 
   private def pointCols(measurement: Column, tags: Column, fields: Column,
       time: Column, bucket: Column): Seq[Column] = Seq(
@@ -33,25 +46,25 @@ object Parsers {
     * points (older than `2*delay` vs `recv_time`) dropped (lvm.py:80-82).
     */
   def govee(raw: DataFrame, expectedAddress: String, device: String,
-      delaySeconds: Long = 10, bucket: String = "sensors"): DataFrame = {
+      delaySeconds: Long = 10, bucket: String = "sensors"): DataFrame =
+    govee(raw, lit(expectedAddress), lit(device), lit(delaySeconds), lit(bucket))
+
+  def govee(raw: DataFrame, expectedAddress: Column, device: Column,
+      delaySeconds: Column, bucket: Column): DataFrame = {
     val parts = split(col("raw"), "\\s+")
+    val address = upper(parts.getItem(0))
+    val deviceTime = to_timestamp(parts.getItem(4))
     val parsed = raw
-      .filter(col("raw") =!= "?" && size(split(col("raw"), "\\s+")) >= 5)
-      .select(
-        upper(parts.getItem(0)).as("address"),
-        parts.getItem(1).cast(DoubleType).as("temp"),
-        parts.getItem(2).cast(DoubleType).as("hum"),
-        to_timestamp(parts.getItem(4)).as("device_time"),
-        col("recv_time"))
-      .filter(col("address") === lit(expectedAddress.toUpperCase)) // T7 guard
+      .filter(col("raw") =!= "?" && size(parts) >= 5)
+      .filter(address === upper(expectedAddress)) // T7 guard
       .filter( // T6 staleness
-        unix_timestamp(col("recv_time")) - unix_timestamp(col("device_time")) <= 2 * delaySeconds)
-    val tags = map(lit("address"), col("address"), lit("device"), lit(device))
-    val temperature = parsed.select(pointCols(lit("temperature"), tags,
-      map(lit("value"), col("temp")), col("device_time"), lit(bucket)): _*)
-    val humidity = parsed.select(pointCols(lit("humidity"), tags,
-      map(lit("value"), col("hum")), col("device_time"), lit(bucket)): _*)
-    temperature.unionByName(humidity)
+        unix_timestamp(col("recv_time")) - unix_timestamp(deviceTime) <= delaySeconds * 2)
+    val tags = map(lit("address"), address, lit("device"), device)
+    def point(measurement: String, value: Column): DataFrame =
+      parsed.select(pointCols(lit(measurement), tags, map(lit("value"), value),
+        deviceTime, bucket) ++ rawCarried(raw): _*)
+    point("temperature", parts.getItem(1).cast(DoubleType))
+      .unionByName(point("humidity", parts.getItem(2).cast(DoubleType)))
   }
 
   private val sens4Num = "([0-9]+?\\.[0-9]+E[+-][0-9]+)"
@@ -61,45 +74,54 @@ object Parsers {
   /** S4 — Sens4 transducer reply (`lvm.py:140-174`):
     * `@{id}ACKQ<pz>,<pir>,<cmb>,<temp>,...\` → one `pressure` point with
     * fields pz/pir/cmb/temp and the ccd tag. Unparseable replies dropped. */
-  def sens4(raw: DataFrame, ccd: String = "NA", bucket: String = "sensors"): DataFrame = {
+  def sens4(raw: DataFrame, ccd: String = "NA", bucket: String = "sensors"): DataFrame =
+    sens4(raw, lit(ccd), lit(bucket))
+
+  def sens4(raw: DataFrame, ccd: Column, bucket: Column): DataFrame = {
     val g = (i: Int) => regexp_extract(col("raw"), sens4Re, i).cast(DoubleType)
     raw.filter(regexp_extract(col("raw"), sens4Re, 1) =!= "")
-      .select(pointCols(lit("pressure"), map(lit("ccd"), lit(ccd)),
+      .select(pointCols(lit("pressure"), map(lit("ccd"), ccd),
         map(lit("pz"), g(1), lit("pir"), g(2), lit("cmb"), g(3), lit("temp"), g(4)),
-        col("recv_time"), lit(bucket)): _*)
+        col("recv_time"), bucket) ++ rawCarried(raw): _*)
   }
 
   /** S5 — LN2 scale reply (`lvm.py:217-240`): `... <weight> lb ...` →
     * `ln2_weigth` point (sic — the reference's measurement name, kept for
     * storage parity) with the `spectrograph: sp1` tag. */
-  def ln2Scale(raw: DataFrame, bucket: String = "sensors"): DataFrame = {
+  def ln2Scale(raw: DataFrame, bucket: String = "sensors"): DataFrame =
+    ln2Scale(raw, lit(bucket))
+
+  def ln2Scale(raw: DataFrame, bucket: Column): DataFrame = {
     val w = regexp_extract(col("raw"), "\\s([\\-0-9.]+)\\slb", 1)
     raw.filter(w =!= "")
       .select(pointCols(lit("ln2_weigth"), map(lit("spectrograph"), lit("sp1")),
-        map(lit("value"), w.cast(DoubleType)), col("recv_time"), lit(bucket)): _*)
+        map(lit("value"), w.cast(DoubleType)), col("recv_time"), bucket) ++ rawCarried(raw): _*)
   }
 
   /** S7 — ADAM-6251 thermistor reply (`lvm.py:383-418`): `!01<HEX>\r` →
     * 16 points, one per channel, field key `channel{n}`, bit extracted from
     * the hex mask, `channel_name` tag from `mapping`. The explode is a
-    * generator (no shuffle); the mapping lookup is a literal map lookup,
-    * the Spark form of the reference's dict.get. */
+    * generator (no shuffle); the mapping lookup is a map lookup, the
+    * Spark form of the reference's dict.get. `mapping` is a
+    * `MAP<STRING,STRING>` column. */
   def thermistors(raw: DataFrame, mapping: Map[String, String],
-      channels: Int = 16, bucket: String = "sensors"): DataFrame = {
+      channels: Int = 16, bucket: String = "sensors"): DataFrame =
+    thermistors(raw, typedLit(mapping), lit(channels), lit(bucket))
+
+  def thermistors(raw: DataFrame, mapping: Column, channels: Column,
+      bucket: Column): DataFrame = {
     val hexMask = regexp_extract(col("raw"), "^!01([0-9A-F]+)\\r?$", 1)
-    val mappingCol =
-      if (mapping.isEmpty) map()
-      else map(mapping.toSeq.flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*)
+    val channel = concat(lit("channel"), col("__channel"))
     raw.filter(hexMask =!= "")
-      .withColumn("__mask", conv(hexMask, 16, 10).cast(LongType))
-      .withColumn("channel", explode(sequence(lit(0), lit(channels - 1))))
-      .withColumn("bit",
-        when(expr("shiftright(__mask, channel) & 1") > 0, 1.0).otherwise(0.0))
+      .select(Seq(col("recv_time"),
+        conv(hexMask, 16, 10).cast(LongType).as("__mask"),
+        explode(sequence(lit(0), channels - 1)).as("__channel")) ++ rawCarried(raw): _*)
       .select(pointCols(lit("thermistors"),
         map(lit("channel_name"),
-          coalesce(element_at(mappingCol, concat(lit("channel"), col("channel"))), lit(""))),
-        map(concat(lit("channel"), col("channel")), col("bit")),
-        col("recv_time"), lit(bucket)): _*)
+          coalesce(element_at(mapping, channel), lit(""))),
+        map(channel,
+          when(expr("shiftright(__mask, __channel) & 1") > 0, 1.0).otherwise(0.0)),
+        col("recv_time"), bucket) ++ rawCarried(raw): _*)
   }
 
   /** S6 — the driver-side poll fn for [[fileExists]]
@@ -114,13 +136,16 @@ object Parsers {
     * (lvm.py:287-307): field key is the file's basename, value 1.0/0.0;
     * the full path is carried as the `full_path` tag. */
   def fileExists(raw: DataFrame, file: String,
-      bucket: String = "sensors"): DataFrame = {
-    val basename = new java.io.File(file).getName
+      bucket: String = "sensors"): DataFrame =
+    fileExists(raw, lit(file), lit(bucket))
+
+  def fileExists(raw: DataFrame, file: Column, bucket: Column): DataFrame = {
+    val basename = regexp_extract(file, "([^/]*)/*$", 1)
     raw.filter(col("raw").isin("0", "1"))
       .select(pointCols(lit("file_exists"),
-        map(lit("full_path"), lit(file)),
-        map(lit(basename), col("raw").cast(DoubleType)),
-        col("recv_time"), lit(bucket)): _*)
+        map(lit("full_path"), file),
+        map(basename, col("raw").cast(DoubleType)),
+        col("recv_time"), bucket) ++ rawCarried(raw): _*)
   }
 
   /** S14 — TPM snapshot lines → one `tpm` point per tick
@@ -132,7 +157,10 @@ object Parsers {
     * are filtered out of the MapType fields (the reference ships the
     * heterogeneous dict to InfluxDB; our typed `fields` map is
     * DOUBLE-valued — SURVEY §7.4 #2). */
-  def tpmSnapshot(raw: DataFrame, bucket: String = "sensors"): DataFrame = {
+  def tpmSnapshot(raw: DataFrame, bucket: String = "sensors"): DataFrame =
+    tpmSnapshot(raw, lit(bucket))
+
+  def tpmSnapshot(raw: DataFrame, bucket: Column): DataFrame = {
     // Parse to MAP<STRING,STRING> first: from_json straight to a DOUBLE-valued
     // map nulls the ENTIRE map when any one entry is a string (PERMISSIVE mode
     // fails the whole conversion), which would drop a heterogeneous PLC tick
@@ -140,14 +168,14 @@ object Parsers {
     // numeric filtering (same regex as KeywordProcessor's try_cast) keeps them.
     val numericRe = "^[+-]?([0-9]*\\.)?[0-9]+([eE][+-]?[0-9]+)?$"
     val parsed = from_json(col("raw"), MapType(StringType, StringType))
-    raw.select(parsed.as("snapshot"), col("recv_time"))
+    raw.select(Seq(parsed.as("snapshot"), col("recv_time")) ++ rawCarried(raw): _*)
       .filter(col("snapshot").isNotNull && size(map_keys(col("snapshot"))) > 0)
       .withColumn("snapshot", transform_values(
         map_filter(col("snapshot"), (_, v) => v.isNotNull && v.rlike(numericRe)),
         (_, v) => v.cast(DoubleType)))
       .filter(size(map_keys(col("snapshot"))) > 0)
       .select(pointCols(lit("tpm"), map(),
-        col("snapshot"), col("recv_time"), lit(bucket)): _*)
+        col("snapshot"), col("recv_time"), bucket) ++ rawCarried(raw): _*)
   }
 
   /** S11 — AMQP actor replies ([[AmqpPushSource]] spool lines
@@ -160,14 +188,20 @@ object Parsers {
     * paths found in the body become tags named by their last segment
     * (AMQP.py:28-58 `flatten_dict` groupings). The static `keywords`
     * list is the engine's declared-intent form of the reference's
-    * dynamic dict flatten — same stance as T3's keyword whitelist. */
+    * dynamic dict flatten — same stance as T3's keyword whitelist; the
+    * two lists shape the plan, so they stay literal. */
   def amqpReplies(raw: DataFrame, keywords: Seq[String], groupers: Seq[String],
-      measurementPrefix: String = "reply.", bucket: String = "actors"): DataFrame = {
+      measurementPrefix: String = "reply.", bucket: String = "actors"): DataFrame =
+    amqpReplies(raw, keywords, groupers, lit(measurementPrefix), lit(bucket))
+
+  def amqpReplies(raw: DataFrame, keywords: Seq[String], groupers: Seq[String],
+      measurementPrefix: Column, bucket: Column): DataFrame = {
     val key = regexp_extract(col("raw"), "^([^\\t]+)\\t", 1)
     val body = unbase64(regexp_replace(col("raw"), "^[^\\t]+\\t", "")).cast(StringType)
-    val prefixed = "^" + java.util.regex.Pattern.quote(measurementPrefix) + "([^.]+)"
-    val actor = regexp_extract(key, prefixed, 1)
-    val measurement = when(actor =!= "", actor).otherwise(key)
+    // the actor segment: the run of non-dots right after the prefix
+    val actor = when(key.startsWith(measurementPrefix), regexp_extract(
+      key.substr(length(measurementPrefix) + 1, length(key)), "^([^.]+)", 1))
+    val measurement = when(actor.isNotNull && actor =!= "", actor).otherwise(key)
     def pathValue(k: String): Column = get_json_object(body, "$." + k)
     def filtered(pairs: Seq[Column]): Column =
       if (pairs.isEmpty) lit(null).cast(MapType(StringType, StringType))
@@ -182,14 +216,14 @@ object Parsers {
     })
     val tags = filtered(groupers.flatMap(k =>
       Seq(lit(k.split("\\.").last), pathValue(k))))
-    raw.filter(key =!= "").select(
+    raw.filter(key =!= "").select(Seq(
       measurement.as(Point.Measurement),
       tags.as(Point.Tags),
       fields.cast(MapType(StringType, DoubleType)).as(Point.Fields),
       fieldsStr.as(Point.FieldsStr),
       col("recv_time").cast(TimestampType).as(Point.Time),
       lit(null).cast(LongType).as(Point.TimeNs),
-      lit(bucket).cast(StringType).as(Point.Bucket))
+      bucket.cast(StringType).as(Point.Bucket)) ++ rawCarried(raw): _*)
   }
 
   /** S12/S13 wire lines ([[ModbusPoll.DriftPollFn]] spool format
@@ -198,16 +232,20 @@ object Parsers {
     * drift chain; empty units become null so non-unit devices carry no
     * units tag. */
   def driftWire(raw: DataFrame, measurement: String = "devices",
-      bucket: String = "actors"): DataFrame = {
+      bucket: String = "actors"): DataFrame =
+    driftWire(raw, lit(measurement), lit(bucket))
+
+  def driftWire(raw: DataFrame, measurement: Column, bucket: Column): DataFrame = {
     val p = split(col("raw"), "\t")
     driftDevices(raw
       .filter(size(p) >= 4)
-      .select(
+      .select(Seq(
         p.getItem(0).as("device"),
         p.getItem(1).as("raw_value"),
         when(p.getItem(2) === "", lit(null)).otherwise(p.getItem(2)).as("units"),
         p.getItem(3).cast(IntegerType).as("offset"),
-        col("recv_time")), measurement, bucket)
+        col("recv_time")) ++ rawCarried(raw): _*),
+      measurement, bucket)
   }
 
   /** T8/S12 — Modbus device reading (`drift.py:128-162`): one row per
@@ -215,17 +253,21 @@ object Parsers {
     * decode closed→1.0/open→0.0 into the measurement's field, others pass
     * through with units/offset tags. */
   def driftDevices(readings: DataFrame, measurement: String = "devices",
-      bucket: String = "actors"): DataFrame = {
+      bucket: String = "actors"): DataFrame =
+    driftDevices(readings, lit(measurement), lit(bucket))
+
+  def driftDevices(readings: DataFrame, measurement: Column, bucket: Column): DataFrame = {
     val isRelay = lower(col("units")) === "relay"
     val value = when(isRelay,
         when(lower(col("raw_value")) === "closed", 1.0)
           .when(lower(col("raw_value")) === "open", 0.0))
       .otherwise(col("raw_value").cast(DoubleType))
-    readings.select(pointCols(lit(measurement),
+    readings.select(pointCols(measurement,
       map_filter(map(
         lit("units"), when(isRelay, lit(null)).otherwise(col("units")),
         lit("offset"), col("offset").cast(StringType)), (_, v) => v.isNotNull),
       map(col("device"), value),
-      col("recv_time"), lit(bucket)): _*)
+      col("recv_time"), bucket) ++
+      carried(readings, "device", "raw_value", "units", "offset", "recv_time"): _*)
   }
 }

@@ -1,82 +1,37 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.control.EngineConfig.SourceConf
 import graft.transforms.KeywordProcessor
+
+/** A source whose replies land in a spool directory of `raw\tepochMillis`
+  * text files. Every spool-backed source of an engine is read through one
+  * file stream ([[SpoolFanIn]]); reading one alone is the fan-in of one. */
+trait SpoolBacked extends TelemetrySource {
+  /** Validate the config, start the writer side if there is one (once:
+    * later calls return the same spool), and describe what to read. */
+  def spool(): SpoolSource
+  def stream(spark: SparkSession): DataFrame = SpoolFanIn.stream(spark, Seq(spool()))
+}
 
 /** Config-driven streaming source: a raw-reply spool directory (what a
   * [[PollingSource]] writes, or any external process appending
   * `raw\tepochMillis` text files) parsed by a named wire parser — the
   * YAML-expressible form of the reference's per-device source entries
-  * (cerebro/etc/cerebro.yaml sources). */
-final case class SpoolSource(conf: SourceConf) extends TelemetrySource {
+  * (cerebro/etc/cerebro.yaml sources). `readOptions` pass through to the
+  * file stream reader. */
+final case class SpoolSource(conf: SourceConf,
+    readOptions: Map[String, String] = Map.empty) extends SpoolBacked {
   def name: String = conf.name
   def bucket: Option[String] = conf.bucket
   def tags: Map[String, String] = conf.tags
+  def spool(): SpoolSource = this
 
-  private def opt(key: String): Option[String] = conf.options.get(key).map(_.toString)
-  private def req(key: String): String =
+  private[sources] def opt(key: String): Option[String] = conf.options.get(key).map(_.toString)
+  private[sources] def req(key: String): String =
     opt(key).getOrElse(throw new IllegalArgumentException(s"$name: missing option '$key'"))
-
-  private def dictionaryConf: Map[String, ActorReplies.KeyDef] =
-    SpoolSource.dictionaryConf(conf.options)
-  private def keywordTagsConf: Map[String, KeywordProcessor.KeywordTagConf] =
-    SpoolSource.keywordTagsConf(conf.options)
-
-  def stream(spark: SparkSession): DataFrame = {
-    val raw = spark.readStream
-      .schema(StructType(Seq(StructField("value", StringType))))
-      .text(req("path"))
-      .select(
-        regexp_extract(col("value"), "^(.*)\\t([0-9]+)$", 1).as("raw"),
-        timestamp_millis(
-          regexp_extract(col("value"), "^(.*)\\t([0-9]+)$", 2).cast(LongType))
-          .as("recv_time"))
-    val b = bucket.getOrElse("sensors")
-    req("parser") match {
-      case "govee" => Parsers.govee(raw, req("address"),
-        opt("device").getOrElse(""), opt("delay").map(_.toLong).getOrElse(10L), b)
-      case "sens4" => Parsers.sens4(raw, opt("ccd").getOrElse("NA"), b)
-      case "ln2_scale" => Parsers.ln2Scale(raw, b)
-      case "lvm_thermistors" => Parsers.thermistors(raw,
-        conf.options.get("mapping").map(_.asInstanceOf[Map[String, Any]]
-          .map { case (k, v) => k -> v.toString }).getOrElse(Map.empty),
-        opt("channels").map(_.toInt).getOrElse(16), b)
-      case "check_file_exists" => Parsers.fileExists(raw, req("file"), b)
-      case "drift" => Parsers.driftWire(raw,
-        opt("measurement").getOrElse("devices"), b)
-      case "amqp" => Parsers.amqpReplies(raw,
-        conf.options.get("keywords")
-          .map(_.asInstanceOf[Seq[Any]].map(_.toString)).getOrElse(Seq.empty),
-        conf.options.get("groupers")
-          .map(_.asInstanceOf[Seq[Any]].map(_.toString)).getOrElse(Seq.empty),
-        opt("measurement_prefix").getOrElse("reply."), b)
-      case "tpm" => Parsers.tpmSnapshot(raw, b)
-      // S10 from YAML: each spool line is one complete actor reply
-      // (PollingSource escapes embedded newlines, so no reassembly step
-      // is needed here); the full reply → typed keywords → points chain
-      // runs inside this one streaming DataFrame (KeywordProcessor is
-      // window-free). Reference shape: ActorClientSource(actor, casts,
-      // keyword_tags, store_broadcasts) + the keys dictionary
-      // (tron.py:289-321).
-      case "actor_replies" =>
-        val dict = ActorReplies.KeysDictionary(req("actor"), dictionaryConf)
-        val replies = raw
-          .select(col("raw").as("line"), col("recv_time"))
-          .as[ActorReplies.ReplyLine](Encoders.product[ActorReplies.ReplyLine])
-        KeywordProcessor.process(
-          ActorReplies.parse(replies, dict,
-            storeBroadcasts = opt("store_broadcasts").exists(_.toBoolean)).toDF(),
-          keywordTags = keywordTagsConf,
-          casts = conf.options.get("casts")
-            .map(_.asInstanceOf[Map[String, Any]].map { case (k, v) => k -> v.toString })
-            .getOrElse(Map.empty),
-          bucket = b)
-      case other => throw new IllegalArgumentException(s"$name: unknown parser '$other'")
-    }
-  }
+  private[sources] def path: String = req("path")
+  private[sources] def parser: String = req("parser")
 }
 
 object SpoolSource {

@@ -338,6 +338,32 @@ class EngineSpec extends SparkSpec {
     }
   }
 
+  test("stopAll stops every live source type's thread") {
+    // one source of each live type, all aimed at a closed port: each
+    // thread runs (failing into backoff) until stopped
+    val port = { val s = new java.net.ServerSocket(0); try s.getLocalPort finally s.close() }
+    val work = Files.createTempDirectory("graft-stopall-work-").toString
+    val spools = Seq("lv", "ac", "aq").map(n => n -> Files.createTempDirectory(s"graft-stopall-$n-")).toMap
+    val cfg = EngineConfig.parse(
+      s"""
+         |sources:
+         |  lv: {type: tcp, host: 127.0.0.1, port: $port, parser: sens4, path: '${spools("lv")}'}
+         |  ac: {type: actor, host: 127.0.0.1, port: $port, actor: boss, path: '${spools("ac")}'}
+         |  aq: {type: amqp, host: 127.0.0.1, port: $port, exchange: actor_exchange,
+         |       keywords: [status.temperature], path: '${spools("aq")}'}
+         |observers:
+         |  stopall: {type: memory}
+         |""".stripMargin)
+    val threads = Set("graft-poller-lv", "graft-push-ac", "graft-amqp-aq")
+    def alive(): Set[String] = Thread.getAllStackTraces.keySet.toArray
+      .map(_.asInstanceOf[Thread]).filter(_.isAlive).map(_.getName).toSet.intersect(threads)
+    val engine = new Engine(spark)
+    engine.start(cfg, work)
+    try assert(alive() == threads)
+    finally engine.stopAll()
+    assert(alive().isEmpty, "every live source must be stopped")
+  }
+
   test("backoff: grows by e, caps, resets") {
     val b = Backoff(initialDelayMs = 1000, jitter = 0.0)
     val d1 = b.nextDelayMs(); val d2 = b.nextDelayMs(); val d3 = b.nextDelayMs()
