@@ -37,14 +37,10 @@ import org.apache.spark.sql.SparkSession
   * projects its own completion against `SPARK_GRAFT_BENCH_BUDGET_S`
   * (default 1400 s) from the measured pass time and sheds load in a
   * fixed, documented order, most-expendable first:
-  *   1. diagnostic probes ([[Queries.diagnostics]]) are NEVER timed —
-  *      they run ONCE, untimed, after the timed passes, published under
-  *      `"probes_s"` (skipped entirely, `"probes_skipped":true`, if the
-  *      budget is already blown);
-  *   2. renoise passes run only if the projection says they fit;
-  *   3. timed passes stop early once ≥2 are done and the next would
+  *   1. renoise passes run only if the projection says they fit;
+  *   2. timed passes stop early once ≥2 are done and the next would
   *      overrun — never below 2 (a median needs a spread);
-  *   4. the second warmup pass runs only if ≥2 timed passes still fit
+  *   3. the second warmup pass runs only if ≥2 timed passes still fit
   *      after it.
   * The artifact records what actually ran: `"reps_used"`,
   * `"warmup_used"`, `"budget_s"`.
@@ -96,12 +92,6 @@ object Bench {
     // SCALE.md "Pair-operator scaling").
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val skip = sys.env.get("SPARK_GRAFT_SKIP").map(_.split(",").toSet).getOrElse(Set.empty)
-    // Bench is the ONE caller that opts back into the shared spool cache:
-    // reps would re-pay every replay generator otherwise, and a bench
-    // measures the operator, not the spool build. Everything else —
-    // Verify, specs, the driver's own harness — gets the process-private
-    // default (VERDICT r12 #1a).
-    graft.streaming.ReplayScaffold.privateSpools = false
     // Streaming-family queries run as a contiguous block at the END of
     // each pass: a micro-batch replay leaves background churn behind it
     // (checkpoint fsyncs, state-store maintenance threads, file-source
@@ -118,12 +108,8 @@ object Bench {
       "q105_streaming_hll", "q110_streaming_cm")
     val suite0 = only.fold(Queries.all)(names => Queries.all.filter(q => names(q.name)))
       .filterNot(q => skip(q.name))
-    // Diagnostic probes are correctness instruments — excluded from the
-    // timed suite entirely (governor rule 1; Queries.diagnostics doc).
-    val probes = suite0.filter(q => Queries.diagnostics(q.name))
-    val suite1 = suite0.filterNot(q => Queries.diagnostics(q.name))
-    val suite = suite1.filterNot(q => streamingFamily(q.name)) ++
-      suite1.filter(q => streamingFamily(q.name))
+    val suite = suite0.filterNot(q => streamingFamily(q.name)) ++
+      suite0.filter(q => streamingFamily(q.name))
     val spark = GraftSession.get(s"local[$cpus]", 32)
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>
@@ -358,7 +344,7 @@ object Bench {
       if (passWalls.isEmpty) 0.0 else passWalls.takeRight(2).max
     // the second warmup runs only if warmup 1 completed (an aborted
     // warmup's wall underestimates a full pass) and two timed passes
-    // still fit after it (governor rule 4)
+    // still fit after it (governor rule 3)
     var w = 2
     while (warmupComplete && w <= warmupWanted && elapsed + estPass * 3 <= budget) {
       fullPass(warmTimes); warmupUsed = w; w += 1
@@ -371,8 +357,6 @@ object Bench {
     // the median across interleaved passes sheds any residual outlier.
     var repsUsed = 0
     var renoiseUsed = 0
-    var probesS = -1.0
-    var probesFailed = Seq.empty[String]
     // Machine-noise marker: a >3x floor-to-ceiling spread across
     // interleaved reps is contention, not plan variance — flag it so a
     // consumer of the medians knows which round-over-round moves to
@@ -403,11 +387,6 @@ object Bench {
       // never under "queries" — absent/None, not a small number.
       val failed = suite.map(_.name).filter(n => times(n).isEmpty)
       val noisy = noisyNames
-      // The documented skip signal (ADVICE r15 #1): probes_s:-1 alone was
-      // an undocumented sentinel — emit the promised flag in BOTH artifacts
-      // when the probes block was shed (or has not run yet).
-      val probesSkippedJson =
-        if (probes.nonEmpty && probesS < 0) ",\"probes_skipped\":true" else ""
       // Published stat: the TRIMMED median — drop the single worst rep
       // (the teardown/contention victim), median of the rest. Robust to
       // one polluted pass while staying honest (never below min, unlike
@@ -550,9 +529,8 @@ object Bench {
         val calibShuffleJson = calibsShuffle.map(j3).mkString("[", ",", "]")
         val calibStateJson = calibsState.map(j3).mkString("[", ",", "]")
         val passJson = passWalls.map(j3).mkString("[", ",", "]")
-        val probesFailedJson = probesFailed.map("\"" + _ + "\"").mkString("[", ",", "]")
         val w = new java.io.PrintWriter(repsOut, "UTF-8")
-        try w.println(s"""{"sf":"$sfDir","stat":"trimmed_median","budget_s":${j3(budget)},"warmup_used":$warmupUsed,"reps_used":$repsUsed,"renoise_used":$renoiseUsed,"probes_s":${j3(probesS)}$probesSkippedJson,"probes_failed":$probesFailedJson,"calib":$calibJson,"calib_shuffle":$calibShuffleJson,"calib_state":$calibStateJson,"pass_walls":$passJson,"failed":$failedJson,"noisy":$noisyJson,"median":$medianJson,"min":$minJson,"reps":$repsJson,"moved_vs_prev":$movedJson}""")
+        try w.println(s"""{"sf":"$sfDir","stat":"trimmed_median","budget_s":${j3(budget)},"warmup_used":$warmupUsed,"reps_used":$repsUsed,"renoise_used":$renoiseUsed,"calib":$calibJson,"calib_shuffle":$calibShuffleJson,"calib_state":$calibStateJson,"pass_walls":$passJson,"failed":$failedJson,"noisy":$noisyJson,"median":$medianJson,"min":$minJson,"reps":$repsJson,"moved_vs_prev":$movedJson}""")
         finally w.close()
       } catch { case e: Throwable => System.err.println(s"[bench] reps file: $e") }
       // The driver's log capture keeps only the LAST 2000 chars of this
@@ -576,7 +554,7 @@ object Bench {
       val minTotal = if (mins.nonEmpty) mins.values.sum else 0.0
       val totalStr = j3(total)
       val failedStr = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val summaryLine = s"""{"metric":"total","value":$totalStr,"unit":"sec","stat":"trimmed_median","min_total":${j3(minTotal)},"n_queries":${results.size},"reps_used":$repsUsed,"warmup_used":$warmupUsed,"budget_s":${j3(budget)},"calib_s":${j3(calibMedian)},"calib_shuffle_s":${j3(calibShuffleMedian)},"calib_state_s":${j3(calibStateMedian)},"probes_s":${j3(probesS)}$probesSkippedJson,"failed":$failedStr,"noisy_count":${noisy.size},"moved_count":${moved.size},"reps_file":"$repsOut","sf":"$sfDir","queries":$qs}"""
+      val summaryLine = s"""{"metric":"total","value":$totalStr,"unit":"sec","stat":"trimmed_median","min_total":${j3(minTotal)},"n_queries":${results.size},"reps_used":$repsUsed,"warmup_used":$warmupUsed,"budget_s":${j3(budget)},"calib_s":${j3(calibMedian)},"calib_shuffle_s":${j3(calibShuffleMedian)},"calib_state_s":${j3(calibStateMedian)},"failed":$failedStr,"noisy_count":${noisy.size},"moved_count":${moved.size},"reps_file":"$repsOut","sf":"$sfDir","queries":$qs}"""
       // Standing FILE artifact (VERDICT r11 #2 + r16 #1): written after
       // every pass so a later kill cannot cost it. Subset runs go to a
       // sibling file so they never clobber the committed full-suite one.
@@ -610,7 +588,7 @@ object Bench {
     // queries' reps. Rather than paying more full passes up front,
     // re-measure ONLY the flagged queries (up to 2 extra interleaved
     // passes) — IF the projection says the targeted pass fits the
-    // budget (governor rule 2; the renoise pass cost is estimated from
+    // budget (governor rule 1; the renoise pass cost is estimated from
     // the flagged queries' own latest reps plus settle slack). Disable
     // with SPARK_GRAFT_RENOISE=0.
     val renoise = sys.env.getOrElse("SPARK_GRAFT_RENOISE", "2").toInt
@@ -632,20 +610,6 @@ object Bench {
           s"${j3(elapsed)} s elapsed, budget ${j3(budget)} s)")
       }
     }
-    // ---- diagnostic probes: ONCE, untimed per-query, walled as a block
-    // (governor rule 1) ----
-    // ~40 s of replays at sf0.1 — reserve a little headroom, but don't
-    // let them overshoot an already-spent budget
-    if (probes.nonEmpty && elapsed + 90 <= budget) {
-      val p0 = System.nanoTime()
-      probesFailed = probes.flatMap(q =>
-        if (runOnce(q).isEmpty) Some(q.name) else None)
-      releaseStreamingResidue()
-      probesS = (System.nanoTime() - p0) / 1e9
-    } else if (probes.nonEmpty) {
-      System.err.println(s"[bench] budget governor: skipping the " +
-        s"${probes.size} diagnostic probes (${j3(elapsed)} s elapsed)")
-    }
     // per-pass rep times on stderr for harness diagnosis (not part of
     // the one-line JSON contract on stdout)
     suite.foreach { q =>
@@ -653,7 +617,6 @@ object Bench {
         times(q.name).map(t => String.format(java.util.Locale.ROOT, "%.2f", Double.box(t))).mkString(" "))
     }
     // final artifact: the last publish, now carrying the renoise reps
-    // and the probes wall
     val summaryLine = publishArtifacts()
     // disarm the timeout hook COMPLETELY — the real line follows on
     // stdout, and a hook re-print after normal completion would leave a

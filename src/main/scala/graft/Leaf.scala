@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
 
 /** Eager plan-LEAF materialization for iterative operators (TextRank
@@ -28,16 +30,24 @@ object Leaf {
     * selects executor-local checkpoints. */
   val DirConf = "spark.graft.checkpoint.dir"
 
+  /** Point `sc`'s reliable checkpoints under `dir`. `setCheckpointDir`
+    * mints a fresh `<dir>/<uuid>` per call, so it runs only when the
+    * current checkpoint dir's parent is not already `dir` — compared as
+    * qualified Hadoop paths, so `/x/ck` never matches `/x/ck2/<uuid>`. */
+  private[graft] def useCheckpointDir(sc: SparkContext, dir: String): Unit = {
+    val want = new Path(dir)
+    val qualified = want.getFileSystem(sc.hadoopConfiguration).makeQualified(want)
+    if (!sc.getCheckpointDir.exists(cur => new Path(cur).getParent == qualified))
+      sc.setCheckpointDir(dir)
+  }
+
   /** Materialize `df` as an eager plan leaf (see object scaladoc for
     * the localCheckpoint vs reliable-checkpoint routing). */
   def leaf(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     spark.conf.getOption(DirConf).filter(_.nonEmpty) match {
       case Some(dir) =>
-        val sc = spark.sparkContext
-        // setCheckpointDir mints a fresh UUID subdir per call — set it
-        // once per configured root, not per leaf
-        if (!sc.getCheckpointDir.exists(_.contains(dir))) sc.setCheckpointDir(dir)
+        useCheckpointDir(spark.sparkContext, dir)
         df.checkpoint(eager = true)
       case None => df.localCheckpoint(eager = true)
     }
@@ -57,7 +67,7 @@ object Leaf {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(false)
         lr.rdd.getCheckpointFile.foreach { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
+          val p = new Path(f)
           try p.getFileSystem(
             ds.sparkSession.sparkContext.hadoopConfiguration).delete(p, true)
           catch { case _: java.io.IOException => () }

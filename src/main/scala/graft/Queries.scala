@@ -4584,192 +4584,6 @@ object Queries {
           - CAST(s AS DOUBLE) / CAST(n_events AS DOUBLE), 6) AS entropy_nats
       FROM ag ORDER BY user_id"""))
 
-  // -------------------------------------------------------------------
-  // q117–q123: the q87/q89 diagnostic probe battery (AuditProbes
-  // scaladoc has the full decision table). Three rounds of driver-only
-  // hash mismatches on q87/q89 against fourteen locally-green runs mean
-  // the divergence lives in something the driver's environment does
-  // differently that no local experiment reproduces — and the only
-  // channels the driver returns are per-query pass/fail and row counts.
-  // Each probe isolates ONE layer of the q87/q89 stack behind its own
-  // oracle, so the green/red pattern of CORRECTNESS_r14 itself
-  // localizes the divergent layer.
-  // -------------------------------------------------------------------
-
-  // q87's corpus/stream split membership, bare: md5/h60 + data parity.
-  val q117_audit_split = Q("q117_audit_split",
-    (s, dir) => graft.streaming.AuditProbes.splitAudit(s, dir),
-    Some("""
-      SELECT doc_id,
-        CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 4 = 0
-          AS is_stream
-      FROM documents ORDER BY doc_id"""))
-
-  // q89's spool through the manifest source, stateless, each row tagged
-  // with its trigger index; oracle recomputes the index from the
-  // time-cut rule the spool writer used (one source of truth:
-  // ReplayScaffold.DefaultCuts, interpolated below).
-  private val arrivalCase = graft.streaming.ReplayScaffold.DefaultCuts
-    .zipWithIndex
-    .map { case (c, i) => s"WHEN ts < TIMESTAMP '$c' THEN $i" }
-    .mkString(" ")
-  val q118_audit_arrival = Q("q118_audit_arrival",
-    (s, dir) => graft.streaming.AuditProbes.arrivalAudit(s, dir),
-    Some(s"""
-      SELECT event_id,
-        CAST(CASE $arrivalCase
-          ELSE ${graft.streaming.ReplayScaffold.DefaultCuts.length} END AS BIGINT)
-          AS trigger_idx
-      FROM events ORDER BY event_id"""))
-
-  // Minimal ValueState-only running row counter per event_type over the
-  // same spool — cross-batch continuation without MapState or initial
-  // state.
-  val q119_audit_valuestate = Q("q119_audit_valuestate",
-    (s, dir) => graft.streaming.AuditProbes.valueStateAudit(s, dir),
-    Some("""
-      SELECT event_type, ts,
-        row_number() OVER (PARTITION BY event_type ORDER BY ts) AS row_idx
-      FROM events ORDER BY event_type, ts"""))
-
-  // q89's MapState membership, emitting only the first sighting per
-  // (type, user) — an order-insensitive multiset; a membership drift
-  // shows as a row-count mismatch.
-  val q120_audit_firstseen = Q("q120_audit_firstseen",
-    (s, dir) => graft.streaming.AuditProbes.firstSeenAudit(s, dir),
-    Some("""
-      SELECT event_type, user_id, min(ts) AS first_seen
-      FROM events GROUP BY 1, 2 ORDER BY 1, 2"""))
-
-  // Environment fingerprint: spark_rows = verCode·100000 +
-  // provider·10000 + tsLayout·1000 + shufflePartitions (AuditProbes
-  // scaladoc decodes it). The oracle pins the builder's expectation —
-  // Spark 4.1.2, RocksDB, µs-NTZ events.ts, 32 shuffle partitions.
-  val q121_env_fingerprint = Q("q121_env_fingerprint",
-    (s, dir) => graft.streaming.AuditProbes.envFingerprint(s, dir),
-    Some(s"""
-      SELECT range AS id
-      FROM range(${graft.streaming.AuditProbes.ExpectedFingerprint})
-      ORDER BY id"""))
-
-  // q119's counter on flatMapGroupsWithState — A/B across the two
-  // arbitrary-state APIs; same oracle as q119.
-  val q122_audit_fmgws = Q("q122_audit_fmgws",
-    (s, dir) => graft.streaming.AuditProbes.fmgwsAudit(s, dir),
-    q119_audit_valuestate.oracle)
-
-  // q87 reduced to order-insensitive per-key FINAL totals — isolates
-  // the initial-state bootstrap + cross-batch carry from per-row
-  // attribution order.
-  val q123_audit_bootstrap_totals = Q("q123_audit_bootstrap_totals",
-    (s, dir) => graft.streaming.AuditProbes.bootstrapTotalsAudit(s, dir),
-    Some("""
-      WITH tagged AS (
-        SELECT doc_id, lang, source, n_chars,
-          CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 4 = 0 AS is_stream
-        FROM documents),
-      corpus AS (
-        SELECT lang, source, COUNT(*) AS c_docs, SUM(n_chars) AS c_chars
-        FROM tagged WHERE NOT is_stream GROUP BY 1, 2),
-      stream AS (
-        SELECT lang, source, n_chars FROM tagged WHERE is_stream)
-      SELECT s.lang, s.source,
-        COALESCE(c.c_docs, 0) + COUNT(*) AS fin_docs,
-        CAST(COALESCE(c.c_chars, 0) + SUM(s.n_chars) AS BIGINT) AS fin_chars
-      FROM stream s LEFT JOIN corpus c ON s.lang = c.lang AND s.source = c.source
-      GROUP BY s.lang, s.source, c.c_docs, c.c_chars
-      ORDER BY 1, 2"""))
-
-  // Data-integrity REPORTS (expected 0 rows; green either way — the
-  // diagnostic channel is spark_rows): q124 counts tied (event_type,
-  // ts) groups, which would make q89/q119/q122's ORDER BY ts
-  // attribution engine-internal (hash red, rows green — the observed
-  // q89 signature) while leaving the tie-insensitive q84/q86/q88
-  // green; q125 counts documents anomalies (dup ids, NULL lang/source/
-  // n_chars) that would split q87's null-keyed grouping from its
-  // oracle's join equality.
-  val q124_audit_event_ties = Q("q124_audit_event_ties",
-    (s, dir) => graft.streaming.AuditProbes.eventTiesAudit(s, dir),
-    Some("""
-      SELECT event_type, ts, COUNT(*) AS n
-      FROM events GROUP BY 1, 2 HAVING COUNT(*) > 1
-      ORDER BY 1, 2"""))
-
-  val q125_audit_doc_integrity = Q("q125_audit_doc_integrity",
-    (s, dir) => graft.streaming.AuditProbes.docIntegrityAudit(s, dir),
-    Some("""
-      WITH anomalies AS (
-        SELECT 'dup_doc_id' AS kind, CAST(doc_id AS VARCHAR) AS k
-        FROM documents GROUP BY doc_id HAVING COUNT(*) > 1
-        UNION ALL
-        SELECT 'null_lang', CAST(doc_id AS VARCHAR) FROM documents WHERE lang IS NULL
-        UNION ALL
-        SELECT 'null_source', CAST(doc_id AS VARCHAR) FROM documents WHERE source IS NULL
-        UNION ALL
-        SELECT 'null_n_chars', CAST(doc_id AS VARCHAR) FROM documents WHERE n_chars IS NULL)
-      SELECT kind, k FROM anomalies ORDER BY kind, k"""))
-
-  // -------------------------------------------------------------------
-  // q145–q150: the round-15 TWO-HANDLE A/B (VERDICT r14 #2). q87/q89
-  // now run single-handle reimplementations (BootstrapCounters /
-  // DistinctMapReplay scaladoc); the ORIGINAL two-handle formulations
-  // survive as q146/q147 with the same oracles, and q145/q149/q150 each
-  // add exactly ONE suspect feature to the driver-green q119 counter.
-  // AuditProbes has the full decision table.
-  // -------------------------------------------------------------------
-
-  // Two ValueState handles (both primitive, String key) — handle COUNT
-  // alone. Same oracle as q119 (the shadow state never reaches output).
-  val q145_audit_twovalue = Q("q145_audit_twovalue",
-    (s, dir) => graft.streaming.AuditProbes.twoValueAudit(s, dir),
-    q119_audit_valuestate.oracle)
-
-  // The ORIGINAL q89 (MapState + ValueState, two handles) — same oracle
-  // as q89.
-  val q146_audit_twostate_distinct = Q("q146_audit_twostate_distinct",
-    (s, dir) => graft.streaming.DistinctMapReplay.runTwoState(s, dir),
-    q89_distinct_map.oracle)
-
-  // The ORIGINAL q87 (StatefulProcessorWithInitialState + tuple
-  // ValueState + tuple key) — same oracle as q87.
-  val q147_audit_initialstate = Q("q147_audit_initialstate",
-    (s, dir) => graft.streaming.BootstrapCounters.runInitialState(s, dir),
-    q87_bootstrap_counters.oracle)
-
-  // Tuple-valued ValueState via Encoders.tuple (one handle, String key)
-  // — the tuple VALUE encoder alone. Same oracle as q119.
-  val q149_audit_tuplestate = Q("q149_audit_tuplestate",
-    (s, dir) => graft.streaming.AuditProbes.tupleValueAudit(s, dir),
-    q119_audit_valuestate.oracle)
-
-  // Tuple GROUPING KEY (one primitive ValueState) — the key encoder
-  // alone; key domain identical to q119's so the oracle is unchanged.
-  val q150_audit_tuplekey = Q("q150_audit_tuplekey",
-    (s, dir) => graft.streaming.AuditProbes.tupleKeyAudit(s, dir),
-    q119_audit_valuestate.oracle)
-
-  // -------------------------------------------------------------------
-  // q148 + q151: ORACLE-ENGINE observability (VERDICT r14 #3). q121
-  // fingerprints the driver's Spark; nothing fingerprinted its DuckDB —
-  // and q132's red leaned on the newest DuckDB SQL surface in the suite.
-  // -------------------------------------------------------------------
-
-  // The driver's DuckDB version, reported through the one numeric
-  // channel CORRECTNESS returns verbatim: oracle_rows = major·10000 +
-  // minor·100 + patch (the mirror of q121's spark_rows). The Spark side
-  // pins the builder's DuckDB 1.0.0 ⇒ 10000; a red row's oracle_rows
-  // NAMES the driver's version. Conservative SQL only: regexp_extract /
-  // CAST / range + filter (no subquery table-function args).
-  val q148_oracle_fingerprint = Q("q148_oracle_fingerprint",
-    (s, dir) => s.range(10000).toDF("id"),
-    Some("""
-      SELECT range AS id FROM range(1000000)
-      WHERE range < (
-        SELECT 10000 * CAST(regexp_extract(version(), '(\d+)\.(\d+)\.(\d+)', 1) AS BIGINT)
-             +   100 * CAST(regexp_extract(version(), '(\d+)\.(\d+)\.(\d+)', 2) AS BIGINT)
-             +         CAST(regexp_extract(version(), '(\d+)\.(\d+)\.(\d+)', 3) AS BIGINT))
-      ORDER BY id"""))
-
   // LSH band-geometry planner (the q130 knob, computed not hand-tuned):
   // per (bands, rows) factorization of a 16-permutation budget at
   // threshold 0.8, the S-curve's sub-threshold candidate mass and
@@ -4811,31 +4625,6 @@ object Queries {
     },
     q141_ivf_maintain.oracle)
 
-  // q132 stage probe: the FULL round-1 adjacent-pair count table,
-  // order-insensitive, on the same conservative oracle primitives as
-  // the rewritten q132 oracle (Bpe.oracleSql scaladoc). Green here with
-  // q132 red localizes the divergence past the pair-count base.
-  val q151_bpe_pairs = Q("q151_bpe_pairs",
-    (s, dir) => graft.text.Bpe.round1Pairs(documents(s, dir), "text"),
-    Some(graft.text.Bpe.Round1PairsOracle))
-
-  /** Diagnostic probes — correctness INSTRUMENTS, not operators: the
-    * q87/q89 localization battery, the environment/oracle fingerprints,
-    * the data-integrity reports, and the q132 stage probe. Verify runs
-    * them like any query (they ARE the diagnosis channel); Bench runs
-    * them ONCE untimed and reports their wall under `probes_s` instead
-    * of timing them per pass — at ~19 s/pass they were a third of the
-    * r14 driver bench's timeout budget for zero latency signal
-    * (VERDICT r14 #1). */
-  val diagnostics: Set[String] = Set(
-    "q117_audit_split", "q118_audit_arrival", "q119_audit_valuestate",
-    "q120_audit_firstseen", "q121_env_fingerprint", "q122_audit_fmgws",
-    "q123_audit_bootstrap_totals", "q124_audit_event_ties",
-    "q125_audit_doc_integrity", "q145_audit_twovalue",
-    "q146_audit_twostate_distinct", "q147_audit_initialstate",
-    "q148_oracle_fingerprint", "q149_audit_tuplestate",
-    "q150_audit_tuplekey", "q151_bpe_pairs")
-
   val all: Seq[Q] = Seq(
     q01_pricing_summary, q02_top_customers, q03_shipping_priority,
     q04_order_priority, q05_region_revenue, q06_revenue_forecast,
@@ -4874,17 +4663,11 @@ object Queries {
     q107_textrank, q108_random_projection, q109_phrase_search,
     q110_streaming_cm, q111_funnel, q112_retention, q113_burst_days,
     q114_session_journeys, q115_containment_pairs, q116_leakage_safe_split,
-    q117_audit_split, q118_audit_arrival, q119_audit_valuestate,
-    q120_audit_firstseen, q121_env_fingerprint, q122_audit_fmgws,
-    q123_audit_bootstrap_totals, q124_audit_event_ties,
-    q125_audit_doc_integrity, q126_hard_negatives, q127_bigram_entropy,
-    q128_centroid_margins, q129_snapshot_diff, q130_edit_verified,
+    q126_hard_negatives, q127_bigram_entropy, q128_centroid_margins,
+    q129_snapshot_diff, q130_edit_verified,
     q131_vocab_growth, q132_bpe_merges, q133_source_similarity,
     q134_winnowing, q135_zipf_slope, q136_kl_drift, q137_gopher_rules,
     q138_matryoshka, q139_cusum_drift, q140_video_shots,
     q141_ivf_maintain, q142_quality_calibration, q143_robust_outliers,
-    q144_user_entropy, q145_audit_twovalue, q146_audit_twostate_distinct,
-    q147_audit_initialstate, q148_oracle_fingerprint,
-    q149_audit_tuplestate, q150_audit_tuplekey, q151_bpe_pairs,
-    q152_lsh_plan, q153_lsh_volume, q154_ivf_versioned)
+    q144_user_entropy, q152_lsh_plan, q153_lsh_volume, q154_ivf_versioned)
 }

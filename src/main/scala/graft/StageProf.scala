@@ -14,7 +14,6 @@ object StageProf {
     val names = args.drop(1).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.get(s"local[$cpus]", 32)
-    graft.streaming.ReplayScaffold.privateSpools = false
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Long, Long, Int)]()
     var jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new SparkListener {

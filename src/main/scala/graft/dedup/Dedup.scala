@@ -481,10 +481,7 @@ object Dedup {
     // maxIterations.
     val ckDir = checkpointDir.orElse(
       pairs.sparkSession.conf.getOption(graft.Leaf.DirConf).filter(_.nonEmpty))
-    ckDir.foreach { d =>
-      val sc = pairs.sparkSession.sparkContext
-      if (!sc.getCheckpointDir.exists(_.contains(d))) sc.setCheckpointDir(d)
-    }
+    ckDir.foreach(graft.Leaf.useCheckpointDir(pairs.sparkSession.sparkContext, _))
     def truncate(df: DataFrame): DataFrame =
       if (ckDir.isDefined) df.checkpoint(eager = true)
       else df.localCheckpoint(true)

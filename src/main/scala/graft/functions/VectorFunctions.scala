@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.graft.{CosineSim, DotProduct, HammingDist, MinhashSig, NfcNormalize, PqAdc, PunctCount, QuantizeMse, RandomProjBuckets, SignProject, SortedContainsLong, SubwordCount, SubwordPieces, WinnowSelect, ArrayEqCount, OptimizerOpaque, BpeMergeFold, BpePairs, ShingleGen, GramH60}
+import org.apache.spark.sql.graft.{CosineSim, DotProduct, HammingDist, MinhashSig, NfcNormalize, PqAdc, PunctCount, QuantizeMse, RandomProjBuckets, SignProject, SortedContainsLong, SubwordCount, SubwordPieces, WinnowSelect, ArrayEqCount, OptimizerOpaque, BpeMergeFold, BpePairs, ShingleGen, GramH60, KernelArgs}
 
 /** Public facade for the codegen'd vector/fingerprint expressions
   * ([[org.apache.spark.sql.graft.CosineSim]] / `HammingDist`).
@@ -54,8 +54,8 @@ object VectorFunctions {
     (FunctionIdentifier("minhash_sig"),
       new ExpressionInfo(classOf[MinhashSig].getName, "minhash_sig"),
       (children: Seq[Expression]) => MinhashSig(children(0),
-        children(1).eval().asInstanceOf[Number].intValue(),
-        children(2).eval().asInstanceOf[Number].intValue())),
+        KernelArgs.int("minhash_sig", children, 1),
+        KernelArgs.int("minhash_sig", children, 2))),
     (FunctionIdentifier("subword_count"),
       new ExpressionInfo(classOf[SubwordCount].getName, "subword_count"),
       (children: Seq[Expression]) => SubwordCount(children(0))),
@@ -65,8 +65,7 @@ object VectorFunctions {
     (FunctionIdentifier("subword_piece_count"),
       new ExpressionInfo(classOf[SubwordPieces].getName, "subword_piece_count"),
       (children: Seq[Expression]) => {
-        val arr = children(1).eval()
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+        val arr = KernelArgs.array("subword_piece_count", children, 1)
         SubwordPieces(children(0),
           (0 until arr.numElements()).map(i => arr.getUTF8String(i).toString))
       }),
@@ -79,11 +78,10 @@ object VectorFunctions {
     (FunctionIdentifier("lsh_band_buckets"),
       new ExpressionInfo(classOf[RandomProjBuckets].getName, "lsh_band_buckets"),
       (children: Seq[Expression]) => {
-        val arr = children(1).eval()
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+        val arr = KernelArgs.array("lsh_band_buckets", children, 1)
         RandomProjBuckets(children(0), arr.toDoubleArray().toSeq,
-          children(2).eval().asInstanceOf[Number].intValue(),
-          children(3).eval().asInstanceOf[Number].intValue())
+          KernelArgs.int("lsh_band_buckets", children, 2),
+          KernelArgs.int("lsh_band_buckets", children, 3))
       }),
     // sign_project(vec, flatSigns, outDims, scale): the sign matrix and
     // geometry must be foldable literals — they are the projection
@@ -91,25 +89,24 @@ object VectorFunctions {
     (FunctionIdentifier("sign_project"),
       new ExpressionInfo(classOf[SignProject].getName, "sign_project"),
       (children: Seq[Expression]) => {
-        val arr = children(1).eval()
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+        val arr = KernelArgs.array("sign_project", children, 1)
         SignProject(children(0), arr.toDoubleArray().toSeq,
-          children(2).eval().asInstanceOf[Number].intValue(),
-          children(3).eval().asInstanceOf[Number].doubleValue())
+          KernelArgs.int("sign_project", children, 2),
+          KernelArgs.double("sign_project", children, 3))
       }),
     // pq_adc(codes, lut, ksub): ksub must be a foldable int literal — it
     // is the codebook geometry, compiled into the lookup stride
     (FunctionIdentifier("pq_adc"),
       new ExpressionInfo(classOf[PqAdc].getName, "pq_adc"),
       (children: Seq[Expression]) => PqAdc(children(0), children(1),
-        children(2).eval().asInstanceOf[Number].intValue())),
+        KernelArgs.int("pq_adc", children, 2))),
     // winnow_select(text, k, w): k/w must be foldable int literals —
     // they are the fingerprint geometry, compiled into the kernel loop
     (FunctionIdentifier("winnow_select"),
       new ExpressionInfo(classOf[WinnowSelect].getName, "winnow_select"),
       (children: Seq[Expression]) => WinnowSelect(children(0),
-        children(1).eval().asInstanceOf[Number].intValue(),
-        children(2).eval().asInstanceOf[Number].intValue())),
+        KernelArgs.int("winnow_select", children, 1),
+        KernelArgs.int("winnow_select", children, 2))),
     // opaque(x): determinism-opaque passthrough — fences an expensive
     // expression against optimizer substitution/pushdown (§4.4 remedy)
     (FunctionIdentifier("opaque"),
@@ -133,12 +130,12 @@ object VectorFunctions {
     (FunctionIdentifier("shingle_gen"),
       new ExpressionInfo(classOf[ShingleGen].getName, "shingle_gen"),
       (children: Seq[Expression]) => ShingleGen(children(0),
-        children(1).eval().asInstanceOf[Number].intValue())),
+        KernelArgs.int("shingle_gen", children, 1))),
     // gram_h60(text, k): h60 of every word k-gram in one compiled pass
     (FunctionIdentifier("gram_h60"),
       new ExpressionInfo(classOf[GramH60].getName, "gram_h60"),
       (children: Seq[Expression]) => GramH60(children(0),
-        children(1).eval().asInstanceOf[Number].intValue())),
+        KernelArgs.int("gram_h60", children, 1))),
     (FunctionIdentifier("sorted_contains"),
       new ExpressionInfo(classOf[SortedContainsLong].getName, "sorted_contains"),
       (children: Seq[Expression]) => SortedContainsLong(children(0), children(1))),

@@ -3,7 +3,7 @@ package graft.streaming
 import java.io.File
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{MapState, OutputMode, StatefulProcessor, StatefulProcessorWithInitialState, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{MapState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 import org.apache.spark.sql.types._
 
 /** q87 — streaming per-key counters BOOTSTRAPPED from a batch corpus.
@@ -13,33 +13,19 @@ import org.apache.spark.sql.types._
   * history. Each admitted document emits the updated running totals, so
   * the sink is an exactly-once audit log of corpus growth.
   *
-  * Implementation (round 15): the corpus aggregate arrives as staged
-  * micro-batch 0 of the SAME stream — one seed row per key, flagged by
-  * `doc_id < 0`, carrying `(c_docs, c_chars)` — and the processor is a
-  * plain `StatefulProcessor` with exactly ONE state handle (a
-  * `MapState[Long, Long]` holding the two totals under fixed slots) and
-  * a plain `String` grouping key. The original formulation used
-  * `StatefulProcessorWithInitialState` (the API's initial-state leg)
-  * with a `ValueState[(Long, Long)]` and a `(String, String)` key —
-  * semantically identical, 15 locally-green reproductions — but four
-  * consecutive driver rounds hash-mismatched it (q87 AND its
-  * order-insensitive reduction q123) while every single-handle,
-  * primitive-encoded, String-keyed probe in the q117–q125 battery was
-  * driver-green (VERDICT r14). The operator's contract is its output,
-  * not its API, so the formulation built ONLY from driver-proven
-  * primitives is now the implementation; the original survives verbatim
-  * as probe q147_audit_initialstate, making CORRECTNESS_r15 the
-  * controlled A/B. Discriminator probes q145 (two ValueState handles),
-  * q149 (tuple-valued ValueState), q150 (tuple grouping key) separate
-  * WHICH of the suspect features diverges if q147 stays red.
+  * Implementation: the corpus aggregate arrives as staged micro-batch 0
+  * of the SAME stream — one seed row per key, flagged by `doc_id < 0`,
+  * carrying `(c_docs, c_chars)` — and the processor is a plain
+  * `StatefulProcessor` keyed by a `String` (lang and source joined by
+  * U+0001) with ONE state handle, a `MapState[Long, Long]` holding the
+  * two totals under fixed slots.
   *
-  * Seeding semantics are unchanged from the initial-state leg: batch 0
-  * contains only seed rows, so every key's totals are installed before
-  * its first stream row; stream keys absent from the corpus have no
-  * seed row and start cleanly from zero; corpus keys absent from the
-  * stream seed state but never emit. Seed rows sort first within a
-  * batch regardless (doc_id < 0), so the contract holds even if a
-  * custom spool co-stages them with data.
+  * Seeding semantics: batch 0 contains only seed rows, so every key's
+  * totals are installed before its first stream row; stream keys absent
+  * from the corpus have no seed row and start cleanly from zero; corpus
+  * keys absent from the stream seed state but never emit. Seed rows sort
+  * first within a batch regardless (doc_id < 0), so the contract holds
+  * even if a custom spool co-stages them with data.
   *
   * The DuckDB oracle replays it as corpus aggregates LEFT-JOINed to a
   * cumulative window over the stream — integer-exact, no float
@@ -55,10 +41,6 @@ import org.apache.spark.sql.types._
   * O(corpus rows), and the stream never rescans history. */
 object BootstrapCounters {
 
-  final case class CorpusStat(lang: String, source: String,
-      c_docs: Long, c_chars: Long)
-  final case class StreamDoc(doc_id: Long, lang: String, source: String,
-      n_chars: Long)
   /** Stream row OR corpus seed: seeds have `doc_id < 0`, `n_chars` =
     * corpus char total, `seed_docs` = corpus doc total; data rows have
     * `seed_docs = 0`. */
@@ -73,7 +55,7 @@ object BootstrapCounters {
   private val DocsSlot = 0L
   private val CharsSlot = 1L
 
-  /** ONE handle, primitive encoders, String key (object scaladoc). */
+  /** Continues the seeded per-key totals (object scaladoc). */
   final class SeededCounterProcessor
       extends StatefulProcessor[String, SeededDoc, RunningStat] {
     @transient private var totals: MapState[Long, Long] = _
@@ -101,33 +83,6 @@ object BootstrapCounters {
     }
   }
 
-  /** The ORIGINAL initial-state formulation, retained verbatim as probe
-    * q147_audit_initialstate — the driver-red side of the round-15 A/B
-    * (object scaladoc). */
-  final class InitialStateCounterProcessor
-      extends StatefulProcessorWithInitialState[(String, String), StreamDoc, RunningStat, CorpusStat] {
-    @transient private var totals: ValueState[(Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      totals = getHandle.getValueState[(Long, Long)]("totals",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), TTLConfig.NONE)
-
-    override def handleInitialState(key: (String, String), s: CorpusStat,
-        timers: TimerValues): Unit =
-      totals.update((s.c_docs, s.c_chars))
-
-    override def handleInputRows(key: (String, String),
-        rows: Iterator[StreamDoc], timers: TimerValues): Iterator[RunningStat] = {
-      var (docs, chars) = if (totals.exists()) totals.get() else (0L, 0L)
-      val out = rows.toArray.sortBy(_.doc_id).map { r =>
-        docs += 1; chars += r.n_chars
-        RunningStat(r.doc_id, r.lang, r.source, docs, chars)
-      }
-      totals.update((docs, chars))
-      out.iterator
-    }
-  }
-
   /** The operator: continue per-key corpus counters over a stream whose
     * batch 0 carries the corpus seed rows ([[SeededDoc]] contract). */
   def runningCounters(stream: Dataset[SeededDoc]): Dataset[RunningStat] = {
@@ -137,23 +92,10 @@ object BootstrapCounters {
         TimeMode.None(), OutputMode.Append())
   }
 
-  /** The initial-state-leg operator (q147 probe path): corpus delivered
-    * through `transformWithState`'s initial-state relation. */
-  def runningCountersInitialState(stream: Dataset[StreamDoc],
-      corpus: Dataset[CorpusStat]): Dataset[RunningStat] = {
-    import stream.sparkSession.implicits._
-    stream.groupByKey(d => (d.lang, d.source))
-      .transformWithState(new InitialStateCounterProcessor,
-        TimeMode.None(), OutputMode.Append(),
-        corpus.groupByKey(c => (c.lang, c.source)))
-  }
-
   private val SpoolSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("lang", StringType),
-    StructField("source", StringType), StructField("n_chars", LongType)))
-
-  private val SeededSpoolSchema = StructType(
-    SpoolSchema.fields :+ StructField("seed_docs", LongType))
+    StructField("source", StringType), StructField("n_chars", LongType),
+    StructField("seed_docs", LongType)))
 
   /** Corpus/stream split on an md5-derived hash of the id, NOT `doc_id
     * % 4`: the corpus generator strides doc_ids by source (stride ≡ 0
@@ -200,14 +142,6 @@ object BootstrapCounters {
     ReplayScaffold.writeManifestBatch(spool, stream.filter(col("doc_id") >= cut), 2)
   }
 
-  /** Unseeded spool (q147 probe path): the stream halves alone. */
-  private def writeSpool(spark: SparkSession, dir: String, spool: File): Unit = {
-    val stream = streamRows(spark, dir)
-    val cut = streamCut(stream)
-    ReplayScaffold.writeManifestBatch(spool, stream.filter(col("doc_id") < cut), 0)
-    ReplayScaffold.writeManifestBatch(spool, stream.filter(col("doc_id") >= cut), 1)
-  }
-
   /** Run the replay; returns `(doc_id, lang, source, run_docs, run_chars)`. */
   def run(spark: SparkSession, dir: String): DataFrame = {
     StreamingDedup.configureStateStore(spark)
@@ -216,30 +150,8 @@ object BootstrapCounters {
     val runDir = ReplayScaffold.freshRunDir(spool)
 
     import spark.implicits._
-    val in = ReplayScaffold.manifestStream(spark, spool, SeededSpoolSchema)
-      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
-        col("seed_docs"))
-      .as[SeededDoc]
+    val in = ReplayScaffold.manifestStream(spark, spool, SpoolSchema).as[SeededDoc]
     val out = runningCounters(in)
-    ReplayScaffold.runToParquet(out.toDF(), runDir).orderBy("doc_id")
-  }
-
-  /** q147 probe — the ORIGINAL initial-state replay; same oracle as
-    * q87 (object scaladoc has the A/B). */
-  def runInitialState(spark: SparkSession, dir: String): DataFrame = {
-    StreamingDedup.configureStateStore(spark)
-    val spool = ReplayScaffold.spoolFor(spark, dir, "q87", "documents.parquet",
-      "h60mod4;halves;manifest", writeSpool, expectedFiles = 2)
-    val runDir = ReplayScaffold.freshRunDir(spool)
-
-    import spark.implicits._
-    val corpus = corpusAgg(spark, dir).as[CorpusStat]
-    // manifest-ordered arrival: batch i = batch-i.jsonl, by NAME — the
-    // running counters are order-sensitive and this order is code-owned
-    val in = ReplayScaffold.manifestStream(spark, spool, SpoolSchema)
-      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-      .as[StreamDoc]
-    val out = runningCountersInitialState(in, corpus)
     ReplayScaffold.runToParquet(out.toDF(), runDir).orderBy("doc_id")
   }
 }

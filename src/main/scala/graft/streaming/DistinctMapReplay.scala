@@ -3,11 +3,11 @@ package graft.streaming
 import java.io.File
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{MapState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{MapState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 import org.apache.spark.sql.types._
 
 /** q89 — `MapState` on the Spark 4 arbitrary-state API, completing the
-  * primitive matrix (q86 ListState, q87 initial-state ValueState, q88
+  * primitive matrix (q86 ListState, q87 corpus-seeded MapState, q88
   * event-time timers). The use case: per-event-type RUNNING DISTINCT
   * USER counts — audience accounting over a stream. A running distinct
   * needs per-key membership, which is exactly what `MapState` models in
@@ -17,19 +17,10 @@ import org.apache.spark.sql.types._
   * O(1) per-row state IO and rewriting an ever-growing set per row at
   * scale.
   *
-  * State layout (round 15): the running count lives INSIDE the same
-  * `MapState` under a sentinel key, so the processor registers exactly
-  * ONE state handle. The original formulation carried the count in a
-  * second `ValueState[Long]` next to the map — semantically identical,
-  * and green in 15 local reproductions — but four consecutive driver
-  * rounds hash-mismatched it while every ONE-handle probe in the
-  * q117–q125 battery (VERDICT r14) came back green in the driver's
-  * environment; the handle COUNT is the one structural line separating
-  * the green probes from the red operators. The operator's contract is
-  * its output, not its API, so the single-handle layout is now the
-  * implementation and the two-handle original survives as probe
-  * q146_audit_twostate_distinct — the green/red pair in CORRECTNESS_r15
-  * is the controlled A/B that closes the diagnosis either way.
+  * State layout: the running count lives INSIDE the same `MapState`
+  * under a sentinel key, so the processor registers exactly ONE state
+  * handle and each row costs one `containsKey` plus at most one
+  * `updateValue`.
   *
   * The sentinel key is `Long.MinValue`, unreachable by construction:
   * user ids are nonnegative in the events contract, and the processor
@@ -85,36 +76,6 @@ object DistinctMapReplay {
     }
   }
 
-  /** The ORIGINAL two-handle formulation (MapState membership +
-    * ValueState count), retained verbatim as the q146 probe — the
-    * driver-red side of the round-15 A/B (object scaladoc). */
-  final class TwoStateDistinctProcessor
-      extends StatefulProcessor[String, TypedEvent, DistinctStat] {
-    @transient private var seen: MapState[Long, Boolean] = _
-    @transient private var total: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      seen = getHandle.getMapState[Long, Boolean]("seen",
-        Encoders.scalaLong, Encoders.scalaBoolean, TTLConfig.NONE)
-      total = getHandle.getValueState[Long]("total",
-        Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[TypedEvent],
-        timers: TimerValues): Iterator[DistinctStat] = {
-      var n = if (total.exists()) total.get() else 0L
-      val out = rows.toArray.sortBy(_.ts_us).map { r =>
-        if (!seen.containsKey(r.user_id)) {
-          seen.updateValue(r.user_id, true)
-          n += 1
-        }
-        DistinctStat(key, r.ts_us, r.user_id, n)
-      }
-      total.update(n)
-      out.iterator
-    }
-  }
-
   /** The operator: running exact distinct-user count per event type. */
   def runningDistinct(ds: Dataset[TypedEvent]): Dataset[DistinctStat] = {
     import ds.sparkSession.implicits._
@@ -123,7 +84,7 @@ object DistinctMapReplay {
         TimeMode.None(), OutputMode.Append())
   }
 
-  private[streaming] val SpoolSchema = StructType(Seq(
+  private val SpoolSchema = StructType(Seq(
     StructField("event_id", LongType), StructField("ts", TimestampType),
     StructField("user_id", LongType), StructField("event_type", StringType)))
 
@@ -136,18 +97,12 @@ object DistinctMapReplay {
     ReplayScaffold.writeTimeSplitManifest(spool, ev, "ts", Cuts)
   }
 
-  /** The q89 spool — build-or-reuse. Shared with the [[AuditProbes]]
-    * battery (q118–q120, q122) so every probe replays the SAME staged
-    * batches the failing query replays, not a lookalike. */
-  private[streaming] def acquireSpool(spark: SparkSession, dir: String): File =
-    ReplayScaffold.spoolFor(spark, dir, "q89", "events.parquet",
+  /** Run the replay; returns `(event_type, ts, user_id, distinct_users)`. */
+  def run(spark: SparkSession, dir: String): DataFrame = {
+    StreamingDedup.configureStateStore(spark)
+    val spool = ReplayScaffold.spoolFor(spark, dir, "q89", "events.parquet",
       s"cuts=${Cuts.mkString("|")};manifest", writeSpool,
       expectedFiles = Cuts.length + 1)
-
-  private def replay(spark: SparkSession, dir: String,
-      processor: StatefulProcessor[String, TypedEvent, DistinctStat]): DataFrame = {
-    StreamingDedup.configureStateStore(spark)
-    val spool = acquireSpool(spark, dir)
     val runDir = ReplayScaffold.freshRunDir(spool)
 
     import spark.implicits._
@@ -156,19 +111,9 @@ object DistinctMapReplay {
     val in = ReplayScaffold.manifestStream(spark, spool, SpoolSchema)
       .select(col("event_type"), col("user_id"), unix_micros(col("ts")).as("ts_us"))
       .as[TypedEvent]
-    val out = in.groupByKey(_.event_type)
-      .transformWithState(processor, TimeMode.None(), OutputMode.Append())
+    val out = runningDistinct(in)
       .select(col("event_type"), timestamp_micros(col("ts_us")).as("ts"),
         col("user_id"), col("distinct_users"))
     ReplayScaffold.runToParquet(out.toDF(), runDir).orderBy("event_type", "ts")
   }
-
-  /** Run the replay; returns `(event_type, ts, user_id, distinct_users)`. */
-  def run(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, new DistinctProcessor)
-
-  /** q146 probe — the identical replay on the ORIGINAL two-handle
-    * processor; same oracle as q89 (object scaladoc has the A/B). */
-  def runTwoState(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, new TwoStateDistinctProcessor)
 }

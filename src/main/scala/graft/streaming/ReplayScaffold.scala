@@ -1,8 +1,7 @@
 package graft.streaming
 
 import java.io.File
-import java.nio.channels.FileChannel
-import java.nio.file.{Files, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructType, TimestampType}
@@ -13,57 +12,29 @@ import org.apache.spark.sql.types.{StructType, TimestampType}
   *
   * A replay spool is a pure function of (corpus dir, generator config),
   * so rebuilding it on every run only re-measures the harness — a bench
-  * rep pays the generator 5×. The spool lives under a dir keyed by the
-  * corpus path and carries a marker recording the SOURCE parquet's
-  * size+mtime fingerprint, the generator's config stamp, the spool
-  * WRITER code version, and the built spool's own batch-file listing
-  * (names + sizes + mtimes as a freshness witness — never an order
-  * contract); a marker matching ALL of those skips the rebuild, while
-  * a regenerated corpus under the same path (the r8 lesson), a changed
-  * config, an older writer, or a disturbed spool (missing or extra
-  * file) misses and rebuilds.
+  * rep would pay the generator 5×. [[spoolFor]] builds each spool once
+  * per JVM and reuses it while its stamp (the SOURCE parquet's
+  * names + sizes + mtimes and the generator's config) is unchanged; a
+  * regenerated corpus under the same path or a changed config misses
+  * and rebuilds.
+  *
+  * Spools live in a dir OWNED by the building process
+  * (`graft-<kind>-<hash>-p<pid>` under the tmpdir). Two JVMs replaying
+  * the same corpus at once — a bench beside a verify or a test run —
+  * therefore never read a spool the other is rebuilding; a later build
+  * sweeps the dirs of dead processes, so the tmpdir stays bounded.
   *
   * Order-sensitive replays (q86-q89 running counters, q105/q110 running
-  * sketches) arrive via [[ManifestReplaySource]] since round 13: batch i
-  * of the stream IS the file group named `batch-i[-pJJ].jsonl`, served
-  * at trigger i in lexicographic index order — a pure code contract
-  * ([[writeManifestBatch]] writes it, the DSv2 stream serves it), with
-  * no filesystem-mtime dependence left to defend (VERDICT r12 #1b; two
-  * driver-red rounds against nine local greens localized the q87/q89
-  * fault to the file source's mtime-derived order on the driver's
-  * tmpdir). Since round 13 EVERY replay spool is
-  * manifest-staged — the pinned-mtime parquet path is gone, there is
-  * no mtime left to defend. Build-path defenses:
-  *  - shared-cache builds run under a cross-JVM file lock, so a bench
-  *    beside a verify can no longer interleave rmTree/write;
-  *  - [[privateSpools]] (the DEFAULT; Bench opts out) bypasses the
-  *    shared cache entirely: each process builds into a private dir,
-  *    immune to any cache state another JVM may be mutating.
+  * sketches) depend on arrival order, and that order is code: every
+  * spool is staged as manifest batches ([[writeManifestBatch]]), and
+  * [[ManifestReplaySource]] serves batch i at trigger i by filename
+  * index, never by file mtime.
   *
   * Checkpoints and sinks are NEVER reused — [[freshRunDir]] sweeps old
   * run dirs and hands out a new one, so streaming state can never
   * resume stale (a resumed checkpoint would emit nothing; a stale sink
   * would double rows). */
 object ReplayScaffold {
-
-  /** Version of the spool WRITER code, folded into every [[spoolFor]]
-    * stamp: a cached spool built by an older generator (different file
-    * naming, different sharding) must miss and rebuild, never replay
-    * in a different arrival order. Bump on any change to
-    * [[writeManifestBatch]] or a caller's spool writer. */
-  val SpoolFormatVersion: String = "spoolfmt-5" // 5: 4-part manifest batches
-
-  /** When true (the DEFAULT since round 13 — VERDICT r12 #1a), [[spoolFor]]
-    * never touches the shared tmpdir cache: every (kind, stamp) is built
-    * into a process-private dir, once per JVM (reused within the process
-    * — nothing else may mutate a live process's dir). Bench opts OUT at
-    * its main (the only caller that benefits from the cross-JVM cache,
-    * and the only one whose reps re-pay the generator otherwise); any
-    * other entry point — the driver's harness included — gets the
-    * cache-independent path without knowing the knob exists. Also
-    * settable via `-Dgraft.spool.private=false`. */
-  @volatile var privateSpools: Boolean =
-    !sys.props.get("graft.spool.private").exists(_.equalsIgnoreCase("false"))
 
   /** Publish `df` into `dir` as staged MANIFEST batch `index` — up to
     * `parts` files named `batch-<index padded>-p<j>.jsonl`, one JSON
@@ -216,23 +187,6 @@ object ReplayScaffold {
     f.delete()
   }
 
-  /** Recursive listing of the spool's staged-batch files — relative
-    * path, size and (pinned) mtime — the arrival-order contract in one
-    * string. Recorded in the marker at build time and re-checked on
-    * every reuse, so a disturbed spool (lost pin, deleted file, stray
-    * extra batch) rebuilds instead of replaying in the wrong order. */
-  private def batchListing(spool: File): String = {
-    def walk(f: File, prefix: String): Seq[String] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).toSeq
-          .flatMap(c => walk(c, s"$prefix${f.getName}/"))
-      else if (f.getName.startsWith("batch-"))
-        Seq(s"$prefix${f.getName}=${f.length()}:${f.lastModified()}")
-      else Seq.empty
-    Option(spool.listFiles()).getOrElse(Array.empty).toSeq
-      .flatMap(c => walk(c, "")).sorted.mkString(",")
-  }
-
   /** Post-build invariant: expected staged-batch count, when the
     * caller declares one. Manifest batches are name-ordered — mtimes
     * carry no order, so there is nothing else to defend. */
@@ -254,92 +208,39 @@ object ReplayScaffold {
         s"spool $spool has $batchCount staged batches, expected $expectedFiles")
   }
 
-  // serializes same-JVM builders (sbt runs suites in parallel; FileLock
-  // throws OverlappingFileLockException on same-JVM re-entry)
+  // serializes same-JVM spool builds (sbt runs suites in parallel)
   private val buildLock = new Object
 
-  /** Retention for shared spool caches: a `graft-*` base whose marker
-    * has not been read (reuse touches it) or rewritten (build) for this
-    * many days is abandoned — its kind was renamed/removed, or the
-    * machine stopped running that suite — and is swept so the shared
-    * tmpdir stays bounded across a multi-round soak (VERDICT r12 #7). */
-  val SharedCacheMaxAgeDays: Int = 7
-
-  // once per JVM: the sweep is a hygiene pass, not a per-call cost
-  private lazy val staleSweepDone = new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  /** Sweep shared `graft-*` cache bases (and their `.lock` twins) whose
-    * marker is older than [[SharedCacheMaxAgeDays]]. Conservative: only
-    * dirs WITH an aged marker are touched — a dir mid-build has no (or
-    * a fresh) marker and is left alone; live users re-touch the marker
-    * on every reuse, so "aged" means genuinely unused. */
-  private def sweepStaleSharedCaches(tmp: File): Unit = {
-    if (!staleSweepDone.compareAndSet(false, true)) return
-    val cutoff = System.currentTimeMillis() - SharedCacheMaxAgeDays * 24L * 3600 * 1000
-    Option(tmp.listFiles()).getOrElse(Array.empty).foreach { f =>
-      val n = f.getName
-      if (f.isDirectory && n.startsWith("graft-") && !n.matches(".*-p\\d+$")) {
-        val marker = new File(f, "spool.ok")
-        if (marker.exists() && marker.lastModified() < cutoff) {
-          System.err.println(s"[replay-audit] sweeping stale shared spool cache $f " +
-            s"(marker age ${(System.currentTimeMillis() - marker.lastModified()) / 86400000L} days)")
-          rmTree(f)
-          val lock = new File(tmp, s"$n.lock")
-          if (lock.exists()) lock.delete()
-        }
-      } else if (f.isFile && n.startsWith("graft-") && n.endsWith(".lock") &&
-          f.lastModified() < cutoff && !new File(tmp, n.stripSuffix(".lock")).exists()) {
-        f.delete() // orphaned lock of an already-swept base
-      }
-    }
-  }
-
-  // private-path build memo: (kind, key) -> stamp of the spool already
-  // built by THIS process. A live process's private dir is immutable to
-  // everyone else (the sweep only removes dead owners' dirs), so a
-  // same-stamp re-request within the JVM can reuse instead of rebuild —
-  // without this, privateSpools-by-default would re-pay every generator
-  // on every call (e.g. the q88 gap sweep, or a spec calling run() twice)
-  private val privateBuilt = scala.collection.mutable.Map.empty[(String, String), String]
+  // (kind, corpus-dir hash) -> stamp of the spool this process has
+  // built; a same-stamp request reuses it instead of rebuilding (the
+  // q88 gap sweep, a spec calling run() twice, every bench rep)
+  private val built = scala.collection.mutable.Map.empty[(String, String), String]
 
   /** Build-or-reuse the spool for `kind` over `dir`, fingerprinting
     * `dir/sourceFile` and `extraStamp` (generator knobs that change the
     * spool content — e.g. q52's connection count). `expectedFiles`, when
-    * ≥0, pins the staged-batch count the writer must produce.
-    *
-    * Shared-cache path: the build runs under a cross-JVM `FileLock`, and
-    * the marker records the built spool's own batch listing, re-verified
-    * on every reuse. Private path ([[privateSpools]]): unconditional
-    * rebuild into a per-process dir; stale private dirs of dead
-    * processes are swept. */
+    * ≥0, pins the staged-batch count the writer must produce. The spool
+    * is built into this process's own dir (object scaladoc). */
   def spoolFor(spark: SparkSession, dir: String, kind: String,
       sourceFile: String, extraStamp: String,
       write: (SparkSession, String, File) => Unit,
       expectedFiles: Int = -1): File = {
     // names are part of the fingerprint: two part files swapping contents
-    // at equal sizes within one mtime tick must still miss the marker
+    // at equal sizes within one mtime tick must still miss the stamp
     def fingerprint(f: File): String =
       if (f.isDirectory)
         Option(f.listFiles()).getOrElse(Array.empty).map(fingerprint).sorted.mkString(",")
       else s"${f.getName}=${f.length()}:${f.lastModified()}"
-    val src = new File(dir, sourceFile)
-    val stamp = s"$SpoolFormatVersion\n$dir\n${fingerprint(src)}\n$extraStamp"
+    val stamp = s"${fingerprint(new File(dir, sourceFile))}\n$extraStamp"
     val key = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).take(6).map(b => f"${b & 0xff}%02x").mkString
     val tmp = new File(sys.props("java.io.tmpdir"))
-
-    if (privateSpools) {
-      val pid = ProcessHandle.current().pid()
-      val prefix = s"graft-$kind-$key-p"
-      val base = new File(tmp, s"$prefix$pid")
-      val spool = new File(base, "spool")
-      buildLock.synchronized {
-        val memoKey = (kind, key)
-        if (privateBuilt.get(memoKey).contains(stamp) && spool.isDirectory) {
-          assertSpool(spool, expectedFiles)
-          return spool
-        }
-        // sweep private dirs owned by this or dead processes (bounded tmp)
+    val pid = ProcessHandle.current().pid()
+    val prefix = s"graft-$kind-$key-p"
+    val spool = new File(new File(tmp, s"$prefix$pid"), "spool")
+    buildLock.synchronized {
+      if (!(built.get((kind, key)).contains(stamp) && spool.isDirectory)) {
+        // sweep dirs owned by this or dead processes (bounded tmp)
         Option(tmp.listFiles()).getOrElse(Array.empty)
           .filter(_.getName.startsWith(prefix))
           .filter { f =>
@@ -352,40 +253,10 @@ object ReplayScaffold {
           }.foreach(rmTree)
         spool.mkdirs()
         write(spark, dir, spool)
-        assertSpool(spool, expectedFiles)
-        privateBuilt(memoKey) = stamp
+        built((kind, key)) = stamp
       }
-      return spool
+      assertSpool(spool, expectedFiles)
     }
-
-    sweepStaleSharedCaches(tmp)
-    val base = new File(tmp, s"graft-$kind-$key")
-    val spool = new File(base, "spool")
-    val marker = new File(base, "spool.ok")
-    def markerContent = stamp + "\n#spool#\n" + batchListing(spool)
-    def fresh = marker.exists() &&
-      Files.readString(marker.toPath) == markerContent
-    // touch the marker on every reuse so the retention sweep's "last
-    // used" signal is real: a cache a long-lived bench keeps hitting
-    // never ages out (content equality, not mtime, decides freshness)
-    if (fresh) marker.setLastModified(System.currentTimeMillis())
-    if (!fresh) buildLock.synchronized {
-      val lockFile = new File(tmp, s"graft-$kind-$key.lock")
-      val ch = FileChannel.open(lockFile.toPath,
-        StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-      try {
-        val lk = ch.lock()
-        try {
-          if (!fresh) { // re-check under the lock: a racing JVM may have built
-            rmTree(base); spool.mkdirs()
-            write(spark, dir, spool)
-            assertSpool(spool, expectedFiles)
-            Files.writeString(marker.toPath, markerContent)
-          }
-        } finally lk.release()
-      } finally ch.close()
-    }
-    assertSpool(spool, expectedFiles)
     spool
   }
 

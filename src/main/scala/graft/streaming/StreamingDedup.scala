@@ -83,7 +83,8 @@ object StreamingDedup {
         // commit path. Default off; re-enable per session via
         // `spark.graft.rocksdb.trackRows` or env
         // SPARK_GRAFT_ROCKSDB_TRACKROWS when the ops metric is worth
-        // the write amplification. A/B measurement: SCALE.md round-18.
+        // the write amplification. The speed effect of this default is
+        // unmeasured: no A/B of it has been run.
         val trackRows = spark.conf.getOption("spark.graft.rocksdb.trackRows")
           .orElse(sys.env.get("SPARK_GRAFT_ROCKSDB_TRACKROWS"))
           .getOrElse("false")

@@ -33,60 +33,35 @@ import org.apache.spark.sql.functions._
   *
   * Symbols are kept as a single U+0001-joined string per word: the
   * corpus contract is printable-ASCII tokens, so the separator is
-  * collision-free, and a string fold (`aggregate` HOF here,
-  * `list_reduce` in the DuckDB oracle) gives both engines the identical
-  * greedy semantics with no array-of-array plumbing.
+  * collision-free, and a string fold (the `bpe_merge` kernel here,
+  * `replace` over wrapped symbols in the DuckDB oracle) gives both
+  * engines the identical greedy semantics with no array-of-array
+  * plumbing.
   */
 object Bpe {
 
   /** Symbol separator inside a word's symbol string. */
   val Sep = "\u0001"
 
-  private def symsOf(s: Column): Column = split(s, Sep)
-
   /** Fold one merge (left, right) through a symbol string — the
     * compiled `bpe_merge` kernel (one O(bytes) pass per word;
     * [[org.apache.spark.sql.graft.BpeStatics]] documents the exact
-    * equivalence with [[applyMergeHof]], the original interpreted
-    * `aggregate` fold, which rebuilt the accumulator by immutable
-    * string concat — O(len²) bytes copied per word plus per-element
-    * interpreted-lambda dispatch, the §4 anti-pattern in the ONE
-    * expression every merge round applies to every vocabulary word). */
+    * equivalence with the interpreted `aggregate` fold it replaced,
+    * which rebuilt the accumulator by immutable string concat — O(len²)
+    * bytes copied per word plus per-element interpreted-lambda
+    * dispatch, the §4 anti-pattern in the ONE expression every merge
+    * round applies to every vocabulary word; CorpusOpsSpec keeps that
+    * fold as the reference the kernel is pinned against). */
   private def applyMerge(s: Column, left: String, right: String): Column =
     call_function("bpe_merge", s, lit(left), lit(right))
-
-  /** Plan-evidence probe: the merge-application projection of one round
-    * applied to the initial word table (what `merges` runs per round),
-    * exposed so StagePlans can dump its physical plan — the q132 outer
-    * plan is a driver-materialized LocalTableScan and can't show it. */
-  private[graft] def mergeApplyProbe(docs: DataFrame, textCol: String,
-      left: String, right: String): DataFrame = {
-    val wc = docs
-      .select(explode(TextStats.tokens(col(textCol))).as("word"))
-      .filter(length(col("word")) >= 2)
-      .groupBy("word").agg(count(lit(1)).as("c"))
-      .select(concat_ws(Sep, transform(
-        sequence(lit(1), length(col("word"))),
-        i => col("word").substr(i, lit(1)))).as("s"), col("c"))
-    wc.withColumn("s", applyMerge(col("s"), left, right))
-  }
-
-  /** The original interpreted HOF fold, kept as the independent
-    * semantic reference the kernel is spec-pinned against
-    * (CorpusOpsSpec "bpe_merge kernel ≡ aggregate fold"). */
-  private[graft] def applyMergeHof(s: Column, left: String, right: String): Column =
-    aggregate(symsOf(s), lit(""),
-      (acc, x) => when(acc === "", x)
-        .when((acc === left || acc.endsWith(Sep + left)) && x === right,
-          concat(acc, x))
-        .otherwise(concat(acc, lit(Sep), x)))
 
   /** Adjacent symbol pairs of a symbol string, exploded — the compiled
     * `bpe_pairs` generator ([[org.apache.spark.sql.graft.BpePairStatics]]
     * has the equivalence contract with the arrays_zip/slice form it
     * replaces: that form materialized the split array plus two slice
-    * copies plus a zipped struct array PER WORD PER ROUND — the largest
-    * exec-time stages of q132 at 16×, OPTIMIZATION_r18.md). */
+    * copies plus a zipped struct array PER WORD PER ROUND, visible in
+    * plans/r18/q132_round_paircount_before.txt; the stage time it cost
+    * at 16× was never measured). */
   private def pairFrame(words: DataFrame): DataFrame =
     words
       .select(col("c"), explode(call_function("bpe_pairs", col("s"))).as("p"))
@@ -147,9 +122,8 @@ object Bpe {
     * DuckDB releases (the `->` lambda syntax is deprecated-then-removed
     * after 1.2; list comprehensions postdate 1.0). q132 came back
     * driver-red with rows green and err null — two deterministic
-    * engines disagreeing on integer arithmetic — and the driver's
-    * DuckDB version is the one engine q121 does not fingerprint
-    * (VERDICT r14 "What's wrong #2"; q148 now reports it). This rewrite
+    * engines disagreeing on integer arithmetic — on a DuckDB version
+    * no local run reproduced (VERDICT r14 "What's wrong #2"). This rewrite
     * keeps the identical merge semantics on ancient, version-stable
     * primitives: `regexp_replace` / `replace` / `string_split` / slices.
     *
@@ -203,37 +177,4 @@ object Bpe {
       SELECT round, l AS merge_left, r AS merge_right, cnt AS pair_count
       FROM ($union) ORDER BY round"""
   }
-
-  /** q151 stage probe — the FULL round-1 adjacent-pair count table,
-    * order-insensitive. Decomposes q132: green here while q132 is red
-    * localizes the divergence to the argmax or merge-application stage;
-    * red here means the tokenization/pair-count base itself differs. */
-  def round1Pairs(docs: DataFrame, textCol: String): DataFrame = {
-    val wc = docs
-      .select(explode(TextStats.tokens(col(textCol))).as("word"))
-      .filter(length(col("word")) >= 2)
-      .groupBy("word").agg(count(lit(1)).as("c"))
-      .select(concat_ws(Sep, transform(
-        sequence(lit(1), length(col("word"))),
-        i => col("word").substr(i, lit(1)))).as("s"), col("c"))
-    pairFrame(wc)
-      .groupBy("l", "r").agg(sum(col("c")).as("cnt"))
-      .orderBy("l", "r")
-  }
-
-  /** Conservative oracle for [[round1Pairs]] (no comprehensions, no
-    * lambdas — same primitives as [[oracleSql]]). */
-  val Round1PairsOracle: String = """
-      WITH wc AS (
-        SELECT word, COUNT(*) AS c FROM (
-          SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-        WHERE len(word) >= 2 GROUP BY word),
-      cs AS (
-        SELECT string_split(trim(
-            regexp_replace(word, '([\s\S])', chr(1) || '\1' || chr(1), 'g'),
-            chr(1)), chr(1) || chr(1)) AS y, c
-        FROM wc)
-      SELECT l, r, CAST(SUM(c) AS BIGINT) AS cnt FROM (
-        SELECT unnest(y[1:len(y)-1]) AS l, unnest(y[2:len(y)]) AS r, c FROM cs)
-      GROUP BY l, r ORDER BY l, r"""
 }

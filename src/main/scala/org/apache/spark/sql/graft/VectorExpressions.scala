@@ -3,6 +3,7 @@
  * packaging for third-party native expressions. */
 package org.apache.spark.sql.graft
 
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -559,4 +560,33 @@ case class ArrayEqCount(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): ArrayEqCount =
     copy(left = newLeft, right = newRight)
+}
+
+/** Plan-constant arguments of the registered kernels (`minhash_sig`'s
+  * n/numPerm, `shingle_gen`'s n, `lsh_band_buckets`' planes, ...): they
+  * size or define the compiled loop, so the function registration
+  * evaluates them once at analysis. A column or a NULL there is a caller error,
+  * reported as an `AnalysisException` naming the function and the
+  * 1-based argument position. Here, not in `graft.functions`, because
+  * the message-only `AnalysisException` constructor is only accessible
+  * inside `org.apache.spark.sql`. */
+object KernelArgs {
+  def constant(fn: String, children: Seq[Expression], i: Int): Any = {
+    val e = children(i)
+    val v = if (e.foldable) e.eval() else null
+    if (v == null)
+      throw new AnalysisException(
+        s"$fn: argument ${i + 1} must be a constant (a non-NULL literal), got ${e.sql}",
+        None, None, None, None, Map.empty, Array.empty)
+    v
+  }
+
+  def int(fn: String, children: Seq[Expression], i: Int): Int =
+    constant(fn, children, i).asInstanceOf[Number].intValue()
+
+  def double(fn: String, children: Seq[Expression], i: Int): Double =
+    constant(fn, children, i).asInstanceOf[Number].doubleValue()
+
+  def array(fn: String, children: Seq[Expression], i: Int): ArrayData =
+    constant(fn, children, i).asInstanceOf[ArrayData]
 }

@@ -1,10 +1,11 @@
 package graft
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.streaming.BootstrapCounters
 
-/** q87: the initial-state leg of transformWithState — corpus-seeded
-  * counters continued by the stream, with every leg non-vacuous. */
+/** q87: corpus-seeded counters continued by the stream, with every leg
+  * non-vacuous. */
 class BootstrapCountersSpec extends SparkSpec {
 
   private lazy val out = BootstrapCounters.run(spark, sf()).collect()
@@ -59,13 +60,25 @@ class BootstrapCountersSpec extends SparkSpec {
     assert(out.map(_.getLong(0)).distinct.length == out.length)
   }
 
-  test("seeded single-handle impl ≡ initial-state formulation (r15 A/B)") {
-    // the q147 probe path must stay row-identical to the operator — the
-    // driver-side A/B is only meaningful if the two formulations agree
-    // everywhere the builder can observe
-    val old = BootstrapCounters.runInitialState(spark, sf()).collect()
+  test("whole output ≡ batch corpus totals plus running count and sum per (lang, source), row for row") {
+    // independent reference: corpus totals LEFT-JOINed to a running
+    // window over the stream side in doc_id order
+    val docs = Tables.documents(spark, sf())
+    val corpus = docs.filter(!BootstrapCounters.isStream(col("doc_id")))
+      .groupBy("lang", "source")
+      .agg(count(lit(1)).as("c_docs"), sum("n_chars").cast("long").as("c_chars"))
+    val w = Window.partitionBy("lang", "source").orderBy("doc_id")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val expected = docs.filter(BootstrapCounters.isStream(col("doc_id")))
+      .join(corpus, Seq("lang", "source"), "left")
+      .na.fill(0L, Seq("c_docs", "c_chars"))
+      .select(col("doc_id"), col("lang"), col("source"),
+        (col("c_docs") + count(lit(1)).over(w)).as("run_docs"),
+        (col("c_chars") + sum("n_chars").over(w)).cast("long").as("run_chars"))
+      .collect()
     def keyOf(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3), r.getLong(4))
-    assert(out.map(keyOf).toSeq.sorted == old.map(keyOf).toSeq.sorted)
+    assert(out.length == expected.length)
+    assert(out.map(keyOf).toSeq.sorted == expected.map(keyOf).toSeq.sorted)
   }
 }

@@ -44,6 +44,16 @@ class CorpusOpsSpec extends SparkSpec {
     assert((r.getString(1), r.getString(2), r.getLong(3)) == ("a", "b", 3L))
   }
 
+  /** The interpreted `aggregate` HOF fold that `bpe_merge` replaced —
+    * the independent semantic reference the kernel is pinned against. */
+  private def applyMergeHof(s: org.apache.spark.sql.Column, left: String,
+      right: String): org.apache.spark.sql.Column =
+    aggregate(split(s, Bpe.Sep), lit(""),
+      (acc, x) => when(acc === "", x)
+        .when((acc === left || acc.endsWith(Bpe.Sep + left)) && x === right,
+          concat(acc, x))
+        .otherwise(concat(acc, lit(Bpe.Sep), x)))
+
   test("bpe_merge kernel ≡ the interpreted aggregate fold, randomized words + adversarial runs") {
     // The compiled kernel (BpeStatics.merge) must replay the original
     // HOF fold byte-for-byte, including its degenerate branches: run
@@ -70,7 +80,7 @@ class CorpusOpsSpec extends SparkSpec {
     merges.foreach { case (l, r) =>
       val rows = df.select(
           call_function("bpe_merge", col("s"), lit(l), lit(r)).as("got"),
-          Bpe.applyMergeHof(col("s"), l, r).as("want"),
+          applyMergeHof(col("s"), l, r).as("want"),
           col("s")).collect()
       rows.foreach { row =>
         assert(row.getString(0) == row.getString(1),

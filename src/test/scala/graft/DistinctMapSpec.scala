@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.streaming.DistinctMapReplay
 
@@ -49,11 +50,18 @@ class DistinctMapSpec extends SparkSpec {
     assert(reSeen.nonEmpty, "no user re-seen across a cut — map carry untested")
   }
 
-  test("single-map impl ≡ two-handle formulation (r15 A/B)") {
-    // the q146 probe path must stay row-identical to the operator
-    val old = DistinctMapReplay.runTwoState(spark, sf()).collect()
+  test("whole output ≡ batch running size(collect_set(user_id)) per event_type, row for row") {
+    // independent reference: the running distinct as a batch window over
+    // event-time order ((event_type, ts) is tie-free, TablesSpec pins it)
+    val w = Window.partitionBy("event_type").orderBy("ts")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val expected = Tables.events(spark, sf())
+      .select(col("event_type"), col("ts").cast("timestamp").as("ts"), col("user_id"))
+      .withColumn("distinct_users", size(collect_set("user_id").over(w)).cast("long"))
+      .collect()
     def keyOf(r: org.apache.spark.sql.Row) =
       (r.getString(0), r.getTimestamp(1).getTime, r.getLong(2), r.getLong(3))
-    assert(out.map(keyOf).toSeq.sorted == old.map(keyOf).toSeq.sorted)
+    assert(out.length == expected.length)
+    assert(out.map(keyOf).toSeq.sorted == expected.map(keyOf).toSeq.sorted)
   }
 }

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.text.Bpe
 
 /** Physical-plan shape assertions — the scale contract, enforced: filters
   * must reach the parquet scan, small dimensions must broadcast, heavy
@@ -410,5 +413,55 @@ class PlanShapeSpec extends SparkSpec {
     // appear ABOVE (= before) the round-robin exchange it fans out on
     assert(p.indexOf("levenshtein") < p.indexOf("RoundRobinPartitioning"),
       s"the DP must sit above the verify repartition, not below it:\n$p")
+  }
+
+  /** The body of every `lambdafunction(...)` in a plan string. */
+  private def lambdaBodies(p: String): Seq[String] =
+    "lambdafunction\\(".r.findAllMatchIn(p).map { m =>
+      var depth = 1
+      var i = m.end
+      while (i < p.length && depth > 0) {
+        if (p(i) == '(') depth += 1 else if (p(i) == ')') depth -= 1
+        i += 1
+      }
+      p.substring(m.end, i)
+    }.toSeq
+
+  test("q26/q77: shingles and k-gram hashes run as the compiled kernels, no interpreted lambdas") {
+    val q26 = plan("q26_jaccard_pairs")
+    assert(q26.contains("shingle_gen"), "q26 must call the compiled shingle_gen")
+    assert(!q26.contains("lambdafunction"), "q26 must not evaluate an interpreted lambda")
+    // q77 keeps one lambda, the clean_text token filter; none may hash
+    // grams (the replaced form was transform(sequence, md5(slice(...))))
+    val q77 = plan("q77_span_dedup")
+    assert(q77.contains("gram_h60"), "q77 must call the compiled gram_h60")
+    assert(!lambdaBodies(q77).exists(b => b.contains("md5(") || b.contains("slice(")),
+      s"q77 hashes k-grams in an interpreted lambda:\n$q77")
+  }
+
+  test("q132: BPE rounds run bpe_pairs and bpe_merge, not the aggregate/arrays_zip forms") {
+    // the q132 outer plan is a LocalTableScan of the merge loop's
+    // collected rows, so the per-round plans are captured as
+    // Bpe.merges executes them
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    import spark.implicits._
+    val docs = Seq("banana bandana", "abab cabab", "nanana ban").toDF("text")
+    spark.listenerManager.register(listener)
+    try {
+      // 2 rounds = 2 argmax collects + 1 merge materialization
+      Bpe.merges(docs, "text", 2).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (plans.size < 3 && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    val all = plans.toArray(Array.empty[String]).toSeq
+    assert(all.exists(_.contains("bpe_pairs")), s"no plan called bpe_pairs:\n${all.mkString("\n")}")
+    assert(all.exists(_.contains("bpe_merge")), s"no plan called bpe_merge:\n${all.mkString("\n")}")
+    assert(!all.exists(p => p.contains("aggregate(") || p.contains("arrays_zip")),
+      s"an interpreted BPE form is back:\n${all.mkString("\n")}")
   }
 }

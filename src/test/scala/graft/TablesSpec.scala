@@ -51,4 +51,22 @@ class TablesSpec extends SparkSpec {
     val e = intercept[IllegalStateException] { Tables.events(spark, dir) }
     assert(e.getMessage.contains("unsupported type"))
   }
+
+  test("testdata holds the replay oracles' assumptions: events tie-free, documents anomaly-free") {
+    // q89's oracle attributes running counts ORDER BY ts — only a total
+    // order per key keeps that engine-independent; q87's oracle joins
+    // corpus totals on (lang, source) equality, which never matches a
+    // NULL key. A regenerated testdata that breaks either fails HERE
+    // with a name, not as a mystery hash mismatch.
+    val ties = Tables.events(spark, sf())
+      .groupBy("event_type", "ts").count().filter(col("count") > 1).count()
+    assert(ties == 0,
+      "events has tied (event_type, ts) pairs — q89-family oracles are order-ambiguous on them")
+    val docs = Tables.documents(spark, sf())
+    val dupIds = docs.groupBy("doc_id").count().filter(col("count") > 1).count()
+    val nullKeys = docs
+      .filter(col("lang").isNull || col("source").isNull || col("n_chars").isNull).count()
+    assert(dupIds + nullKeys == 0,
+      "documents has dup ids or NULL lang/source/n_chars — q87's grouping vs join-equality diverges")
+  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
 import graft.similarity.Similarity
@@ -68,6 +69,18 @@ class VectorExpressionsSpec extends SparkSpec {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  test("kernel constant arguments: a NULL or a column fails at analysis naming the function and position") {
+    val df = Seq(("a b c d", 2)).toDF("text", "n_col")
+    val eNull = intercept[AnalysisException] {
+      df.select(call_function("shingle_gen", col("text"), lit(null)))
+    }
+    assert(eNull.getMessage.contains("shingle_gen: argument 2 must be a constant"), eNull.getMessage)
+    val eCol = intercept[AnalysisException] {
+      df.select(call_function("minhash_sig", col("text"), col("n_col"), lit(16)))
+    }
+    assert(eCol.getMessage.contains("minhash_sig: argument 2 must be a constant"), eCol.getMessage)
   }
 
   test("SQL registration via SparkSessionExtensions: cosine_sim / hamming_dist") {
