@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.graft.{CosineSim, DotProduct, HammingDist, MinhashSig, NfcNormalize, PqAdc, PunctCount, QuantizeMse, RandomProjBuckets, SignProject, SortedContainsLong, SubwordCount, SubwordPieces, WinnowSelect, ArrayEqCount, OptimizerOpaque, BpeMergeFold, BpePairs, ShingleGen, GramH60, KernelArgs}
+import org.apache.spark.sql.graft.{CosineSim, DotProduct, HammingDist, MinhashSig, NfcNormalize, PqAdc, PunctCount, QuantizeMse, RandomProjBuckets, SignProject, SortedContainsLong, SubwordCount, SubwordPieces, WinnowSelect, ArrayEqCount, OptimizerOpaque, BpeMergeFold, BpePairs, ShingleGen, GramH60, KernelArgs, TimeParamsColumnarRule}
 
 /** Public facade for the codegen'd vector/fingerprint expressions
   * ([[org.apache.spark.sql.graft.CosineSim]] / `HammingDist`).
@@ -155,8 +155,12 @@ object VectorFunctions {
 }
 
 /** `SparkSessionExtensions` hook:
-  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`. */
+  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`.
+  * Registers the functions above and the physical rule that keeps time
+  * constants out of generated code ([[org.apache.spark.sql.graft.TimeParams]]). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     VectorFunctions.registrations.foreach(ext.injectFunction)
+    ext.injectColumnar(_ => new TimeParamsColumnarRule)
+  }
 }

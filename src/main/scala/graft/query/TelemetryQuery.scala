@@ -1,8 +1,10 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.util.Locale
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Point
+import graft.sinks.TelemetrySink
 
 /** Fluent read-side query builder — parity with the reference's Flux
   * builder `CerebroClient._build_query` (cerebro/client.py:57-91,
@@ -14,6 +16,13 @@ import graft.model.Point
   * range/measurement/field predicates into the parquet scan (check
   * `PushedFilters` in `.explain`) and prunes columns — the same pushdown
   * the reference gets "by construction", but optimizer-verified.
+  *
+  * A dashboard sends many queries that differ only in their time range,
+  * so the read path keeps the fixed per-query cost low: [[from]] reads
+  * through the sink's declared [[TelemetrySink.StoreSchema]] (no schema
+  * inference job), a [[pivot]] with declared values is one aggregate, and
+  * the session's `TimeParams` rule keeps the range bounds out of the
+  * generated code, so a new range reuses the compiled classes.
   */
 final case class TelemetryQuery private (
     df: DataFrame,
@@ -25,9 +34,13 @@ final case class TelemetryQuery private (
     copy(df = df.filter(col(Point.Time) >= lit(start) && col(Point.Time) < lit(end)))
 
   /** Q2 — relative range: `last(15, "minutes")` ≈ Flux `range(start: -15m)`
-    * (client.py:111-114), anchored on the current timestamp. */
-  def last(amount: Int, unit: String): TelemetryQuery =
-    copy(df = df.filter(col(Point.Time) >= current_timestamp() - expr(s"INTERVAL $amount $unit")))
+    * (client.py:111-114), anchored on the current timestamp. `unit` is
+    * one of second, minute, hour, day or week, singular or plural; any
+    * other unit is an `IllegalArgumentException`. */
+  def last(amount: Int, unit: String): TelemetryQuery = {
+    val span = java.time.Duration.ofSeconds(amount.toLong * TelemetryQuery.unitSeconds(unit))
+    copy(df = df.filter(col(Point.Time) >= current_timestamp() - lit(span)))
+  }
 
   /** Q3 — measurement filter (client.py:80). */
   def measurement(m: String): TelemetryQuery =
@@ -45,26 +58,38 @@ final case class TelemetryQuery private (
   def tag(name: String, value: String): TelemetryQuery =
     copy(df = df.filter(element_at(col(Point.Tags), name) === lit(value)))
 
-  /** Fix the output field columns ahead of time. Without this, `pivot`
-    * must launch an extra distinct-values job — at 100 TB always declare
-    * the expected fields. */
-  def withPivotValues(values: Seq[String]): TelemetryQuery =
+  /** Fix the output field columns ahead of time (at least one). Without
+    * this, `pivot` must launch an extra distinct-values job; with it,
+    * `pivot` is a single aggregate. At 100 TB always declare the expected
+    * fields. */
+  def withPivotValues(values: Seq[String]): TelemetryQuery = {
+    require(values.nonEmpty, "withPivotValues needs at least one field name")
     copy(pivotValues = Some(values))
+  }
 
   /** Q5 — long→wide pivot (client.py:85-89): one row per (time, tags),
     * one column per field key, `max` as the value reducer (deterministic,
     * unlike `first`, and identical to the reference's single-value case).
+    *
+    * With declared values this is one `groupBy(time, measurement, tags)`
+    * of `max(element_at(fields, v))` per value over the rows with a
+    * non-empty field map: exactly the groups `explode` would yield (a
+    * group carrying only undeclared fields is an all-null row), without
+    * the exploded rows and without the second `PivotFirst` aggregate that
+    * Spark plans for `pivot(column, values)`. Without declared values the
+    * field map is exploded and pivoted on the discovered keys.
     */
   def pivot(): DataFrame = {
-    val exploded = df.select(
-      col(Point.Time), col(Point.Measurement), col(Point.Tags),
-      explode(col(Point.Fields)).as(Seq("__field", "__value")))
-    val grouped = exploded.groupBy(col(Point.Time), col(Point.Measurement), col(Point.Tags))
-    val piv = pivotValues match {
-      case Some(vs) => grouped.pivot("__field", vs)
-      case None => grouped.pivot("__field")
+    val keys = Seq(col(Point.Time), col(Point.Measurement), col(Point.Tags))
+    pivotValues match {
+      case Some(vs) =>
+        val cells = vs.map(v => max(element_at(col(Point.Fields), v)).as(v))
+        df.filter(size(col(Point.Fields)) > 0).groupBy(keys: _*).agg(cells.head, cells.tail: _*)
+      case None =>
+        df.select(keys :+ explode(col(Point.Fields)).as(Seq("__field", "__value")): _*)
+          .groupBy(keys: _*)
+          .pivot("__field").max("__value")
     }
-    piv.max("__value")
   }
 
   /** Q6 — terminal: the query IS a DataFrame. */
@@ -72,10 +97,23 @@ final case class TelemetryQuery private (
 }
 
 object TelemetryQuery {
-  /** Q1 — scan: `from(bucket: "...")`; a bucket is a parquet (or any
-    * Spark-readable) path holding the uniform point schema. */
+  /** Q1 — scan: `from(bucket: "...")`; a bucket is a store directory
+    * written by [[TelemetrySink]], read through its declared
+    * [[TelemetrySink.StoreSchema]]. A store with no data file yet reads as
+    * no rows. */
   def from(spark: SparkSession, bucketPath: String): TelemetryQuery =
-    TelemetryQuery(spark.read.parquet(bucketPath), None)
+    TelemetryQuery(spark.read.schema(TelemetrySink.StoreSchema).parquet(bucketPath), None)
 
   def fromDF(df: DataFrame): TelemetryQuery = TelemetryQuery(df, None)
+
+  private val UnitSeconds: Map[String, Long] =
+    Map("second" -> 1L, "minute" -> 60L, "hour" -> 3600L, "day" -> 86400L, "week" -> 604800L)
+
+  /** Seconds in one `unit` of [[TelemetryQuery.last]]. */
+  private def unitSeconds(unit: String): Long = {
+    val u = unit.trim.toLowerCase(Locale.ROOT)
+    UnitSeconds.getOrElse(u.stripSuffix("s"), throw new IllegalArgumentException(
+      s"last: unit '$unit' is not one of ${UnitSeconds.toSeq.sortBy(_._2).map(_._1).mkString(", ")} " +
+        "(singular or plural)"))
+  }
 }

@@ -3,6 +3,7 @@ package graft.sinks
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.model.Point
 
 /** The engine's native store: parquet partitioned by (bucket, measurement)
@@ -28,6 +29,20 @@ import graft.model.Point
   * predicates then push into parquet row-group stats within a partition.
   */
 object TelemetrySink {
+
+  /** The store's schema, declared so that a read starts no schema
+    * inference job (one footer read as a Spark job per query) and an
+    * empty store reads as no rows. The [[Point]] data columns, all
+    * nullable as parquet reads them, then the `bucket`, `measurement` and
+    * `__batch` partition columns as strings: `__batch` carries both
+    * `backfill-<uuid>` and numeric micro-batch ids, and a measurement name
+    * stays a string even when it looks like a number. */
+  val StoreSchema: StructType = {
+    val partitions = Seq(Point.Bucket, Point.Measurement, "__batch")
+    StructType(
+      Point.schema.filterNot(f => partitions.contains(f.name)).map(_.copy(nullable = true)) ++
+        partitions.map(StructField(_, StringType, nullable = true)))
+  }
 
   /** Canonical serialization of the tag map (sorted `k=v` pairs) — MAP
     * columns can't be grouping/dedup keys in Spark, and map_entries order
@@ -109,10 +124,11 @@ object TelemetrySink {
     * each land in their own leaf, so only the reader can merge them.
     * Streaming leaves are exactly-once already; set `dedup = false` for
     * a pure-streaming store to skip the shuffle. `__batch` is dropped
-    * either way (it is a commit token, not data). */
+    * either way (it is a commit token, not data). Reads through
+    * [[StoreSchema]], so a store with no data file yet has no rows. */
   def readStore(spark: org.apache.spark.sql.SparkSession, outDir: String,
       dedup: Boolean = true): DataFrame = {
-    val raw = spark.read.parquet(outDir)
+    val raw = spark.read.schema(StoreSchema).parquet(outDir)
     if (!dedup) raw.drop("__batch")
     else raw
       .withColumn("__tags_key", canonicalTags(col(Point.Tags)))

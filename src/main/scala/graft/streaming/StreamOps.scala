@@ -58,9 +58,12 @@ object StreamOps {
 
   /** Q5 for live streams — `groupBy().pivot()` is batch-only, so the wide
     * table is built with conditional aggregates over the declared field
-    * list (what `pivot` compiles to anyway when values are fixed; at scale
-    * you always declare the fields — SURVEY.md Q5 note). One row per
-    * (window, measurement, tags); one column per field. */
+    * list in one aggregate (at scale you always declare the fields —
+    * SURVEY.md Q5 note). Spark compiles a fixed-value `pivot` into two
+    * aggregates, one on (keys, field) and a `PivotFirst` on the keys;
+    * [[graft.query.TelemetryQuery.pivot]] with declared values is the
+    * batch form of this single aggregate. One row per (window,
+    * measurement, tags); one column per field. */
   def streamingPivot(df: DataFrame, every: String, fieldNames: Seq[String]): DataFrame = {
     require(fieldNames.nonEmpty, "declare the pivot fields")
     val aggs = fieldNames.map(f =>

@@ -464,4 +464,40 @@ class PlanShapeSpec extends SparkSpec {
     assert(!all.exists(p => p.contains("aggregate(") || p.contains("arrays_zip")),
       s"an interpreted BPE form is back:\n${all.mkString("\n")}")
   }
+
+  test("store dashboard: one aggregate with no Generate or pivotfirst; both time bounds reach the scan") {
+    import spark.implicits._
+    import java.sql.Timestamp
+    import graft.model.TelemetryPoint
+    import graft.query.TelemetryQuery
+    import graft.sinks.TelemetrySink
+    val store = java.nio.file.Files.createTempDirectory("graft-dash-plan-").toString
+    val t0 = Timestamp.valueOf("2024-03-01 00:00:00").getTime
+    TelemetrySink.writeBatch((0 until 24).map(i => TelemetryPoint("pressure",
+      Map("sensor" -> s"s0${i % 2}"), Map("pz" -> i.toDouble, "temp" -> 15.0), null,
+      new Timestamp(t0 + i * 600000L), None, Some("archive"))).toDF(), store)
+    val dashboard = TelemetryQuery.from(spark, store)
+      .range(new Timestamp(t0 + 3600000L), new Timestamp(t0 + 3 * 3600000L))
+      .measurement("pressure").tag("sensor", "s01").fields("pz", "temp")
+      .withPivotValues(Seq("pz", "temp")).pivot()
+    assert(dashboard.collect().length == 6)
+    val p = dashboard.queryExecution.executedPlan.toString
+    assert(!p.contains("Generate"), p)
+    assert(!p.toLowerCase.contains("pivotfirst"), p)
+    val initial = dashboard.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+      case other => other
+    }
+    val pushed = initial.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.metadata("PushedFilters")
+    }
+    assert(pushed.length == 1, p)
+    assert(initial.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }.length == 1, p)
+    assert(pushed.head.contains("GreaterThanOrEqual(time,2024-03-01 01:00:00") &&
+      pushed.head.contains("LessThan(time,2024-03-01 03:00:00"), pushed.head)
+    // the range bounds are read from references in the generated filter
+    assert(p.contains("param(2024-03-01 01:00:00"), p)
+  }
 }

@@ -79,6 +79,36 @@ class SinkLayoutSpec extends SparkSpec {
     assert(!merged.columns.contains("__batch"), "__batch is a commit token, not data")
   }
 
+  test("readStore on a store with no data file yet has no rows") {
+    val out = Files.createTempDirectory("graft-empty-store-").toString
+    for (dedup <- Seq(true, false)) {
+      val read = TelemetrySink.readStore(spark, out, dedup)
+      assert(read.collect().isEmpty)
+      assert(read.columns.toSeq == TelemetrySink.StoreSchema.fieldNames.toSeq.filterNot(_ == "__batch"))
+    }
+  }
+
+  test("streaming sink: normalize's trigger timestamp compiles no new code on later triggers") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[TelemetryPoint]
+    val out = Files.createTempDirectory("graft-stream-codegen-").toString
+    val ck = Files.createTempDirectory("graft-stream-codegen-ck-").toString
+    val q = TelemetrySink.start(graft.transforms.Transforms.normalize()(in.toDF()), out, ck)
+    def trigger(v: Double): Unit = {
+      in.addData(TelemetryPoint("weather", Map("site" -> "APO"), Map("temp" -> v), null, null, None, None))
+      q.processAllAvailable()
+    }
+    try {
+      trigger(1.0)
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      (2 to 4).foreach(i => trigger(i.toDouble))
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == before)
+    } finally q.stop()
+    val stored = spark.read.parquet(out)
+    assert(stored.count() == 4 && stored.filter(col("time").isNull).count() == 0)
+  }
+
   test("streamingPivot widens the field map on a live stream") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[TelemetryPoint]
