@@ -181,7 +181,7 @@ object ActorReplies {
       * warning in the reference, tron.py:428-433). */
     def consume(raw: Seq[String]): Option[Seq[TypedValue]] = {
       // no `return` inside the loop: in a closure that would compile to a
-      // NonLocalReturnControl throw (the PollingSource lesson)
+      // NonLocalReturnControl throw (see Supervised.loop)
       if (raw.length != types.map(_.arity).sum) None
       else {
         var i = 0

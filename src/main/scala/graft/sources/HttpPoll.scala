@@ -5,7 +5,6 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.time.{Duration, Instant, LocalDateTime, ZoneOffset}
-import java.util.concurrent.atomic.AtomicBoolean
 import scala.jdk.CollectionConverters._
 
 /** Live HTTP poller for the incremental sources (S15/S16) — the
@@ -32,9 +31,13 @@ import scala.jdk.CollectionConverters._
   * "measurement": ..., "value": ...}` ([[IncrementalSource]]'s
   * contract). A `value`-less or malformed row is skipped with a stderr
   * note, never a poller death; failures (HTTP != 200, connect refused,
-  * timeout) back off ×e like every other live source and the poller
-  * retries from the SAME watermark — an outage loses nothing, it only
-  * delays.
+  * timeout) back off ×e under the same [[Supervised]] loop as every other
+  * live source and the poller retries from the SAME watermark — an outage
+  * loses nothing, it only delays.
+  *
+  * The spool file grows in place, one `write` per poll; a reader can meet
+  * its last line half-written. [[SpoolTracker]] and [[JsonlRangeReader]]
+  * treat an unterminated, unparseable last line as not yet written.
   *
   * Scale shape: one daemon thread, O(new rows) work per tick; the spool
   * file grows but [[SpoolTracker]] re-reads only on length change, so
@@ -49,8 +52,6 @@ final class HttpIncrementalPoller(
     initialStartTs: Long = 0L,
     requestTimeoutMs: Long = 30000L) {
 
-  private val running = new AtomicBoolean(false)
-  private var thread: Thread = _
   @volatile private var _lastTsMs: Long = initialStartTs
   /** The poller's resume watermark (exposed for tests/monitoring). */
   def lastTsMs: Long = _lastTsMs
@@ -107,35 +108,15 @@ final class HttpIncrementalPoller(
     rows.size
   }
 
+  private val loop = new Supervised(s"graft-http-$name", backoff)(() => {
+    pollOnce()
+    intervalMs
+  })
+
   def start(): Unit = {
     Files.createDirectories(Paths.get(spoolDir))
-    running.set(true)
-    thread = new Thread(() => {
-      while (running.get()) {
-        val sleepMs =
-          try { pollOnce(); backoff.reset(); intervalMs }
-          catch {
-            case _: InterruptedException => running.set(false); 0L
-            case e: Throwable =>
-              System.err.println(s"[graft-http-$name] $e")
-              backoff.nextDelayMs()
-          }
-        if (running.get()) {
-          try Thread.sleep(sleepMs)
-          catch { case _: InterruptedException => running.set(false) }
-        }
-      }
-    }, s"graft-http-$name")
-    thread.setDaemon(true)
-    thread.start()
+    loop.start()
   }
 
-  def stop(): Unit = {
-    running.set(false)
-    if (thread != null) {
-      thread.interrupt()
-      if (thread != Thread.currentThread())
-        try thread.join(5000) catch { case _: InterruptedException => () }
-    }
-  }
+  def stop(): Unit = loop.stop()
 }

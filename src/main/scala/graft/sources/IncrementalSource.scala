@@ -1,8 +1,9 @@
 package graft.sources
 
 import java.io.File
-import java.util.OptionalLong
+import java.nio.charset.StandardCharsets.UTF_8
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -90,11 +91,16 @@ private[graft] final class SpoolTracker(
   private val mapper = new ObjectMapper()
   private val cache = scala.collection.mutable.HashMap.empty[String, (Long, Long)]
 
-  private def scanMax(f: File): Long = {
+  /** The file's max ts, and whether its lines were all whole (see
+    * [[JsonlLines]]). */
+  private def scanMax(f: File): (Long, Boolean) = {
     val it = lineReader(f)
-    try it.foldLeft(Long.MinValue) { (m, line) =>
-      if (line.trim.isEmpty) m
-      else math.max(m, mapper.readTree(line).get("ts").asLong())
+    try {
+      val m = it.foldLeft(Long.MinValue) { (m, line) =>
+        if (line.trim.isEmpty) m
+        else math.max(m, mapper.readTree(line).get("ts").asLong())
+      }
+      (m, it match { case l: JsonlLines => !l.torn; case _ => true })
     } finally it match {
       case c: AutoCloseable => c.close()
       case _ => ()
@@ -128,8 +134,10 @@ private[graft] final class SpoolTracker(
       val ts = cache.get(key) match {
         case Some((cachedLen, cachedTs)) if cachedLen == len => cachedTs
         case _ =>
-          val t = scanMax(f)
-          cache.update(key, (len, t))
+          // a file with a torn last line is not cached: its length will
+          // change when the writer completes the line
+          val (t, whole) = scanMax(f)
+          if (whole) cache.update(key, (len, t)) else cache.remove(key)
           t
       }
       acc = math.max(acc, ts)
@@ -141,14 +149,42 @@ private[graft] final class SpoolTracker(
 }
 
 private[graft] object SpoolTracker {
-  private[graft] def closingLines(f: File): Iterator[String] =
-    new Iterator[String] with AutoCloseable {
-      private val src = scala.io.Source.fromFile(f)
-      private val it = src.getLines()
-      override def hasNext: Boolean = it.hasNext
-      override def next(): String = it.next()
-      override def close(): Unit = src.close()
-    }
+  private[graft] def closingLines(f: File): Iterator[String] = new JsonlLines(f)
+}
+
+/** The lines of a JSON-lines spool file that a writer may be appending
+  * to while it is read (the HTTP poller appends in place), so a read can
+  * end inside the writer's last line. An unterminated last line that does
+  * not parse is not yet written: it is not returned, and `torn` is set.
+  * Any other bad line is returned for its reader to fail on. */
+private[graft] final class JsonlLines(f: File) extends Iterator[String] with AutoCloseable {
+  private val in = new java.io.BufferedReader(
+    new java.io.InputStreamReader(new java.io.FileInputStream(f), UTF_8))
+  var torn = false
+  private var pending = readLine()
+
+  private def readLine(): String = {
+    val line = new java.lang.StringBuilder
+    var c = in.read()
+    while (c != -1 && c != '\n') { line.append(c.toChar); c = in.read() }
+    if (c == '\n' || JsonlLines.parses(line.toString)) line.toString
+    else { torn = line.length > 0; null }
+  }
+
+  override def hasNext: Boolean = pending != null
+  override def next(): String = {
+    if (pending == null) throw new NoSuchElementException("end of spool file")
+    val line = pending
+    pending = readLine()
+    line
+  }
+  override def close(): Unit = in.close()
+}
+
+private object JsonlLines {
+  private val mapper = new ObjectMapper()
+  private def parses(line: String): Boolean =
+    line.nonEmpty && (try { mapper.readTree(line); true } catch { case NonFatal(_) => false })
 }
 
 final class IncrementalTable(path: String) extends Table with SupportsRead {
@@ -202,11 +238,12 @@ final class IncrementalStream(path: String) extends MicroBatchStream {
 final case class JsonlRangePartition(file: String, startExclusive: Long, endInclusive: Long)
   extends InputPartition
 
-/** Executor-side reader: stream the file, keep rows in (start, end]. */
+/** Executor-side reader: stream the file, keep rows in (start, end]. A
+  * torn last line ends the read (see [[JsonlLines]]): the driver's
+  * [[SpoolTracker]] did not count its row, so a later batch delivers it. */
 final class JsonlRangeReader(p: JsonlRangePartition) extends PartitionReader[InternalRow] {
   private val mapper = new ObjectMapper()
-  private val source = scala.io.Source.fromFile(p.file)
-  private val lines = source.getLines()
+  private val lines = new JsonlLines(new File(p.file))
   private var row: InternalRow = _
 
   override def next(): Boolean = {
@@ -227,5 +264,5 @@ final class JsonlRangeReader(p: JsonlRangePartition) extends PartitionReader[Int
     false
   }
   override def get(): InternalRow = row
-  override def close(): Unit = source.close()
+  override def close(): Unit = lines.close()
 }

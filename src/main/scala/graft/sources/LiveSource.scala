@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicBoolean
 import graft.control.EngineConfig.SourceConf
 
 /** Config-driven LIVE device source — the YAML-expressible form of the
@@ -25,7 +24,7 @@ import graft.control.EngineConfig.SourceConf
   * is seconds between polls (reference `TCPSource.delay`, default 1 s).
   * The poller starts on the first `spool()` call (engine start) and is
   * a daemon thread; failures back off ×e and never kill it
-  * ([[PollingSource]]'s isolation contract).
+  * ([[Supervised]]'s isolation contract).
   */
 final case class LiveSource(conf: SourceConf) extends SpoolBacked {
   def name: String = conf.name
@@ -41,7 +40,6 @@ final case class LiveSource(conf: SourceConf) extends SpoolBacked {
     .orElse(Some(conf.typ).filter(_ == "drift"))
     .getOrElse(throw new IllegalArgumentException(s"$name: missing option 'parser'"))
 
-  private val started = new AtomicBoolean(false)
   @volatile private var poller: PollingSource = _
 
   /** Spool the poller writes and the streaming read tails; overridable
@@ -101,29 +99,26 @@ final case class LiveSource(conf: SourceConf) extends SpoolBacked {
     // orphan (stopPolling is never reached on a failed start).
     val p = parser
     val fn = pollFn()
-    // idempotent across engine restarts: restart() re-calls spool(),
-    // which must not spawn a second poller onto the same spool
     val retentionMs = opt("retention_ms").map(_.toLong).getOrElse(0L)
-    if (started.compareAndSet(false, true)) {
-      val delayMs = opt("delay").map(s => (s.toDouble * 1000).toLong).getOrElse(1000L)
-      poller = new PollingSource(name, spoolDir, fn, delayMs,
+    val src = synchronized {
+      if (poller == null) poller = new PollingSource(name, spoolDir, fn,
+        opt("delay").map(s => (s.toDouble * 1000).toLong).getOrElse(1000L),
         bucket = bucket, tags = tags,
         // retention_ms bounds a long-running daemon's spool (the sweep
         // contract is on SpoolRetention)
         retentionMs = retentionMs)
-      poller.start()
+      poller
     }
-    // A reader lagging past the window can have a file listed by the
-    // source log and swept before the read opens it; without
-    // ignoreMissingFiles that kills the query (FAILED_READ_FILE) — see
-    // PollingSource.rawStream
+    // idempotent across engine restarts: restart() re-calls spool(),
+    // which must not spawn a second poller onto the same spool
+    src.start()
+    // a reader lagging past the retention window can have a listed file
+    // swept before the read opens it; ignoreMissingFiles keeps that from
+    // killing the query (FAILED_READ_FILE, see SpoolRetention)
     SpoolSource(conf.copy(options = conf.options + ("path" -> spoolDir) + ("parser" -> p)),
       readOptions = if (retentionMs > 0) Map("ignoreMissingFiles" -> "true") else Map.empty)
   }
 
   /** Stop the poll thread (spool and stream remain readable). */
-  def stopPolling(): Unit = {
-    if (poller != null) poller.stop()
-    started.set(false)
-  }
+  def stopPolling(): Unit = if (poller != null) poller.stop()
 }

@@ -14,7 +14,7 @@ import java.net.{InetSocketAddress, Socket}
   *
   * Shape matches [[NetPoll.TcpPollFn]]: a lazily-connected persistent
   * socket on the driver-side poller thread, any I/O error closes the
-  * connection and rethrows so [[PollingSource]] backs off and the next
+  * connection and rethrows so the [[Supervised]] loop backs off and the next
   * tick reconnects — the reference's per-source retry isolation
   * (drift.py:109-128 `_measure` catch-all + delay).
   */
@@ -165,7 +165,7 @@ object ModbusPoll {
     * Relays spool the raw closed/open token so the tested
     * [[Parsers.driftDevices]] decode stays the single source of that
     * rule. Any wire error aborts the tick (no partial spool write — the
-    * PollingSource catch treats the tick as failed and backs off). */
+    * [[Supervised]] loop treats the tick as failed and backs off). */
   final class DriftPollFn(host: String, port: Int, unitId: Int,
       devices: Seq[DriftDevice], timeoutMs: Int, connectTimeoutMs: Int)
       extends (() => Seq[String]) with AutoCloseable {

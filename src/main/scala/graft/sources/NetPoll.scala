@@ -14,7 +14,7 @@ import java.nio.charset.StandardCharsets.UTF_8
   * I/O on one daemon thread per source is the honest shape.
   *
   * Failure contract: any I/O error closes the connection and rethrows;
-  * [[PollingSource]]'s catch applies [[Backoff]] and the next poll
+  * the [[Supervised]] loop applies [[Backoff]] and the next poll
   * reconnects lazily — the Spark form of the reference's
   * `AsyncSocketHandler` retry loop (cerebro/protocols.py).
   */

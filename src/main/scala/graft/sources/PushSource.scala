@@ -1,10 +1,8 @@
 package graft.sources
 
-import java.io.{IOException, InputStreamReader, Reader}
+import java.io.{InputStreamReader, Reader}
 import java.net.{InetSocketAddress, Socket, SocketTimeoutException}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths, StandardOpenOption}
-import java.util.concurrent.atomic.AtomicBoolean
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -19,14 +17,14 @@ import graft.transforms.KeywordProcessor
   * connection lives. The complement of [[PollingSource]]'s request/reply
   * ticks.
   *
-  * A driver daemon thread owns the socket: it connects (with
-  * [[Backoff]] between failures, reset on success), writes every
+  * A [[Supervised]] driver daemon thread owns the socket: it connects
+  * (with [[Backoff]] between failures, reset on success), writes every
   * configured command `"\n"`-terminated each `commandIntervalMs`
   * (immediately on connect first — reference `schedule_command` writes
   * then sleeps, tron.py:196-204/369-384), and spools whatever the
   * socket delivers as RAW CHUNKS — one JSON line
-  * `{"conn","seq","data","ts"}` per read, atomically published like
-  * [[PollingSource.writeSpool]]. Framing is deliberately NOT done here:
+  * `{"conn","seq","data","ts"}` per read, published whole by a
+  * [[SpoolPublisher]] (`.json`). Framing is deliberately NOT done here:
   * the spool is a faithful transport log (chunks split mid-line exactly
   * where TCP split them), and line reassembly is the streaming state
   * operator [[StatefulOps.reassembleTsLines]] — the same chain the q52
@@ -65,107 +63,68 @@ final class PushSource(
     val bucket: Option[String] = None,
     val tags: Map[String, String] = Map.empty) extends TelemetrySource {
 
-  private val running = new AtomicBoolean(false)
-  private var thread: Thread = _
-  @volatile private var socket: Socket = null
-  private var fileSeq = 0L
-  private val incarnation =
-    java.lang.Long.toHexString(System.nanoTime() ^ (Thread.currentThread().getId << 40))
+  private val publisher = new SpoolPublisher(spoolDir, name, "json", retentionMs)
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  private val buf = new Array[Char](readChunkChars)
+  // connection state, owned by the loop thread; `socket` is also closed by stop()
+  @volatile private var socket: Socket = null
+  private var reader: Reader = null
+  private var connId: String = null
+  private var connCount = 0L
+  private var chunkSeq = 0L
+  private var lastCmdAt = 0L
 
-  def start(): Unit = {
-    Files.createDirectories(Paths.get(spoolDir))
-    running.set(true)
-    thread = new Thread(() => {
-      var connCount = 0L
-      while (running.get()) {
-        var reader: Reader = null
-        try {
-          val s = new Socket()
-          s.connect(new InetSocketAddress(host, port), connectTimeoutMs)
-          s.setSoTimeout(soTimeoutMs)
-          socket = s
-          backoff.reset()
-          val connId = s"$name-$incarnation-$connCount"
-          connCount += 1
-          reader = new InputStreamReader(s.getInputStream, UTF_8)
-          val out = s.getOutputStream
-          val buf = new Array[Char](readChunkChars)
-          var chunkSeq = 0L
-          var lastCmdAt = 0L // 0 => first command burst fires immediately
-          while (running.get()) {
-            val now = System.currentTimeMillis()
-            if (commands.nonEmpty && now - lastCmdAt >= commandIntervalMs) {
-              commands.foreach(c => out.write((c + "\n").getBytes(UTF_8)))
-              out.flush()
-              lastCmdAt = now
-            }
-            try {
-              val n = reader.read(buf)
-              if (n == -1) throw new java.io.EOFException(s"$host:$port closed")
-              if (n > 0) {
-                writeSpool(connId, chunkSeq, new String(buf, 0, n))
-                chunkSeq += 1
-              }
-            } catch {
-              case _: SocketTimeoutException => () // idle tick: re-check commands/running
-            }
-          }
-        } catch {
-          case _: InterruptedException => running.set(false)
-          case e: Throwable =>
-            if (running.get()) {
-              // log-and-retry, never die — the reference's task
-              // supervision shape (source isolation, cerebro.py:103-118)
-              System.err.println(s"[graft-push-$name] $e")
-              closeSocket()
-              try Thread.sleep(backoff.nextDelayMs())
-              catch { case _: InterruptedException => running.set(false) }
-            }
-        } finally closeSocket()
-      }
-    }, s"graft-push-$name")
-    thread.setDaemon(true)
-    thread.start()
-  }
-
-  def stop(): Unit = {
-    running.set(false)
-    closeSocket() // unblocks a read mid-wait
-    if (thread != null) {
-      thread.interrupt()
-      if (thread != Thread.currentThread())
-        try thread.join(5000) catch { case _: InterruptedException => () }
-    }
-  }
-
-  private def closeSocket(): Unit = {
+  private val loop = new Supervised(s"graft-push-$name", backoff, () => {
     val s = socket
-    if (s != null) {
-      try s.close() catch { case _: IOException => () }
-      socket = null
+    socket = null
+    if (s != null) s.close()
+  })(() => {
+    if (socket == null) connect()
+    val now = System.currentTimeMillis()
+    if (commands.nonEmpty && now - lastCmdAt >= commandIntervalMs) {
+      val out = socket.getOutputStream
+      commands.foreach(c => out.write((c + "\n").getBytes(UTF_8)))
+      out.flush()
+      lastCmdAt = now
     }
+    try {
+      val n = reader.read(buf)
+      if (n == -1) throw new java.io.EOFException(s"$host:$port closed")
+      if (n > 0) {
+        publishChunk(new String(buf, 0, n))
+        chunkSeq += 1
+      }
+    } catch {
+      case _: SocketTimeoutException => () // idle tick: re-check commands/running
+    }
+    0L
+  })
+
+  /** A fresh connection id with chunk seq 0, and the first command burst
+    * due at once. */
+  private def connect(): Unit = {
+    val s = new Socket()
+    socket = s // a failed or stopped connect is closed by the close hook
+    s.connect(new InetSocketAddress(host, port), connectTimeoutMs)
+    s.setSoTimeout(soTimeoutMs)
+    reader = new InputStreamReader(s.getInputStream, UTF_8)
+    connId = s"$name-${publisher.incarnation}-$connCount"
+    connCount += 1
+    chunkSeq = 0L
+    lastCmdAt = 0L
   }
 
-  private def writeSpool(conn: String, seq: Long, data: String): Unit = {
+  def start(): Unit = loop.start()
+  def stop(): Unit = loop.stop()
+
+  private def publishChunk(data: String): Unit = {
     val node = mapper.createObjectNode()
-    node.put("conn", conn)
-    node.put("seq", seq)
+    node.put("conn", connId)
+    node.put("seq", chunkSeq)
     node.put("data", data)
     node.put("ts", System.currentTimeMillis())
-    val tmp = Paths.get(spoolDir, s".$name-$incarnation-$fileSeq.tmp")
-    val fin = Paths.get(spoolDir, s"$name-$incarnation-$fileSeq.json")
-    fileSeq += 1
-    Files.write(tmp, mapper.writeValueAsString(node).getBytes(UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    Files.move(tmp, fin)
-    if (retentionMs > 0) SpoolRetention.sweep(spoolDir, name, retentionMs)
+    publisher.publish(mapper.writeValueAsString(node).getBytes(UTF_8))
   }
-
-  /** Spool schema: one raw chunk per record. */
-  def chunkSchema: StructType = StructType(Seq(
-    StructField("conn", StringType), StructField("seq", LongType),
-    StructField("data", StringType), StructField("ts", TimestampType)))
 
   /** Executor-side half: the raw chunk stream (pair with
     * [[StatefulOps.reassembleTsLines]]). JSON decodes `ts` from epoch
@@ -178,7 +137,7 @@ final class PushSource(
         StructField("data", StringType), StructField("ts", LongType))))
       // a reader lagging past an active retention window must degrade to
       // the sweep's documented loss contract, not die on a swept file
-      // (see PollingSource.rawStream)
+      // (see SpoolRetention)
       .options(if (retentionMs > 0) Map("ignoreMissingFiles" -> "true")
                else Map.empty[String, String])
       .json(spoolDir)
@@ -225,7 +184,6 @@ final case class ActorPushSource(conf: graft.control.EngineConfig.SourceConf)
   private def req(key: String): String =
     opt(key).getOrElse(throw new IllegalArgumentException(s"$name: missing option '$key'"))
 
-  private val started = new AtomicBoolean(false)
   @volatile private var pusher: PushSource = _
 
   private[sources] lazy val spoolDir: String = opt("path").getOrElse(
@@ -238,20 +196,22 @@ final case class ActorPushSource(conf: graft.control.EngineConfig.SourceConf)
       SpoolSource.dictionaryConf(conf.options))
     val host = req("host")
     val port = req("port").toInt
-    if (started.compareAndSet(false, true)) {
-      val commands = conf.options.get("commands")
-        .map(_.asInstanceOf[List[Any]].map(_.toString)).getOrElse(Nil)
-      pusher = new PushSource(name, spoolDir, host, port,
-        commands = commands,
-        commandIntervalMs = opt("interval").map(s => (s.toDouble * 1000).toLong)
-          .getOrElse(60000L),
-        retentionMs = opt("retention_ms").map(_.toLong).getOrElse(0L),
-        bucket = bucket, tags = tags)
-      pusher.start()
+    val src = synchronized {
+      if (pusher == null) {
+        val commands = conf.options.get("commands")
+          .map(_.asInstanceOf[List[Any]].map(_.toString)).getOrElse(Nil)
+        pusher = new PushSource(name, spoolDir, host, port,
+          commands = commands,
+          commandIntervalMs = opt("interval").map(s => (s.toDouble * 1000).toLong)
+            .getOrElse(60000L),
+          retentionMs = opt("retention_ms").map(_.toLong).getOrElse(0L),
+          bucket = bucket, tags = tags)
+      }
+      pusher
     }
-    val chunkSrc = if (pusher != null) pusher
-      else new PushSource(name, spoolDir, host, port) // read-only replay of an existing spool
-    val lines = StatefulOps.reassembleTsLines(chunkSrc.chunkStream(spark),
+    // idempotent across engine restarts, which re-call stream()
+    src.start()
+    val lines = StatefulOps.reassembleTsLines(src.chunkStream(spark),
       idleTimeoutMs = opt("idle_timeout_ms").map(_.toLong).getOrElse(0L))
       .map(lo => ActorReplies.ReplyLine(lo.line, lo.recv_time))
     KeywordProcessor.process(
@@ -264,28 +224,5 @@ final case class ActorPushSource(conf: graft.control.EngineConfig.SourceConf)
   }
 
   /** Stop the push connection (spool and stream remain readable). */
-  def stopPush(): Unit = {
-    if (pusher != null) pusher.stop()
-    started.set(false)
-  }
-}
-
-/** Spool retention sweep shared by the live transports: delete this
-  * source's PUBLISHED spool files older than `retentionMs` (mtime-based;
-  * dot-prefixed tmp files are never touched — they are pre-publish).
-  * Correctness contract: the streaming reader must have a lag shorter
-  * than the retention window, or unread data is lost — retention is a
-  * disk bound for long-running daemons (a 1 Hz poller = ~86k files/day),
-  * not an exactly-once mechanism. Pair with `maxFileAge`/`cleanSource`
-  * options on the read side. */
-private[sources] object SpoolRetention {
-  def sweep(spoolDir: String, name: String, retentionMs: Long): Unit = {
-    val cutoff = System.currentTimeMillis() - retentionMs
-    val dir = new java.io.File(spoolDir)
-    val files = dir.listFiles()
-    if (files != null) files.foreach { f =>
-      if (f.isFile && f.getName.startsWith(s"$name-") && f.lastModified() < cutoff)
-        f.delete() // best-effort: a lost race with the reader is harmless
-    }
-  }
+  def stopPush(): Unit = if (pusher != null) pusher.stop()
 }

@@ -1,7 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
-import java.util.concurrent.atomic.AtomicBoolean
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 import graft.model.Point
@@ -34,25 +33,18 @@ final case class ReplaySource(
   }
 }
 
-/** Raw-reply spool record schema used by [[PollingSource]]: the poller
-  * appends `(raw, recv_time)` lines; [[Parsers]] turn them into points. */
-object RawReply {
-  val schema: StructType = StructType(Seq(
-    StructField("raw", StringType),
-    StructField("recv_time", TimestampType)))
-}
-
 /** Exponential-backoff reconnect policy — parity with the reference's
   * `ReconnectingTCPClientProtocol` (cerebro/protocols.py:24-63): delay
   * grows by factor e per failure up to `maxDelay`, with multiplicative
-  * jitter, and resets on success. */
+  * jitter, and resets on success. Each instance draws its jitter from its
+  * own unseeded generator, so sources failing in one outage do not all
+  * reconnect at the same instants. */
 final case class Backoff(
     initialDelayMs: Long = 1000,
     factor: Double = math.E,
     maxDelayMs: Long = 3600000,
-    jitter: Double = 0.1196,
-    seed: Long = 42L) {
-  private val rnd = new scala.util.Random(seed)
+    jitter: Double = 0.1196) {
+  private val rnd = new scala.util.Random()
   private var delay: Double = initialDelayMs.toDouble
   def nextDelayMs(): Long = {
     val d = delay
@@ -64,13 +56,12 @@ final case class Backoff(
 }
 
 /** Driver-side poller feeding a file spool (SURVEY.md §7.1 step 5: the v1
-  * poller framework). A background thread calls `poll()` every
-  * `delayMs`; each reply batch is appended to `spoolDir` as one
-  * newline-delimited text file which the executor-side stream
-  * (`spark.readStream` over [[RawReply.schema]]) picks up. Failures back
-  * off exponentially ([[Backoff]]) and never kill the thread — source
-  * isolation, like the reference's per-source task supervision
-  * (cerebro/cerebro.py:103-118).
+  * poller framework). Every `delayMs` the [[Supervised]] loop calls
+  * `poll()`; each reply batch is published into `spoolDir` as one
+  * newline-delimited `raw\tepochMillis` text file ([[SpoolPublisher]],
+  * `.txt`) which the executor-side stream ([[rawStream]]) picks up. A
+  * failing poll backs off ([[Backoff]]) and is retried; a poll fn that is
+  * `AutoCloseable` (a held connection) is closed on failure and on stop.
   *
   * Single-connection devices fundamentally serialize at the poller (one
   * TCP/UDP conversation), so the driver-side loop is not the bottleneck;
@@ -84,103 +75,34 @@ final class PollingSource(
     backoff: Backoff = Backoff(),
     val bucket: Option[String] = None,
     val tags: Map[String, String] = Map.empty,
-    retentionMs: Long = 0L,
-    readOptions: Map[String, String] = Map.empty) extends TelemetrySource {
+    retentionMs: Long = 0L) extends TelemetrySource {
 
-  private val running = new AtomicBoolean(false)
-  private var thread: Thread = _
-  @volatile private var seq = 0L
-  // Per-incarnation token in spool file names: a restarted poller on the
-  // SAME spool dir restarts seq at 0, and without the token its atomic
-  // publish (Files.move without REPLACE) would collide with the previous
-  // incarnation's files — every poll failing into backoff until seq
-  // passed the old count.
-  private val incarnation =
-    java.lang.Long.toHexString(System.nanoTime() ^ (Thread.currentThread().getId << 40))
-
-  def start(): Unit = {
-    Files.createDirectories(Paths.get(spoolDir))
-    running.set(true)
-    // NOTE: no `return` inside this lambda — in Scala that compiles to a
-    // NonLocalReturnControl throw, which escapes the thread as an
-    // exception when interrupted. Interrupt just clears `running`.
-    thread = new Thread(() => {
-      while (running.get()) {
-        val sleepMs =
-          try {
-            val replies = poll()
-            if (replies.nonEmpty) writeSpool(replies)
-            backoff.reset()
-            delayMs
-          } catch {
-            case _: InterruptedException => running.set(false); 0L
-            case _: Throwable => backoff.nextDelayMs()
-          }
-        if (running.get()) {
-          try Thread.sleep(sleepMs)
-          catch { case _: InterruptedException => running.set(false) }
-        }
+  private val publisher = new SpoolPublisher(spoolDir, name, "txt", retentionMs)
+  private val loop = new Supervised(s"graft-poller-$name", backoff,
+    () => poll match { case c: AutoCloseable => c.close(); case _ => () })(() => {
+      val replies = poll()
+      if (replies.nonEmpty) {
+        val ts = System.currentTimeMillis()
+        publisher.publish(replies.map(r => s"${r.replace("\n", "\\n")}\t$ts")
+          .mkString("\n").getBytes(UTF_8))
       }
-    }, s"graft-poller-$name")
-    thread.setDaemon(true)
-    thread.start()
-  }
+      delayMs
+    })
 
-  def stop(): Unit = {
-    running.set(false)
-    if (thread != null) thread.interrupt()
-    // A connection-holding poll fn (NetPoll.TcpPollFn) would otherwise
-    // keep its socket open until GC; closing here also unblocks a poll
-    // mid-read (SocketException) so the thread exits promptly.
-    poll match {
-      case c: AutoCloseable => try c.close() catch { case _: Exception => () }
-      case _ => ()
-    }
-    // Join so "stopped" means the spool is FROZEN: an in-flight poll
-    // that already read its reply could otherwise writeSpool after
-    // stop() returns, and a caller counting spool files at the freeze
-    // point would see one more batch land mid-drain.
-    if (thread != null && thread != Thread.currentThread()) {
-      try thread.join(5000) catch { case _: InterruptedException => () }
-    }
-  }
+  def start(): Unit = loop.start()
+  def stop(): Unit = loop.stop()
 
-  private def writeSpool(replies: Seq[String]): Unit = {
-    val ts = System.currentTimeMillis()
-    val lines = replies.map(r => s"${r.replace("\n", "\\n")}\t$ts")
-    val tmp = Paths.get(spoolDir, s".$name-$incarnation-$seq.tmp")
-    val fin = Paths.get(spoolDir, s"$name-$incarnation-$seq.txt")
-    seq += 1
-    Files.write(tmp, lines.mkString("\n").getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    Files.move(tmp, fin) // atomic publish so the stream never sees partials
-    // Retention sweep (opt-in): without it a long-running poller grows
-    // the spool forever — a 1 Hz device is ~86k files/day in one
-    // directory, and the file source's seen-files log grows with it.
-    // The sweep deletes THIS source's published files older than the
-    // window; the reader's lag must stay inside it (see [[SpoolRetention]]).
-    if (retentionMs > 0) SpoolRetention.sweep(spoolDir, name, retentionMs)
-  }
-
-  /** The executor-side half: stream of `(raw, recv_time)` rows.
-    * `readOptions` pass through to the file stream reader — pair a
-    * retention sweep with `maxFileAge` (ignore files older than the
-    * window, keeping the seen-files log bounded) and/or
-    * `cleanSource=delete` (Spark deletes files it has COMMITTED, the
-    * exactly-once-safe complement to the writer-side mtime sweep). */
+  /** The executor-side half: stream of `(raw, recv_time)` rows. With a
+    * retention sweep active, a reader lagging past the window can have a
+    * file LISTED by the source log and swept before the read task opens
+    * it; `ignoreMissingFiles` keeps that to the sweep's documented loss
+    * contract instead of killing the query (FAILED_READ_FILE). */
   def rawStream(spark: SparkSession): DataFrame = {
     import org.apache.spark.sql.functions._
-    // With a retention sweep active, a reader lagging past the window can
-    // have a file LISTED by the source log and swept before the read task
-    // opens it; without this the whole query dies (FAILED_READ_FILE), so
-    // the sweep's documented data-loss contract must include the
-    // per-relation ignoreMissingFiles escape. Explicit readOptions win.
-    val opts =
-      (if (retentionMs > 0) Map("ignoreMissingFiles" -> "true")
-       else Map.empty[String, String]) ++ readOptions
     spark.readStream
       .schema(StructType(Seq(StructField("value", StringType))))
-      .options(opts)
+      .options(if (retentionMs > 0) Map("ignoreMissingFiles" -> "true")
+               else Map.empty[String, String])
       .text(spoolDir)
       .select(
         regexp_extract(col("value"), "^(.*)\\t([0-9]+)$", 1).as("raw"),

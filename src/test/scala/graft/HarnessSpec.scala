@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The correctness/bench harness must surface failures, not swallow them
@@ -52,5 +53,22 @@ class HarnessSpec extends SparkSpec {
     val rc = Process(Seq("python3", "tools/lint_oracle_types.py", sf(), jsonPath.toString))
       .!(ProcessLogger(l => out.append(l).append('\n')))
     assert(rc == 0, s"oracle type lint failed:\n$out")
+  }
+
+  // The live transports run under one supervision rule (sources.Supervised):
+  // NonFatal failures are retried, fatal JVM errors end the thread. A
+  // `Throwable` catch in any one transport would quietly retry an
+  // OutOfMemoryError forever again.
+  test("no Throwable catch under src/main/scala/graft/sources") {
+    val root = java.nio.file.Paths.get("src/main/scala/graft/sources")
+    assert(java.nio.file.Files.isDirectory(root), s"missing $root")
+    val catchAll = """\bcase\b[^=\n]*:\s*(?:java\.lang\.)?Throwable\b""".r
+    val files = java.nio.file.Files.walk(root)
+    val hits = try files.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if catchAll.findFirstIn(line).nonEmpty => s"$f:${i + 1}: ${line.trim}"
+      }
+    }.toList finally files.close()
+    assert(hits.isEmpty, s"catch NonFatal instead:\n${hits.mkString("\n")}")
   }
 }
