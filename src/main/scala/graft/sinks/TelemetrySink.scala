@@ -91,13 +91,23 @@ object TelemetrySink {
       .parquet(outDir)
 
   private def dedupOnKey(batch: DataFrame, defaultBucket: String): DataFrame =
-    batch
-      .withColumn(Point.Bucket, coalesce(col(Point.Bucket), lit(defaultBucket)))
+    dropKeyRepeats(
+      batch.withColumn(Point.Bucket, coalesce(col(Point.Bucket), lit(defaultBucket))))
+      .drop("__tags_key", "__fields_key")
+
+  /** `df` without repeats of the idempotence key (measurement, canonical
+    * tags, canonical fields, time), with the key columns `__tags_key` and
+    * `__fields_key` still on it. `withinWatermark` keeps a streaming
+    * dedup's state bounded by the stream's watermark. */
+  def dropKeyRepeats(df: DataFrame, withinWatermark: Boolean = false): DataFrame = {
+    val keyed = df
       .withColumn("__tags_key", canonicalTags(col(Point.Tags)))
       .withColumn("__fields_key",
         canonicalFields(col(Point.Fields), col(Point.FieldsStr)))
-      .dropDuplicates(Seq(Point.Measurement, "__tags_key", "__fields_key", Point.Time))
-      .drop("__tags_key", "__fields_key")
+    val key = Seq(Point.Measurement, "__tags_key", "__fields_key", Point.Time)
+    if (withinWatermark) keyed.dropDuplicatesWithinWatermark(key)
+    else keyed.dropDuplicates(key)
+  }
 
   /** Exactly-once micro-batch commit: the batch id becomes a leaf
     * partition column and the write is a DYNAMIC partition overwrite, so
@@ -130,12 +140,7 @@ object TelemetrySink {
       dedup: Boolean = true): DataFrame = {
     val raw = spark.read.schema(StoreSchema).parquet(outDir)
     if (!dedup) raw.drop("__batch")
-    else raw
-      .withColumn("__tags_key", canonicalTags(col(Point.Tags)))
-      .withColumn("__fields_key",
-        canonicalFields(col(Point.Fields), col(Point.FieldsStr)))
-      .dropDuplicates(Seq(Point.Measurement, "__tags_key", "__fields_key", Point.Time))
-      .drop("__tags_key", "__fields_key", "__batch")
+    else dropKeyRepeats(raw).drop("__tags_key", "__fields_key", "__batch")
   }
 
   /** SURVEY §7.4 #2 — per-measurement WIDE typed tables (the InfluxDB
@@ -155,11 +160,7 @@ object TelemetrySink {
     * ONE job, and the input is cached across the per-measurement writes
     * rather than recomputed M times. */
   def writeWideTables(batch: DataFrame, outDir: String): Unit = {
-    val deduped = batch
-      .withColumn("__tags_key", canonicalTags(col(Point.Tags)))
-      .withColumn("__fields_key",
-        canonicalFields(col(Point.Fields), col(Point.FieldsStr)))
-      .dropDuplicates(Seq(Point.Measurement, "__tags_key", "__fields_key", Point.Time))
+    val deduped = dropKeyRepeats(batch)
     deduped.persist()
     try {
       val fieldsByMeasurement = deduped

@@ -37,7 +37,9 @@ import scala.jdk.CollectionConverters._
   *
   * The spool file grows in place, one `write` per poll; a reader can meet
   * its last line half-written. [[SpoolTracker]] and [[JsonlRangeReader]]
-  * treat an unterminated, unparseable last line as not yet written.
+  * treat an unterminated, unparseable last line as not yet written. A
+  * poller started on an existing spool cuts such a tail (a poller died
+  * mid-write) and resumes its watermark from the last whole row.
   *
   * Scale shape: one daemon thread, O(new rows) work per tick; the spool
   * file grows but [[SpoolTracker]] re-reads only on length change, so
@@ -113,10 +115,35 @@ final class HttpIncrementalPoller(
     intervalMs
   })
 
-  def start(): Unit = {
+  private var started = false
+
+  def start(): Unit = synchronized {
     Files.createDirectories(Paths.get(spoolDir))
+    if (!started) resume()
+    started = true
     loop.start()
   }
 
-  def stop(): Unit = loop.stop()
+  def stop(): Unit = synchronized { loop.stop(); started = false }
+
+  /** Resume on an existing spool: start the watermark at its last whole
+    * row, so nothing is fetched twice, and end the file on a line break
+    * before the first append. A torn tail (a poller died mid-write; no
+    * reader counted it) is cut; a whole but unterminated last row is
+    * terminated. */
+  private def resume(): Unit = if (Files.exists(spoolFile)) {
+    val lines = new JsonlLines(spoolFile.toFile)
+    try _lastTsMs = lines.filter(_.trim.nonEmpty)
+      .map(l => mapper.readTree(l).get("ts").asLong()).foldLeft(initialStartTs)(math.max)
+    finally lines.close()
+    val raf = new java.io.RandomAccessFile(spoolFile.toFile, "rw")
+    def endsLine(end: Long): Boolean = end == 0 || { raf.seek(end - 1); raf.read() == '\n' }
+    try {
+      if (lines.torn) {
+        var end = raf.length()
+        while (!endsLine(end)) end -= 1
+        raf.setLength(end)
+      } else if (!endsLine(raf.length())) raf.write('\n')
+    } finally raf.close()
+  }
 }

@@ -103,7 +103,6 @@ final case class LiveSource(conf: SourceConf) extends SpoolBacked {
     val src = synchronized {
       if (poller == null) poller = new PollingSource(name, spoolDir, fn,
         opt("delay").map(s => (s.toDouble * 1000).toLong).getOrElse(1000L),
-        bucket = bucket, tags = tags,
         // retention_ms bounds a long-running daemon's spool (the sweep
         // contract is on SpoolRetention)
         retentionMs = retentionMs)

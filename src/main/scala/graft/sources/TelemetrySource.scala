@@ -2,7 +2,6 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types._
 import graft.model.Point
 
 /** A telemetry source produces a streaming DataFrame in the uniform point
@@ -59,8 +58,8 @@ final case class Backoff(
   * poller framework). Every `delayMs` the [[Supervised]] loop calls
   * `poll()`; each reply batch is published into `spoolDir` as one
   * newline-delimited `raw\tepochMillis` text file ([[SpoolPublisher]],
-  * `.txt`) which the executor-side stream ([[rawStream]]) picks up. A
-  * failing poll backs off ([[Backoff]]) and is retried; a poll fn that is
+  * `.txt`), which [[SpoolFanIn]] reads as a [[SpoolSource]]. A failing
+  * poll backs off ([[Backoff]]) and is retried; a poll fn that is
   * `AutoCloseable` (a held connection) is closed on failure and on stop.
   *
   * Single-connection devices fundamentally serialize at the poller (one
@@ -68,14 +67,12 @@ final case class Backoff(
   * the parse/normalize/write pipeline downstream is fully distributed.
   */
 final class PollingSource(
-    val name: String,
+    name: String,
     spoolDir: String,
     poll: () => Seq[String],
     delayMs: Long = 1000,
     backoff: Backoff = Backoff(),
-    val bucket: Option[String] = None,
-    val tags: Map[String, String] = Map.empty,
-    retentionMs: Long = 0L) extends TelemetrySource {
+    retentionMs: Long = 0L) {
 
   private val publisher = new SpoolPublisher(spoolDir, name, "txt", retentionMs)
   private val loop = new Supervised(s"graft-poller-$name", backoff,
@@ -91,26 +88,4 @@ final class PollingSource(
 
   def start(): Unit = loop.start()
   def stop(): Unit = loop.stop()
-
-  /** The executor-side half: stream of `(raw, recv_time)` rows. With a
-    * retention sweep active, a reader lagging past the window can have a
-    * file LISTED by the source log and swept before the read task opens
-    * it; `ignoreMissingFiles` keeps that to the sweep's documented loss
-    * contract instead of killing the query (FAILED_READ_FILE). */
-  def rawStream(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.functions._
-    spark.readStream
-      .schema(StructType(Seq(StructField("value", StringType))))
-      .options(if (retentionMs > 0) Map("ignoreMissingFiles" -> "true")
-               else Map.empty[String, String])
-      .text(spoolDir)
-      .select(
-        regexp_extract(col("value"), "^(.*)\\t([0-9]+)$", 1).as("raw"),
-        timestamp_millis(
-          regexp_extract(col("value"), "^(.*)\\t([0-9]+)$", 2).cast(LongType))
-          .as("recv_time"))
-  }
-
-  /** Default stream: raw replies; subclasses/callers compose a parser. */
-  def stream(spark: SparkSession): DataFrame = rawStream(spark)
 }

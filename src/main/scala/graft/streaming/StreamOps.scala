@@ -48,13 +48,13 @@ object StreamOps {
 
   /** Streaming idempotence (SURVEY.md §4 at-least-once contract): drop
     * points already seen within the watermark horizon, keyed on the sink's
-    * idempotence key (measurement, canonical tags, time). State is bounded
-    * by the watermark — use AFTER [[normalize]] so the watermark exists. */
+    * idempotence key (measurement, canonical tags, canonical fields, time),
+    * so same-series same-time points with different fields are all kept.
+    * State is bounded by the watermark — use AFTER [[normalize]] so the
+    * watermark exists. */
   def dedupWithinWatermark(df: DataFrame): DataFrame =
-    df.withColumn("__tags_key",
-        graft.sinks.TelemetrySink.canonicalTags(col(Point.Tags)))
-      .dropDuplicatesWithinWatermark(Point.Measurement, "__tags_key", Point.Time)
-      .drop("__tags_key")
+    graft.sinks.TelemetrySink.dropKeyRepeats(df, withinWatermark = true)
+      .drop("__tags_key", "__fields_key")
 
   /** Q5 for live streams — `groupBy().pivot()` is batch-only, so the wide
     * table is built with conditional aggregates over the declared field

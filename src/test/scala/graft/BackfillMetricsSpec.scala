@@ -44,11 +44,28 @@ class BackfillMetricsSpec extends SparkSpec {
         StreamOps.normalize()(in.toDF()))
       .writeStream.queryName("dedup_mem").format("memory").outputMode("append").start()
     try {
-      in.addData(pt(1.0), pt(2.0)) // same key (measurement, tags, time)
+      in.addData(pt(1.0), pt(1.0)) // same key (measurement, tags, fields, time)
       q.processAllAvailable()
-      in.addData(pt(3.0)) // repeat in later batch, inside watermark
+      in.addData(pt(1.0)) // repeat in later batch, inside watermark
       q.processAllAvailable()
       assert(spark.sql("SELECT count(*) FROM dedup_mem").head().getLong(0) == 1)
+    } finally q.stop()
+  }
+
+  test("streaming dedupWithinWatermark keeps same-time same-tag points with different fields") {
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[TelemetryPoint]
+    // two channel points of one poll: one tag set, one time, distinct fields
+    def pt(channel: String) = TelemetryPoint("therm", Map("a" -> "1"), Map(channel -> 1.0),
+      null, ts("2024-01-01 00:00:00"), None, None)
+    val q = StreamOps.dedupWithinWatermark(StreamOps.normalize()(in.toDF()))
+      .writeStream.queryName("dedup_fields_mem").format("memory").outputMode("append").start()
+    try {
+      in.addData(pt("channel0"), pt("channel1"))
+      q.processAllAvailable()
+      val kept = spark.sql("SELECT fields FROM dedup_fields_mem").collect()
+        .flatMap(_.getAs[Map[String, Double]](0).keys).sorted.toSeq
+      assert(kept == Seq("channel0", "channel1"))
     } finally q.stop()
   }
 

@@ -71,4 +71,61 @@ class HarnessSpec extends SparkSpec {
     }.toList finally files.close()
     assert(hits.isEmpty, s"catch NonFatal instead:\n${hits.mkString("\n")}")
   }
+
+  // A driver may call the entry points with a session it built itself,
+  // without GraftSession's settings or the extension's functions; the
+  // queries must harden it (Tables.harden) and still run.
+  test("entry and queries run on a session without the engine's settings") {
+    val bare = spark.newSession()
+    Seq("spark.sql.legacy.parquet.nanosAsLong", "spark.sql.session.timeZone",
+      "spark.sql.mapKeyDedupPolicy").foreach(bare.conf.unset)
+    bare.sql("DROP TEMPORARY FUNCTION IF EXISTS cosine_sim")
+    assert(!bare.catalog.functionExists("cosine_sim"))
+    assert(SparkEntry.entry(bare).count() > 0)
+    assert(SparkEntry.queries("q07_events_range")(bare, sf()).count() > 0)
+    assert(SparkEntry.queries("q29_ann_cosine")(bare, sf()).count() > 0)
+  }
+
+  // Where a query spends its time is Bench's attribution pass
+  // (Bench.attribute), not another one-off profiler main.
+  test("src/main defines main only in the allowlisted entry points") {
+    val allowed = Set("Bench", "Verify", "GenScale", "ScaleProbe", "RecallProbe", "control.Main")
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val mains = try files.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
+      val text = java.nio.file.Files.readString(f)
+      val pkg = "(?m)^package ([\\w.]+)".r.findFirstMatchIn(text).fold("")(_.group(1))
+      val objects = "\\bobject (\\w+)".r.findAllMatchIn(text).map(m => m.start -> m.group(1)).toSeq
+      "\\bdef main\\s*\\(".r.findAllMatchIn(text).map { m =>
+        val owner = objects.filter(_._1 < m.start).lastOption.fold("?")(_._2)
+        (pkg.stripPrefix("graft").stripPrefix(".").split('.').filter(_.nonEmpty) :+ owner)
+          .mkString(".")
+      }
+    }.toList finally files.close()
+    assert(mains.contains("Bench"), s"main scan found only: $mains")
+    assert(mains.filterNot(allowed).isEmpty,
+      s"mains outside the allowlist: ${mains.filterNot(allowed)}; use Bench.attribute")
+  }
+
+  test("attribution pass: stages for a batch query, trigger phases for a streaming one") {
+    val out = java.nio.file.Files.createTempDirectory("graft-attribution").toFile
+    val names = Set("q01_pricing_summary", "q81_streaming_ewma")
+    val recs = Bench.attribute(spark, sf(), Queries.all.filter(q => names(q.name)), out)
+    assert(recs.map(_.query).toSet == names)
+    recs.foreach { r =>
+      assert(r.error.isEmpty, s"${r.query}: ${r.error}")
+      assert(r.jobs > 0 && r.stages.exists(_.tasks > 0), s"${r.query}: no stage with tasks")
+      assert(r.plan.toMap.contains("scans"))
+      assert(new java.io.File(out, s"BENCH_stages/${r.query}.plan.txt").length() > 0)
+    }
+    val q01 = recs.find(_.query == "q01_pricing_summary").get.plan.toMap
+    assert(q01("scans") == 1 && q01("partial_aggs") > 0 && q01("codegen_spans") > 0, q01)
+    val stream = recs.find(_.query == "q81_streaming_ewma").get
+    assert(stream.triggers.exists(t =>
+      t.phases.contains("addBatch") && t.phases.contains("walCommit")), stream.triggers)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(out, "BENCH_stages.json"))
+    assert(json.get("queries").size() == 2)
+    // detached after the pass
+    assert(!spark.streams.listListeners().exists(_.getClass.getName.startsWith("graft.Bench")))
+  }
 }

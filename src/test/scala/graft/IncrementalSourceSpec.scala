@@ -229,6 +229,75 @@ class IncrementalSourceSpec extends SparkSpec {
     } finally { poller.stop(); q.stop() }
   }
 
+  /** Loopback environment API: `GET ?start_ts=<ISO seconds>` returns the
+    * rows of `store` with ts >= start_ts, inclusive like the reference's. */
+  private def envServer(store: Seq[(Long, String, Double)],
+      requests: java.util.concurrent.atomic.AtomicInteger): com.sun.net.httpserver.HttpServer = {
+    val server = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/env", (ex: com.sun.net.httpserver.HttpExchange) => {
+      requests.incrementAndGet()
+      val startTs = Option(ex.getRequestURI.getQuery).getOrElse("").split("&").collectFirst {
+        case kv if kv.startsWith("start_ts=") =>
+          java.time.LocalDateTime.parse(kv.stripPrefix("start_ts="))
+            .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
+      }.getOrElse(0L)
+      val body = store.filter(_._1 >= startTs).map { case (ts, m, v) =>
+        val iso = java.time.LocalDateTime.ofInstant(
+          java.time.Instant.ofEpochMilli(ts), java.time.ZoneOffset.UTC).toString
+        s"""{"ts":"$iso","measurement":"$m","value":$v}"""
+      }.mkString("[", ",", "]").getBytes("UTF-8")
+      ex.sendResponseHeaders(200, body.length)
+      ex.getResponseBody.write(body)
+      ex.close()
+    })
+    server.start()
+    server
+  }
+
+  private def pollSpool(dir: String, store: Seq[(Long, String, Double)])(
+      until: graft.sources.HttpIncrementalPoller => Boolean): Unit = {
+    val requests = new java.util.concurrent.atomic.AtomicInteger()
+    val server = envServer(store, requests)
+    val poller = new graft.sources.HttpIncrementalPoller("dimm", dir,
+      s"http://127.0.0.1:${server.getAddress.getPort}/env", intervalMs = 20)
+    poller.start()
+    try {
+      val deadline = System.currentTimeMillis() + 20000
+      while (!(requests.get() >= 3 && until(poller)) && System.currentTimeMillis() < deadline)
+        Thread.sleep(25)
+      assert(requests.get() >= 3 && until(poller), "poller never caught up")
+    } finally { poller.stop(); server.stop(0) }
+  }
+
+  private val seeing = Seq((1700000001000L, "seeing", 0.8), (1700000002000L, "seeing", 0.9),
+    (1700000003000L, "seeing", 1.1))
+
+  test("a poller restarted on a non-empty spool re-appends nothing") {
+    val dir = Files.createTempDirectory("graft-http-resume-").toString
+    writeJsonl(dir, "dimm.jsonl", seeing.take(2)) // whole rows, last one unterminated
+    pollSpool(dir, seeing)(_.lastTsMs == 1700000003000L)
+    val ts = Files.readAllLines(Paths.get(dir, "dimm.jsonl")).toArray.toSeq
+      .map(l => new com.fasterxml.jackson.databind.ObjectMapper().readTree(l.toString).get("ts").asLong)
+    assert(ts == seeing.map(_._1), s"spool rows: $ts")
+  }
+
+  test("a poller started on a torn-tail spool leaves a file the stream reads, each row once") {
+    val dir = Files.createTempDirectory("graft-http-torn-").toString
+    writeJsonl(dir, "dimm.jsonl", seeing.take(2))
+    Files.write(Paths.get(dir, "dimm.jsonl"), "\n{\"ts\":17000000030".getBytes("UTF-8"),
+      java.nio.file.StandardOpenOption.APPEND) // a poller died mid-write
+    pollSpool(dir, seeing)(_.lastTsMs == 1700000003000L)
+    val ckpt = Files.createTempDirectory("graft-http-torn-ckpt-").toString
+    val q = spark.readStream.format("graft.sources.IncrementalSource")
+      .option("path", dir).load()
+      .writeStream.queryName("inc_torn").format("memory")
+      .outputMode("append").option("checkpointLocation", ckpt).start()
+    try q.processAllAvailable() finally q.stop()
+    val vals = spark.sql("SELECT value FROM inc_torn").collect().map(_.getDouble(0)).sorted.toSeq
+    assert(vals == seeing.map(_._3), s"stream rows: $vals")
+  }
+
   test("timestamps arrive as proper TimestampType") {
     val dir = Files.createTempDirectory("graft-inc2-").toString
     val ckpt = Files.createTempDirectory("graft-inc2-ckpt-").toString

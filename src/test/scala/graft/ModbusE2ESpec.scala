@@ -4,7 +4,8 @@ import java.io.{EOFException, IOException, InputStream}
 import java.net.{ServerSocket, Socket, SocketException}
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
-import graft.sources.{ModbusPoll, Parsers, PollingSource}
+import graft.control.EngineConfig.SourceConf
+import graft.sources.{ModbusPoll, Parsers, PollingSource, SpoolFanIn, SpoolSource}
 import graft.sources.ModbusPoll.{DriftDevice, ModbusTcp}
 
 /** In-process Modbus TCP device: serves FC 0x01 (coils) and 0x03/0x04
@@ -206,8 +207,7 @@ class ModbusE2ESpec extends SparkSpec {
         slope = 0.1, intercept = -273.15))
     val fn = ModbusPoll.driftPoll("127.0.0.1", dev.port, 1, devices)
     val src = new PollingSource("ieb", spool, fn, delayMs = 25,
-      backoff = graft.sources.Backoff(initialDelayMs = 25, maxDelayMs = 100),
-      bucket = Some("actors"))
+      backoff = graft.sources.Backoff(initialDelayMs = 25, maxDelayMs = 100))
     src.start()
     try {
       def spooled = Option(new java.io.File(spool).listFiles())
@@ -224,7 +224,8 @@ class ModbusE2ESpec extends SparkSpec {
       val before = spooled
       waitFor("resumed polls spool")(spooled >= before + 2)
       src.stop()
-      val pts = Parsers.driftWire(src.rawStream(spark))
+      val pts = SpoolFanIn.stream(spark, Seq(SpoolSource(SourceConf("ieb", "spool",
+        Map("path" -> spool, "parser" -> "drift"), Some("actors"), Map.empty))))
       val q = pts.writeStream.format("memory").queryName("modbus_pts")
         .outputMode("append").start()
       try q.processAllAvailable() finally q.stop()

@@ -6,7 +6,9 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.functions._
-import graft.sources.{Backoff, NetPoll, Parsers, PollingSource}
+import org.apache.spark.sql.DataFrame
+import graft.control.EngineConfig.SourceConf
+import graft.sources.{Backoff, NetPoll, PollingSource, SpoolFanIn, SpoolSource}
 import graft.sinks.TelemetrySink
 import graft.streaming.StreamOps
 
@@ -91,8 +93,7 @@ class PollingE2ESpec extends SparkSpec {
       if (i == 2) throw new RuntimeException("device hiccup")
       Seq(f"@253ACKQ${1.0 + i}%.2fE-04,2.00E-02,3.00E-03,25.40,x\\")
     }
-    val src = new PollingSource("sens4-b1", spool, poll, delayMs = 50,
-      bucket = Some("sensors"))
+    val src = new PollingSource("sens4-b1", spool, poll, delayMs = 50)
     src.start()
     try {
       // wait until a few successful polls are DURABLE in the spool (poll
@@ -105,7 +106,7 @@ class PollingE2ESpec extends SparkSpec {
       src.stop() // freeze the spool so processAllAvailable can drain
 
       val points = StreamOps.normalize(Map("observatory" -> "LCO"))(
-        Parsers.sens4(src.rawStream(spark), ccd = "b1"))
+        spoolStream("sens4-b1", spool, "sens4", Map("ccd" -> "b1")))
       val q = TelemetrySink.start(points, s"$out/data", s"$out/ckpt",
         defaultBucket = "sensors", queryName = "e2e-sink")
       try q.processAllAvailable() finally q.stop()
@@ -140,6 +141,13 @@ class PollingE2ESpec extends SparkSpec {
     finally b.stop()
   }
 
+  /** A spool read the way an engine reads it: a fan-in of one source. */
+  private def spoolStream(name: String, spool: String, parser: String,
+      options: Map[String, Any] = Map.empty,
+      readOptions: Map[String, String] = Map.empty): DataFrame =
+    SpoolFanIn.stream(spark, Seq(SpoolSource(SourceConf(name, "spool",
+      options + ("path" -> spool) + ("parser" -> parser), None, Map.empty), readOptions)))
+
   private def waitFor(what: String, timeoutMs: Long = 15000)(cond: => Boolean): Unit = {
     val deadline = System.currentTimeMillis() + timeoutMs
     while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(25)
@@ -169,10 +177,15 @@ class PollingE2ESpec extends SparkSpec {
     // green isolated, red once per few full runs. 4 s tolerates a
     // doubled stall while still sweeping ~2.5 windows in-run.
     val retention = 4000
-    val src = new PollingSource("ret-dev", spool, () => Seq(s"v${n.incrementAndGet()}"),
+    val src = new PollingSource("ret-dev", spool, () => Seq(s"""{"n":${n.incrementAndGet()}}"""),
       delayMs = 25, retentionMs = retention)
     src.start()
-    val q = src.rawStream(spark).writeStream.format("parquet")
+    // a reader lagging past the retention window can have a listed file
+    // swept before the read opens it; ignoreMissingFiles keeps that from
+    // killing the query (FAILED_READ_FILE, see SpoolRetention)
+    val q = spoolStream("ret-dev", spool, "tpm",
+        readOptions = Map("ignoreMissingFiles" -> "true"))
+      .writeStream.format("parquet")
       .option("path", s"$out/data")
       .option("checkpointLocation", s"$out/ckpt")
       .outputMode("append").start()
@@ -206,12 +219,12 @@ class PollingE2ESpec extends SparkSpec {
       // uncommitted file would lose values from the MIDDLE, which the
       // prefix check catches.
       val vals = spark.read.parquet(s"$out/data")
-        .select("raw").collect().map(_.getString(0)).toSeq
+        .select("fields").collect().map(_.getAs[Map[String, Double]](0)("n").toInt).toSeq
       assert(vals.size == vals.distinct.size,
         s"duped ${vals.size - vals.distinct.size}")
       assert(vals.size >= polled - 1,
         s"lost ${polled - vals.size} of $polled polls")
-      val expected = (1 to vals.size).map(i => s"v$i")
+      val expected = 1 to vals.size
       assert(vals.sorted == expected.sorted,
         s"not a prefix: missing ${(expected.toSet -- vals.toSet).take(3)}")
     } finally { src.stop(); q.stop() }
@@ -231,8 +244,7 @@ class PollingE2ESpec extends SparkSpec {
     device.start()
     val poll = NetPoll.goveePoll("127.0.0.1", device.port, "a4:c1:38:aa:bb:cc")
     val src = new PollingSource("govee-live", spool, poll, delayMs = 30,
-      backoff = Backoff(initialDelayMs = 20, maxDelayMs = 200),
-      bucket = Some("sensors"))
+      backoff = Backoff(initialDelayMs = 20, maxDelayMs = 200))
     src.start()
     try {
       waitFor("3 live polls")(device.requests.get() >= 3)
@@ -249,8 +261,8 @@ class PollingE2ESpec extends SparkSpec {
       poll.close()
 
       val points = StreamOps.normalize(Map("observatory" -> "LCO"))(
-        Parsers.govee(src.rawStream(spark), "A4:C1:38:AA:BB:CC", "govee1",
-          delaySeconds = 60))
+        spoolStream("govee-live", spool, "govee", Map("address" -> "A4:C1:38:AA:BB:CC",
+          "device" -> "govee1", "delay" -> 60)))
       val q = TelemetrySink.start(points, s"$out/data", s"$out/ckpt",
         defaultBucket = "sensors", queryName = "govee-live-sink")
       try q.processAllAvailable() finally q.stop()
@@ -280,8 +292,7 @@ class PollingE2ESpec extends SparkSpec {
     device.start()
     val poll = NetPoll.sens4Poll("127.0.0.1", device.port, deviceId = 253)
     val src = new PollingSource("sens4-live", spool, poll, delayMs = 30,
-      backoff = Backoff(initialDelayMs = 20, maxDelayMs = 200),
-      bucket = Some("sensors"))
+      backoff = Backoff(initialDelayMs = 20, maxDelayMs = 200))
     src.start()
     try {
       waitFor("3 sens4 polls durable in the spool")(spooled(spool) >= 3)
@@ -289,7 +300,7 @@ class PollingE2ESpec extends SparkSpec {
       poll.close()
 
       val points = StreamOps.normalize(Map.empty)(
-        Parsers.sens4(src.rawStream(spark), ccd = "r1"))
+        spoolStream("sens4-live", spool, "sens4", Map("ccd" -> "r1")))
       val q = TelemetrySink.start(points, s"$out/data", s"$out/ckpt",
         defaultBucket = "sensors", queryName = "sens4-live-sink")
       try q.processAllAvailable() finally q.stop()
@@ -324,16 +335,15 @@ class PollingE2ESpec extends SparkSpec {
     serverThread.start()
 
     val poll = NetPoll.thermistorPoll("127.0.0.1", server.getLocalPort)
-    val src = new PollingSource("therm-live", spool, poll, delayMs = 30,
-      bucket = Some("sensors"))
+    val src = new PollingSource("therm-live", spool, poll, delayMs = 30)
     src.start()
     try {
       waitFor("2 spool files")(new java.io.File(spool).listFiles().count(_.getName.endsWith(".txt")) >= 2)
       src.stop()
 
       val points = StreamOps.normalize(Map.empty)(
-        Parsers.thermistors(src.rawStream(spark),
-          mapping = Map("channel0" -> "ln2_r1")))
+        spoolStream("therm-live", spool, "lvm_thermistors",
+          Map("mapping" -> Map("channel0" -> "ln2_r1"))))
       val q = TelemetrySink.start(points, s"$out/data", s"$out/ckpt",
         defaultBucket = "sensors", queryName = "therm-live-sink")
       try q.processAllAvailable() finally q.stop()
