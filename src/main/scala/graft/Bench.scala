@@ -195,21 +195,14 @@ object Bench {
       (System.nanoTime() - t) / 1e9
     }
     // Streaming residue release, once per pass: every streaming rep
-    // leaves (a) its terminated StreamingQuery in the manager's
-    // terminated list — each retains lastExecution's physical plan
-    // INCLUDING broadcast relations — and (b) its state-store providers
-    // loaded in the executor with maxBatchesToRetainInMemory versions of
-    // 16×-sized state maps. Neither is reclaimed while referenced, so a
-    // multi-pass bench at 16× degraded MONOTONICALLY (q26's reps ran
-    // 6.3→12.7 s across five passes; with the streaming family excluded
-    // the same passes are flat at 3.7 s). Dropping the terminated list
-    // and unloading the providers between passes returns the JVM to its
-    // pass-1 state.
-    def releaseStreamingResidue(): Unit = {
-      spark.streams.resetTerminated()
-      try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-      catch { case e: Throwable => System.err.println(s"[bench] state-store unload: $e") }
-    }
+    // leaves its terminated StreamingQuery in the manager's terminated
+    // list, and each retains lastExecution's physical plan INCLUDING
+    // broadcast relations. A multi-pass bench at 16× degraded
+    // MONOTONICALLY while that residue (and the state-store providers,
+    // now closed as each replay ends: ReplayScaffold.drain) stayed
+    // loaded (q26's reps ran 6.3→12.7 s across five passes; with the
+    // streaming family excluded the same passes are flat at 3.7 s).
+    def releaseStreamingResidue(): Unit = spark.streams.resetTerminated()
     // JIT-quiescence settle, run after warmup and between timed passes:
     // at 86 queries the C2 compile BACKLOG outgrew two warmup passes
     // (r10's noisy set was dominated by rep-1 spikes on late-suite

@@ -3,6 +3,7 @@ package graft.batch
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ResampleGrid
 
 /** Time-based rolling windows — the Spark form of the reference's
   * `rolling_mean_by` / `rolling_max_by` wind & gust analysis
@@ -70,25 +71,18 @@ object Rolling {
     * with the value linearly interpolated between the bracketing raw
     * points (`v = v₋ + (v₊ − v₋)·(t − t₋)/(t₊ − t₋)`; an exact tick hit
     * returns the raw value). Duplicate timestamps within a key collapse
-    * via `max` first (deterministic, order-free); null values are
-    * treated as missing.
-    *
-    * Implementation is declarative (no per-partition imperative loop):
-    * raw points and generated ticks union into one frame, and a single
-    * per-key ordered window finds each tick's bracketing observations
-    * with `last(..., ignoreNulls)` over the preceding frame and
-    * `first(..., ignoreNulls)` over the following frame — raw rows sort
-    * before a tick at the same instant, so the preceding frame resolves
-    * exact hits. Timestamps order in integer microseconds
-    * ([[timeWindow]]'s discipline) so tick arithmetic is exact; the
-    * interpolation itself is fixed-order IEEE double math, replayable
+    * to their `max` first (NaN largest; a −0.0/+0.0 tie gives +0.0);
+    * null values are treated as missing. Ticks are floor/ceil multiples
+    * of the step in integer microseconds, before 1970 too; the
+    * interpolation is fixed-order IEEE double math, replayable
     * bit-for-bit by any engine (q91's oracle).
     *
-    * Scale shape: two keyed exchanges (the (key, ts) collapse aggregate,
-    * then the per-key window) plus a per-key bounds aggregate that emits
-    * one tiny row per series before ticks explode from `sequence` — the
-    * grid is never materialized on the driver. Like every per-entity
-    * window here, one KEY's series must fit a task; keys are required
+    * Scale shape: one keyed aggregate collects each key's `(t, v)`
+    * points (one exchange above the input), and one compiled kernel,
+    * `resample_grid` ([[org.apache.spark.sql.graft.ResampleStatics]]),
+    * sorts, collapses and walks them once to emit the grid — no tick
+    * union, no windows. Like every per-entity operator here, one KEY's
+    * series must fit one array in one task; keys are required
     * ([[Rolling]] scaladoc — a global resample collapses to one
     * partition and is wrong at scale). */
   def resampleLinear(df: DataFrame, tsCol: String, valueCol: String,
@@ -100,8 +94,7 @@ object Rolling {
     * telemetry dashboards default to for states/setpoints, where
     * interpolating between discrete values would invent readings):
     * every tick carries the most recent raw observation at or before
-    * it. Same tick grid, same single per-key window — minus the
-    * forward-looking bracket, which LOCF doesn't need. */
+    * it. Same tick grid, same aggregate and kernel. */
   def resamplePrevious(df: DataFrame, tsCol: String, valueCol: String,
       keys: Seq[String], stepSeconds: Long): DataFrame =
     resampleImpl(df, tsCol, valueCol, keys, stepSeconds, interpolate = false)
@@ -110,63 +103,11 @@ object Rolling {
       keys: Seq[String], stepSeconds: Long, interpolate: Boolean): DataFrame = {
     require(keys.nonEmpty, "resample requires partition keys (see Rolling scaladoc)")
     require(stepSeconds > 0, s"stepSeconds must be positive, got $stepSeconds")
-    val step = stepSeconds * 1000000L
     val keyCols = keys.map(col)
-    val raw = df
-      .select(keyCols :+ unix_micros(col(tsCol).cast("timestamp")).as("t") :+ col(valueCol).cast("double").as("v"): _*)
-      .groupBy(keyCols :+ col("t"): _*).agg(max("v").as("v"))
-      // "null values are treated as missing" for real: an all-null (key,t)
-      // group must not act as a bracket — its timestamp would pair with a
-      // DIFFERENT observation's value (wrong slope), and a tick landing on
-      // it would read as an exact hit emitting the older value. max()
-      // already ignores nulls within a group; drop the all-null groups too
-      // so every surviving raw row carries both its t and its v.
+    df.select(keyCols :+ unix_micros(col(tsCol).cast("timestamp")).as("t") :+ col(valueCol).cast("double").as("v"): _*)
       .filter(col("v").isNotNull)
-    val ticks = raw.groupBy(keyCols: _*)
-      .agg(min("t").as("tmin"), max("t").as("tmax"))
-      .withColumn("gmin", expr(s"((tmin + $step - 1) div $step) * $step"))
-      .withColumn("gmax", expr(s"(tmax div $step) * $step"))
-      .filter(col("gmin") <= col("gmax"))
-      .select(keyCols :+ explode(sequence(col("gmin"), col("gmax"), lit(step))).as("t"): _*)
-    val unioned = raw.withColumn("is_raw", lit(1))
-      .unionByName(ticks.withColumn("v", lit(null).cast("double")).withColumn("is_raw", lit(0)))
-    val w = Window.partitionBy(keyCols: _*).orderBy(col("t").asc, col("is_raw").desc)
-    val before = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // The forward-looking bracket (first raw observation at or after the
-    // tick) is NOT expressed as `first(...) over (current row ..
-    // unbounded following)`: Spark's UnboundedFollowingWindowFunctionFrame
-    // rebuilds its aggregate buffer from the current row to the partition
-    // end for EVERY row — O(n²) per key's series (measured: the frame
-    // dominated q91's wall at 667 raw points/key; SPARK's growing-frame
-    // processor is incremental, the shrinking one is not). The same value
-    // computed over the REVERSED sort is a growing frame: (t desc,
-    // is_raw asc) is the exact reverse of (t asc, is_raw desc) — the key
-    // is unique per row (raw and tick rows at one t differ in is_raw) —
-    // so `last(.., ignoreNulls) over (unbounded preceding .. current)`
-    // under the reversed order selects the identical bracket row in O(n).
-    // Costs one extra local sort per partition; no extra exchange (same
-    // partitioning).
-    val wDesc = Window.partitionBy(keyCols: _*).orderBy(col("t").desc, col("is_raw").asc)
-    val afterInc = wDesc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val rawV = when(col("is_raw") === 1, col("v"))
-    val rawT = when(col("is_raw") === 1, col("t"))
-    val bracketed =
-      if (!interpolate)
-        unioned.withColumn("pv", last(rawV, ignoreNulls = true).over(before))
-          .filter(col("is_raw") === 0)
-          .withColumn(valueCol, col("pv"))
-      else
-        unioned
-          .withColumn("pv", last(rawV, ignoreNulls = true).over(before))
-          .withColumn("pt", last(rawT, ignoreNulls = true).over(before))
-          .withColumn("nv", last(rawV, ignoreNulls = true).over(afterInc))
-          .withColumn("nt", last(rawT, ignoreNulls = true).over(afterInc))
-          .filter(col("is_raw") === 0)
-          .withColumn(valueCol,
-            when(col("pt") === col("t"), col("pv")).otherwise(
-              col("pv") + (col("nv") - col("pv")) *
-                ((col("t") - col("pt")).cast("double") / (col("nt") - col("pt")).cast("double"))))
-    bracketed
-      .select(keyCols :+ timestamp_micros(col("t")).cast("timestamp_ntz").as(tsCol) :+ col(valueCol): _*)
+      .groupBy(keyCols: _*).agg(collect_list(struct(col("t"), col("v"))).as("points"))
+      .select(keyCols :+ inline(ResampleGrid.column(col("points"), stepSeconds * 1000000L, interpolate)): _*)
+      .select(keyCols :+ timestamp_micros(col("t")).cast("timestamp_ntz").as(tsCol) :+ col("v").as(valueCol): _*)
   }
 }

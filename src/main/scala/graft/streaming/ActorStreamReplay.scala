@@ -198,7 +198,7 @@ object ActorStreamReplay {
         .outputMode("append")
         .option("checkpointLocation", new File(runDir, "ckpt").toString)
         .start()
-      try q.processAllAvailable() finally q.stop()
+      ReplayScaffold.drain(q)
     }
 
     val t = spark.read.parquet(outDir.toString)

@@ -60,7 +60,7 @@ object EwmaReplay {
       .outputMode("append")
       .option("checkpointLocation", new File(runDir, "ckpt").toString)
       .start()
-    try q.processAllAvailable() finally q.stop()
+    ReplayScaffold.drain(q)
 
     spark.read.parquet(outDir.toString).orderBy("series", "n")
   }

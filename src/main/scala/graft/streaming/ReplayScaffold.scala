@@ -4,6 +4,8 @@ import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ReplayState
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{StructType, TimestampType}
 
 /** Shared scaffold for the streaming replay harnesses (q52/q64/q73 and
@@ -177,10 +179,17 @@ object ReplayScaffold {
         .outputMode("append")
         .option("checkpointLocation", new File(runDir, "ckpt").toString)
         .start()
-      try q.processAllAvailable() finally q.stop()
+      drain(q)
     } finally ShufflePin.release(spark)
     spark.read.parquet(outDir.toString)
   }
+
+  /** Run `q` to the end of its input, stop it, and close the state-store
+    * providers it loaded ([[org.apache.spark.sql.graft.ReplayState]]), so
+    * a replay leaves no provider or checkpoint thread pool behind. */
+  def drain(q: StreamingQuery): Unit =
+    try q.processAllAvailable()
+    finally try q.stop() finally ReplayState.unload(q.runId)
 
   def rmTree(f: File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)

@@ -262,7 +262,7 @@ object StreamingDedup {
       .outputMode("append")
       .option("checkpointLocation", new File(runDir, "ckpt").toString)
       .start()
-    try q.processAllAvailable() finally q.stop()
+    ReplayScaffold.drain(q)
 
     spark.read.parquet(outDir.toString).orderBy("fingerprint")
   }
@@ -308,7 +308,7 @@ object StreamingDedup {
       .outputMode("append")
       .option("checkpointLocation", new File(runDir, "ckpt").toString)
       .start()
-    try q.processAllAvailable() finally q.stop()
+    ReplayScaffold.drain(q)
 
     spark.read.parquet(outDir.toString)
       .groupBy("doc_id")

@@ -87,7 +87,7 @@ object WindowedReplay {
       .outputMode("append")
       .option("checkpointLocation", new File(runDir, "ckpt").toString)
       .start()
-    try q.processAllAvailable() finally q.stop()
+    ReplayScaffold.drain(q)
 
     spark.read.parquet(outDir.toString).orderBy("ws", "event_type")
   }

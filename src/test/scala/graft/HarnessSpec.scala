@@ -128,4 +128,37 @@ class HarnessSpec extends SparkSpec {
     // detached after the pass
     assert(!spark.streams.listListeners().exists(_.getClass.getName.startsWith("graft.Bench")))
   }
+
+  test("stage_diff pairs two attribution artifacts query by query") {
+    import scala.sys.process._
+    val dir = java.nio.file.Files.createTempDirectory("stage-diff")
+    def stage(wallMs: Int, tasks: Int, shuffle: Int, spill: Int) =
+      s"""{"name":"s","wall_ms":$wallMs,"run_ms":1,"cpu_ms":1,"shuffle_read_bytes":$shuffle,
+         |"shuffle_write_bytes":$shuffle,"spill_mem_bytes":$spill,"spill_disk_bytes":0,
+         |"tasks":$tasks}""".stripMargin
+    def rec(q: String, wall: String, jobs: Int, stages: String*) =
+      s"""{"query":"$q","wall_s":$wall,"jobs":$jobs,"plan":{},"stages":[${stages.mkString(",")}],"triggers":[]}"""
+    def artifact(name: String, recs: String*) = {
+      val f = dir.resolve(name)
+      java.nio.file.Files.writeString(f, s"""{"sf":"x","queries":[\n${recs.mkString(",\n")}\n]}\n""")
+      f.toString
+    }
+    val a = artifact("a.json",
+      rec("q91", "0.600", 5, stage(100, 4, 50, 0), stage(100, 5, 50, 0)),
+      rec("q01", "0.200", 1, stage(100, 4, 0, 0)),
+      rec("gone", "1.000", 1, stage(100, 1, 0, 0)))
+    val b = artifact("b.json",
+      rec("q01", "0.250", 1, stage(100, 4, 0, 0)),
+      rec("q91", "0.300", 2, stage(100, 4, 25, 8)),
+      rec("added", "9.000", 1, stage(100, 1, 0, 0)))
+    val out = new StringBuilder
+    val rc = Process(Seq("python3", "tools/stage_diff.py", a, b))
+      .!(ProcessLogger(l => out.append(l).append('\n'), _ => ()))
+    assert(rc == 0, out)
+    val lines = out.toString.linesIterator.toList
+    assert(lines.map(_.split(" ").head) == List("query", "q91", "q01"), out)
+    val q91 = lines(1)
+    Seq("0.600 -> 0.300 (0.50x)", "5 -> 2 (0.40x)", "9 -> 4 (0.44x)", "200 -> 50 (0.25x)",
+        "0 -> 8 (new)").foreach(c => assert(q91.contains(c), s"missing '$c' in: $q91"))
+  }
 }

@@ -154,6 +154,17 @@ class OperatorsSpec extends SparkSpec {
     assert(run(df) == run(df.repartition(13)))
   }
 
+  test("resampleLinear: a pre-1970 series gets floor/ceil grid ticks") {
+    // ticks are multiples of the step on both sides of the epoch: -50 s
+    // .. -10 s at a 30 s step holds exactly the tick at -30 s
+    val df = Seq(("a", -50L, 1.0), ("a", -10L, 5.0)).toDF("k", "sec", "v")
+      .select(col("k"), timestamp_seconds(col("sec")).as("ts"), col("v"))
+    val out = Rolling.resampleLinear(df, "ts", "v", Seq("k"), stepSeconds = 30)
+      .select(unix_micros(col("ts").cast("timestamp")), col("v")).collect()
+      .map(r => (r.getLong(0), r.get(1))).toSeq
+    assert(out == Seq((-30000000L, 3.0)), s"got $out")
+  }
+
   test("resamplePrevious: LOCF carries the last observation, exact hits included") {
     val df = Seq(
       ("a", 10L, 1.0), ("a", 45L, 4.0), ("a", 70L, 7.0),

@@ -301,10 +301,17 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"), "a vocabulary-sized join must never SMJ")
   }
 
-  test("q91: resample is pure keyed window work - no joins of any kind") {
-    val p = plan("q91_resample_interpolate")
-    assert(!p.contains("Join"), "interpolation brackets come from windows, not joins")
-    assert(p.contains("Window"), "per-key window expected")
+  test("q91/q94: resample is one keyed aggregate, no window or join") {
+    Seq("q91_resample_interpolate", "q94_resample_locf").foreach { q =>
+      val p = plan(q)
+      assert(!p.contains("Window") && !p.contains("Join") && !p.contains("Union"),
+        s"$q: brackets come from the grid kernel, not windows, joins or a tick union")
+      assert("Exchange hashpartitioning\\(user_id".r.findAllIn(p).length == 1,
+        s"$q: one keyed exchange expected\n$p")
+      val scan = p.indexOf("FileScan parquet")
+      assert(scan > p.indexOf("Exchange hashpartitioning(user_id"), s"$q: exchange above the events scan")
+      assert(p.contains("resample_grid"), s"$q: the grid must be the native kernel")
+    }
   }
 
   test("q92: dHash pair join is a blocked equi-join, never a cross product") {
