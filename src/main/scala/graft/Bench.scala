@@ -707,10 +707,11 @@ object Bench {
 
   /** Plan-health counters of a formatted physical plan: scans and those
     * with pushed filters, broadcast and sort-merge joins, partial
-    * aggregates, exchanges and whole-stage codegen spans. The plan is a
-    * node tree, then one `(id) Name` block a node; an adaptive plan's
-    * tree holds its final and its initial plan, and only the final
-    * plan's nodes are counted. */
+    * aggregates, exchanges, whole-stage codegen spans, and the `Filter`,
+    * `Project` and `Generate` nodes outside every codegen span (each runs
+    * interpreted, row by row). The plan is a node tree, then one
+    * `(id) Name` block a node; an adaptive plan's tree holds its final
+    * and its initial plan, and only the final plan's nodes are counted. */
   private def planHealth(plan: String): Seq[(String, Int)] = {
     val finalTree = plan.split("\n\n", 2)(0).split("== Initial Plan ==")(0)
     val ids = "\\((\\d+)\\)".r.findAllMatchIn(finalTree).map(_.group(1)).toSet
@@ -725,7 +726,9 @@ object Bench {
       "partial_aggs" -> count { case (n, b) => n.endsWith("Aggregate") && b.contains("partial_") },
       "exchanges" -> count(_._1.endsWith("Exchange")),
       "codegen_spans" -> nodes.flatMap { case (_, b) =>
-        "codegen id : (\\d+)".r.findFirstMatchIn(b).map(_.group(1)) }.distinct.size)
+        "codegen id : (\\d+)".r.findFirstMatchIn(b).map(_.group(1)) }.distinct.size,
+      "interpreted_ops" -> count { case (n, b) =>
+        Set("Filter", "Project", "Generate")(n) && !b.contains("codegen id : ") })
   }
 
   /** The attribution pass: each query of `suite` runs once, untimed, under

@@ -212,15 +212,16 @@ object Queries {
   // Rolling time windows (SURVEY §2.3 R11/R12) + ranking/lag windows
   // ---------------------------------------------------------------------
 
+  // The window columns are one projection, so the three share one sort
+  // and one Window (a withColumn each would plan three of both).
   val q09_rolling_window = Q("q09_rolling_window",
     (s, dir) => {
       val w = Rolling.timeWindow(col("ts").cast("timestamp"), 300, col("user_id"))
       events(s, dir)
-        .withColumn("roll_avg_5m", d(sum(dec2(col("value"))).over(w)) / count(col("value")).over(w))
-        .withColumn("roll_max_5m", max(col("value")).over(w))
-        .withColumn("roll_n_5m", count(col("value")).over(w))
         .select(col("event_id"), col("ts"), col("user_id"), col("value"),
-          col("roll_avg_5m"), col("roll_max_5m"), col("roll_n_5m"))
+          (d(sum(dec2(col("value"))).over(w)) / count(col("value")).over(w)).as("roll_avg_5m"),
+          max(col("value")).over(w).as("roll_max_5m"),
+          count(col("value")).over(w).as("roll_n_5m"))
         .orderBy("event_id")
     },
     Some("""
@@ -1320,25 +1321,23 @@ object Queries {
 
   // The reference's full wind/gust pipeline shape (SURVEY §7.2 minimum
   // slice; tools.py:248-272): 3 trailing windows × (mean, max) per user
-  // series + a derived column, all window frames sharing one sort.
+  // series + a derived column. The window columns are one projection, so
+  // all six frames share one sort and one Window.
   val q49_wind_pipeline = Q("q49_wind_pipeline",
     (s, dir) => {
-      val e = events(s, dir)
-      val out = Seq(300L, 600L, 1800L).foldLeft(e) { case (df, secs) =>
+      val rolled = Seq(300L, 600L, 1800L).flatMap { secs =>
         val w = Rolling.timeWindow(col("ts").cast("timestamp"), secs, col("user_id"))
         val label = s"${secs / 60}m"
-        df.withColumn(s"avg_$label",
-            d(sum(dec2(col("value"))).over(w)) / count(col("value")).over(w))
-          .withColumn(s"max_$label", max(col("value")).over(w))
+        Seq((d(sum(dec2(col("value"))).over(w)) / count(col("value")).over(w)).as(s"avg_$label"),
+          max(col("value")).over(w).as(s"max_$label"))
       }
+      val out = events(s, dir)
+        .select(Seq(col("event_id"), col("user_id"), col("ts"), col("value")) ++ rolled: _*)
       // no rounding anywhere: the decimal-sum/count divisions are IEEE-
       // identical across engines, while round() tie-breaking is NOT
       // (Spark = decimal HALF_UP, DuckDB = binary) — see q09
       out
         .withColumn("derived", col("value") - (lit(100.0) - col("avg_5m")) / 5.0)
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"),
-          col("avg_5m"), col("max_5m"), col("avg_10m"), col("max_10m"),
-          col("avg_30m"), col("max_30m"), col("derived"))
         .orderBy("event_id")
     },
     Some("""

@@ -1,5 +1,6 @@
 package graft.batch
 
+import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
@@ -42,7 +43,14 @@ object Rolling {
 
   /** The reference's full wind pipeline shape: for each (colName -> agg)
     * add columns `<colName>_<label>` for every window in `windows`
-    * (tools.py:248-272 builds 5m/10m/30m means and gusts). */
+    * (tools.py:248-272 builds 5m/10m/30m means and gusts).
+    *
+    * Every output is computed over the input frame's columns (an output
+    * never reads another output, even when its name matches an input
+    * column), and all of them are added in one projection; an output
+    * named like an existing column replaces it in place. The windows
+    * share their partition keys and order, so Catalyst plans one sort and
+    * one `Window` for all outputs; the frames differ only in their range. */
   def withRollingColumns(
       df: DataFrame,
       tsCol: String,
@@ -50,18 +58,16 @@ object Rolling {
       windows: Seq[(String, Long)],
       cols: Seq[(String, String)]): DataFrame = {
     val keyCols = keys.map(col)
-    windows.foldLeft(df) { case (acc, (label, seconds)) =>
-      cols.foldLeft(acc) { case (acc2, (c, aggName)) =>
-        val w = timeWindow(col(tsCol), seconds, keyCols: _*)
-        val agg = aggName match {
-          case "mean" => avg(col(c))
-          case "max" => max(col(c))
-          case "min" => min(col(c))
-          case other => throw new IllegalArgumentException(s"unsupported rolling agg: $other")
-        }
-        acc2.withColumn(s"${c}_$label", agg.over(w))
+    val outputs = for ((label, seconds) <- windows; (c, aggName) <- cols) yield {
+      val agg = aggName match {
+        case "mean" => avg(col(c))
+        case "max" => max(col(c))
+        case "min" => min(col(c))
+        case other => throw new IllegalArgumentException(s"unsupported rolling agg: $other")
       }
+      s"${c}_$label" -> agg.over(timeWindow(col(tsCol), seconds, keyCols: _*))
     }
+    df.withColumns(ListMap(outputs: _*))
   }
 
   /** Regular-grid resampling with linear interpolation — the batch form

@@ -27,6 +27,30 @@ class OperatorsSpec extends SparkSpec {
     assert(out(3)._3 == 100.0)
   }
 
+  test("withRollingColumns: every output is a trailing window over the input columns") {
+    val rnd = new scala.util.Random(7)
+    val in = (0 until 60).map { i =>
+      (s"k${i % 3}", new Timestamp(1704067200000L + rnd.nextInt(3600) * 1000L), rnd.nextInt(100).toDouble,
+        if (i % 11 == 0) None else Some(rnd.nextDouble()))
+    }
+    val df = in.toDF("k", "ts", "v", "v_5m").repartition(5)
+    val out = Rolling.withRollingColumns(df, "ts", Seq("k"), Seq("5m" -> 300L, "30m" -> 1800L),
+      Seq("v" -> "mean", "v_5m" -> "max"))
+    // v_5m is replaced in place; v_5m_5m reads the input v_5m, not the new one
+    assert(out.columns.toSeq == Seq("k", "ts", "v", "v_5m", "v_5m_5m", "v_30m", "v_5m_30m"))
+    def trailing(k: String, t: Timestamp, secs: Long) =
+      in.filter(r => r._1 == k && !r._2.after(t) && r._2.getTime >= t.getTime - secs * 1000L)
+    val got = out.as[(String, Timestamp, Double, Double, Option[Double], Double, Option[Double])].collect()
+    assert(got.length == in.length)
+    got.foreach { case (k, t, _, mean5, max5, mean30, max30) =>
+      for ((secs, mean, mx) <- Seq((300L, mean5, max5), (1800L, mean30, max30))) {
+        val w = trailing(k, t, secs)
+        assert(math.abs(mean - w.map(_._3).sum / w.length) < 1e-9, s"$k $t mean over $secs s")
+        assert(mx == w.flatMap(_._4).maxOption, s"$k $t max over $secs s")
+      }
+    }
+  }
+
   test("as-of join attaches latest right row at-or-before left time") {
     val left = Seq(
       (1L, ts("2024-01-01 00:05:00"), "e1"),

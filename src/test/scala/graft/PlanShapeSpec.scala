@@ -1,7 +1,12 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec, InputAdapter, QueryExecution,
+  SortExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.text.Bpe
 
@@ -506,5 +511,44 @@ class PlanShapeSpec extends SparkSpec {
       pushed.head.contains("LessThan(time,2024-03-01 03:00:00"), pushed.head)
     // the range bounds are read from references in the generated filter
     assert(p.contains("param(2024-03-01 01:00:00"), p)
+    // no lambda anywhere: the field whitelist is key lookups, so the scan,
+    // the filter and the partial aggregate compile into one stage
+    assert(!p.toLowerCase.contains("lambdafunction"), p)
+    val scanStage = AQE.collect(dashboard.queryExecution.executedPlan) {
+      case w: WholeStageCodegenExec => stageNodes(w.child) }
+      .find(_.exists(_.isInstanceOf[ColumnarToRowExec])).getOrElse(fail(s"the scan is not in codegen:\n$p"))
+    assert(scanStage.exists(_.isInstanceOf[FilterExec]), p)
+    assert(scanStage.exists {
+      case a: HashAggregateExec => a.aggregateExpressions.forall(_.mode == Partial)
+      case _ => false
+    }, p)
+  }
+
+  test("rolling columns: 2 windows x 2 columns plan one Window and one Sort") {
+    import spark.implicits._
+    val df = (0 until 40).map(i => (s"s${i % 2}", new java.sql.Timestamp(i * 60000L), i.toDouble, 40.0 - i))
+      .toDF("sensor", "time", "pz", "temp")
+    val rolled = graft.batch.Rolling.withRollingColumns(df, "time", Seq("sensor"),
+      Seq("5m" -> 300L, "30m" -> 1800L), Seq("pz" -> "mean", "temp" -> "max"))
+    assert(rolled.collect().length == 40)
+    val p = rolled.queryExecution.executedPlan
+    assert(AQE.collect(p) { case w: WindowExec => w }.length == 1, p)
+    assert(AQE.collect(p) { case s: SortExec => s }.length == 1, p)
+  }
+
+  test("q09/q49: every rolling column of a query shares one Window") {
+    Seq("q09_rolling_window", "q49_wind_pipeline").foreach { q =>
+      val p = plan(q)
+      assert("Window \\[".r.findAllIn(p).length == 1, s"$q: one Window expected\n$p")
+    }
+  }
+
+  /** Collects through adaptive plans and their query stages. */
+  private object AQE extends AdaptiveSparkPlanHelper
+
+  /** The nodes compiled into one whole-stage codegen span. */
+  private def stageNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case _: InputAdapter => Nil
+    case other => other +: other.children.flatMap(stageNodes)
   }
 }

@@ -108,6 +108,67 @@ class TelemetryQuerySpec extends SparkSpec {
     assert((0 until 16).forall(i => adam.getAs[Double](s"t$i") == i.toDouble))
   }
 
+  /** Field selection as it was before it moved into `pivot` and `toDF`:
+    * each `fields` call rewrites the map with a `map_filter`, and the
+    * pivots read the rewritten map. The lowered path must match it. */
+  private object FilteredMapReference {
+    def fields(df: DataFrame, names: String*): DataFrame = {
+      val keep = names.map(lit)
+      df.withColumn(Point.Fields, map_filter(col(Point.Fields), (k, _) => k.isin(keep: _*)))
+    }
+    def pivot(df: DataFrame, values: Option[Seq[String]]): DataFrame = {
+      val keys = Seq(col(Point.Time), col(Point.Measurement), col(Point.Tags))
+      values match {
+        case Some(vs) =>
+          val cells = vs.map(v => max(element_at(col(Point.Fields), v)).as(v))
+          df.filter(size(col(Point.Fields)) > 0).groupBy(keys: _*).agg(cells.head, cells.tail: _*)
+        case None =>
+          df.select(keys :+ explode(col(Point.Fields)).as(Seq("__field", "__value")): _*)
+            .groupBy(keys: _*).pivot("__field").max("__value")
+      }
+    }
+  }
+
+  test("field selection at pivot and toDF equals the map_filter reference") {
+    val t0 = ts("2024-01-01 00:00:00")
+    val t1 = ts("2024-01-01 00:00:10")
+    def row(site: String, fields: Map[String, Any], t: Timestamp) =
+      Row("weather", Map("site" -> site), fields, null, t, null, null)
+    val rows = Seq(
+      row("APO", Map("temp" -> 20.0, "rh" -> 40.0, "wind" -> 2.0), t0),
+      row("APO", Map("temp" -> 21.0), t0),
+      row("APO", Map("temp" -> null, "rh" -> 41.0), t1), // null value
+      row("LCO", Map("rh" -> 50.0, "wind" -> 4.0), t1),
+      row("LCO", Map.empty, t0), // empty map
+      row("LCO", null, t1), // null map
+      row("DUP", Map("gust" -> 3.0, "dir" -> 90.0), t0)) // only undeclared fields
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), Point.schema)
+    val declared = Seq("temp", "rh", "pressure")
+    val selections: Seq[(String, Seq[Seq[String]])] = Seq(
+      "kept within declared" -> Seq(Seq("temp")),
+      "declared within kept" -> Seq(Seq("temp", "rh", "pressure", "wind", "gust")),
+      "two chained calls" -> Seq(Seq("temp", "rh", "wind"), Seq("rh", "wind", "dir")),
+      "empty fields()" -> Seq(Nil),
+      "no key of the data" -> Seq(Seq("nope")),
+      "no fields call" -> Nil)
+    for ((name, calls) <- selections) {
+      val q = calls.foldLeft(TelemetryQuery.fromDF(df))((q, ns) => q.fields(ns: _*))
+      val ref = calls.foldLeft(df)((d, ns) => FilteredMapReference.fields(d, ns: _*))
+      def same(got: DataFrame, want: DataFrame, what: String): Unit = {
+        assert(got.schema == want.schema, s"$name, $what")
+        assert(bag(got) == bag(want), s"$name, $what")
+      }
+      same(q.toDF, ref, "toDF")
+      same(q.withPivotValues(declared).pivot(), FilteredMapReference.pivot(ref, Some(declared)), "declared pivot")
+      same(q.pivot(), FilteredMapReference.pivot(ref, None), "undeclared pivot")
+    }
+    // toDF still hands back the filtered map
+    val kept = TelemetryQuery.fromDF(df).fields("temp", "wind").fields("wind", "rh").toDF
+      .filter(element_at(col(Point.Tags), "site") === "LCO" && col(Point.Time) === t1 &&
+        col(Point.Fields).isNotNull)
+    assert(kept.collect().map(_.getAs[Map[String, Double]](Point.Fields)).toSeq == Seq(Map("wind" -> 4.0)))
+  }
+
   test("withPivotValues needs at least one value") {
     intercept[IllegalArgumentException](TelemetryQuery.fromDF(points).withPivotValues(Nil))
   }

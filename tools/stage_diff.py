@@ -5,10 +5,12 @@ Usage: tools/stage_diff.py A/BENCH_stages.json B/BENCH_stages.json
 
 For every query present in both files, prints wall time, job count,
 task count, shuffle bytes (read + write) and spill bytes (memory + disk),
-each summed over the query's stages, as old -> new and as the ratio
-new/old. Rows are sorted by |new wall - old wall|, largest first.
-Queries present in one file only are left out (their count goes to
-stderr).
+each summed over the query's stages, and the plan's interpreted
+operators (Filter, Project and Generate nodes outside every codegen
+span), as old -> new and as the ratio new/old; a counter an artifact
+lacks prints as "-". Rows are sorted by |new wall - old wall|, largest
+first. Queries present in one file only are left out (their count goes
+to stderr).
 """
 import json
 import sys
@@ -30,14 +32,17 @@ def load(path):
             "tasks": total("tasks"),
             "shuffle_b": total("shuffle_read_bytes", "shuffle_write_bytes"),
             "spill_b": total("spill_mem_bytes", "spill_disk_bytes"),
+            "interpreted_ops": q.get("plan", {}).get("interpreted_ops"),
         }
     return out
 
 
-COLUMNS = ["wall_s", "jobs", "tasks", "shuffle_b", "spill_b"]
+COLUMNS = ["wall_s", "jobs", "tasks", "shuffle_b", "spill_b", "interpreted_ops"]
 
 
 def cell(old, new):
+    if old is None or new is None:  # a counter the older artifact lacks
+        return f"{'-' if old is None else old} -> {'-' if new is None else new}"
     ratio = f"{new / old:.2f}x" if old else ("=" if new == old else "new")
     fmt = "{:.3f}" if isinstance(old, float) or isinstance(new, float) else "{:d}"
     return f"{fmt.format(old)} -> {fmt.format(new)} ({ratio})"
