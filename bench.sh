@@ -11,11 +11,6 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio 
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 if [ -n "$1" ]; then exec > "$1"; fi
-# Pin q52's replay connection count: the default is max(32, cores), so on
-# machines with >32 cores the spool is rebuilt AND timings shift — pinning
-# makes the bench artifact machine-stable (VERDICT r9 #5). Override stays
-# possible via the environment.
-export SPARK_GRAFT_Q52_CONNS=${SPARK_GRAFT_Q52_CONNS:-32}
 exec java $ADD_OPENS $EXTRA_JAVA_OPTS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx${SPARK_DRIVER_MEM:-32g} -Xms${SPARK_DRIVER_MEM:-32g} \

@@ -14,12 +14,15 @@ import org.apache.spark.sql.functions._
   * group N×, measuring a pathological key distribution rather than scale.
   *
   * Dimensions (`region nation supplier part`) stay 1× (fixed cardinality,
-  * like TPC-H). `documents`/`embeddings` copies are MUTATED with the same
-  * deterministic scheme as ScaleProbe (copy i mutates ~i/16 of token
-  * positions / perturbs the vector by hash-signed noise ∝ i), so pair
-  * operators see realistic bounded near-dup density instead of exact
-  * duplicate cliques. Copy 0 is always verbatim, so literal-keyed query
-  * sets (`vec_id < 10` ANN queries) are unchanged.
+  * like TPC-H). `documents`/`embeddings` copies are MUTATED by a
+  * deterministic scheme: in copy i, token position p of a document gets
+  * the suffix `_m<i>` when `(37p + 11) mod 16 < i` (about i/16 of the
+  * positions), and element j of an embedding moves by
+  * `0.15 · i · u`, with `u` in [−1, 1) drawn from murmur3 of
+  * (vec_id, i, j). So pair operators see realistic bounded near-dup
+  * density instead of exact duplicate cliques. Copy 0 is always
+  * verbatim, so literal-keyed query sets (`vec_id < 10` ANN queries)
+  * are unchanged.
   *
   * Run: `sbt "runMain graft.GenScale [srcDir] [outDir] [factor]"`
   * (defaults: /root/testdata/sf0.1, /tmp/graft-sf16x, 16).
@@ -47,7 +50,7 @@ object GenScale {
         when(pmod(p * 37 + 11, lit(16)) < i, concat(w, lit(s"_m$i"))).otherwise(w)), " ")
     // keyed by vec_id so offsets are independent PER VECTOR — a per-copy
     // constant offset would collapse each copy into one mutual-near-dup
-    // cluster (see ScaleProbe.mutateVec)
+    // cluster (SCALE.md "Pair-operator scaling")
     def mutateVec(c: Column, i: Int): Column =
       if (i == 0) c
       else transform(c, (x, j) =>

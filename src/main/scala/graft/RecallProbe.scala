@@ -2,28 +2,17 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.similarity.Similarity
 
-/** Retrieval-QUALITY probe for the approximate ANN variants: recall@k
-  * against the exact brute-force baseline, per tuning knob — LSH by
-  * `numPlanes` (single-probe, multi-probe, banded), IVF by `nprobe`, and
-  * `nearDupPairs` pair-recall by bands×planes vs the exact
-  * `cosine >= threshold` pair set. The oracle queries (q30/q31/q51)
-  * verify the IMPLEMENTATION (DuckDB replays the same algorithm); this
-  * probe measures what that algorithm retrieves.
-  *
-  * Each LSH row also prints the THEORETICAL recall from the
-  * Goemans–Williamson collision model — `p = 1 − θ/π` per hyperplane,
-  * `p^m` single-probe, `P(≤1 bit differs)` multi-probe,
-  * `1 − (1 − p^bp)^nb` banded — averaged over the actual ground-truth
-  * neighbor angles. Measured ≈ predicted is itself a correctness check:
-  * the synthetic embeddings are weakly clustered, so absolute recall is
-  * bounded by the data's neighbor angles, not by the implementation.
-  * Results are recorded in SCALE.md; RecallSpec pins floors so a
-  * regression fails the build.
-  *
-  * Run: `sbt "runMain graft.RecallProbe [sfDir] [numQueries] [k]"`
-  * (defaults: /root/testdata/sf0.1, 200, 10).
+/** Reference measurements for retrieval and dedup QUALITY, computed
+  * against exact ground truth: recall@k of a top-k answer, pair recall
+  * against the exact `cosine >= threshold` set, the exact shingle
+  * overlap of every text pair, minhash and simhash capture per
+  * similarity bin next to the collision models' predictions, and the
+  * streaming near-dedup leakage against batch clusters. The oracle
+  * queries (q30/q31/q51) verify the IMPLEMENTATION (DuckDB replays the
+  * same algorithm); these functions measure what that algorithm
+  * retrieves. RecallSpec runs them and pins floors so a regression
+  * fails the build; the full measured tables are in SCALE.md.
   */
 object RecallProbe {
 
@@ -50,7 +39,7 @@ object RecallProbe {
   }
 
   /** Exact all-pairs `cosine >= threshold` ground truth — O(N²) scoring,
-    * probe-only (N ≤ a few thousand here; never a production path). */
+    * reference-only (N ≤ a few thousand here; never a production path). */
   def exactPairs(vectors: DataFrame, threshold: Double): DataFrame = {
     val a = vectors.select(col("id").as("id_a"), col("vec").as("va"))
     val b = vectors.select(col("id").as("id_b"), col("vec").as("vb"))
@@ -63,10 +52,10 @@ object RecallProbe {
   /** Dequantized copy of a vector under the SAME per-vector affine
     * int8-style scheme as [[org.apache.spark.sql.graft.QuantizeMse]]
     * (min/max range, `levels` uniform steps, floor(x+0.5) rounding) —
-    * what a store serving quantized embeddings would hand back. Probe-only
-    * (interpreted HOF transform is fine off the hot path); production
-    * stores the quantized bytes and this probe answers whether retrieval
-    * survives that. */
+    * what a store serving quantized embeddings would hand back.
+    * Reference-only (interpreted HOF transform is fine off the hot
+    * path); production stores the quantized bytes and this answers
+    * whether retrieval survives that. */
   def dequantized(vec: Column, levels: Int): Column = {
     require(levels >= 1, s"dequantized: levels must be >= 1, got $levels")
     val mn = array_min(vec)
@@ -77,171 +66,9 @@ object RecallProbe {
           lit(levels.toDouble)) * scale))
   }
 
-  /** Per-plane collision probability of a pair at cosine `c`. */
-  private def pCollide(c: Column): Column =
-    lit(1.0) - acos(greatest(lit(-1.0), least(lit(1.0), c))) / math.Pi
-
-  /** Predicted recall = mean over ground-truth pairs of `model(p)`. */
-  private def predicted(truthWithCos: DataFrame, model: Column => Column): Double =
-    truthWithCos.agg(avg(model(pCollide(col("cos"))))).head().getDouble(0)
-
-  def main(args: Array[String]): Unit = {
-    // `runMain graft.RecallProbe leakage [dir...]` — just the streaming
-    // leakage row(s), without the (slow) full probe suite
-    if (args.headOption.contains("leakage")) {
-      val dirs = if (args.length > 1) args.drop(1).toSeq
-        else Seq("/root/testdata/sf0.1")
-      val spark = GraftSession.get("local[32]", 32)
-      println(s"| corpus | removable dups | admitted | rate | lost clusters |")
-      println("|---|---|---|---|---|")
-      dirs.foreach { d =>
-        val (removable, extras, rate, lost) = streamingDedupLeakage(spark, d)
-        println(f"| $d | $removable | $extras | $rate%.3f | $lost |")
-      }
-      spark.stop()
-      return
-    }
-    // `runMain graft.RecallProbe pq [dir]` — product-quantization
-    // retrieval quality: recall@10 of the ADC scan vs the exact INNER
-    // PRODUCT top-k (PQ approximates IP — cosine truth would conflate
-    // the metric change with the quantization loss) across code budgets.
-    if (args.headOption.contains("pq")) {
-      val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-      val spark = GraftSession.get("local[32]", 32)
-      val emb = Tables.embeddings(spark, dir)
-      val queries = emb.filter(col("vec_id") < 200)
-        .select(col("vec_id").as("query_id"),
-          Similarity.asDouble(col("embedding")).as("query_vec"))
-      val vecs = emb.select(col("vec_id").as("id"),
-        Similarity.asDouble(col("embedding")).as("vec"))
-      val cands = vecs.select(col("id").as("cand_id"), col("vec").as("cand_vec"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id").orderBy(col("ip").desc, col("cand_id"))
-      val truth = queries.crossJoin(cands)
-        .filter(col("query_id") =!= col("cand_id"))
-        .select(col("query_id"), col("cand_id"),
-          graft.functions.VectorFunctions.dotFast(col("query_vec"), col("cand_vec")).as("ip"))
-        .withColumn("r", row_number().over(w)).filter(col("r") <= 10)
-        .persist()
-      truth.count()
-      println("| PQ (ADC, IP truth) | m x ksub (bits/vec) | recall@10 |")
-      println("|---|---|---|")
-      for ((m, ksub) <- Seq((4, 16), (8, 16), (8, 64), (16, 16), (16, 256))) {
-        val books = graft.similarity.ProductQuantizer.pqTrain(vecs, 64, m, ksub, iters = 2)
-        val codes = graft.similarity.ProductQuantizer.pqEncode(vecs, books, 64, m)
-        val top = graft.similarity.ProductQuantizer.pqTopK(queries, books, codes,
-          64, m, ksub, 10)
-        val r = recallAtK(truth, top, 10)
-        val bits = m * (math.log(ksub) / math.log(2)).round
-        println(f"| PQ | $m x $ksub ($bits b/vec) | $r%.3f |")
-      }
-      spark.stop()
-      return
-    }
-    val dir = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val nQ = args.lift(1).map(_.toInt).getOrElse(200)
-    val k = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = GraftSession.get("local[32]", 32)
-
-    val emb = Tables.embeddings(spark, dir)
-    val queries = emb.filter(col("vec_id") < nQ)
-      .select(col("vec_id").as("query_id"), Similarity.asDouble(col("embedding")).as("query_vec"))
-    val cands = emb
-      .select(col("vec_id").as("cand_id"), Similarity.asDouble(col("embedding")).as("cand_vec"))
-    val nCands = cands.count()
-    println(s"# RecallProbe: dir=$dir queries=$nQ candidates=$nCands k=$k")
-
-    val truth = Similarity.bruteForceTopK(queries, cands, k).persist()
-    truth.count()
-
-    println(s"\n| variant | setting | recall@$k | predicted |")
-    println("|---|---|---|---|")
-    for (p <- Seq(2, 4, 6, 8)) {
-      val r = recallAtK(truth, Similarity.lshTopK(queries, cands, k, numPlanes = p), k)
-      val pr = predicted(truth, pc => pow(pc, p))
-      println(f"| LSH single-probe | numPlanes=$p | $r%.3f | $pr%.3f |")
-    }
-    for (p <- Seq(4, 6, 8)) {
-      val r = recallAtK(truth, Similarity.lshTopKMultiProbe(queries, cands, k, numPlanes = p), k)
-      val pr = predicted(truth, pc =>
-        pow(pc, p) + lit(p.toDouble) * pow(pc, p - 1) * (lit(1.0) - pc))
-      println(f"| LSH multi-probe (Hamming<=1) | numPlanes=$p | $r%.3f | $pr%.3f |")
-    }
-    for ((bp, nb) <- Seq((4, 8), (4, 16), (4, 32))) {
-      val r = recallAtK(truth,
-        Similarity.lshTopKBanded(queries, cands, k, bandPlanes = bp, numBands = nb), k)
-      val pr = predicted(truth, pc => lit(1.0) - pow(lit(1.0) - pow(pc, bp), nb))
-      println(f"| LSH banded | $nb x $bp planes | $r%.3f | $pr%.3f |")
-    }
-    for (np <- Seq(1, 2, 4, 8)) {
-      val (centroids, assigned) = Similarity.ivfIndex(cands, nlist = 16)
-      val r = recallAtK(truth, Similarity.ivfTopK(queries, centroids, assigned, k, nprobe = np), k)
-      println(f"| IVF (nlist=16) | nprobe=$np | $r%.3f | — |")
-    }
-    // trained centroids (2 Lloyd iterations) vs the first-nlist seed:
-    // same nprobe budget, measured side by side
-    for (np <- Seq(1, 2, 4, 8)) {
-      val (centroids, assigned) = Similarity.ivfIndex(cands, nlist = 16, trainIters = 2)
-      val r = recallAtK(truth, Similarity.ivfTopK(queries, centroids, assigned, k, nprobe = np), k)
-      println(f"| IVF trained (nlist=16, 2 iters) | nprobe=$np | $r%.3f | — |")
-    }
-
-    // Quantized-corpus retrieval: full-precision queries scored against
-    // an int8-dequantized candidate set (asymmetric distance — the
-    // standard serving layout for a quantized 100 TB embedding store).
-    println(s"\n| quantized corpus | levels | recall@$k | mean MSE |")
-    println("|---|---|---|---|")
-    for (levels <- Seq(255, 15, 3)) {
-      val candsQ = cands.select(col("cand_id"),
-        dequantized(col("cand_vec"), levels).as("cand_vec"))
-      val r = recallAtK(truth, Similarity.bruteForceTopK(queries, candsQ, k), k)
-      val mse = cands.agg(avg(graft.functions.VectorFunctions.quantizeMse(
-        col("cand_vec"), lit(levels)))).head().getDouble(0)
-      println(f"| int8-style affine | $levels | $r%.3f | $mse%.2e |")
-    }
-
-    val vecs = emb.select(col("vec_id").as("id"), Similarity.asDouble(col("embedding")).as("vec"))
-    val threshold = 0.4
-    val exact = exactPairs(vecs, threshold).persist()
-    println(s"\n| nearDupPairs (threshold=$threshold) | bands×planes | pair recall | predicted |")
-    println("|---|---|---|---|")
-    for ((bands, planes) <- Seq((4, 4), (8, 4), (16, 4), (32, 4))) {
-      val approx = Similarity.nearDupPairs(vecs, threshold, bandPlanes = Some(planes), numBands = Some(bands))
-      val (hit, tot, r) = pairRecall(exact, approx)
-      val pr = exact.agg(avg(lit(1.0) - pow(lit(1.0) - pow(pCollide(col("cos")), planes), bands)))
-        .head().getDouble(0)
-      println(f"| $hit/$tot | $bands x $planes | $r%.3f | $pr%.3f |")
-    }
-
-    val docsDf = Tables.documents(spark, dir)
-    val truthPairs = exactTextPairs(docsDf, "doc_id", "text", 3).persist()
-    truthPairs.count()
-    println(s"\n| minhash banding S-curve (numPerm=32) | bands×rows | jaccard bin | pairs | measured | predicted |")
-    println("|---|---|---|---|---|---|")
-    for ((bands, rows) <- Seq((4, 8), (8, 4), (16, 2))) {
-      minhashCaptureByBin(docsDf, truthPairs, bands, rows).foreach {
-        case (bin, n, meas, pred) =>
-          println(f"| capture | $bands x $rows | [${bin / 10.0}%.1f,${(bin + 1) / 10.0}%.1f) | $n | $meas%.3f | $pred%.3f |")
-      }
-    }
-    println(s"\n| simhash capture (60 bits) | maxHamming | cosine bin | pairs | measured | predicted |")
-    println("|---|---|---|---|---|---|")
-    for (h <- Seq(1, 3, 6)) {
-      simhashCaptureByBin(docsDf, truthPairs, 60, h).foreach {
-        case (bin, n, meas, pred) =>
-          println(f"| capture | h<=$h | [${bin / 10.0}%.1f,${(bin + 1) / 10.0}%.1f) | $n | $meas%.3f | $pred%.3f |")
-      }
-    }
-    val (removable, extras, leakRate, lost) = streamingDedupLeakage(spark, dir)
-    println(s"\n| streaming near-dedup vs batch (q73 config) | removable dups | admitted | rate | lost clusters |")
-    println("|---|---|---|---|---|")
-    println(f"| leader-only state leakage | $removable | $extras | $leakRate%.3f | $lost |")
-    spark.stop()
-  }
-
   /** Streaming near-dedup leakage vs the batch ground truth — the cost
     * of [[graft.streaming.StreamingDedup.nearDedupVerdicts]]'s
-    * leader-only state, measured at the RecallProbe standard: run q73's
+    * leader-only state, measured against exact ground truth: run q73's
     * exact streaming config (3-shingles, 16 perms × 4 bands, est-Jaccard
     * verify at 0.5) and the batch [[graft.dedup.Dedup.dedupByMinhash]]
     * with the IDENTICAL config over the same corpus, then score the
@@ -292,8 +119,8 @@ object RecallProbe {
   /** Exact pairwise shingle overlap ground truth for the TEXT dedup
     * family: true n-gram Jaccard and set-cosine (`|A∩B|/√(|A||B|)` —
     * the similarity simhash's hyperplane model sees) for every pair
-    * sharing at least one shingle. Inverted-index join, probe-only at
-    * probe corpus sizes; shingles with document frequency > `maxDf`
+    * sharing at least one shingle. Inverted-index join, reference-only
+    * at test corpus sizes; shingles with document frequency > `maxDf`
     * are dropped from the ground truth exactly like jaccardPairs'
     * stop-shingle guard (affects only near-zero-similarity pairs). */
   def exactTextPairs(docs: DataFrame, idCol: String, textCol: String,

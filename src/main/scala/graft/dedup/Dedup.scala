@@ -715,7 +715,7 @@ object Dedup {
     * 16x corpus (80k docs) to prefix at 23-30 s where postings ran
     * 6.6-7.4 s, and at 64x (320k docs, 80.1M blocked pairs) prefix
     * reads 306.7 s vs postings 30.1 s — identical pair sets every cell
-    * (ScaleProbe `containment`/`containment-dir`, SCALE.md r16). Even
+    * (SCALE.md "Round-16: the containment gate was backwards"). Even
     * at t=0.8, where the short-side prefix is most selective, postings
     * wins 5.4 s vs 10.3 s on the 16x corpus. The postings path's cost
     * is LINEAR in this volume at a measured 0.35-0.38 µs/pair
@@ -736,7 +736,7 @@ object Dedup {
     * volume itself. */
   val PostingsVolumeBudget: Long = 400000000L
 
-  /** The `auto` gate's routing signal, exposed for probes and capacity
+  /** The `auto` gate's routing signal, exposed for capacity
     * dry-runs (the q153 discipline: price a path before paying for
     * it): Σ C(df,2) over distinct shingles with df ≤ maxShingleFreq —
     * the exact same-shingle pair count the postings path's blocked
@@ -745,9 +745,13 @@ object Dedup {
   def containmentBlockedVolume(df: DataFrame, idCol: String,
       textCol: String, n: Int, maxShingleFreq: Long): Long = {
     val posting = cachedShinglePosting(df, idCol, textCol, n)
-    val row = posting.groupBy("shingle").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxShingleFreq)
-      .agg(sum(col("df") * (col("df") - 1))).collect()(0)
+    blockedVolume(posting.groupBy("shingle").agg(count(lit(1)).as("df"))
+      .filter(col("df") <= maxShingleFreq))
+  }
+
+  /** Σ C(df,2) over a `(shingle, df)` frame: one aggregate, one collect. */
+  private def blockedVolume(dfreq: DataFrame): Long = {
+    val row = dfreq.agg(sum(col("df") * (col("df") - 1))).collect()(0)
     if (row.isNullAt(0)) 0L else row.getLong(0) / 2
   }
 
@@ -789,11 +793,7 @@ object Dedup {
     val usePostings = strategy match {
       case "postings" => true
       case "prefix" => false
-      case "auto" => threshold <= 0 || {
-        val row = dfreq.agg(sum(col("df") * (col("df") - 1))).collect()(0)
-        val vol = if (row.isNullAt(0)) 0L else row.getLong(0) / 2
-        vol <= PostingsVolumeBudget
-      }
+      case "auto" => threshold <= 0 || blockedVolume(dfreq) <= PostingsVolumeBudget
       case other => throw new IllegalArgumentException(
         s"containmentPairs strategy must be auto|postings|prefix, got $other")
     }
@@ -895,7 +895,8 @@ object Dedup {
     * from dfreq and runs the blocked postings join (threshold applied
     * post-aggregation — exact) at or under
     * [[PostingsVolumeBudget]], the prefix filter above it. Measured on
-    * the 16x corpus (ScaleProbe jaccard-dir, identical pair sets):
+    * the 16x corpus (identical pair sets, SCALE.md "Round-16: the
+    * containment gate was backwards"):
     * postings 4.5 s vs prefix 12.7 s at t=0.5, 3.6 s vs 7.2 s even at
     * t=0.8 — the two-sided prefix is more selective than containment's
     * one-sided form, and still loses under the cap, for the same
@@ -924,10 +925,7 @@ object Dedup {
     val usePostings = strategy match {
       case "postings" => true
       case "prefix" => false
-      case "auto" => threshold <= 0 || {
-        val row = dfreq.agg(sum(col("df") * (col("df") - 1))).collect()(0)
-        (if (row.isNullAt(0)) 0L else row.getLong(0) / 2) <= PostingsVolumeBudget
-      }
+      case "auto" => threshold <= 0 || blockedVolume(dfreq) <= PostingsVolumeBudget
       case other => throw new IllegalArgumentException(
         s"jaccardPairs strategy must be auto|postings|prefix, got $other")
     }
@@ -947,9 +945,11 @@ object Dedup {
       // The prefix join and the verify step run on 64-bit xxhash64 shingle
       // keys, not strings: the verify shuffles each candidate's kept-set
       // array twice and intersects per pair, and long equality there is
-      // ~4x cheaper than string hashing + payload (measured via
-      // ScaleProbe's pair section). Set semantics are identical up to
-      // 64-bit collisions; df/stop-shingle stats stay string-exact.
+      // ~4x cheaper than string hashing + payload (measured in the
+      // round-6 probe behind SCALE.md "Pair-operator scaling", which
+      // records the pair timings, not this split). Set semantics are
+      // identical up to 64-bit collisions; df/stop-shingle stats stay
+      // string-exact.
       val kept = posting.join(dfreq, Seq("shingle")) // shingle, id, n_shingles, df
         .withColumn("h", xxhash64(col("shingle")))
       // global rarest-first order; rank within each doc

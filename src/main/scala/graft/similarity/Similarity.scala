@@ -18,9 +18,9 @@ import org.apache.spark.sql.functions._
   * formulation (tests assert the bit-identity), so results are
   * bit-reproducible and oracle-checkable across engines.
   *
-  * Retrieval quality is MEASURED, not assumed: `graft.RecallProbe`
-  * computes recall@k vs the brute-force baseline for every approximate
-  * variant (table in SCALE.md), and RecallSpec pins floors.
+  * Retrieval quality is MEASURED, not assumed: RecallSpec computes
+  * recall@k vs the brute-force baseline for the approximate variants
+  * and pins floors (the full tables are in SCALE.md).
   */
 object Similarity {
 
@@ -253,7 +253,7 @@ object Similarity {
     * band, so recall is `1 − (1 − p^bandPlanes)^numBands` per neighbor
     * (`p = 1 − θ/π`) — tunable to any floor by adding bands, where
     * single-table [[lshTopK]] recall `p^numPlanes` decays geometrically.
-    * RecallProbe measures both against this formula.
+    * RecallSpec checks both against this formula.
     *
     * Scale shape (mirrors nearDupPairs): ids only through the band
     * shuffle, `distinct` candidate pairs BEFORE vector fetch + verify,
@@ -301,7 +301,7 @@ object Similarity {
   def collisionProb(cosine: Double): Double =
     1.0 - math.acos(math.max(-1.0, math.min(1.0, cosine))) / math.Pi
 
-  /** Corpus-size-adaptive plane count — the ScaleProbe finding
+  /** Corpus-size-adaptive plane count — the 16× probe finding
     * productized (SCALE.md "pair-operator scaling"): at FIXED bandPlanes
     * the per-band candidate volume is ~N²/2^planes, which disk-exhausted
     * the probe at 16× (tens of billions of band pairs through one
@@ -350,38 +350,6 @@ object Similarity {
     }
   }
 
-  /** Embedding-cosine NEAR-DUPLICATE pairs — the embedding member of the
-    * dedup family (exact / MinHash / SimHash / Jaccard / this): all pairs
-    * with `cosine >= threshold`, found via banded multi-table hyperplane
-    * LSH (OR-amplification). Each of `numBands` bands hashes a vector
-    * with its own `bandPlanes` hyperplanes; a pair is a candidate iff it
-    * shares a bucket in ANY band, so recall is
-    * `1 - (1 - p^bandPlanes)^numBands` with `p = 1 - acos(cos)/π` —
-    * tune bands up for recall, planes up for selectivity. Candidate
-    * band collisions pipeline STRAIGHT into the cosine verification
-    * (verify-first); only the sparse passing pairs are deduped — see
-    * `nearDupPairsFixed`'s `dedupBeforeVerify` for why and the measured
-    * order comparison (SCALE.md "candidate-dedup order").
-    *
-    * **Banding defaults are corpus-size-adaptive**: with no explicit
-    * `bandPlanes`/`numBands` the plane count follows
-    * [[adaptiveBandPlanes]] (one extra plane per corpus doubling past
-    * 2000 vectors — constant per-bucket occupancy; the fixed-plane
-    * default this replaces was measured disk-exhausting at 16×,
-    * SCALE.md "pair-operator scaling") and the band count follows
-    * [[adaptiveNumBands]] (restores the base config's recall at the
-    * operator's threshold). Deriving needs the corpus size — pass
-    * `corpusCount` when known to skip the counting job (at warehouse
-    * scale a count over the id column is metadata-cheap anyway).
-    *
-    * Scale shape: one explode (`numBands` rows per vector, ids only — no
-    * vector payload through the band shuffle), an equi-join on
-    * `(band, bucket)`, a distinct over candidate id pairs, then two
-    * broadcast-or-shuffle hash joins to fetch the two vectors for the
-    * codegen'd [[graft.functions.VectorFunctions.cosineFast]] check.
-    * Nothing materializes the all-pairs product; per-bucket join fan-out
-    * is the standard LSH cost, bounded by bucket selectivity
-    * (`2^bandPlanes` buckets per band). */
   /** Corpus sizes (in vectors) up to which the verification joins
     * BROADCAST the vector frame instead of shuffling the candidate
     * stream: `n · dim · 8` bytes ≤ 512 MB of raw vector payload — a
@@ -405,9 +373,7 @@ object Similarity {
     * `spark.driver.maxResultSize` (half of it — UnsafeRow overhead
     * roughly doubles the raw payload): a stock-configured cluster
     * (1 GB maxResultSize) keeps the full 512 MB budget, while a
-    * tighter driver shrinks it instead of failing the collect.
-    * Override explicitly with session conf
-    * `graft.similarity.broadcastFetchBytes`. */
+    * tighter driver shrinks it instead of failing the collect. */
   def broadcastFetchMaxVectors(dim: Int): Long =
     broadcastFetchBudgetBytes() / (dim * 8L)
 
@@ -415,18 +381,46 @@ object Similarity {
     val default = 512L << 20
     org.apache.spark.sql.SparkSession.getActiveSession match {
       case Some(s) =>
-        s.conf.getOption("graft.similarity.broadcastFetchBytes") match {
-          case Some(v) => org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v)
-          case None =>
-            val maxResult = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-              s.conf.get("spark.driver.maxResultSize", "1g"))
-            // maxResultSize = 0 means unlimited — keep the default budget
-            if (maxResult <= 0) default else math.min(default, maxResult / 2)
-        }
+        val maxResult = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+          s.conf.get("spark.driver.maxResultSize", "1g"))
+        // maxResultSize = 0 means unlimited — keep the default budget
+        if (maxResult <= 0) default else math.min(default, maxResult / 2)
       case None => default
     }
   }
 
+  /** Embedding-cosine NEAR-DUPLICATE pairs — the embedding member of the
+    * dedup family (exact / MinHash / SimHash / Jaccard / this): all pairs
+    * with `cosine >= threshold`, found via banded multi-table hyperplane
+    * LSH (OR-amplification). Each of `numBands` bands hashes a vector
+    * with its own `bandPlanes` hyperplanes; a pair is a candidate iff it
+    * shares a bucket in ANY band, so recall is
+    * `1 - (1 - p^bandPlanes)^numBands` with `p = 1 - acos(cos)/π` —
+    * tune bands up for recall, planes up for selectivity. Candidate
+    * band collisions pipeline STRAIGHT into the cosine verification
+    * (verify-first); only the sparse passing pairs are deduped — see
+    * [[nearDupPairsFixed]] for why and SCALE.md "candidate-dedup order"
+    * for the measured comparison with deduping candidates first.
+    *
+    * **Banding defaults are corpus-size-adaptive**: with no explicit
+    * `bandPlanes`/`numBands` the plane count follows
+    * [[adaptiveBandPlanes]] (one extra plane per corpus doubling past
+    * 2000 vectors — constant per-bucket occupancy; the fixed-plane
+    * default this replaces was measured disk-exhausting at 16×,
+    * SCALE.md "pair-operator scaling") and the band count follows
+    * [[adaptiveNumBands]] (restores the base config's recall at the
+    * operator's threshold). Deriving needs the corpus size — pass
+    * `corpusCount` when known to skip the counting job (at warehouse
+    * scale a count over the id column is metadata-cheap anyway).
+    *
+    * Scale shape: one explode (`numBands` rows per vector, ids only — no
+    * vector payload through the band shuffle), an equi-join on
+    * `(band, bucket)`, then two broadcast-or-shuffle hash joins to
+    * fetch the two vectors for the codegen'd cosine check, and a
+    * `dropDuplicates` over the passing id pairs.
+    * Nothing materializes the all-pairs product; per-bucket join fan-out
+    * is the standard LSH cost, bounded by bucket selectivity
+    * (`2^bandPlanes` buckets per band). */
   def nearDupPairs(
       vectors: DataFrame, // (id, vec: array<double>)
       threshold: Double,
@@ -448,23 +442,15 @@ object Similarity {
     * corpus sizes reproduces the measured 16× disk-exhaustion; prefer
     * the adaptive wrapper.
     *
-    * `dedupBeforeVerify` picks where candidate duplicates (a pair
-    * colliding in several bands) are collapsed:
-    *  - `false` (verify-first): band collisions pipeline straight into
-    *    the vector-fetch joins and the codegen cosine; only pairs that
-    *    PASS the threshold reach a `dropDuplicates` — the candidate
-    *    stream itself never shuffles. Random collisions land in ~1 band
-    *    (duplication ≈ 1 + (bands−1)p^planes), so the redundant-cosine
-    *    cost is a few percent while a full candidate-volume exchange
-    *    disappears.
-    *  - `true` (distinct-first): candidates dedup on the id pair BEFORE
-    *    the fetch, so every pair is scored exactly once — worth its
-    *    candidate-wide shuffle only when redundancy is high (a
-    *    duplicate-DENSE corpus whose true pairs collide in most bands)
-    *    AND the vector fetch itself shuffles wide rows (corpus too big
-    *    to broadcast, high dim).
-    * Both orders produce identical output (the duplicate rows carry
-    * bit-identical cosines). Measured at the 16× probe: see SCALE.md.
+    * Candidate duplicates (a pair colliding in several bands) are
+    * collapsed AFTER verification: band collisions pipeline straight
+    * into the vector-fetch joins and the codegen cosine, and only pairs
+    * that PASS the threshold reach a `dropDuplicates`, so the candidate
+    * stream itself never shuffles. Random collisions land in ~1 band
+    * (duplication ≈ 1 + (bands−1)p^planes), so the redundant-cosine
+    * cost is a few percent while a full candidate-volume exchange
+    * disappears. Deduping candidates first was measured at 1×, 4× and
+    * 16× and lost at each (SCALE.md "candidate-dedup order").
     *
     * `broadcastFetch` hints the two vector-fetch joins to broadcast the
     * vector frame (the adaptive wrapper sets it from the corpus size,
@@ -482,7 +468,6 @@ object Similarity {
       numBands: Int,
       dim: Int = 64,
       seed: Long = 42L,
-      dedupBeforeVerify: Boolean = false,
       broadcastFetch: Boolean = false): DataFrame = {
     val planes = hyperplanes(bandPlanes * numBands, dim, seed)
     // ONE compiled loop for all bands (lsh_band_buckets): the per-band
@@ -505,7 +490,6 @@ object Similarity {
         Seq("band", "bucket"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b")
-    val candidates = if (dedupBeforeVerify) cand.distinct() else cand
     def fetch(df: DataFrame): DataFrame = if (broadcastFetch) broadcast(df) else df
     // Norms are hoisted out of the per-pair loop: `cosine_sim` fuses
     // dot+norms in one pass per CANDIDATE, but the norms only depend on
@@ -519,7 +503,7 @@ object Similarity {
     val dot = graft.functions.VectorFunctions.dotFast _
     val vn = v.select(col("id"), col("vec"),
       sqrt(dot(col("vec"), col("vec"))).as("nrm"))
-    val verified = candidates
+    cand
       .join(fetch(vn.select(col("id").as("id_a"), col("vec").as("va"),
         col("nrm").as("na"))), Seq("id_a"))
       .join(fetch(vn.select(col("id").as("id_b"), col("vec").as("vb"),
@@ -527,7 +511,7 @@ object Similarity {
       .select(col("id_a"), col("id_b"),
         (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cos"))
       .filter(col("cos") >= threshold)
-    if (dedupBeforeVerify) verified else verified.dropDuplicates("id_a", "id_b")
+      .dropDuplicates("id_a", "id_b")
   }
 
   /** IVF (inverted file) ANN: deterministic "training" picks the first
@@ -541,7 +525,7 @@ object Similarity {
     // trainIters > 0 refines the first-nlist seed with Lloyd iterations
     // ([[kmeansFit]]) — at 100 TB the seed vectors are arbitrary crawl
     // order and trained centroids balance the inverted lists, which is
-    // what bounds per-probe scan cost (RecallProbe measures the recall
+    // what bounds per-probe scan cost (SCALE.md records the recall
     // side). 0 keeps the deterministic untrained seed (q31's oracle).
     val centroids =
       if (trainIters > 0)

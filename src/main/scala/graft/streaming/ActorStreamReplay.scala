@@ -58,11 +58,11 @@ object ActorStreamReplay {
     "status" -> KeyDef(Seq(ActorReplies.StringType())),
     "motion" -> KeyDef(Seq(PvtType()))))
 
-  /** Connection-count knob — see the scale note inside [[writeSpool]].
-    * Surfaced here because the spool content depends on it, so it is
-    * part of the spool-reuse stamp. */
-  private def connCount: Int = sys.env.get("SPARK_GRAFT_Q52_CONNS").map(_.toInt)
-    .getOrElse(math.max(32, Runtime.getRuntime.availableProcessors()))
+  /** Connection count of the synthesized spool — see the note inside
+    * [[writeSpool]]. Fixed, not derived from the core count, so the
+    * spool and its timings are the same on every machine. Part of the
+    * spool-reuse stamp because the spool content depends on it. */
+  private val Conns = 32
 
   /** Synthesize reply lines from `events` and spool them as chunk parquet:
     * one file per micro-batch; the second file holds the tail half of each
@@ -91,16 +91,11 @@ object ActorStreamReplay {
     // reassembly state op, and every stage downstream of it (parse,
     // KeywordProcessor) inherits its partitioning — with 4 conns the
     // whole chain ran 4-wide on a 32-core session (measured 6x slower).
-    // The count is scalable (SPARK_GRAFT_Q52_CONNS, default
-    // max(32, cores)) because at larger data the right response is MORE
-    // connections (finer state keys = better task balance), exactly as
-    // a real deployment fans in more sources; the query's OUTPUT is
-    // connection-count-invariant (conn only partitions reassembly), so
-    // the oracle needs no retuning when the bench scales it.
-    val conns = connCount
+    // The query's OUTPUT is connection-count-invariant (conn only
+    // partitions reassembly), so the oracle does not depend on it.
     val wRank = Window.partitionBy(col("conn")).orderBy(col("id"))
     val numbered = e
-      .select(concat(lit("c"), (col("u") % conns).cast("string")).as("conn"),
+      .select(concat(lit("c"), (col("u") % Conns).cast("string")).as("conn"),
         col("id"), concat(line, lit("\n")).as("data"))
       .withColumn("rn", row_number().over(wRank))
       .withColumn("n", count(lit(1)).over(Window.partitionBy(col("conn"))))
@@ -146,21 +141,11 @@ object ActorStreamReplay {
     * proven at the hash level on the full chain, not just in specs. */
   def run(spark: SparkSession, dir: String, typed: Boolean = false): DataFrame = {
     import spark.implicits._
-    // phase timing on stderr when SPARK_GRAFT_Q52_PROF is set (the 16×
-    // audit's instrument — negligible when unset)
-    val prof = sys.env.contains("SPARK_GRAFT_Q52_PROF")
-    def phase[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (prof) System.err.println(
-        f"[q52-phase] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
     // spool reused across runs (content-keyed on events.parquet + conns);
     // checkpoint/sink always land in a fresh swept run dir
-    val spool = phase("spool")(ReplayScaffold.spoolFor(spark, dir, "q52",
-      "events.parquet", s"conns=$connCount;manifest", writeSpool,
-      expectedFiles = 2))
+    val spool = ReplayScaffold.spoolFor(spark, dir, "q52",
+      "events.parquet", s"conns=$Conns;manifest", writeSpool,
+      expectedFiles = 2)
     val runDir = ReplayScaffold.freshRunDir(spool)
 
     val t0 = Timestamp.valueOf("2024-01-01 00:00:00")
@@ -192,14 +177,12 @@ object ActorStreamReplay {
     // which made the readback+sort ~46 s at sf0.1; the parquet observer is
     // also the production path (sinks/TelemetrySink).
     val outDir = new File(runDir, "out")
-    phase("stream") {
-      val q = points.writeStream.format("parquet")
-        .option("path", outDir.toString)
-        .outputMode("append")
-        .option("checkpointLocation", new File(runDir, "ckpt").toString)
-        .start()
-      ReplayScaffold.drain(q)
-    }
+    val q = points.writeStream.format("parquet")
+      .option("path", outDir.toString)
+      .outputMode("append")
+      .option("checkpointLocation", new File(runDir, "ckpt").toString)
+      .start()
+    ReplayScaffold.drain(q)
 
     val t = spark.read.parquet(outDir.toString)
     val tagStr = concat_ws(",", array_sort(transform(map_entries(col("tags")),

@@ -39,7 +39,7 @@ object Transforms {
 
   /** T6 — staleness filter (cerebro/sources/lvm.py:80-82): drop points whose
     * device timestamp is older than `2 * delay` relative to `now`. In
-    * streaming use [[graft.streaming.StreamNormalize]]'s watermark instead;
+    * streaming use [[graft.streaming.StreamOps.normalize]]'s watermark instead;
     * this is the batch form with an explicit reference clock column.
     */
   def stalenessFilter(tsCol: Column, now: Column, maxLagSeconds: Long): Column =

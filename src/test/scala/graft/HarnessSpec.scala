@@ -90,7 +90,7 @@ class HarnessSpec extends SparkSpec {
   // Where a query spends its time is Bench's attribution pass
   // (Bench.attribute), not another one-off profiler main.
   test("src/main defines main only in the allowlisted entry points") {
-    val allowed = Set("Bench", "Verify", "GenScale", "ScaleProbe", "RecallProbe", "control.Main")
+    val allowed = Set("Bench", "Verify", "GenScale", "control.Main")
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
     val mains = try files.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
       val text = java.nio.file.Files.readString(f)
@@ -105,6 +105,33 @@ class HarnessSpec extends SparkSpec {
     assert(mains.contains("Bench"), s"main scan found only: $mains")
     assert(mains.filterNot(allowed).isEmpty,
       s"mains outside the allowlist: ${mains.filterNot(allowed)}; use Bench.attribute")
+  }
+
+  // A knob that only a probe or an A/B run ever set is dead weight in the
+  // library. Environment reads belong to the entry points; outside them
+  // the two named reads below are the only ones, so a new one has to be
+  // added here on purpose.
+  test("sys.env is read only where the allowlist says") {
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    assert(java.nio.file.Files.isDirectory(root), s"missing $root")
+    val entryPoints = Set("Bench.scala", "Verify.scala", "GenScale.scala", "control/Main.scala")
+    val allowedReads = Set(
+      // EngineConfig.parse: ${VAR} interpolation in the daemon's YAML
+      "control/Engine.scala" -> "env: Map[String, String] = sys.env): Config = {",
+      // the RocksDB row-tracking switch, still to be A/B-measured
+      "streaming/StreamingDedup.scala" -> ".orElse(sys.env.get(\"SPARK_GRAFT_ROCKSDB_TRACKROWS\"))")
+    val envRead = """\bsys\.env\b|\bSystem\.getenv\b""".r
+    val files = java.nio.file.Files.walk(root)
+    val hits = try files.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
+      val rel = root.relativize(f).toString
+      if (entryPoints(rel)) Nil
+      else java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if envRead.findFirstIn(line).nonEmpty &&
+            !line.trim.startsWith("//") && !line.trim.startsWith("*") &&
+            !allowedReads(rel -> line.trim) => s"$rel:${i + 1}: ${line.trim}"
+      }
+    }.toList finally files.close()
+    assert(hits.isEmpty, s"environment reads outside the allowlist:\n${hits.mkString("\n")}")
   }
 
   test("attribution pass: stages for a batch query, trigger phases for a streaming one") {
