@@ -41,7 +41,11 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *     more under a stage listener and a streaming-progress listener,
   *     written to `BENCH_stages.json` and `BENCH_stages/<query>.plan.txt`
   *     — where a slow query spends its time, by stage and by trigger.
-  *     It runs only if the projection says it fits the budget.
+  *     It runs only if the projection says it fits the budget. Compare
+  *     two runs with `tools/stage_diff.py` first and read plan diffs
+  *     only for the queries it flags: plan files differ from run to run
+  *     on unchanged code (expression, node and codegen ids, and AQE may
+  *     build either side of an equal-sized join).
   *
   * WALL-BUDGET GOVERNOR (round 15 — VERDICT r14 #1: the driver's r14
   * bench timed out, rc=124, the first ungradable round, on a machine
@@ -112,8 +116,7 @@ object Bench {
     // noisy set had rep-1 spikes scattered across the relational family
     // right after streaming queries. Grouping pushes that churn onto
     // the inter-pass settle window instead.
-    val streamingFamily = Set("q52_actor_stream", "q83_actor_stream_typed",
-      "q64_streaming_dedup",
+    val streamingFamily = Set("q52_actor_stream", "q64_streaming_dedup",
       "q73_streaming_near_dedup", "q74_streaming_swept_dedup",
       "q80_streaming_window", "q81_streaming_ewma",
       "q84_streaming_sessions", "q85_stream_join", "q86_sliding_state",
@@ -736,7 +739,12 @@ object Bench {
     * and detached after the pass. Writes one record a query to
     * `BENCH_stages.json` under `outDir`, and the formatted physical plan
     * the query's run ended with (the final plan when adaptive) to
-    * `BENCH_stages/<query>.plan.txt`, so two runs compare with `diff -r`. */
+    * `BENCH_stages/<query>.plan.txt`. Two runs compare with
+    * `tools/stage_diff.py` over their `BENCH_stages.json`; a plan file
+    * is not stable across runs of unchanged code (expression, node and
+    * codegen ids change, and AQE flips `BuildLeft`/`BuildRight` on the
+    * equal-sized postings self-join of q26/q115), so read plan diffs
+    * only for the queries `stage_diff.py` flags. */
   def attribute(spark: SparkSession, sfDir: String, suite: Seq[Queries.Q],
       outDir: java.io.File = new java.io.File(".")): Seq[Attribution] = {
     val plans = new java.io.File(outDir, "BENCH_stages")

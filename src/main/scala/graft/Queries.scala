@@ -2551,16 +2551,16 @@ object Queries {
     Some(pqOracleSql(m = 4, ksub = 8, iters = 1, dim = 64, k = 5)))
 
   // The partition-pruned IVF serving path end to end: materialize the
-  // inverted-file layout (centroid-partitioned parquet), then probe it
-  // with literal partition filters. Output is pinned identical to q31's
-  // in-memory path (SimilaritySpec), so it shares q31's oracle — the
-  // hash match proves the pruned scan loses nothing.
+  // inverted-file layout (versioned, centroid-partitioned parquet), then
+  // probe it with literal partition filters. Output is pinned identical
+  // to q31's in-memory path (SimilaritySpec), so it shares q31's oracle
+  // — the hash match proves the pruned scan loses nothing.
   val q79_ann_ivf_pruned = Q("q79_ann_ivf_pruned",
     (s, dir) => {
       val (centroids, assigned) = Similarity.ivfIndex(embCandidates(s, dir), nlist = 16)
       val layout = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft-ivf-layout-${Integer.toHexString(dir.hashCode)}").toString
-      Similarity.writeIvfLayout(assigned, layout)
+      Similarity.writeIvfLayoutVersioned(assigned, layout)
       Similarity.ivfTopKPruned(s, layout, centroids, embQueries(s, dir),
           k = 5, nprobe = 4)
         .select(col("query_id"), col("cand_id"), col("rank"), round(col("cos"), 6).as("cos"))
@@ -2637,17 +2637,6 @@ object Queries {
         o.rn AS n, COALESCE(o.gap, 0) AS gap_ms
       FROM ordered o JOIN rec r ON r.series = o.series AND r.rn = o.rn
       ORDER BY o.series, o.rn"""))
-
-  // The typed (JVM-compiled) keyword processor driven through the IDENTICAL
-  // q52 replay chain against q52's byte-identical oracle SQL: a hash match
-  // here proves processTyped == process on the full production chain
-  // (grammar, dictionary typing, broadcast drop, keyword_tags, PVT
-  // explode, cross-batch reassembly), not just on spec fixtures. This is
-  // the cure for the q52 16× floor (interpreted HOF evaluation —
-  // SCALE.md "q52 audit").
-  val q83_actor_stream_typed: Q = Q("q83_actor_stream_typed",
-    (s, dir) => graft.streaming.ActorStreamReplay.run(s, dir, typed = true),
-    q52_actor_stream.oracle)
 
   // Native streaming session_window across parity-split micro-batches,
   // flush-sentinel-drained so EVERY session emits: the streaming result
@@ -4457,41 +4446,6 @@ object Queries {
         (bit_count(xor(sh, prev)) > 8) AS is_cut
       FROM lagd ORDER BY media_id, frame_idx"""))
 
-  // Incremental IVF layout maintenance: old corpus (id%7!=0) indexed and
-  // laid out; ids%7==0 arrive, ids%11==0 leave; ivfMaintain rewrites only
-  // the affected centroid partitions. The oracle is the FULL REBUILD of
-  // the new corpus (id%11!=0) against the pinned old-corpus centroids —
-  // a hash match proves incremental == rebuild.
-  val q141_ivf_maintain = Q("q141_ivf_maintain",
-    (s, dir) => {
-      val all = embCandidates(s, dir)
-      val oldC = all.filter(col("cand_id") % 7 =!= 0)
-      val (centroids, assignedOld) = Similarity.ivfIndex(oldC, nlist = 16)
-      val layout = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft-ivf-maintain-${Integer.toHexString(dir.hashCode)}").toString
-      Similarity.writeIvfLayout(assignedOld, layout)
-      val added = all.filter(col("cand_id") % 7 === 0 && col("cand_id") % 11 =!= 0)
-      val removed = all.filter(col("cand_id") % 11 === 0).select("cand_id")
-      Similarity.ivfMaintain(s, layout, centroids, added, removed)
-      s.read.parquet(layout)
-        .select(col("cand_id"), col("centroid").cast("long").as("centroid"))
-        .orderBy("cand_id")
-    },
-    Some("""
-      WITH c0 AS (SELECT vec_id AS cand_id, CAST(embedding AS DOUBLE[]) AS cv
-                  FROM embeddings WHERE vec_id % 7 <> 0),
-      cent AS (SELECT cand_id AS centroid_id, cv AS centv FROM c0 ORDER BY cand_id LIMIT 16),
-      newc AS (SELECT vec_id AS cand_id, CAST(embedding AS DOUBLE[]) AS cv
-               FROM embeddings WHERE vec_id % 11 <> 0)
-      SELECT cand_id, centroid FROM (
-        SELECT newc.cand_id, cent.centroid_id AS centroid,
-          row_number() OVER (PARTITION BY newc.cand_id ORDER BY
-            list_inner_product(newc.cv, cent.centv) /
-              (sqrt(list_inner_product(newc.cv, newc.cv)) *
-               sqrt(list_inner_product(cent.centv, cent.centv))) DESC,
-            cent.centroid_id) AS r
-        FROM newc, cent) WHERE r = 1 ORDER BY cand_id"""))
-
   // Per-source percent-rank calibration of the q22 quality score — CDF
   // computed on the (source, score) VALUE table (scores are rounded →
   // bounded distinct values), never a corpus-sized window sort.
@@ -4601,12 +4555,13 @@ object Queries {
       n = 3, numPerm = 16, bands = 4),
     Some(Dedup.bandCandidateVolumeOracle(16, 4)))
 
-  // q141's delta through the VERSIONED commit protocol (VERDICT r15
-  // #7): the maintain publishes an immutable v2 holding only affected
-  // lists plus a manifest, then atomically swaps CURRENT — a concurrent
+  // Incremental IVF layout maintenance: old corpus (id%7!=0) indexed and
+  // laid out as version 1; ids%7==0 arrive, ids%11==0 leave. The
+  // maintain publishes an immutable v2 holding only the affected lists
+  // plus a manifest, then atomically swaps CURRENT — a concurrent
   // reader never sees a half-overwritten partition. The oracle is the
-  // SAME full rebuild as q141's: a hash match proves versioned
-  // maintain == in-place maintain == rebuild.
+  // FULL REBUILD of the new corpus (id%11!=0) against the pinned
+  // old-corpus centroids — a hash match proves incremental == rebuild.
   val q154_ivf_versioned = Q("q154_ivf_versioned",
     (s, dir) => {
       val all = embCandidates(s, dir)
@@ -4622,7 +4577,20 @@ object Queries {
         .select(col("cand_id"), col("centroid"))
         .orderBy("cand_id")
     },
-    q141_ivf_maintain.oracle)
+    Some("""
+      WITH c0 AS (SELECT vec_id AS cand_id, CAST(embedding AS DOUBLE[]) AS cv
+                  FROM embeddings WHERE vec_id % 7 <> 0),
+      cent AS (SELECT cand_id AS centroid_id, cv AS centv FROM c0 ORDER BY cand_id LIMIT 16),
+      newc AS (SELECT vec_id AS cand_id, CAST(embedding AS DOUBLE[]) AS cv
+               FROM embeddings WHERE vec_id % 11 <> 0)
+      SELECT cand_id, centroid FROM (
+        SELECT newc.cand_id, cent.centroid_id AS centroid,
+          row_number() OVER (PARTITION BY newc.cand_id ORDER BY
+            list_inner_product(newc.cv, cent.centv) /
+              (sqrt(list_inner_product(newc.cv, newc.cv)) *
+               sqrt(list_inner_product(cent.centv, cent.centv))) DESC,
+            cent.centroid_id) AS r
+        FROM newc, cent) WHERE r = 1 ORDER BY cand_id"""))
 
   val all: Seq[Q] = Seq(
     q01_pricing_summary, q02_top_customers, q03_shipping_priority,
@@ -4651,7 +4619,7 @@ object Queries {
     q73_streaming_near_dedup, q74_streaming_swept_dedup,
     q75_dsir_weights, q76_subword_encode, q77_span_dedup, q78_ann_pq,
     q79_ann_ivf_pruned, q80_streaming_window, q81_streaming_ewma,
-    q82_simhash_wide, q83_actor_stream_typed, q84_streaming_sessions,
+    q82_simhash_wide, q84_streaming_sessions,
     q85_stream_join, q86_sliding_state, q87_bootstrap_counters,
     q88_gap_timers, q89_distinct_map, q90_temperature_mix,
     q91_resample_interpolate, q92_image_dhash_pairs, q93_audio_hash_pairs, q94_resample_locf,
@@ -4667,6 +4635,6 @@ object Queries {
     q131_vocab_growth, q132_bpe_merges, q133_source_similarity,
     q134_winnowing, q135_zipf_slope, q136_kl_drift, q137_gopher_rules,
     q138_matryoshka, q139_cusum_drift, q140_video_shots,
-    q141_ivf_maintain, q142_quality_calibration, q143_robust_outliers,
+    q142_quality_calibration, q143_robust_outliers,
     q144_user_entropy, q152_lsh_plan, q153_lsh_volume, q154_ivf_versioned)
 }

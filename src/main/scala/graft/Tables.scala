@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Loaders for the synthetic test tables (TESTDATA.md).
   *
@@ -33,6 +34,8 @@ object Tables {
   def read(spark: SparkSession, dir: String, name: String): DataFrame =
     harden(spark).read.parquet(s"$dir/$name.parquet")
 
+  private val SpreadMaxBytes: Long = 1L << 30
+
   /** Spread an under-split SCAN across the session's default parallelism
     * before heavy scan-fused derivation (guide §2.5 "input skew: one
     * huge unsplittable file → repartition immediately after the read").
@@ -44,21 +47,19 @@ object Tables {
     * 1-task stage (OPTIMIZATION_r17.md).
     *
     * Scale-adaptive by GUARD, not by constant: fires only when the
-    * input is fewer files than `defaultParallelism` AND under
-    * `spark.graft.spread.maxBytes` (default 1 GiB) in total — the
-    * small-unsplittable layout. A cluster-scale table arrives as many
-    * splits and passes through untouched (repartitioning a large input
-    * here would be a full shuffle of the corpus — the exact anti-pattern
-    * the guard exists to prevent). Round-robin repartition keeps retry
-    * determinism via Spark's sort-before-repartition default. */
+    * input is fewer files than `defaultParallelism` AND under 1 GiB in
+    * total — the small-unsplittable layout. A cluster-scale table
+    * arrives as many splits and passes through untouched (repartitioning
+    * a large input here would be a full shuffle of the corpus — the
+    * exact anti-pattern the guard exists to prevent). Round-robin
+    * repartition keeps retry determinism via Spark's
+    * sort-before-repartition default. */
   def spread(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism
     val files = df.inputFiles
     if (files.isEmpty || files.length >= target) df
     else {
-      val maxBytes = spark.conf.getOption("spark.graft.spread.maxBytes")
-        .map(_.toLong).getOrElse(1L << 30)
       val total =
         try {
           val conf = spark.sessionState.newHadoopConf()
@@ -66,8 +67,8 @@ object Tables {
             val p = new org.apache.hadoop.fs.Path(f)
             p.getFileSystem(conf).getFileStatus(p).getLen
           }.sum
-        } catch { case _: Throwable => Long.MaxValue }
-      if (total <= maxBytes) df.repartition(target) else df
+        } catch { case NonFatal(_) => Long.MaxValue }
+      if (total <= SpreadMaxBytes) df.repartition(target) else df
     }
   }
 

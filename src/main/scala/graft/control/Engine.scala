@@ -211,8 +211,9 @@ final class Engine(spark: SparkSession) {
     built = Nil // new config -> new source instances
     // a source rejected after another's poller started must not leave
     // that poller conversing with its device
-    try config.observers.foreach(startObserver)
-    catch { case e: Throwable => stopPolling(); throw e }
+    var started = false
+    try { config.observers.foreach(startObserver); started = true }
+    finally if (!started) stopPolling()
   }
 
   private def startObserver(o: ObserverConf): Unit = {

@@ -4,6 +4,7 @@ import java.io.{BufferedReader, InputStreamReader, OutputStreamWriter}
 import java.net.{StandardProtocolFamily, UnixDomainSocketAddress}
 import java.nio.channels.{Channels, ServerSocketChannel, SocketChannel}
 import java.nio.file.{Files, Path}
+import scala.util.control.NonFatal
 
 /** The reference's status Unix socket (cerebro.py:369-375, 430-460):
   * line-based verbs over a Unix domain socket so a SECOND process
@@ -36,7 +37,7 @@ final class StatusServer(engine: Engine, socketPath: Path) {
           t.setDaemon(true)
           t.start()
         } catch {
-          case _: Throwable => running = false // server closed
+          case NonFatal(_) => running = false // server closed
         }
       }
     }, "graft-status-server")
@@ -72,7 +73,7 @@ final class StatusServer(engine: Engine, socketPath: Path) {
         if (open) line = in.readLine()
       }
     } catch {
-      case _: Throwable => () // client went away
+      case NonFatal(_) => () // client went away
     } finally ch.close()
   }
 

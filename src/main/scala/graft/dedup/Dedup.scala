@@ -706,9 +706,10 @@ object Dedup {
           count(lit(1)).over(Window.partitionBy("id")))) // sort only, no exchange
   }
 
-  /** [[containmentPairs]] `auto` gate budget: blocked-join candidate
-    * volumes (Σ C(df,2) over df-capped shingles) at or below this run
-    * the postings equi-join; above it, the PPJoin-style prefix filter.
+  /** The budget of the [[jaccardPairs]]/[[containmentPairs]] gate:
+    * blocked-join candidate volumes (Σ C(df,2) over df-capped shingles)
+    * at or below this run the postings equi-join; above it, the
+    * PPJoin-style prefix filter.
     *
     * ROUND-16 RECALIBRATION — the old gate routed on DOC COUNT (cutover
     * 20k docs) and was measured BACKWARDS on real corpora: it sent the
@@ -736,23 +737,30 @@ object Dedup {
     * volume itself. */
   val PostingsVolumeBudget: Long = 400000000L
 
-  /** The `auto` gate's routing signal, exposed for capacity
+  /** The pair gate's routing signal, exposed for capacity
     * dry-runs (the q153 discipline: price a path before paying for
     * it): Σ C(df,2) over distinct shingles with df ≤ maxShingleFreq —
     * the exact same-shingle pair count the postings path's blocked
     * equi-join aggregates. One aggregate over the (persisted) posting;
     * never materializes a pair. */
   def containmentBlockedVolume(df: DataFrame, idCol: String,
-      textCol: String, n: Int, maxShingleFreq: Long): Long = {
-    val posting = cachedShinglePosting(df, idCol, textCol, n)
-    blockedVolume(posting.groupBy("shingle").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxShingleFreq))
-  }
+      textCol: String, n: Int, maxShingleFreq: Long): Long =
+    blockedVolume(cappedPosting(df, idCol, textCol, n, maxShingleFreq)._2)
 
   /** Σ C(df,2) over a `(shingle, df)` frame: one aggregate, one collect. */
   private def blockedVolume(dfreq: DataFrame): Long = {
     val row = dfreq.agg(sum(col("df") * (col("df") - 1))).collect()(0)
     if (row.isNullAt(0)) 0L else row.getLong(0) / 2
+  }
+
+  /** The persisted posting `(shingle, id, n_shingles)` and its df-capped
+    * `(shingle, df)` table — the two inputs both pair paths of
+    * [[jaccardPairs]] and [[containmentPairs]] start from. */
+  private[graft] def cappedPosting(df: DataFrame, idCol: String,
+      textCol: String, n: Int, maxShingleFreq: Long): (DataFrame, DataFrame) = {
+    val posting = cachedShinglePosting(df, idCol, textCol, n)
+    (posting, posting.groupBy("shingle").agg(count(lit(1)).as("df"))
+      .filter(col("df") <= maxShingleFreq))
   }
 
   /** Directional n-gram CONTAINMENT pairs (Broder 1997's asymmetric
@@ -764,134 +772,133 @@ object Dedup {
     * contamination case. Same posting machinery and df cap as
     * [[jaccardPairs]] (never all-pairs), and for `threshold > 0` the
     * same PPJoin-style prefix filter in its containment form (short
-    * side's prefix bounds candidates — see the branch comment); set
+    * side's prefix bounds candidates — see [[containmentPrefix]]); set
     * sizes count ALL distinct shingles (the df cap prunes candidate
     * GENERATION, not the denominator).
     *
-    * Path choice (`strategy`): the prefix filter pays two extra
-    * exchanges (rank window + candidate distinct) to prune candidate
-    * GENERATION — a trade that only wins once the blocked equi-join's
-    * candidate set is the bottleneck. `auto` (the default) MEASURES
-    * that bottleneck instead of proxying it by doc count (the round-16
-    * recalibration — see [[PostingsVolumeBudget]]): one
-    * aggregate over the already-persisted dfreq yields the blocked
-    * candidate volume Σ C(df,2), and volumes at or under the budget
-    * route to postings, above it to prefix. `postings` / `prefix`
-    * force a path (probes, A/B pins); both produce the IDENTICAL pair
-    * set (DedupSpec pins it across the gate). */
+    * Path choice: the prefix filter pays two extra exchanges (rank
+    * window + candidate distinct) to prune candidate GENERATION — a
+    * trade that only wins once the blocked equi-join's candidate set is
+    * the bottleneck. The gate MEASURES that bottleneck instead of
+    * proxying it by doc count (the round-16 recalibration — see
+    * [[PostingsVolumeBudget]]): one aggregate over the already-persisted
+    * dfreq yields the blocked candidate volume Σ C(df,2), and volumes at
+    * or under the budget route to postings, above it to prefix. Both
+    * paths produce the IDENTICAL pair set (DedupSpec pins it across the
+    * gate). */
   def containmentPairs(
       df: DataFrame,
       idCol: String,
       textCol: String,
       n: Int = 3,
       threshold: Double = 0.5,
-      maxShingleFreq: Long = 1000,
-      strategy: String = "auto"): DataFrame = {
-    val posting = cachedShinglePosting(df, idCol, textCol, n)
-    val dfreq = posting.groupBy("shingle").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxShingleFreq)
-    val usePostings = strategy match {
-      case "postings" => true
-      case "prefix" => false
-      case "auto" => threshold <= 0 || blockedVolume(dfreq) <= PostingsVolumeBudget
-      case other => throw new IllegalArgumentException(
-        s"containmentPairs strategy must be auto|postings|prefix, got $other")
-    }
-    if (usePostings) {
-      // no selectivity to exploit: the plain blocked equi-join,
-      // aggregated (never materializing the pair set)
-      val filtered = posting.join(dfreq.select("shingle"), Seq("shingle"))
-      val a = filtered.select(col("shingle"), col("id").as("id_a"), col("n_shingles").as("na"))
-      val b = filtered.select(col("shingle"), col("id").as("id_b"), col("n_shingles").as("nb"))
-      a.join(b, Seq("shingle")).filter(col("id_a") < col("id_b"))
-        .groupBy("id_a", "id_b", "na", "nb")
-        .agg(count(lit(1)).as("inter"))
-        .withColumn("cont_a", col("inter").cast("double") / col("na"))
-        .withColumn("cont_b", col("inter").cast("double") / col("nb"))
-        .filter(greatest(col("cont_a"), col("cont_b")) >= threshold)
-        .select("id_a", "id_b", "cont_a", "cont_b")
-    } else {
-      import org.apache.spark.sql.expressions.Window
-      // The containment analog of [[jaccardPairs]]' PPJoin prefix
-      // filter (VERDICT r12 #2). A pair qualifies iff
-      // inter >= t·min(na, nb), i.e. the threshold is set by the pair's
-      // SHORT side: by pigeonhole, any qualifying pair must share a
-      // shingle inside the short doc's prefix — its kept set minus the
-      // last ceil(t·n)−1 entries in rarest-first order (any fixed
-      // per-doc order is sound for a one-sided prefix; rarest-first
-      // minimizes collisions). Since which side is shorter is unknown
-      // at generation time, candidates are PREFIX rows joined against
-      // ALL kept rows — every qualifying pair collides on its short
-      // side's prefix by construction, so recall is perfect. Candidates
-      // then verify exactly on hashed kept-set intersections with FULL
-      // denominators (the df cap prunes generation, not n_shingles).
-      // Same 64-bit-key discipline as jaccardPairs: join and verify on
-      // xxhash64 keys (set semantics identical up to 64-bit collisions).
-      val kept = posting.join(dfreq, Seq("shingle"))
-        .withColumn("h", xxhash64(col("shingle")))
-      val byDoc = Window.partitionBy("id")
-      val ranked = kept
-        .withColumn("rank", row_number().over(byDoc.orderBy(col("df"), col("h"))))
-        .withColumn("ka", count(lit(1)).over(byDoc))
-      // Imin = ceil(t·n_shingles) with the FULL denominator; docs whose
-      // kept count ka < Imin can never qualify as the short side and
-      // emit no prefix rows
-      val prefix = ranked.filter(col("rank") <=
-        col("ka") - ceil(lit(threshold) * col("n_shingles")) + 1)
-      // ONE-SIDED positional filter (PPJoin, Xiao et al. 2008 §3.2,
-      // adapted to the one-sided containment prefix): at a collision on
-      // token h at rank r_p of the prefix side, the kept-set
-      // intersection is bounded by the prefix doc's remaining tail,
-      //   inter ≤ 1 + (ka_p − r_p),
-      // so a row whose bound is below t·min(na, nb) cannot witness a
-      // qualifying pair and is dropped row-local, BEFORE the
-      // pair-distinct exchange — the stage whose raw output
-      // (Σ_h prefix_df·df rows, duplicate pair multiplicity included)
-      // spilled >58 GB and exhausted single-node disk in the 256×
-      // probe. Recall stays perfect: a qualifying pair with
-      // intersection I shares a globally-rarest token s* whose rank in
-      // EACH doc is ≤ ka − I + 1 (the other I−1 shared tokens all rank
-      // after it), so the s*-collision row has bound ≥ I ≥ t·min(na,nb),
-      // and s* sits inside the short side's prefix by the same
-      // pigeonhole that makes the prefix sound; the ε slack only ADMITS
-      // borderline rows (verify prunes them exactly), so double rounding
-      // at an integral t·min can never cost recall.
-      //
-      // Deliberately ONE-sided: the symmetric form (also bounding by the
-      // kept side's tail) needs rank/ka on every kept row, which drags
-      // the whole posting through the id-window's exchange+sort a second
-      // time and widens the h-join's shuffle rows — measured 2.5× SLOWER
-      // at the 64× cell (82.4 s vs 33.6 s unfiltered) for zero extra
-      // pruning there. The kept side contributes only n_shingles, which
-      // the posting already carries.
-      val kside = kept.select(col("h"), col("id").as("id_k"),
-        col("n_shingles").as("nak"))
-      val cand = prefix.select(col("h"), col("id").as("id_p"),
-          col("rank").as("rp"), col("ka").as("kap"), col("n_shingles").as("nap"))
-        .join(kside, Seq("h"))
-        .filter(col("id_p") =!= col("id_k"))
-        .filter((lit(1) + col("kap") - col("rp")).cast("double") >=
-          lit(threshold) * least(col("nap"), col("nak")) - lit(1e-9))
-        .select(least(col("id_p"), col("id_k")).as("id_a"),
-          greatest(col("id_p"), col("id_k")).as("id_b"))
-        .distinct()
-      val keptSets = kept.groupBy("id", "n_shingles")
-        .agg(collect_list(col("h")).as("kept_set"))
-      cand
-        .join(keptSets.select(col("id").as("id_a"), col("n_shingles").as("na"),
-          col("kept_set").as("sa")), Seq("id_a"))
-        .join(keptSets.select(col("id").as("id_b"), col("n_shingles").as("nb"),
-          col("kept_set").as("sb")), Seq("id_b"))
-        .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
-        .withColumn("cont_a", col("inter").cast("double") / col("na"))
-        .withColumn("cont_b", col("inter").cast("double") / col("nb"))
-        .filter(greatest(col("cont_a"), col("cont_b")) >= threshold)
-        .select("id_a", "id_b", "cont_a", "cont_b")
-    }
+      maxShingleFreq: Long = 1000): DataFrame = {
+    val (posting, dfreq) = cappedPosting(df, idCol, textCol, n, maxShingleFreq)
+    if (threshold <= 0 || blockedVolume(dfreq) <= PostingsVolumeBudget)
+      containmentPostings(posting, dfreq, threshold)
+    else containmentPrefix(posting, dfreq, threshold)
+  }
+
+  /** [[containmentPairs]]' postings path: no selectivity to exploit, the
+    * plain blocked equi-join, aggregated (never materializing the pair
+    * set). */
+  private[graft] def containmentPostings(posting: DataFrame, dfreq: DataFrame,
+      threshold: Double): DataFrame = {
+    val filtered = posting.join(dfreq.select("shingle"), Seq("shingle"))
+    val a = filtered.select(col("shingle"), col("id").as("id_a"), col("n_shingles").as("na"))
+    val b = filtered.select(col("shingle"), col("id").as("id_b"), col("n_shingles").as("nb"))
+    a.join(b, Seq("shingle")).filter(col("id_a") < col("id_b"))
+      .groupBy("id_a", "id_b", "na", "nb")
+      .agg(count(lit(1)).as("inter"))
+      .withColumn("cont_a", col("inter").cast("double") / col("na"))
+      .withColumn("cont_b", col("inter").cast("double") / col("nb"))
+      .filter(greatest(col("cont_a"), col("cont_b")) >= threshold)
+      .select("id_a", "id_b", "cont_a", "cont_b")
+  }
+
+  /** [[containmentPairs]]' prefix-filter path. */
+  private[graft] def containmentPrefix(posting: DataFrame, dfreq: DataFrame,
+      threshold: Double): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    // The containment analog of [[jaccardPairs]]' PPJoin prefix
+    // filter (VERDICT r12 #2). A pair qualifies iff
+    // inter >= t·min(na, nb), i.e. the threshold is set by the pair's
+    // SHORT side: by pigeonhole, any qualifying pair must share a
+    // shingle inside the short doc's prefix — its kept set minus the
+    // last ceil(t·n)−1 entries in rarest-first order (any fixed
+    // per-doc order is sound for a one-sided prefix; rarest-first
+    // minimizes collisions). Since which side is shorter is unknown
+    // at generation time, candidates are PREFIX rows joined against
+    // ALL kept rows — every qualifying pair collides on its short
+    // side's prefix by construction, so recall is perfect. Candidates
+    // then verify exactly on hashed kept-set intersections with FULL
+    // denominators (the df cap prunes generation, not n_shingles).
+    // Same 64-bit-key discipline as jaccardPairs: join and verify on
+    // xxhash64 keys (set semantics identical up to 64-bit collisions).
+    val kept = posting.join(dfreq, Seq("shingle"))
+      .withColumn("h", xxhash64(col("shingle")))
+    val byDoc = Window.partitionBy("id")
+    val ranked = kept
+      .withColumn("rank", row_number().over(byDoc.orderBy(col("df"), col("h"))))
+      .withColumn("ka", count(lit(1)).over(byDoc))
+    // Imin = ceil(t·n_shingles) with the FULL denominator; docs whose
+    // kept count ka < Imin can never qualify as the short side and
+    // emit no prefix rows
+    val prefix = ranked.filter(col("rank") <=
+      col("ka") - ceil(lit(threshold) * col("n_shingles")) + 1)
+    // ONE-SIDED positional filter (PPJoin, Xiao et al. 2008 §3.2,
+    // adapted to the one-sided containment prefix): at a collision on
+    // token h at rank r_p of the prefix side, the kept-set
+    // intersection is bounded by the prefix doc's remaining tail,
+    //   inter ≤ 1 + (ka_p − r_p),
+    // so a row whose bound is below t·min(na, nb) cannot witness a
+    // qualifying pair and is dropped row-local, BEFORE the
+    // pair-distinct exchange — the stage whose raw output
+    // (Σ_h prefix_df·df rows, duplicate pair multiplicity included)
+    // spilled >58 GB and exhausted single-node disk in the 256×
+    // probe. Recall stays perfect: a qualifying pair with
+    // intersection I shares a globally-rarest token s* whose rank in
+    // EACH doc is ≤ ka − I + 1 (the other I−1 shared tokens all rank
+    // after it), so the s*-collision row has bound ≥ I ≥ t·min(na,nb),
+    // and s* sits inside the short side's prefix by the same
+    // pigeonhole that makes the prefix sound; the ε slack only ADMITS
+    // borderline rows (verify prunes them exactly), so double rounding
+    // at an integral t·min can never cost recall.
+    //
+    // Deliberately ONE-sided: the symmetric form (also bounding by the
+    // kept side's tail) needs rank/ka on every kept row, which drags
+    // the whole posting through the id-window's exchange+sort a second
+    // time and widens the h-join's shuffle rows — measured 2.5× SLOWER
+    // at the 64× cell (82.4 s vs 33.6 s unfiltered) for zero extra
+    // pruning there. The kept side contributes only n_shingles, which
+    // the posting already carries.
+    val kside = kept.select(col("h"), col("id").as("id_k"),
+      col("n_shingles").as("nak"))
+    val cand = prefix.select(col("h"), col("id").as("id_p"),
+        col("rank").as("rp"), col("ka").as("kap"), col("n_shingles").as("nap"))
+      .join(kside, Seq("h"))
+      .filter(col("id_p") =!= col("id_k"))
+      .filter((lit(1) + col("kap") - col("rp")).cast("double") >=
+        lit(threshold) * least(col("nap"), col("nak")) - lit(1e-9))
+      .select(least(col("id_p"), col("id_k")).as("id_a"),
+        greatest(col("id_p"), col("id_k")).as("id_b"))
+      .distinct()
+    val keptSets = kept.groupBy("id", "n_shingles")
+      .agg(collect_list(col("h")).as("kept_set"))
+    cand
+      .join(keptSets.select(col("id").as("id_a"), col("n_shingles").as("na"),
+        col("kept_set").as("sa")), Seq("id_a"))
+      .join(keptSets.select(col("id").as("id_b"), col("n_shingles").as("nb"),
+        col("kept_set").as("sb")), Seq("id_b"))
+      .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
+      .withColumn("cont_a", col("inter").cast("double") / col("na"))
+      .withColumn("cont_b", col("inter").cast("double") / col("nb"))
+      .filter(greatest(col("cont_a"), col("cont_b")) >= threshold)
+      .select("id_a", "id_b", "cont_a", "cont_b")
   }
 
   /** Path choice (round-16, the containment-gate finding transferred):
-    * `auto` measures the df-capped blocked candidate volume Σ C(df,2)
+    * the gate measures the df-capped blocked candidate volume Σ C(df,2)
     * from dfreq and runs the blocked postings join (threshold applied
     * post-aggregation — exact) at or under
     * [[PostingsVolumeBudget]], the prefix filter above it. Measured on
@@ -909,8 +916,7 @@ object Dedup {
       textCol: String,
       n: Int = 3,
       threshold: Double = 0.5,
-      maxShingleFreq: Long = 1000,
-      strategy: String = "auto"): DataFrame = {
+      maxShingleFreq: Long = 1000): DataFrame = {
     // Codegen generator shape via [[shinglePosting]], NOT the interpreted
     // `shingles()` array HOF: the HOF ran the whole corpus's shingle
     // derivation as interpreted expressions inside the scan stage (one
@@ -919,82 +925,84 @@ object Dedup {
     // dropped codegen classes). shinglePosting stays inside whole-stage
     // codegen and fans out across shuffle partitions; its id partitioning
     // then feeds the distinct and the n_shingles window exchange-free.
-    val posting = cachedShinglePosting(df, idCol, textCol, n)
-    val dfreq = posting.groupBy("shingle").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxShingleFreq)
-    val usePostings = strategy match {
-      case "postings" => true
-      case "prefix" => false
-      case "auto" => threshold <= 0 || blockedVolume(dfreq) <= PostingsVolumeBudget
-      case other => throw new IllegalArgumentException(
-        s"jaccardPairs strategy must be auto|postings|prefix, got $other")
-    }
-    if (usePostings) {
-      val filtered = posting.join(dfreq.select("shingle"), Seq("shingle"))
-      val a = filtered.select(col("shingle"), col("id").as("id_a"), col("n_shingles").as("na"))
-      val b = filtered.select(col("shingle"), col("id").as("id_b"), col("n_shingles").as("nb"))
-      a.join(b, Seq("shingle")).filter(col("id_a") < col("id_b"))
-        .groupBy("id_a", "id_b", "na", "nb")
-        .agg(count(lit(1)).as("inter"))
-        .withColumn("jaccard",
-          col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
-        .filter(col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    } else {
-      import org.apache.spark.sql.expressions.Window
-      // The prefix join and the verify step run on 64-bit xxhash64 shingle
-      // keys, not strings: the verify shuffles each candidate's kept-set
-      // array twice and intersects per pair, and long equality there is
-      // ~4x cheaper than string hashing + payload (measured in the
-      // round-6 probe behind SCALE.md "Pair-operator scaling", which
-      // records the pair timings, not this split). Set semantics are
-      // identical up to 64-bit collisions; df/stop-shingle stats stay
-      // string-exact.
-      val kept = posting.join(dfreq, Seq("shingle")) // shingle, id, n_shingles, df
-        .withColumn("h", xxhash64(col("shingle")))
-      // global rarest-first order; rank within each doc
-      val byDoc = Window.partitionBy("id")
-      val ranked = kept
-        .withColumn("rank", row_number().over(byDoc.orderBy(col("df"), col("h"))))
-        .withColumn("ka", count(lit(1)).over(byDoc))
-      // Imin = ceil(t·n_shingles); prefix = first ka - Imin + 1 shingles.
-      // Docs where Imin > ka can never qualify and emit no prefix rows.
-      val prefix = ranked.filter(col("rank") <=
-        col("ka") - ceil(lit(threshold) * col("n_shingles")) + 1)
-      // Positional filter (PPJoin, Xiao et al. 2008 §3.2): a collision at
-      // ranks (r_a, r_b) bounds the kept-set intersection by the shorter
-      // remaining tail, inter ≤ 1 + min(ka_a − r_a, ka_b − r_b); a
-      // qualifying pair needs inter·(1+t) ≥ t·(na+nb) (the verify
-      // predicate solved for inter), so rows below that bound cannot
-      // witness a qualifying pair and are dropped before the
-      // pair-distinct exchange. Recall stays perfect: the pair's
-      // globally-rarest shared token ranks ≤ ka − I + 1 in BOTH docs
-      // (the other I−1 shared tokens all rank after it), so its row sits
-      // in both prefixes with bound ≥ I; the ε slack only ADMITS
-      // borderline rows, so double rounding can never cost recall.
-      val cand = prefix.select(col("h"), col("id").as("id_a"),
-          col("rank").as("ra"), col("ka").as("kaa"), col("n_shingles").as("naa"))
-        .join(prefix.select(col("h"), col("id").as("id_b"),
-          col("rank").as("rb"), col("ka").as("kab"), col("n_shingles").as("nab")), Seq("h"))
-        .filter(col("id_a") < col("id_b"))
-        .filter((lit(1) + least(col("kaa") - col("ra"), col("kab") - col("rb")))
-          .cast("double") * (1.0 + threshold) >=
-          lit(threshold) * (col("naa") + col("nab")) - lit(1e-9))
-        .select("id_a", "id_b").distinct()
-      // exact verification on the kept-shingle sets of candidates only
-      val keptSets = kept.groupBy("id", "n_shingles")
-        .agg(collect_list(col("h")).as("kept_set"))
-      cand
-        .join(keptSets.select(col("id").as("id_a"), col("n_shingles").as("na"),
-          col("kept_set").as("sa")), Seq("id_a"))
-        .join(keptSets.select(col("id").as("id_b"), col("n_shingles").as("nb"),
-          col("kept_set").as("sb")), Seq("id_b"))
-        .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
-        .withColumn("jaccard",
-          col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
-        .filter(col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    }
+    val (posting, dfreq) = cappedPosting(df, idCol, textCol, n, maxShingleFreq)
+    if (threshold <= 0 || blockedVolume(dfreq) <= PostingsVolumeBudget)
+      jaccardPostings(posting, dfreq, threshold)
+    else jaccardPrefix(posting, dfreq, threshold)
+  }
+
+  /** [[jaccardPairs]]' postings path: the blocked equi-join, threshold
+    * applied post-aggregation. */
+  private[graft] def jaccardPostings(posting: DataFrame, dfreq: DataFrame,
+      threshold: Double): DataFrame = {
+    val filtered = posting.join(dfreq.select("shingle"), Seq("shingle"))
+    val a = filtered.select(col("shingle"), col("id").as("id_a"), col("n_shingles").as("na"))
+    val b = filtered.select(col("shingle"), col("id").as("id_b"), col("n_shingles").as("nb"))
+    a.join(b, Seq("shingle")).filter(col("id_a") < col("id_b"))
+      .groupBy("id_a", "id_b", "na", "nb")
+      .agg(count(lit(1)).as("inter"))
+      .withColumn("jaccard",
+        col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
+      .filter(col("jaccard") >= threshold)
+      .select("id_a", "id_b", "jaccard")
+  }
+
+  /** [[jaccardPairs]]' PPJoin prefix-filter path. */
+  private[graft] def jaccardPrefix(posting: DataFrame, dfreq: DataFrame,
+      threshold: Double): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    // The prefix join and the verify step run on 64-bit xxhash64 shingle
+    // keys, not strings: the verify shuffles each candidate's kept-set
+    // array twice and intersects per pair, and long equality there is
+    // ~4x cheaper than string hashing + payload (measured in the
+    // round-6 probe behind SCALE.md "Pair-operator scaling", which
+    // records the pair timings, not this split). Set semantics are
+    // identical up to 64-bit collisions; df/stop-shingle stats stay
+    // string-exact.
+    val kept = posting.join(dfreq, Seq("shingle")) // shingle, id, n_shingles, df
+      .withColumn("h", xxhash64(col("shingle")))
+    // global rarest-first order; rank within each doc
+    val byDoc = Window.partitionBy("id")
+    val ranked = kept
+      .withColumn("rank", row_number().over(byDoc.orderBy(col("df"), col("h"))))
+      .withColumn("ka", count(lit(1)).over(byDoc))
+    // Imin = ceil(t·n_shingles); prefix = first ka - Imin + 1 shingles.
+    // Docs where Imin > ka can never qualify and emit no prefix rows.
+    val prefix = ranked.filter(col("rank") <=
+      col("ka") - ceil(lit(threshold) * col("n_shingles")) + 1)
+    // Positional filter (PPJoin, Xiao et al. 2008 §3.2): a collision at
+    // ranks (r_a, r_b) bounds the kept-set intersection by the shorter
+    // remaining tail, inter ≤ 1 + min(ka_a − r_a, ka_b − r_b); a
+    // qualifying pair needs inter·(1+t) ≥ t·(na+nb) (the verify
+    // predicate solved for inter), so rows below that bound cannot
+    // witness a qualifying pair and are dropped before the
+    // pair-distinct exchange. Recall stays perfect: the pair's
+    // globally-rarest shared token ranks ≤ ka − I + 1 in BOTH docs
+    // (the other I−1 shared tokens all rank after it), so its row sits
+    // in both prefixes with bound ≥ I; the ε slack only ADMITS
+    // borderline rows, so double rounding can never cost recall.
+    val cand = prefix.select(col("h"), col("id").as("id_a"),
+        col("rank").as("ra"), col("ka").as("kaa"), col("n_shingles").as("naa"))
+      .join(prefix.select(col("h"), col("id").as("id_b"),
+        col("rank").as("rb"), col("ka").as("kab"), col("n_shingles").as("nab")), Seq("h"))
+      .filter(col("id_a") < col("id_b"))
+      .filter((lit(1) + least(col("kaa") - col("ra"), col("kab") - col("rb")))
+        .cast("double") * (1.0 + threshold) >=
+        lit(threshold) * (col("naa") + col("nab")) - lit(1e-9))
+      .select("id_a", "id_b").distinct()
+    // exact verification on the kept-shingle sets of candidates only
+    val keptSets = kept.groupBy("id", "n_shingles")
+      .agg(collect_list(col("h")).as("kept_set"))
+    cand
+      .join(keptSets.select(col("id").as("id_a"), col("n_shingles").as("na"),
+        col("kept_set").as("sa")), Seq("id_a"))
+      .join(keptSets.select(col("id").as("id_b"), col("n_shingles").as("nb"),
+        col("kept_set").as("sb")), Seq("id_b"))
+      .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
+      .withColumn("jaccard",
+        col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
+      .filter(col("jaccard") >= threshold)
+      .select("id_a", "id_b", "jaccard")
   }
 
   /** Near-duplicate pairs verified by TRUE edit-distance similarity —

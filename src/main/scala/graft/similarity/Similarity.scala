@@ -544,8 +544,8 @@ object Similarity {
 
   /** Nearest-centroid assignment against PINNED centroids — the
     * [[ivfIndex]] assignment stage factored for reuse by
-    * [[ivfMaintain]]. Max_by partial agg: the N×nlist scored rows
-    * collapse map-side, the shuffle carries N rows. */
+    * [[ivfMaintainVersioned]]. Max_by partial agg: the N×nlist scored
+    * rows collapse map-side, the shuffle carries N rows. */
   def assignToCentroids(candidates: DataFrame, centroids: DataFrame): DataFrame =
     candidates.crossJoin(broadcast(centroids))
       .select(col("cand_id"), col("cand_vec"), col("centroid_id"),
@@ -683,18 +683,10 @@ object Similarity {
       .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
-  /** Materialize an [[ivfIndex]] assignment as a centroid-partitioned
-    * parquet layout — the storage half of the "probes become
-    * partition-pruned scans" claim in [[ivfIndex]]'s scaladoc. Each
-    * inverted list is its own partition directory, so a probe of
-    * `nprobe` lists reads exactly those directories and the other
-    * `nlist − nprobe` never leave the file index. */
-  def writeIvfLayout(assigned: DataFrame, path: String): Unit =
-    assigned.write.mode("overwrite").partitionBy("centroid").parquet(path)
-
-  /** [[ivfTopK]] against a [[writeIvfLayout]] directory: identical
+  /** [[ivfTopK]] against a [[writeIvfLayoutVersioned]] root: identical
     * output (SimilaritySpec pins it), but the corpus side is a
-    * partition-PRUNED scan — the probed centroid ids become literal
+    * partition-PRUNED scan — every inverted list is its own
+    * `centroid=c` directory, and the probed centroid ids become literal
     * partition filters, so IO is `nprobe/nlist` of the corpus instead
     * of all of it. The probed-id collect is bounded by `nlist` (the
     * union of every query's probes), never by the corpus or query
@@ -703,7 +695,7 @@ object Similarity {
     * of it to discard 75% after the fact. */
   def ivfTopKPruned(
       spark: SparkSession,
-      layoutPath: String,
+      root: String,
       centroids: DataFrame,
       queries: DataFrame,
       k: Int,
@@ -716,7 +708,7 @@ object Similarity {
       .select(col("query_id"), col("query_vec"), col("centroid_id").as("centroid"))
     val probedIds = probes.select("centroid").distinct()
       .collect().map(_.getLong(0)).sorted
-    val pruned = spark.read.parquet(layoutPath)
+    val pruned = readIvfLayoutVersioned(spark, root)
       .filter(col("centroid").isin(probedIds: _*))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("cand_id"))
@@ -776,114 +768,16 @@ object Similarity {
                   slice(col("query_vec"), lit(1), col("width"))) /
               dot(col("query_vec"), col("query_vec")), 6).as("energy"))
   }
-  /** [[ivfMaintain]]'s broadcast gate: delta-id sets at or below this
-    * row count broadcast; larger ones shuffle-join. */
+  /** [[ivfMaintainVersioned]]'s broadcast gate: delta-id sets at or
+    * below this row count broadcast; larger ones shuffle-join. */
   val DeltaBroadcastMax: Long = 1000000L
 
-  /** Incremental maintenance of a [[writeIvfLayout]] directory under a
-    * corpus delta — the index-freshness operation a continuously-
-    * ingesting 100 TB store needs between retrains: `added` rows (new or
-    * re-embedded — any id present in `added` replaces its old row) are
-    * assigned against the PINNED centroids (delta × nlist compute, never
-    * corpus × nlist), `removedIds` rows leave, and ONLY the affected
-    * centroid partitions are rewritten (dynamic partition overwrite) —
-    * untouched inverted lists are neither read for rewrite nor written.
-    *
-    * The affected-list discovery reads the layout filtered by the delta
-    * ids (parquet row-group stats prune most files); the affected-ids
-    * collect is bounded by nlist. The rewrite set is eagerly
-    * materialized (localCheckpoint) before the overwrite so the job
-    * never reads the files it is replacing; a production deployment at
-    * full scale would instead write a new layout VERSION directory and
-    * swap a pointer — same plan, different commit protocol.
-    *
-    * The delta-id set is broadcast only below [[DeltaBroadcastMax]]
-    * rows — an index-maintenance delta normally is — and joins as a
-    * shuffle semi/anti join above it, so a caller handing a
-    * corpus-sized delta degrades to a plan that still completes instead
-    * of one that collects the corpus to the driver (ADVICE r14 /
-    * VERDICT r14 #6).
-    *
-    * EMPTIED lists (ADVICE r15 medium): dynamic partition overwrite
-    * only rewrites partitions PRESENT in the written data — a delta
-    * whose removals clear an entire inverted list (no additions land
-    * there) would leave that directory untouched and silently resurrect
-    * the removed vectors. Affected centroids absent from the rewrite
-    * set are therefore deleted explicitly after the overwrite
-    * (CorpusOpsSpec pins the emptied-list case).
-    *
-    * Invariant (spec-pinned, oracle-checked): the maintained layout is
-    * row-identical to a full-rebuild assignment of the new corpus with
-    * the same centroids. */
-  def ivfMaintain(
-      spark: SparkSession,
-      layoutPath: String,
-      centroids: DataFrame,
-      added: DataFrame, // (cand_id, cand_vec)
-      removedIds: DataFrame): Unit = { // (cand_id)
-    val assignedNew = assignToCentroids(added, centroids)
-    val deltaIds0 = added.select(col("cand_id"))
-      .union(removedIds.select(col("cand_id"))).distinct()
-      .localCheckpoint(true) // reused by three joins + the size gate
-    val deltaIds =
-      if (deltaIds0.count() <= DeltaBroadcastMax) broadcast(deltaIds0)
-      else deltaIds0
-    val affectedOld = spark.read.parquet(layoutPath)
-      .join(deltaIds, Seq("cand_id"), "left_semi")
-      .select(col("centroid").cast("long"))
-    val affected = assignedNew.select(col("centroid"))
-      .union(affectedOld).distinct()
-      .collect().map(_.getLong(0)).sorted
-    if (affected.nonEmpty) {
-      val keptOld = spark.read.parquet(layoutPath)
-        .filter(col("centroid").isin(affected: _*))
-        .join(deltaIds, Seq("cand_id"), "left_anti")
-        .select(col("cand_id"), col("cand_vec"), col("centroid").cast("long").as("centroid"))
-      val rewrite = keptOld.unionByName(
-          assignedNew.select(col("cand_id"), col("cand_vec"), col("centroid")))
-        .localCheckpoint(true)
-      // nlist-bounded: which affected lists still have rows after the
-      // delta — the rest must be DELETED, not left to dynamic overwrite
-      val present = rewrite.select(col("centroid")).distinct()
-        .collect().map(_.getLong(0)).toSet
-      val root = new org.apache.hadoop.fs.Path(layoutPath)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // a previous maintain may have drained the layout to the flat
-      // empty-schema marker (below); remove it before writing partition
-      // dirs, or partition discovery sees conflicting structures
-      fs.listStatus(root).filter(s => s.isFile &&
-          s.getPath.getName.startsWith("part-"))
-        .foreach(s => fs.delete(s.getPath, false))
-      if (present.nonEmpty)
-        rewrite.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("centroid").parquet(layoutPath)
-      // CRASH WINDOW (ADVICE r15 #4, documented): the overwrite above
-      // and the deletes below are two non-atomic filesystem steps — a
-      // failure between them resurrects the emptied lists until the
-      // maintain is re-run (it is idempotent for the same delta). The
-      // window is closed entirely by [[ivfMaintainVersioned]], which
-      // publishes every maintain as an immutable version plus one
-      // atomic pointer swap.
-      affected.filterNot(present).foreach { c =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, s"centroid=$c"), true)
-      }
-      // a delta that empties EVERY remaining list leaves no parquet
-      // under layoutPath and the next read would throw instead of
-      // returning empty — keep the layout readable with a flat
-      // empty-schema marker (centroid travels as a data column there)
-      val anyLeft = fs.listStatus(root).exists(s =>
-        s.isDirectory && s.getPath.getName.startsWith("centroid="))
-      if (!anyLeft)
-        rewrite.limit(0).write.mode("append").parquet(layoutPath)
-    }
-  }
-
-  /** Versioned-commit twin of [[ivfMaintain]] (VERDICT r15 #7) — the
-    * production protocol the in-place mode's scaladoc names: every
-    * maintain publishes an IMMUTABLE new version and swaps one pointer,
-    * so a concurrent reader never observes a half-overwritten partition
-    * and a crash mid-maintain leaves the current version untouched.
+  /** The IVF serving layout: an [[ivfIndex]] assignment materialized as
+    * centroid-partitioned parquet under a versioned commit protocol
+    * (VERDICT r15 #7). Every maintain publishes an IMMUTABLE new version
+    * and swaps one pointer, so a concurrent reader never observes a
+    * half-overwritten partition and a crash mid-maintain leaves the
+    * current version untouched.
     *
     * Layout under `root`:
     *  - `v<N>/centroid=c/…`      — version N's own partition rewrites
@@ -954,10 +848,27 @@ object Similarity {
     }
   }
 
-  /** One maintain step against a versioned layout: same delta semantics
-    * and same affected-list-only write volume as [[ivfMaintain]], but
-    * committed as version N+1 + manifest + atomic CURRENT swap. Returns
-    * the published version number.
+  /** Incremental maintenance of a versioned layout under a corpus
+    * delta — the index-freshness operation a continuously-ingesting
+    * 100 TB store needs between retrains: `added` rows (new or
+    * re-embedded — any id present in `added` replaces its old row) are
+    * assigned against the PINNED centroids (delta × nlist compute, never
+    * corpus × nlist), `removedIds` rows leave, and ONLY the affected
+    * inverted lists are rewritten, into version N+1; the manifest keeps
+    * every untouched list on the version that already serves it, drops
+    * the lists the delta emptied, and the CURRENT swap commits the
+    * whole step. Returns the published version number.
+    *
+    * The affected-list collect is bounded by nlist. The delta-id set is
+    * broadcast only below [[DeltaBroadcastMax]] rows — an
+    * index-maintenance delta normally is — and joins as a shuffle
+    * semi/anti join above it, so a caller handing a corpus-sized delta
+    * degrades to a plan that still completes instead of one that
+    * collects the corpus to the driver (ADVICE r14 / VERDICT r14 #6).
+    *
+    * Invariant (spec-pinned, oracle-checked by q154): the maintained
+    * layout is row-identical to a full-rebuild assignment of the new
+    * corpus with the same centroids.
     *
     * SINGLE WRITER at a time (ADVICE r16 #4): concurrent READERS are
     * safe at any point, but two concurrent maintains would both read

@@ -134,12 +134,7 @@ object ActorStreamReplay {
     StructField("conn", SqlString), StructField("seq", LongType),
     StructField("data", SqlString)))
 
-  /** `typed = true` routes the keyword stage through
-    * [[KeywordProcessor.processTyped]] (the JVM-compiled hot-path twin)
-    * instead of the declarative form — q83 runs this against q52's
-    * byte-identical oracle SQL, so the two implementations' parity is
-    * proven at the hash level on the full chain, not just in specs. */
-  def run(spark: SparkSession, dir: String, typed: Boolean = false): DataFrame = {
+  def run(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // spool reused across runs (content-keyed on events.parquet + conns);
     // checkpoint/sink always land in a fresh swept run dir
@@ -165,13 +160,9 @@ object ActorStreamReplay {
     // untouched.
     val parsed = ActorReplies.parse(replies, Dict)
       .repartition(spark.sparkContext.defaultParallelism)
-    val points =
-      if (typed) KeywordProcessor.processTyped(parsed,
-        tags = Map("site" -> "lab"),
-        keywordTags = Map("probe.val" -> KeywordTagConf(0, "eid"))).toDF()
-      else KeywordProcessor.process(parsed.toDF(),
-        tags = Map("site" -> "lab"),
-        keywordTags = Map("probe.val" -> KeywordTagConf(0, "eid")))
+    val points = KeywordProcessor.process(parsed.toDF(),
+      tags = Map("site" -> "lab"),
+      keywordTags = Map("probe.val" -> KeywordTagConf(0, "eid")))
     // parquet sink, not memory: the memory sink collects every batch to
     // the driver and its table executes as a SINGLE-partition local scan,
     // which made the readback+sort ~46 s at sf0.1; the parquet observer is

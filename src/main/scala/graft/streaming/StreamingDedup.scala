@@ -72,16 +72,10 @@ object StreamingDedup {
     // feed the numTotalStateRows METRIC — query results are
     // byte-identical either way (the oracle sweep covers every
     // streaming query). At 100 TB state volumes that is a doubled
-    // point-lookup load on the commit path. Default off; re-enable per
-    // session via `spark.graft.rocksdb.trackRows` or env
-    // SPARK_GRAFT_ROCKSDB_TRACKROWS when the ops metric is worth
-    // the write amplification. The speed effect of this default is
-    // unmeasured: no A/B of it has been run.
-    val trackRows = spark.conf.getOption("spark.graft.rocksdb.trackRows")
-      .orElse(sys.env.get("SPARK_GRAFT_ROCKSDB_TRACKROWS"))
-      .getOrElse("false")
+    // point-lookup load on the commit path, so it stays off. The speed
+    // effect of this setting is unmeasured: no A/B of it has been run.
     spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", trackRows)
+      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
   }
 
   /** Fingerprint + key-derived projection shared by the streaming query

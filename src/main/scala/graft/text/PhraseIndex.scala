@@ -19,8 +19,9 @@ import graft.dedup.Dedup
   *    index, partitioned by a stable token-hash bucket
   *    (`h60(token) % buckets`). A phrase query turns its terms into
   *    literal bucket filters, so serving IO is `|terms|/buckets` of the
-  *    index instead of all of it — the [[graft.similarity.Similarity.writeIvfLayout]]
-  *    discipline applied to text.
+  *    index instead of all of it — the
+  *    [[graft.similarity.Similarity.writeIvfLayoutVersioned]] discipline
+  *    applied to text.
   *
   * Matching: positions of term i are shifted by −i and intersected
   * across terms (`array_intersect` of per-(term, doc) sorted position

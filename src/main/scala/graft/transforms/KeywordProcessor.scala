@@ -48,89 +48,6 @@ object KeywordProcessor {
 
   final case class KeywordTagConf(index: Int, name: String)
 
-  /** Typed hot-path twin of [[process]] — the same semantics as plain
-    * JVM-compiled Scala over `Dataset[KeywordRow]` instead of
-    * interpreted Catalyst higher-order functions. The declarative form
-    * is the oracle-pinned reference (q52); this one exists because the
-    * q52 16× audit measured the interpreted HOF evaluation as the
-    * chain's remaining floor (~2.5 s/batch — SCALE.md "q52 audit").
-    * PARITY IS HASH-CHECKED, not asserted: q83 runs the identical
-    * replay chain through this path against q52's byte-identical
-    * oracle SQL, and KeywordProcessorSpec compares both forms row-set
-    * for row-set over the edge-case fixtures (pvt, named/positional
-    * slots, casts, keyword_tags, malformed numerics, null raws).
-    *
-    * Two deliberate parity quirks reproduced from the declarative
-    * form's three-valued logic: (a) a `bool` cast on a NULL raw value
-    * yields 1.0 (the `when(isin...)` condition is null ⇒ otherwise
-    * branch); (b) the keyword-tag value renders doubles via
-    * `Double.toString` — the same shortest-round-trip form Spark's
-    * double→string cast emits. */
-  def processTyped(
-      rows: org.apache.spark.sql.Dataset[graft.sources.ActorReplies.KeywordRow],
-      tags: Map[String, String] = Map.empty,
-      keywordTags: Map[String, KeywordTagConf] = Map.empty,
-      casts: Map[String, String] = Map.empty,
-      bucket: String = "actors"): org.apache.spark.sql.Dataset[graft.model.TelemetryPoint] = {
-    import rows.sparkSession.implicits._
-    val numRe = java.util.regex.Pattern.compile(
-      "^[+-]?([0-9]*\\.)?[0-9]+([eE][+-]?[0-9]+)?$")
-    val falsy = Set("", "0", "false", "f")
-    rows.flatMap { r =>
-      val values = Option(r.values).getOrElse(Seq.empty)
-      val nValues = values.size
-      final class D(val idx: Int, val parseable: Boolean, val fieldBase: String,
-          val raw: String, val units: String, val pvt: Array[Double],
-          val castVal: Option[Double], val ktv: String)
-      var ii = 0 // parseable count of the PREFIX (tron.py:70-72)
-      val derived = values.zipWithIndex.map { case (kv, i) =>
-        val parseable = kv.pvt == null || kv.pvt.length == 3
-        val keyName =
-          if (kv.name != null && kv.name.nonEmpty) "_" + kv.name
-          else if (nValues == 1) ""
-          else "_" + ii
-        if (parseable) ii += 1
-        val fieldBase = r.keyword + keyName
-        val raw = kv.value
-        val numeric: Option[Double] =
-          if (raw != null && numRe.matcher(raw).matches()) Some(raw.toDouble) else None
-        val castVal: Option[Double] = casts.get(r.actor + "." + fieldBase) match {
-          case Some("int") => numeric.map(_.toInt.toDouble)
-          case Some("float") => numeric
-          case Some("bool") =>
-            Some(if (raw != null && falsy(raw.toLowerCase)) 0.0 else 1.0)
-          case _ => numeric
-        }
-        val ktv = castVal.map(_.toString).getOrElse(raw)
-        new D(i, parseable, fieldBase, raw, kv.units, kv.pvt, castVal, ktv)
-      }
-      val ktConf = keywordTags.get(r.actor + "." + r.keyword)
-      val ktTags: Map[String, String] = ktConf match {
-        case Some(c) =>
-          derived.find(d => d.parseable && d.idx == c.index)
-            .flatMap(d => Option(d.ktv)).map(v => Map(c.name -> v))
-            .getOrElse(Map.empty)
-        case None => Map.empty
-      }
-      derived.filter(_.parseable).map { d =>
-        val isPvt = d.pvt != null && d.pvt.length == 3
-        val fields: Map[String, Double] =
-          if (isPvt) Map(
-            d.fieldBase + "_P" -> d.pvt(0),
-            d.fieldBase + "_V" -> d.pvt(1),
-            d.fieldBase + "_T" -> d.pvt(2))
-          else d.castVal.map(v => Map(d.fieldBase -> v)).getOrElse(Map.empty)
-        val fieldsStr: Map[String, String] =
-          if (!isPvt && d.castVal.isEmpty && d.raw != null) Map(d.fieldBase -> d.raw)
-          else Map.empty
-        val unitTags: Map[String, String] =
-          if (d.units != null && d.units.nonEmpty) Map("units" -> d.units) else Map.empty
-        graft.model.TelemetryPoint(r.actor, tags ++ unitTags ++ ktTags,
-          fields, fieldsStr, r.recv_time, None, Some(bucket))
-      }
-    }
-  }
-
   def process(
       df: DataFrame,
       tags: Map[String, String] = Map.empty,

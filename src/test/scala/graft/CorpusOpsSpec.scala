@@ -505,9 +505,17 @@ class CorpusOpsSpec extends SparkSpec {
     assert(out(2L) == (3L, 1L, 0.0))
   }
 
-  // ------------------------------------------------------ ivfMaintain
+  // ------------------------------------------- ivfMaintainVersioned
 
-  test("ivfMaintain: incremental == rebuild; untouched partitions not rewritten") {
+  private def ivfRows(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getAs[Long]("cand_id") ->
+      r.getAs[Number]("centroid").longValue).toMap
+
+  private def ivfManifest(root: String, v: Long): String =
+    new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$root/manifest-v$v.json")), "UTF-8")
+
+  test("ivfMaintainVersioned: incremental == rebuild; the untouched list stays on v1") {
     import graft.similarity.Similarity
     val centroids = Seq(
       (1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0))
@@ -516,22 +524,18 @@ class CorpusOpsSpec extends SparkSpec {
       (10L, Seq(0.9, 0.1)), (11L, Seq(0.8, 0.2)), // list 1
       (20L, Seq(0.1, 0.9)), (21L, Seq(0.2, 0.8))  // list 2
     ).toDF("cand_id", "cand_vec")
-    val layout = java.nio.file.Files.createTempDirectory("ivf-maintain").toString
-    Similarity.writeIvfLayout(Similarity.assignToCentroids(oldC, centroids), layout)
-    def filesOf(c: Long) = {
-      val d = new java.io.File(s"$layout/centroid=$c")
-      Option(d.list()).map(_.toSet).getOrElse(Set.empty[String])
-    }
-    val before1 = filesOf(1L)
-    assert(before1.nonEmpty)
+    val root = java.nio.file.Files.createTempDirectory("ivf-maintain").toString
+    Similarity.writeIvfLayoutVersioned(
+      Similarity.assignToCentroids(oldC, centroids), root)
     // delta touches ONLY list 2: id 22 arrives, id 21 leaves
     val added = Seq((22L, Seq(0.05, 0.95))).toDF("cand_id", "cand_vec")
     val removed = Seq(Tuple1(21L)).toDF("cand_id")
-    Similarity.ivfMaintain(spark, layout, centroids, added, removed)
-    assert(filesOf(1L) == before1, "untouched inverted list was rewritten")
-    val got = spark.read.parquet(layout)
-      .collect().map(r => r.getAs[Long]("cand_id") ->
-        r.getAs[Number]("centroid").longValue).toMap
+    assert(Similarity.ivfMaintainVersioned(spark, root, centroids, added, removed) == 2L)
+    // list 1 is still served from v1; v2 holds only the touched list
+    assert(ivfManifest(root, 2) == """{"1":1,"2":2}""")
+    assert(new java.io.File(s"$root/v2").list().filter(_.startsWith("centroid=")).toSet ==
+      Set("centroid=2"))
+    val got = ivfRows(Similarity.readIvfLayoutVersioned(spark, root))
     assert(got == Map(10L -> 1L, 11L -> 1L, 20L -> 2L, 22L -> 2L))
     // invariant: identical to a full rebuild of the new corpus
     val rebuild = Similarity.assignToCentroids(
@@ -540,10 +544,9 @@ class CorpusOpsSpec extends SparkSpec {
     assert(got == rebuild)
   }
 
-  test("ivfMaintain: removals that EMPTY an inverted list delete its partition") {
-    // ADVICE r15 medium: dynamic overwrite only rewrites partitions
-    // present in the written data — an all-removal delta on one list
-    // must not resurrect the removed vectors
+  test("ivfMaintainVersioned: a delta that EMPTIES a list drops it from the manifest") {
+    // an all-removal delta on one list must not resurrect the removed
+    // vectors: the list leaves the manifest, nothing is written for it
     import graft.similarity.Similarity
     val centroids = Seq(
       (1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0))
@@ -552,44 +555,16 @@ class CorpusOpsSpec extends SparkSpec {
       (10L, Seq(0.9, 0.1)), // list 1 — untouched
       (20L, Seq(0.1, 0.9)), (21L, Seq(0.2, 0.8)) // list 2 — fully removed
     ).toDF("cand_id", "cand_vec")
-    val layout = java.nio.file.Files.createTempDirectory("ivf-empty").toString
-    Similarity.writeIvfLayout(Similarity.assignToCentroids(oldC, centroids), layout)
+    val root = java.nio.file.Files.createTempDirectory("ivf-empty").toString
+    Similarity.writeIvfLayoutVersioned(
+      Similarity.assignToCentroids(oldC, centroids), root)
     val added = spark.emptyDataset[(Long, Seq[Double])].toDF("cand_id", "cand_vec")
     val removed = Seq(Tuple1(20L), Tuple1(21L)).toDF("cand_id")
-    Similarity.ivfMaintain(spark, layout, centroids, added, removed)
-    assert(!new java.io.File(s"$layout/centroid=2").exists(),
-      "emptied inverted list's partition directory must be deleted")
-    val got = spark.read.parquet(layout)
-      .collect().map(r => r.getAs[Long]("cand_id") ->
-        r.getAs[Number]("centroid").longValue).toMap
-    assert(got == Map(10L -> 1L))
+    Similarity.ivfMaintainVersioned(spark, root, centroids, added, removed)
+    assert(ivfManifest(root, 2) == """{"1":1}""")
+    assert(!new java.io.File(s"$root/v2").exists())
+    assert(ivfRows(Similarity.readIvfLayoutVersioned(spark, root)) == Map(10L -> 1L))
   }
-
-  test("ivfMaintain: a delta draining EVERY list leaves a readable empty layout") {
-    // ADVICE r15: present.isEmpty used to skip the write and then delete
-    // every partition dir — the next read threw instead of returning 0
-    import graft.similarity.Similarity
-    val centroids = Seq((1L, Seq(1.0, 0.0))).toDF("centroid_id", "centroid_vec")
-    val oldC = Seq((10L, Seq(0.9, 0.1)), (11L, Seq(0.8, 0.2)))
-      .toDF("cand_id", "cand_vec")
-    val layout = java.nio.file.Files.createTempDirectory("ivf-drain").toString
-    Similarity.writeIvfLayout(Similarity.assignToCentroids(oldC, centroids), layout)
-    val added = spark.emptyDataset[(Long, Seq[Double])].toDF("cand_id", "cand_vec")
-    Similarity.ivfMaintain(spark, layout, centroids, added,
-      Seq(Tuple1(10L), Tuple1(11L)).toDF("cand_id"))
-    assert(spark.read.parquet(layout).count() == 0L,
-      "drained layout must read as empty, not throw")
-    // and a later maintain repopulates it cleanly (marker removed)
-    Similarity.ivfMaintain(spark, layout, centroids,
-      Seq((12L, Seq(1.0, 0.0))).toDF("cand_id", "cand_vec"),
-      spark.emptyDataset[Tuple1[Long]].toDF("cand_id"))
-    val got = spark.read.parquet(layout)
-      .collect().map(r => r.getAs[Long]("cand_id") ->
-        r.getAs[Number]("centroid").longValue).toMap
-    assert(got == Map(12L -> 1L))
-  }
-
-  // ------------------------------------------- ivfMaintainVersioned
 
   test("ivfMaintainVersioned: old version stays readable through a maintain; swap is the commit point") {
     import graft.similarity.Similarity
@@ -606,10 +581,7 @@ class CorpusOpsSpec extends SparkSpec {
     // a reader that resolved version 1 BEFORE the maintain: its plan
     // points at v1's immutable directories
     val oldReader = Similarity.readIvfLayoutVersioned(spark, root)
-    def rowsOf(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getAs[Long]("cand_id") ->
-        r.getAs[Number]("centroid").longValue).toMap
-    val v1Rows = rowsOf(oldReader)
+    val v1Rows = ivfRows(oldReader)
     assert(v1Rows == Map(10L -> 1L, 11L -> 1L, 20L -> 2L, 21L -> 2L))
     val list1Files = Option(new java.io.File(s"$root/v1/centroid=1").list())
       .map(_.toSet).getOrElse(Set.empty[String])
@@ -619,7 +591,7 @@ class CorpusOpsSpec extends SparkSpec {
       Seq(Tuple1(21L)).toDF("cand_id"))
     assert(v2 == 2L)
     // the old reader still sees version 1, unchanged — no half state
-    assert(rowsOf(oldReader) == v1Rows)
+    assert(ivfRows(oldReader) == v1Rows)
     assert(Option(new java.io.File(s"$root/v1/centroid=1").list())
       .map(_.toSet).getOrElse(Set.empty[String]) == list1Files,
       "untouched v1 partition was rewritten")
@@ -627,7 +599,7 @@ class CorpusOpsSpec extends SparkSpec {
     assert(!new java.io.File(s"$root/v2/centroid=1").exists())
     // a fresh reader resolves version 2 == full rebuild of the new corpus
     val freshDf = Similarity.readIvfLayoutVersioned(spark, root)
-    assert(rowsOf(freshDf) == Map(10L -> 1L, 11L -> 1L, 20L -> 2L, 22L -> 2L))
+    assert(ivfRows(freshDf) == Map(10L -> 1L, 11L -> 1L, 20L -> 2L, 22L -> 2L))
     // the manifest's centroid filters must reach the scan as PARTITION
     // filters (an nprobe read of a versioned layout prunes directories,
     // same as the flat layout) — not post-scan predicates
@@ -647,6 +619,11 @@ class CorpusOpsSpec extends SparkSpec {
     Similarity.ivfMaintainVersioned(spark, root, centroids, added,
       Seq(Tuple1(10L)).toDF("cand_id"))
     assert(Similarity.readIvfLayoutVersioned(spark, root).count() == 0L)
+    // and a later maintain repopulates the drained layout
+    assert(Similarity.ivfMaintainVersioned(spark, root, centroids,
+      Seq((12L, Seq(1.0, 0.0))).toDF("cand_id", "cand_vec"),
+      spark.emptyDataset[Tuple1[Long]].toDF("cand_id")) == 3L)
+    assert(ivfRows(Similarity.readIvfLayoutVersioned(spark, root)) == Map(12L -> 1L))
   }
 
   test("ivfMaintainVersioned: metadata IO works under an explicit file: scheme; a stale second writer of a version fails before the swap") {

@@ -109,19 +109,19 @@ class DedupSpec extends SparkSpec {
     val truth = Dedup.jaccardPairs(docs001, "doc_id", "text",
         n = 3, threshold = 0.0, maxShingleFreq = 100)
       .filter(col("jaccard") >= t).collect().map(key).toSet
-    // strategy FORCED to prefix (r16: the auto gate routes this
+    // the prefix path called directly (r16: the gate routes this
     // small-volume corpus to postings, which would make the pin vacuous)
-    val pref = Dedup.jaccardPairs(docs001, "doc_id", "text",
-        n = 3, threshold = t, maxShingleFreq = 100, strategy = "prefix")
-      .collect().map(key).toSet
+    val (posting, dfreq) = Dedup.cappedPosting(docs001, "doc_id", "text",
+      n = 3, maxShingleFreq = 100)
+    val pref = Dedup.jaccardPrefix(posting, dfreq, t).collect().map(key).toSet
     assert(truth.nonEmpty, "fixture should produce at least one qualifying pair")
     assert(pref == truth,
       s"prefix path lost ${(truth -- pref).size} / invented ${(pref -- truth).size} pairs")
-    // and the auto gate reproduces the same set through whichever path
+    // and the gate reproduces the same set through whichever path
     val auto = Dedup.jaccardPairs(docs001, "doc_id", "text",
         n = 3, threshold = t, maxShingleFreq = 100)
       .collect().map(key).toSet
-    assert(auto == truth, "auto gate changed the pair set")
+    assert(auto == truth, "the gate changed the pair set")
   }
 
   test("containmentPairs prefix-filtered path (t>0) == postings path, on real documents") {
@@ -135,26 +135,26 @@ class DedupSpec extends SparkSpec {
       (r.getLong(0), r.getLong(1),
         math.round(r.getDouble(2) * 1e9), math.round(r.getDouble(3) * 1e9))
     val truth = Dedup.containmentPairs(docs001, "doc_id", "text",
-        n = 3, threshold = 0.0, maxShingleFreq = 100, strategy = "postings")
+        n = 3, threshold = 0.0, maxShingleFreq = 100)
       .filter(greatest(col("cont_a"), col("cont_b")) >= t)
       .collect().map(key).toSet
-    // strategy FORCED to prefix: 500 docs is below the auto gate's
-    // cutover, so without the override this pin would compare the
-    // postings path against itself (vacuous)
-    val pref = Dedup.containmentPairs(docs001, "doc_id", "text",
-        n = 3, threshold = t, maxShingleFreq = 100, strategy = "prefix")
-      .collect().map(key).toSet
+    // the prefix path called directly: 500 docs is below the gate's
+    // cutover, so through the gate this pin would compare the postings
+    // path against itself (vacuous)
+    val (posting, dfreq) = Dedup.cappedPosting(docs001, "doc_id", "text",
+      n = 3, maxShingleFreq = 100)
+    val pref = Dedup.containmentPrefix(posting, dfreq, t).collect().map(key).toSet
     assert(truth.nonEmpty, "fixture should produce at least one qualifying pair")
     assert(pref == truth,
       s"prefix path lost ${(truth -- pref).size} / invented ${(pref -- truth).size} pairs")
-    // the auto gate routes this sub-cutover corpus to the postings path
+    // the gate routes this sub-cutover corpus to the postings path
     // and must produce the identical pair set through the gate
     val auto = Dedup.containmentPairs(docs001, "doc_id", "text",
         n = 3, threshold = t, maxShingleFreq = 100)
       .collect().map(key).toSet
     assert(Dedup.containmentBlockedVolume(docs001, "doc_id", "text",
       n = 3, maxShingleFreq = 100) <= Dedup.PostingsVolumeBudget)
-    assert(auto == truth, "auto gate changed the pair set")
+    assert(auto == truth, "the gate changed the pair set")
   }
 
   test("minhash_sig codegen expression is bit-identical to the aggregate and lambda shapes") {

@@ -59,18 +59,21 @@ class HarnessSpec extends SparkSpec {
   // The live transports run under one supervision rule (sources.Supervised):
   // NonFatal failures are retried, fatal JVM errors end the thread. A
   // `Throwable` catch in any one transport would quietly retry an
-  // OutOfMemoryError forever again.
-  test("no Throwable catch under src/main/scala/graft/sources") {
-    val root = java.nio.file.Paths.get("src/main/scala/graft/sources")
-    assert(java.nio.file.Files.isDirectory(root), s"missing $root")
-    val catchAll = """\bcase\b[^=\n]*:\s*(?:java\.lang\.)?Throwable\b""".r
-    val files = java.nio.file.Files.walk(root)
-    val hits = try files.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
-      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
-        case (line, i) if catchAll.findFirstIn(line).nonEmpty => s"$f:${i + 1}: ${line.trim}"
-      }
-    }.toList finally files.close()
-    assert(hits.isEmpty, s"catch NonFatal instead:\n${hits.mkString("\n")}")
+  // OutOfMemoryError forever again; one in the daemon's control plane
+  // (engine start, status socket) would keep a dying JVM serving.
+  Seq("sources", "control").foreach { pkg =>
+    test(s"no Throwable catch under src/main/scala/graft/$pkg") {
+      val root = java.nio.file.Paths.get(s"src/main/scala/graft/$pkg")
+      assert(java.nio.file.Files.isDirectory(root), s"missing $root")
+      val catchAll = """\bcase\b[^=\n]*:\s*(?:java\.lang\.)?Throwable\b""".r
+      val files = java.nio.file.Files.walk(root)
+      val hits = try files.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
+        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if catchAll.findFirstIn(line).nonEmpty => s"$f:${i + 1}: ${line.trim}"
+        }
+      }.toList finally files.close()
+      assert(hits.isEmpty, s"catch NonFatal instead:\n${hits.mkString("\n")}")
+    }
   }
 
   // A driver may call the entry points with a session it built itself,
@@ -109,7 +112,7 @@ class HarnessSpec extends SparkSpec {
 
   // A knob that only a probe or an A/B run ever set is dead weight in the
   // library. Environment reads belong to the entry points; outside them
-  // the two named reads below are the only ones, so a new one has to be
+  // the one named read below is the only one, so a new one has to be
   // added here on purpose.
   test("sys.env is read only where the allowlist says") {
     val root = java.nio.file.Paths.get("src/main/scala/graft")
@@ -117,9 +120,7 @@ class HarnessSpec extends SparkSpec {
     val entryPoints = Set("Bench.scala", "Verify.scala", "GenScale.scala", "control/Main.scala")
     val allowedReads = Set(
       // EngineConfig.parse: ${VAR} interpolation in the daemon's YAML
-      "control/Engine.scala" -> "env: Map[String, String] = sys.env): Config = {",
-      // the RocksDB row-tracking switch, still to be A/B-measured
-      "streaming/StreamingDedup.scala" -> ".orElse(sys.env.get(\"SPARK_GRAFT_ROCKSDB_TRACKROWS\"))")
+      "control/Engine.scala" -> "env: Map[String, String] = sys.env): Config = {")
     val envRead = """\bsys\.env\b|\bSystem\.getenv\b""".r
     val files = java.nio.file.Files.walk(root)
     val hits = try files.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>

@@ -89,14 +89,15 @@ class KeywordProcessorSpec extends SparkSpec {
     }
   }
 
-  test("processTyped == process: row-set parity over the edge-case fixtures") {
+  test("process: expected rows over the edge-case fixtures") {
     import graft.sources.ActorReplies.{KeywordRow, TypedValue}
     // every semantic branch in one fixture set: named + positional slots,
     // single unnamed value (bare field name), PVT triple, a non-PVT array
     // (unparseable, skipped without consuming a position), malformed
-    // numeric (routed to fields_str), NULL raw, units tags, int/float/
-    // bool casts (incl. bool-of-null = 1.0, the three-valued-logic quirk),
-    // and keyword_tags on a mixed keyword.
+    // numeric (routed to fields_str), NULL raw, units tags, int/bool
+    // casts (incl. bool-of-null = 1.0, the three-valued-logic quirk),
+    // exponent numerics, keyword_tags at index 0 and 1, and an empty
+    // `values` (no point).
     val rows = Seq(
       KeywordRow("boss", "val", t0, Seq(
         TypedValue("id", "", "7.0", null),
@@ -117,30 +118,40 @@ class KeywordProcessorSpec extends SparkSpec {
       KeywordRow("other", "val", t0, Seq(
         TypedValue("id", "", "1e3", null),
         TypedValue("x", "", "-2.5e-2", null))))
-    val tags = Map("site" -> "lab")
     val keywordTags = Map("boss.val" -> KeywordTagConf(0, "eid"),
       "other.val" -> KeywordTagConf(1, "xv"))
     val casts = Map("boss.flags_a" -> "bool", "boss.flags_b" -> "bool",
       "boss.flags_c" -> "bool", "boss.flags_d" -> "int")
     import spark.implicits._
-    val declarative = KeywordProcessor.process(
-      rows.toDS().toDF(), tags, keywordTags, casts)
-    val typed = KeywordProcessor.processTyped(
-      rows.toDS(), tags, keywordTags, casts)
-    def key(r: org.apache.spark.sql.Row) = (
+    val out = KeywordProcessor.process(
+      rows.toDS().toDF(), Map("site" -> "lab"), keywordTags, casts)
+    assert(out.select(col("time"), col("bucket")).distinct().collect().toSeq ==
+      Seq(Row(t0, "actors")))
+    val got = out.collect().map(r => (
       r.getAs[String]("measurement"),
       r.getAs[Map[String, String]]("tags"),
       r.getAs[Map[String, Double]]("fields"),
-      r.getAs[Map[String, String]]("fields_str"),
-      r.getAs[Timestamp]("time"),
-      r.getAs[String]("bucket"))
-    // multiset compare (Map equality is order-independent; a toString
-    // sort could pair equal-content maps differently)
-    val a = declarative.collect().map(key).toSeq
-    val b = typed.toDF().collect().map(key).toSeq
-    assert(a.nonEmpty && a.size == b.size, s"row counts differ: ${a.size} vs ${b.size}")
-    val am = a.groupBy(identity).view.mapValues(_.size).toMap
-    val bm = b.groupBy(identity).view.mapValues(_.size).toMap
-    assert(am == bm, s"multisets differ:\n only-declarative: ${(am.keySet -- bm.keySet).take(3)}\n only-typed: ${(bm.keySet -- am.keySet).take(3)}")
+      r.getAs[Map[String, String]]("fields_str"))).toSeq
+    val lab = Map("site" -> "lab")
+    val none = Map.empty[String, Double]
+    val noStr = Map.empty[String, String]
+    val expected = Seq(
+      ("boss", lab + ("eid" -> "7.0"), Map("val_id" -> 7.0), noStr),
+      ("boss", lab + ("units" -> "V") + ("eid" -> "7.0"), Map("val_x" -> 1.25), noStr),
+      ("boss", lab, none, Map("status" -> "ok; fine")),
+      ("boss", lab + ("units" -> "deg"),
+        Map("motion_0_P" -> 1.0, "motion_0_V" -> 2.0, "motion_0_T" -> 3.0), noStr),
+      ("boss", lab, none, Map("motion_1" -> "tail")),
+      ("boss", lab, Map("flags_a" -> 0.0), noStr),
+      ("boss", lab, Map("flags_b" -> 0.0), noStr),
+      ("boss", lab, Map("flags_c" -> 1.0), noStr),
+      ("boss", lab, Map("flags_d" -> 3.0), noStr),
+      ("boss", lab, none, Map("flags_e" -> "bogus")),
+      ("other", lab + ("xv" -> "-0.025"), Map("val_id" -> 1000.0), noStr),
+      ("other", lab + ("xv" -> "-0.025"), Map("val_x" -> -0.025), noStr))
+    // multiset compare (Map equality is order-independent)
+    def counts[A](xs: Seq[A]) = xs.groupBy(identity).view.mapValues(_.size).toMap
+    assert(counts(got) == counts(expected),
+      s"only-got: ${got.diff(expected)}\n only-expected: ${expected.diff(got)}")
   }
 }

@@ -143,11 +143,11 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("jaccard PPJoin (threshold>0): prefix join and verify run on hashed keys") {
-    // strategy pinned to prefix: this asserts the PREFIX path's plan
-    // shape, and the r16 auto gate routes this small corpus to postings
-    val p = dedup.Dedup.jaccardPairs(Tables.documents(spark, sf()),
-        "doc_id", "text", n = 3, threshold = 0.5, maxShingleFreq = 100,
-        strategy = "prefix")
+    // the prefix path called directly: this asserts the PREFIX path's
+    // plan shape, and the r16 gate routes this small corpus to postings
+    val (posting, dfreq) = dedup.Dedup.cappedPosting(Tables.documents(spark, sf()),
+      "doc_id", "text", n = 3, maxShingleFreq = 100)
+    val p = dedup.Dedup.jaccardPrefix(posting, dfreq, 0.5)
       .queryExecution.executedPlan.toString
     assert(p.contains("xxhash64"), "prefix/verify keys must be 64-bit hashes, not strings")
     assert(p.contains("array_intersect"), "exact verify on candidate kept-sets")

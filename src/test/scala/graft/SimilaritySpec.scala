@@ -279,7 +279,7 @@ class SimilaritySpec extends SparkSpec {
       .select(col("cand_id").as("query_id"), col("cand_vec").as("query_vec"))
     val (centroids, assigned) = Similarity.ivfIndex(emb, nlist = 8)
     val layout = java.nio.file.Files.createTempDirectory("ivf-layout").toString
-    Similarity.writeIvfLayout(assigned, layout)
+    Similarity.writeIvfLayoutVersioned(assigned, layout)
     val full = Similarity.ivfTopK(q, centroids, assigned, k = 5, nprobe = 2)
       .orderBy("query_id", "rank").collect()
     val pruned = Similarity.ivfTopKPruned(spark, layout, centroids, q,
@@ -287,10 +287,14 @@ class SimilaritySpec extends SparkSpec {
     val prunedRows = pruned.orderBy("query_id", "rank").collect()
     assert(full.map(_.toString).toSeq == prunedRows.map(_.toString).toSeq)
     // the probed centroid ids must land in the scan's PARTITION filters
-    // (pruned at the file index), not the data filters
+    // (pruned at the file index), not the data filters — next to the
+    // manifest's own list filter, so the scan carries two centroid IN lists
     val plan = pruned.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [centroid"),
       s"expected centroid partition filter, got:\n$plan")
+    val partFilters = """PartitionFilters: \[[^\]]*""".r.findAllIn(plan).toSeq
+    assert(partFilters.exists(f => """centroid#\d+ IN \(""".r.findAllIn(f).size == 2),
+      s"expected the probed-centroid partition filter, got:\n$plan")
   }
 
   // -------------------------------------------------------------------

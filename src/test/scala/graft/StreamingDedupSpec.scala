@@ -39,6 +39,8 @@ class StreamingDedupSpec extends SparkSpec {
     StreamingDedup.configureStateStore(spark)
     assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass") ==
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    assert(spark.conf.get(
+      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows") == "false")
   }
 
   test("exactDedupTtl: duplicate within TTL dropped, re-admitted after expiry") {

@@ -16,7 +16,7 @@ import statistics
 import sys
 
 STREAMING = {
-    "q52", "q83", "q64", "q73", "q74", "q80", "q81", "q84", "q85",
+    "q52", "q64", "q73", "q74", "q80", "q81", "q84", "q85",
     "q86", "q87", "q88", "q89", "q105", "q110",
 }
 
