@@ -619,7 +619,25 @@ class CorpusOpsSpec extends SparkSpec {
     Similarity.ivfMaintainVersioned(spark, root, centroids, added,
       Seq(Tuple1(10L)).toDF("cand_id"))
     assert(Similarity.readIvfLayoutVersioned(spark, root).count() == 0L)
-    // and a later maintain repopulates the drained layout
+  }
+
+  test("ivfMaintain: a delta draining EVERY list leaves a readable empty layout") {
+    // a drained layout must read as empty rather than throw, and a later
+    // maintain must repopulate it from the empty manifest
+    import graft.similarity.Similarity
+    val centroids = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0)))
+      .toDF("centroid_id", "centroid_vec")
+    val oldC = Seq((10L, Seq(0.9, 0.1)), (11L, Seq(0.8, 0.2)), (20L, Seq(0.1, 0.9)))
+      .toDF("cand_id", "cand_vec")
+    val root = java.nio.file.Files.createTempDirectory("ivf-drain").toString
+    Similarity.writeIvfLayoutVersioned(
+      Similarity.assignToCentroids(oldC, centroids), root)
+    val added = spark.emptyDataset[(Long, Seq[Double])].toDF("cand_id", "cand_vec")
+    Similarity.ivfMaintainVersioned(spark, root, centroids, added,
+      Seq(Tuple1(10L), Tuple1(11L), Tuple1(20L)).toDF("cand_id"))
+    assert(ivfManifest(root, 2) == "{}")
+    assert(Similarity.readIvfLayoutVersioned(spark, root).count() == 0L,
+      "drained layout must read as empty, not throw")
     assert(Similarity.ivfMaintainVersioned(spark, root, centroids,
       Seq((12L, Seq(1.0, 0.0))).toDF("cand_id", "cand_vec"),
       spark.emptyDataset[Tuple1[Long]].toDF("cand_id")) == 3L)
