@@ -24,7 +24,11 @@ import graft.streaming.StreamOps
 object EngineConfig {
 
   final case class SourceConf(name: String, typ: String,
-      options: Map[String, Any], bucket: Option[String], tags: Map[String, String])
+      options: Map[String, Any], bucket: Option[String], tags: Map[String, String]) {
+    def opt(key: String): Option[String] = options.get(key).map(_.toString)
+    def req(key: String): String =
+      opt(key).getOrElse(throw new IllegalArgumentException(s"$name: missing option '$key'"))
+  }
   final case class ObserverConf(name: String, typ: String, options: Map[String, Any])
   final case class Config(
       tags: Map[String, String],
@@ -115,42 +119,12 @@ object EngineConfig {
     }
 }
 
-/** Runtime engine: builds sources from config via a type registry, unions
+/** Runtime engine: builds sources from config by their `type`, unions
   * them through the normalize stage, runs one sink query per observer, and
   * supervises (status/stop/restart — the reference CLI's verbs,
   * cerebro/__main__.py:101-143). */
 final class Engine(spark: SparkSession) {
   import EngineConfig._
-
-  /** `type` string → factory, the Spark form of `get_source_subclass`
-    * (source.py:232-244). Extensible: register custom types before start.
-    *
-    * Built-ins:
-    *   - `replay`: point-schema parquet replay (`path`)
-    *   - `spool`: raw-reply spool directory + a wire parser
-    *     (`path`, `parser` ∈ govee|sens4|ln2_scale|lvm_thermistors,
-    *     plus per-parser options) — the config-driven form of the full
-    *     poll → parse pipeline (etc/cerebro.yaml source entries)
-    *   - `tcp` / `udp`: LIVE device conversation ([[graft.sources.NetPoll]]
-    *     socket poll on a driver thread → spool → the same parsers) —
-    *     the reference's production source shape (`TCPSource(host, port,
-    *     delay)`, source.py:134-229) from YAML
-    */
-  val sourceRegistry: scala.collection.mutable.Map[String, SourceConf => TelemetrySource] =
-    scala.collection.mutable.Map(
-      "replay" -> (c => ReplaySource(c.name,
-        c.options("path").toString, c.bucket, c.tags)),
-      "spool" -> (c => SpoolSource(c)),
-      "tcp" -> (c => LiveSource(c)),
-      "udp" -> (c => LiveSource(c)),
-      // S12/S13 live Modbus TCP (drift.py) — the tcp arm with the drift
-      // conversation; `devices:` map + optional `unit_id` in options
-      "drift" -> (c => LiveSource(c)),
-      // S11 live RabbitMQ (AMQP.py) — topic-exchange reply consumer +
-      // periodic command publishes; `exchange`, `keywords:` (required),
-      // `groupers:`, `commands:` in options
-      "amqp" -> (c => AmqpPushSource(c)),
-      "actor" -> (c => ActorPushSource(c)))
 
   private val queries = scala.collection.mutable.Map[String, StreamingQuery]()
   // Restart generation per memory observer: Spark's memory sink cannot
@@ -162,11 +136,33 @@ final class Engine(spark: SparkSession) {
     scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
   private var conf: Config = _
 
+  /** One source per config entry, by its `type` — the Spark form of
+    * `get_source_subclass` (source.py:232-244):
+    *   - `replay`: point-schema parquet replay (`path`)
+    *   - `spool`: raw-reply spool directory + a wire parser
+    *     (`path`, `parser` ∈ govee|sens4|ln2_scale|lvm_thermistors,
+    *     plus per-parser options) — the config-driven form of the full
+    *     poll → parse pipeline (etc/cerebro.yaml source entries)
+    *   - `tcp` / `udp`: LIVE device conversation ([[graft.sources.NetPoll]]
+    *     socket poll on a driver thread → spool → the same parsers) —
+    *     the reference's production source shape (`TCPSource(host, port,
+    *     delay)`, source.py:134-229) from YAML
+    *   - `drift`: S12/S13 live Modbus TCP (drift.py) — the tcp arm with
+    *     the drift conversation; `devices:` map + optional `unit_id`
+    *   - `amqp`: S11 live RabbitMQ (AMQP.py) — topic-exchange reply
+    *     consumer + periodic command publishes; `exchange`, `keywords:`
+    *     (required), `groupers:`, `commands:`
+    *   - `actor`: live actor-reply push connection */
   def buildSources(config: Config): Seq[TelemetrySource] =
-    config.sources.map { sc =>
-      val factory = sourceRegistry.getOrElse(sc.typ,
-        throw new IllegalArgumentException(s"unknown source type: ${sc.typ}"))
-      factory(sc)
+    config.sources.map { c =>
+      c.typ match {
+        case "replay" => ReplaySource(c.name, c.options("path").toString, c.bucket, c.tags)
+        case "spool" => SpoolSource(c)
+        case "tcp" | "udp" | "drift" => LiveSource(c)
+        case "amqp" => AmqpPushSource(c)
+        case "actor" => ActorPushSource(c)
+        case other => throw new IllegalArgumentException(s"unknown source type: $other")
+      }
     }
 
   // Sources are built ONCE per engine config and shared across observers

@@ -10,11 +10,10 @@ import org.apache.spark.sql.graft.{CosineSim, DotProduct, HammingDist, MinhashSi
   * ([[org.apache.spark.sql.graft.CosineSim]] / `HammingDist`).
   * Sessions built via `graft.GraftSession` load [[GraftExtensions]]
   * through `spark.sql.extensions`, making `cosine_sim`/`hamming_dist`
-  * available both in SQL text and through these Column helpers. */
+  * available in SQL text, and the functions below as Column helpers. */
 object VectorFunctions {
   def cosineFast(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
   def dotFast(a: Column, b: Column): Column = call_function("dot_product", a, b)
-  def hammingDist(a: Column, b: Column): Column = call_function("hamming_dist", a, b)
   def quantizeMse(v: Column, levels: Column): Column = call_function("quantize_mse", v, levels)
   def nfcNormalize(s: Column): Column = call_function("nfc_normalize", s)
   def sortedContains(arr: Column, key: Column): Column = call_function("sorted_contains", arr, key)

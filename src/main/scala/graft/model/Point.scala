@@ -38,13 +38,3 @@ object Point {
     StructField(Bucket, StringType, nullable = true)
   ))
 }
-
-/** Typed view of one point for Dataset[TelemetryPoint] paths and tests. */
-case class TelemetryPoint(
-    measurement: String,
-    tags: Map[String, String],
-    fields: Map[String, Double],
-    fields_str: Map[String, String],
-    time: java.sql.Timestamp,
-    time_ns: Option[Long],
-    bucket: Option[String])

@@ -316,7 +316,6 @@ object Sketches {
     */
   def robustOutliers(df: DataFrame, groupCols: Seq[String], value: Column,
       kNum: Long = 3, kDen: Long = 1): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val gs = groupCols.map(col)
     // spread AFTER the decimal-cast projection: four downstream passes
     // consume `rows`, and with the cast upstream of the (reused)
@@ -327,81 +326,15 @@ object Sketches {
     val rows = graft.Tables.spread(
       df.select(gs :+ (value.cast(DecimalType(12, 2)) * 100)
         .cast("long").as("cents"): _*))
-    // Exact rank-find, VOLUME-ROUTED between two shapes (the repo's
-    // priced-gate discipline, at plan time and for free via Catalyst's
-    // size estimate):
-    //  - small inputs: one (group, value) CDF window — fewest
-    //    stages/jobs, fastest at bench scale;
-    //  - large inputs: two bucketed phases — phase 1 counts fixed-width
-    //    value BUCKETS (bounded key space, cheap partial aggs) and CDFs
-    //    the tiny per-group bucket table to find the target bucket plus
-    //    the cumulative count below it; phase 2 rank-finds only INSIDE
-    //    the target bucket. The single-CDF shape aggregates every
-    //    distinct value per group and then sorts ALL of a group's
-    //    distinct values inside ONE window task — with few groups that
-    //    is a serial whole-table sort, the straggler shape guide §2.5
-    //    warns about, so it must not be the shape that survives to
-    //    100 TB.
-    // Both shapes are rank-exact and return identical rows: the median
-    // is the least v with 2·cdf(v) ≥ n; buckets are a monotone
-    // coarsening of v, so the least qualifying bucket contains that v,
-    // and base + in-bucket cum reproduces cdf(v) exactly (CorpusOpsSpec
-    // pins both paths).
-    val BucketWidth = 65536L
-    val bucketed = {
-      val bytes = rows.queryExecution.optimizedPlan.stats.sizeInBytes
-      val budget = BigInt(df.sparkSession.conf
-        .getOption("spark.graft.median.directBytes").map(_.toLong)
-        .getOrElse(256L << 20))
-      bytes > budget
-    }
-    def medianDirect(in: DataFrame, vCol: String): DataFrame = {
-      val vals = in.groupBy(groupCols.map(in(_)) :+ in(vCol).as("v"): _*)
-        .agg(count(lit(1)).as("cnt"))
-      val byG = Window.partitionBy(groupCols.map(col): _*).orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val cdf = vals
-        .withColumn("cum", sum(col("cnt")).over(byG))
-        .withColumn("n", sum(col("cnt"))
-          .over(Window.partitionBy(groupCols.map(col): _*)))
-      // value at rank ceil(n/2): the least v whose cum reaches it
-      cdf.filter(col("cum") * 2 >= col("n"))
-        .groupBy(groupCols.map(col): _*)
-        .agg(min(col("v")).as("med"), max(col("n")).as("n"))
-    }
-    def medianBucketed(in: DataFrame, vCol: String): DataFrame = {
-      val v = in(vCol)
-      val withB = in.withColumn("b", (v / BucketWidth).cast("long") -
-        when(v < 0 && v % BucketWidth =!= 0, 1L).otherwise(0L)) // floor div
-      val bcnt = withB.groupBy(groupCols.map(col) :+ col("b"): _*)
-        .agg(count(lit(1)).as("cnt"))
-      val byG = Window.partitionBy(groupCols.map(col): _*).orderBy("b")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val cdf = bcnt
-        .withColumn("cum", sum(col("cnt")).over(byG))
-        .withColumn("n", sum(col("cnt"))
-          .over(Window.partitionBy(groupCols.map(col): _*)))
-      // least bucket whose cumulative count reaches rank ceil(n/2);
-      // base = cumulative count strictly below it
-      val target = cdf.filter(col("cum") * 2 >= col("n"))
-        .groupBy(groupCols.map(col): _*)
-        .agg(min(col("b")).as("tb"), max(col("n")).as("n"))
-        .join(cdf.select(groupCols.map(col) :+ col("b").as("tb") :+
-          (col("cum") - col("cnt")).as("base"): _*), groupCols :+ "tb")
-        .select(groupCols.map(col) :+ col("tb") :+ col("n") :+ col("base"): _*)
-      val inTarget = withB.join(broadcast(target), groupCols)
-        .filter(col("b") === col("tb"))
-      val vals = inTarget.groupBy(groupCols.map(col) :+ col(vCol).as("v"): _*)
-        .agg(count(lit(1)).as("cnt"), max(col("n")).as("n"), max(col("base")).as("base"))
-      val cdf2 = vals.withColumn("cum",
-        sum(col("cnt")).over(Window.partitionBy(groupCols.map(col): _*).orderBy("v")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      cdf2.filter((col("base") + col("cum")) * 2 >= col("n"))
-        .groupBy(groupCols.map(col): _*)
-        .agg(min(col("v")).as("med"), max(col("n")).as("n"))
-    }
+    // Exact rank-find, VOLUME-ROUTED between two shapes at plan time,
+    // for free via Catalyst's size estimate (the repo's priced-gate
+    // discipline): [[medianDirect]] at or below [[MedianDirectBytes]],
+    // [[medianBucketed]] above it.
+    val bucketed =
+      rows.queryExecution.optimizedPlan.stats.sizeInBytes > MedianDirectBytes
     def medianOf(in: DataFrame, vCol: String): DataFrame =
-      if (bucketed) medianBucketed(in, vCol) else medianDirect(in, vCol)
+      if (bucketed) medianBucketed(in, groupCols, vCol)
+      else medianDirect(in, groupCols, vCol)
     val med = medianOf(rows, "cents")
     val dev = rows.join(broadcast(med), groupCols)
       .select(gs :+ abs(col("cents") - col("med")).as("adev"): _*)
@@ -413,5 +346,78 @@ object Sketches {
         max(col("mad")).as("mad_cents"),
         sum(when(abs(col("cents") - col("med")) * kDen > col("mad") * kNum, 1L)
           .otherwise(0L)).as("n_outliers"))
+  }
+
+  /** Input size (Catalyst's estimate) up to which [[robustOutliers]]
+    * rank-finds with [[medianDirect]]; larger inputs take
+    * [[medianBucketed]]. */
+  private val MedianDirectBytes = BigInt(256L << 20)
+
+  /** Per-group median of `vCol` by the "value at rank ceil(n/2)" rule,
+    * from one (group, value) CDF window: fewest stages and jobs, the
+    * fastest shape at bench scale. It sorts ALL of a group's distinct
+    * values inside ONE window task — with few groups that is a serial
+    * whole-table sort, the straggler shape guide §2.5 warns about, so it
+    * must not be the shape that survives to 100 TB ([[medianBucketed]]).
+    * Output: `(groupCols..., med, n)`. */
+  private[graft] def medianDirect(in: DataFrame, groupCols: Seq[String],
+      vCol: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val vals = in.groupBy(groupCols.map(in(_)) :+ in(vCol).as("v"): _*)
+      .agg(count(lit(1)).as("cnt"))
+    val byG = Window.partitionBy(groupCols.map(col): _*).orderBy("v")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val cdf = vals
+      .withColumn("cum", sum(col("cnt")).over(byG))
+      .withColumn("n", sum(col("cnt"))
+        .over(Window.partitionBy(groupCols.map(col): _*)))
+    // value at rank ceil(n/2): the least v whose cum reaches it
+    cdf.filter(col("cum") * 2 >= col("n"))
+      .groupBy(groupCols.map(col): _*)
+      .agg(min(col("v")).as("med"), max(col("n")).as("n"))
+  }
+
+  /** [[medianDirect]]'s result in two bucketed phases: phase 1 counts
+    * fixed-width value BUCKETS (bounded key space, cheap partial aggs)
+    * and CDFs the tiny per-group bucket table to find the target bucket
+    * plus the cumulative count below it; phase 2 rank-finds only INSIDE
+    * the target bucket. Rank-exact and row-identical to the direct shape:
+    * the median is the least v with 2·cdf(v) ≥ n; buckets are a monotone
+    * coarsening of v, so the least qualifying bucket contains that v, and
+    * base + in-bucket cum reproduces cdf(v) exactly (CorpusOpsSpec
+    * compares the two). */
+  private[graft] def medianBucketed(in: DataFrame, groupCols: Seq[String],
+      vCol: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val BucketWidth = 65536L
+    val v = in(vCol)
+    val withB = in.withColumn("b", (v / BucketWidth).cast("long") -
+      when(v < 0 && v % BucketWidth =!= 0, 1L).otherwise(0L)) // floor div
+    val bcnt = withB.groupBy(groupCols.map(col) :+ col("b"): _*)
+      .agg(count(lit(1)).as("cnt"))
+    val byG = Window.partitionBy(groupCols.map(col): _*).orderBy("b")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val cdf = bcnt
+      .withColumn("cum", sum(col("cnt")).over(byG))
+      .withColumn("n", sum(col("cnt"))
+        .over(Window.partitionBy(groupCols.map(col): _*)))
+    // least bucket whose cumulative count reaches rank ceil(n/2);
+    // base = cumulative count strictly below it
+    val target = cdf.filter(col("cum") * 2 >= col("n"))
+      .groupBy(groupCols.map(col): _*)
+      .agg(min(col("b")).as("tb"), max(col("n")).as("n"))
+      .join(cdf.select(groupCols.map(col) :+ col("b").as("tb") :+
+        (col("cum") - col("cnt")).as("base"): _*), groupCols :+ "tb")
+      .select(groupCols.map(col) :+ col("tb") :+ col("n") :+ col("base"): _*)
+    val inTarget = withB.join(broadcast(target), groupCols)
+      .filter(col("b") === col("tb"))
+    val vals = inTarget.groupBy(groupCols.map(col) :+ col(vCol).as("v"): _*)
+      .agg(count(lit(1)).as("cnt"), max(col("n")).as("n"), max(col("base")).as("base"))
+    val cdf2 = vals.withColumn("cum",
+      sum(col("cnt")).over(Window.partitionBy(groupCols.map(col): _*).orderBy("v")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    cdf2.filter((col("base") + col("cum")) * 2 >= col("n"))
+      .groupBy(groupCols.map(col): _*)
+      .agg(min(col("v")).as("med"), max(col("n")).as("n"))
   }
 }

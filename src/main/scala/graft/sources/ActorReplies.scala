@@ -232,13 +232,4 @@ object ActorReplies {
       }
     }
   }
-
-  /** Convenience: the parsed rows as a DataFrame in KeywordProcessor's
-    * exact input schema. `KeywordProcessor.process` is window-free
-    * (array-domain derivation), so the whole chain — this, then
-    * `process` — runs as one continuous streaming pipeline; no
-    * `foreachBatch` needed (ActorRepliesSpec asserts it end-to-end). */
-  def parseToDF(lines: Dataset[ReplyLine], dict: KeysDictionary,
-      storeBroadcasts: Boolean = false): DataFrame =
-    parse(lines, dict, storeBroadcasts).toDF()
 }

@@ -34,9 +34,7 @@ final case class AmqpPushSource(conf: SourceConf) extends SpoolBacked {
   def bucket: Option[String] = conf.bucket
   def tags: Map[String, String] = conf.tags
 
-  private def opt(key: String): Option[String] = conf.options.get(key).map(_.toString)
-  private def req(key: String): String =
-    opt(key).getOrElse(throw new IllegalArgumentException(s"$name: missing option '$key'"))
+  import conf.{opt, req}
 
   private[sources] lazy val spoolDir: String = opt("path").getOrElse(
     new java.io.File(sys.props("java.io.tmpdir"), s"graft-amqp-$name").toString)

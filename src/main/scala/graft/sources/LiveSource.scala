@@ -31,9 +31,7 @@ final case class LiveSource(conf: SourceConf) extends SpoolBacked {
   def bucket: Option[String] = conf.bucket
   def tags: Map[String, String] = conf.tags
 
-  private def opt(key: String): Option[String] = conf.options.get(key).map(_.toString)
-  private def req(key: String): String =
-    opt(key).getOrElse(throw new IllegalArgumentException(s"$name: missing option '$key'"))
+  import conf.{opt, req}
 
   /** `type: drift` implies `parser: drift` — one YAML key, not two. */
   private def parser: String = opt("parser")

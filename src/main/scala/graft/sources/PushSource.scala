@@ -180,9 +180,7 @@ final case class ActorPushSource(conf: graft.control.EngineConfig.SourceConf)
   def bucket: Option[String] = conf.bucket
   def tags: Map[String, String] = conf.tags
 
-  private def opt(key: String): Option[String] = conf.options.get(key).map(_.toString)
-  private def req(key: String): String =
-    opt(key).getOrElse(throw new IllegalArgumentException(s"$name: missing option '$key'"))
+  import conf.{opt, req}
 
   @volatile private var pusher: PushSource = _
 

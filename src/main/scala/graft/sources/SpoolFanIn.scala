@@ -150,22 +150,22 @@ object SpoolFanIn {
   private def parse(raw: DataFrame, group: Seq[SpoolSource]): DataFrame = {
     def lookup[T: TypeTag](f: SpoolSource => T): Column =
       element_at(typedLit(group.map(s => s.name -> f(s)).toMap), col(Source))
-    def str(key: String, default: String): Column = lookup(_.opt(key).getOrElse(default))
+    def str(key: String, default: String): Column = lookup(_.conf.opt(key).getOrElse(default))
     def list(s: SpoolSource, key: String): Seq[String] =
       s.conf.options.get(key).map(_.asInstanceOf[Seq[Any]].map(_.toString)).getOrElse(Seq.empty)
     val bucket = lookup(_.bucket.getOrElse("sensors"))
     val mine = raw.filter(col(Source).isin(group.map(_.name): _*))
     val head = group.head
     head.parser match {
-      case "govee" => Parsers.govee(mine, lookup(_.req("address")), str("device", ""),
-        lookup(_.opt("delay").map(_.toLong).getOrElse(10L)), bucket)
+      case "govee" => Parsers.govee(mine, lookup(_.conf.req("address")), str("device", ""),
+        lookup(_.conf.opt("delay").map(_.toLong).getOrElse(10L)), bucket)
       case "sens4" => Parsers.sens4(mine, str("ccd", "NA"), bucket)
       case "ln2_scale" => Parsers.ln2Scale(mine, bucket)
       case "lvm_thermistors" => Parsers.thermistors(mine,
         lookup(_.conf.options.get("mapping").map(_.asInstanceOf[Map[String, Any]]
           .map { case (k, v) => k -> v.toString }).getOrElse(Map.empty[String, String])),
-        lookup(_.opt("channels").map(_.toInt).getOrElse(16)), bucket)
-      case "check_file_exists" => Parsers.fileExists(mine, lookup(_.req("file")), bucket)
+        lookup(_.conf.opt("channels").map(_.toInt).getOrElse(16)), bucket)
+      case "check_file_exists" => Parsers.fileExists(mine, lookup(_.conf.req("file")), bucket)
       case "drift" => Parsers.driftWire(mine, str("measurement", "devices"), bucket)
       case "amqp" => Parsers.amqpReplies(mine, list(head, "keywords"), list(head, "groupers"),
         str("measurement_prefix", "reply."), bucket)
@@ -182,14 +182,14 @@ object SpoolFanIn {
     * shape: ActorClientSource(actor, casts, keyword_tags,
     * store_broadcasts) + the keys dictionary (tron.py:289-321). */
   private def actorReplies(raw: DataFrame, s: SpoolSource): DataFrame = {
-    val dict = ActorReplies.KeysDictionary(s.req("actor"),
+    val dict = ActorReplies.KeysDictionary(s.conf.req("actor"),
       SpoolSource.dictionaryConf(s.conf.options))
     val replies = raw
       .select(col("raw").as("line"), col("recv_time"))
       .as[ActorReplies.ReplyLine](Encoders.product[ActorReplies.ReplyLine])
     KeywordProcessor.process(
       ActorReplies.parse(replies, dict,
-        storeBroadcasts = s.opt("store_broadcasts").exists(_.toBoolean)).toDF(),
+        storeBroadcasts = s.conf.opt("store_broadcasts").exists(_.toBoolean)).toDF(),
       keywordTags = SpoolSource.keywordTagsConf(s.conf.options),
       casts = SpoolSource.castsConf(s.conf.options),
       bucket = s.bucket.getOrElse("sensors"))

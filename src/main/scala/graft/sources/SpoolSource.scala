@@ -27,11 +27,8 @@ final case class SpoolSource(conf: SourceConf,
   def tags: Map[String, String] = conf.tags
   def spool(): SpoolSource = this
 
-  private[sources] def opt(key: String): Option[String] = conf.options.get(key).map(_.toString)
-  private[sources] def req(key: String): String =
-    opt(key).getOrElse(throw new IllegalArgumentException(s"$name: missing option '$key'"))
-  private[sources] def path: String = req("path")
-  private[sources] def parser: String = req("parser")
+  private[sources] def path: String = conf.req("path")
+  private[sources] def parser: String = conf.req("parser")
 }
 
 object SpoolSource {

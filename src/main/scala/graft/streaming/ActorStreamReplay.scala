@@ -47,9 +47,9 @@ import graft.transforms.KeywordProcessor.KeywordTagConf
   * `value` directly without any string rendering of its own.
   *
   * The generator windows/collects nothing on the driver; chunk files are
-  * written by a batch job and the streaming read uses
-  * `maxFilesPerTrigger=1` so the two spool files arrive as two separate
-  * micro-batches (in either order — reassembly state handles both).
+  * written by a batch job as two staged manifest batches, which arrive
+  * as two separate micro-batches (reassembly state would handle either
+  * order).
   */
 object ActorStreamReplay {
 
@@ -141,7 +141,6 @@ object ActorStreamReplay {
     val spool = ReplayScaffold.spoolFor(spark, dir, "q52",
       "events.parquet", s"conns=$Conns;manifest", writeSpool,
       expectedFiles = 2)
-    val runDir = ReplayScaffold.freshRunDir(spool)
 
     val t0 = Timestamp.valueOf("2024-01-01 00:00:00")
     val chunks = ReplayScaffold.manifestStream(spark, spool, ChunkSchema)
@@ -149,12 +148,12 @@ object ActorStreamReplay {
     val replies = StatefulOps.reassembleLines(chunks)
       .map(lo => ReplyLine(lo.line, t0))
     // Round-robin repartition between the grammar and the keyword
-    // processor: everything after the state op inherits its
-    // 32-connection key partitioning, and 32 keys hashed into 32
-    // partitions leave ~1/3 of them EMPTY (collisions stack 2-3
-    // connections on one core while others idle) — the 16× audit
+    // processor: everything after the state op inherits its key
+    // partitioning — the replay's pinned state partitions
+    // (ReplayScaffold.runToParquet), fewer than the cores of a bench
+    // host, and unevenly filled by 32 hashed connections. The 16× audit
     // measured the interpreted KeywordProcessor stage as the chain's
-    // floor (3.9 s of 8.2 s) running at that degraded width. One
+    // floor (3.9 s of 8.2 s) when it ran at that degraded width. One
     // narrow exchange of (line, ts) rows buys full-width execution of
     // the per-row HOF stage; output is row-local, so the hash is
     // untouched.
@@ -167,15 +166,7 @@ object ActorStreamReplay {
     // the driver and its table executes as a SINGLE-partition local scan,
     // which made the readback+sort ~46 s at sf0.1; the parquet observer is
     // also the production path (sinks/TelemetrySink).
-    val outDir = new File(runDir, "out")
-    val q = points.writeStream.format("parquet")
-      .option("path", outDir.toString)
-      .outputMode("append")
-      .option("checkpointLocation", new File(runDir, "ckpt").toString)
-      .start()
-    ReplayScaffold.drain(q)
-
-    val t = spark.read.parquet(outDir.toString)
+    val t = ReplayScaffold.runToParquet(points, spool)
     val tagStr = concat_ws(",", array_sort(transform(map_entries(col("tags")),
       e => concat(e.getField("key"), lit("="), e.getField("value")))))
     val num = t.select(tagStr.as("tags"), explode(col("fields")))

@@ -144,14 +144,12 @@ object BootstrapCounters {
 
   /** Run the replay; returns `(doc_id, lang, source, run_docs, run_chars)`. */
   def run(spark: SparkSession, dir: String): DataFrame = {
-    StreamingDedup.configureStateStore(spark)
     val spool = ReplayScaffold.spoolFor(spark, dir, "q87seed", "documents.parquet",
       "h60mod4;seed+halves;manifest", writeSeededSpool, expectedFiles = 3)
-    val runDir = ReplayScaffold.freshRunDir(spool)
 
     import spark.implicits._
     val in = ReplayScaffold.manifestStream(spark, spool, SpoolSchema).as[SeededDoc]
     val out = runningCounters(in)
-    ReplayScaffold.runToParquet(out.toDF(), runDir).orderBy("doc_id")
+    ReplayScaffold.runToParquet(out.toDF(), spool).orderBy("doc_id")
   }
 }

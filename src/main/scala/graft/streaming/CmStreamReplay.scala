@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.io.File
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{MapState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
-import org.apache.spark.sql.types._
 
 /** q110 — streaming APPROXIMATE frequency: a count-min sketch (Cormode
   * & Muthukrishnan 2005) maintained per event_type in `MapState`, with
@@ -96,38 +94,22 @@ object CmStreamReplay {
         TimeMode.None(), OutputMode.Append())
   }
 
-  private val SpoolSchema = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", TimestampType),
-    StructField("user_id", LongType), StructField("event_type", StringType)))
-
-  val Cuts: Seq[String] = ReplayScaffold.DefaultCuts
-
-  private def writeSpool(spark: SparkSession, dir: String, spool: File): Unit = {
-    val ev = graft.Tables.events(spark, dir)
-      .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
-        col("user_id"), col("event_type"))
-    ReplayScaffold.writeTimeSplitManifest(spool, ev, "ts", Cuts)
-  }
+  private val Cols = Seq("user_id", "event_type")
 
   /** Run the replay; returns `(event_type, batch, user_id, est)`. */
   def run(spark: SparkSession, dir: String): DataFrame = {
-    StreamingDedup.configureStateStore(spark)
-    val spool = ReplayScaffold.spoolFor(spark, dir, "q110", "events.parquet",
-      s"cuts=${Cuts.mkString("|")};manifest", writeSpool,
-      expectedFiles = Cuts.length + 1)
-    val runDir = ReplayScaffold.freshRunDir(spool)
+    val spool = ReplayScaffold.eventsSpool(spark, dir, "q110",
+      s"cuts=${ReplayScaffold.DefaultCuts.mkString("|")};manifest", Cols,
+      ReplayScaffold.timeSplit)
 
     import spark.implicits._
-    val cut = Cuts.zipWithIndex.reverse.foldLeft(lit(Cuts.length)) {
-      case (acc, (c, i)) => when(col("ts") < expr(s"TIMESTAMP '$c'"), lit(i)).otherwise(acc)
-    }
     // manifest-ordered arrival: the per-batch sketch snapshots are a
     // running state, order-sensitive across the time cuts
-    val in = ReplayScaffold.manifestStream(spark, spool, SpoolSchema)
-      .select(col("event_type"), col("user_id"), cut.cast("int").as("cut"))
+    val in = ReplayScaffold.manifestStream(spark, spool, ReplayScaffold.eventsSchema(Cols))
+      .select(col("event_type"), col("user_id"), ReplayScaffold.cutLabel.as("cut"))
       .as[CmEvent]
     val out = runningFrequency(in)
-    ReplayScaffold.runToParquet(out.toDF(), runDir)
+    ReplayScaffold.runToParquet(out.toDF(), spool)
       .orderBy("event_type", "batch", "user_id")
   }
 }

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.io.File
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{MapState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
-import org.apache.spark.sql.types._
 
 /** q89 — `MapState` on the Spark 4 arbitrary-state API, completing the
   * primitive matrix (q86 ListState, q87 corpus-seeded MapState, q88
@@ -84,36 +82,23 @@ object DistinctMapReplay {
         TimeMode.None(), OutputMode.Append())
   }
 
-  private val SpoolSchema = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", TimestampType),
-    StructField("user_id", LongType), StructField("event_type", StringType)))
-
-  val Cuts: Seq[String] = ReplayScaffold.DefaultCuts
-
-  private def writeSpool(spark: SparkSession, dir: String, spool: File): Unit = {
-    val ev = graft.Tables.events(spark, dir)
-      .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
-        col("user_id"), col("event_type"))
-    ReplayScaffold.writeTimeSplitManifest(spool, ev, "ts", Cuts)
-  }
+  private val Cols = Seq("user_id", "event_type")
 
   /** Run the replay; returns `(event_type, ts, user_id, distinct_users)`. */
   def run(spark: SparkSession, dir: String): DataFrame = {
-    StreamingDedup.configureStateStore(spark)
-    val spool = ReplayScaffold.spoolFor(spark, dir, "q89", "events.parquet",
-      s"cuts=${Cuts.mkString("|")};manifest", writeSpool,
-      expectedFiles = Cuts.length + 1)
-    val runDir = ReplayScaffold.freshRunDir(spool)
+    val spool = ReplayScaffold.eventsSpool(spark, dir, "q89",
+      s"cuts=${ReplayScaffold.DefaultCuts.mkString("|")};manifest", Cols,
+      ReplayScaffold.timeSplit)
 
     import spark.implicits._
     // manifest-ordered arrival (batch i = batch-i.jsonl by NAME): the
     // running distinct is order-sensitive across the time cuts
-    val in = ReplayScaffold.manifestStream(spark, spool, SpoolSchema)
+    val in = ReplayScaffold.manifestStream(spark, spool, ReplayScaffold.eventsSchema(Cols))
       .select(col("event_type"), col("user_id"), unix_micros(col("ts")).as("ts_us"))
       .as[TypedEvent]
     val out = runningDistinct(in)
       .select(col("event_type"), timestamp_micros(col("ts_us")).as("ts"),
         col("user_id"), col("distinct_users"))
-    ReplayScaffold.runToParquet(out.toDF(), runDir).orderBy("event_type", "ts")
+    ReplayScaffold.runToParquet(out.toDF(), spool).orderBy("event_type", "ts")
   }
 }

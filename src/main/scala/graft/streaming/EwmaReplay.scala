@@ -1,9 +1,7 @@
 package graft.streaming
 
-import java.io.File
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** q81 harness — the numeric-state `flatMapGroupsWithState` op
   * ([[StatefulOps.ewma]]) driven ACROSS a micro-batch boundary and
@@ -26,42 +24,23 @@ import org.apache.spark.sql.types._
   * sorts only its own per-series rows. */
 object EwmaReplay {
 
-  private val SpoolSchema = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", TimestampType),
-    StructField("user_id", LongType), StructField("value", DoubleType)))
-
-  private def writeSpool(spark: SparkSession, dir: String, spool: File): Unit = {
-    val ev = graft.Tables.events(spark, dir)
-      .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
-        col("user_id"), col("value"))
-    ReplayScaffold.writeManifestBatch(spool, ev.filter(col("event_id") % 2 === 0), 0)
-    ReplayScaffold.writeManifestBatch(spool, ev.filter(col("event_id") % 2 === 1), 1)
-  }
+  private val Cols = Seq("user_id", "value")
 
   def run(spark: SparkSession, dir: String, alpha: Double = 0.2): DataFrame = {
-    StreamingDedup.configureStateStore(spark)
-    val spool = ReplayScaffold.spoolFor(spark, dir, "q81", "events.parquet",
-      s"parity=2;alpha=$alpha;manifest", writeSpool, expectedFiles = 2)
-    val runDir = ReplayScaffold.freshRunDir(spool)
+    val spool = ReplayScaffold.eventsSpool(spark, dir, "q81",
+      s"parity=2;alpha=$alpha;manifest", Cols,
+      Seq(col("event_id") % 2 === 0, col("event_id") % 2 === 1))
 
     import spark.implicits._
     // manifest-ordered arrival: the EWMA's running (n, smoothed) state
     // carries across the parity batches, so order is code-owned
-    val in = ReplayScaffold.manifestStream(spark, spool, SpoolSchema)
+    val in = ReplayScaffold.manifestStream(spark, spool, ReplayScaffold.eventsSchema(Cols))
       .select(col("user_id").cast("string").as("series"), col("ts"),
         col("value"))
       .as[StatefulOps.SeriesPoint]
     val out = StatefulOps.ewma(in, alpha)
       .select(col("series"), col("ts"), col("value"),
         round(col("ewma"), 6).as("ewma"), col("n"), col("gap_ms"))
-    val outDir = new File(runDir, "out")
-    val q = out.writeStream.format("parquet")
-      .option("path", outDir.toString)
-      .outputMode("append")
-      .option("checkpointLocation", new File(runDir, "ckpt").toString)
-      .start()
-    ReplayScaffold.drain(q)
-
-    spark.read.parquet(outDir.toString).orderBy("series", "n")
+    ReplayScaffold.runToParquet(out, spool).orderBy("series", "n")
   }
 }

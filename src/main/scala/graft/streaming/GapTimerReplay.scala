@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.io.File
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-import org.apache.spark.sql.types._
 
 /** q88 — EVENT-TIME TIMERS on the Spark 4 arbitrary-state API
   * (`TimeMode.EventTime` + `registerTimer`/`handleExpiredTimer`), the
@@ -73,40 +71,22 @@ object GapTimerReplay {
         TimeMode.EventTime(), OutputMode.Append())
   }
 
-  private val SpoolSchema = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", TimestampType),
-    StructField("user_id", LongType), StructField("value", DoubleType)))
-
-  val Cuts: Seq[String] = ReplayScaffold.DefaultCuts
-  private val FlushTs = "2030-01-01 00:00:00"
-
-  private def writeSpool(spark: SparkSession, dir: String, spool: File): Unit = {
-    val ev = graft.Tables.events(spark, dir)
-      .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
-        col("user_id"), col("value"))
-    ReplayScaffold.writeTimeSplitManifest(spool, ev, "ts", Cuts)
-    val flush = spark.range(1).select(lit(-1L).as("event_id"),
-      expr(s"TIMESTAMP '$FlushTs'").as("ts"),
-      lit(-1L).as("user_id"), lit(0.0).as("value"))
-    ReplayScaffold.writeManifestBatch(spool, flush, Cuts.length + 1)
-  }
+  private val Cols = Seq("user_id", "value")
 
   /** Run the replay; returns `(user_id, kind, gap_start, gap_end)`. */
   def run(spark: SparkSession, dir: String, gapHours: Int = 12): DataFrame = {
-    StreamingDedup.configureStateStore(spark)
     // the spool does NOT depend on gapHours (the gap lives only in the
     // processor), so the stamp must not include it — a gap sweep reuses
     // one spool instead of rebuilding per value
-    val spool = ReplayScaffold.spoolFor(spark, dir, "q88", "events.parquet",
-      s"cuts=${Cuts.mkString("|")};flush=$FlushTs;manifest", writeSpool,
-      expectedFiles = Cuts.length + 2)
-    val runDir = ReplayScaffold.freshRunDir(spool)
+    val spool = ReplayScaffold.eventsSpool(spark, dir, "q88",
+      s"cuts=${ReplayScaffold.DefaultCuts.mkString("|")};flush=${ReplayScaffold.FlushTs};manifest",
+      Cols, ReplayScaffold.timeSplit, flush = true)
 
     import spark.implicits._
     val gapUs = gapHours * 3600L * 1000 * 1000
     // manifest-ordered arrival: watermark progression (and therefore
     // timer firing) depends on which batch arrives when
-    val in = ReplayScaffold.manifestStream(spark, spool, SpoolSchema)
+    val in = ReplayScaffold.manifestStream(spark, spool, ReplayScaffold.eventsSchema(Cols))
       .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("ts_us"))
       .withWatermark("ts", "30 days")
       .as[GapEvent]
@@ -115,7 +95,7 @@ object GapTimerReplay {
       .select(col("user_id"), col("kind"),
         timestamp_micros(col("gap_start_us")).as("gap_start"),
         timestamp_micros(col("gap_end_us")).as("gap_end"))
-    ReplayScaffold.runToParquet(out.toDF(), runDir)
+    ReplayScaffold.runToParquet(out.toDF(), spool)
       .orderBy("user_id", "gap_start", "kind")
   }
 }

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.io.File
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{MapState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
-import org.apache.spark.sql.types._
 
 /** q105 — streaming APPROXIMATE cardinality: per-event-type HyperLogLog
   * registers maintained in `MapState`, one audience estimate emitted per
@@ -128,39 +126,22 @@ object HllStreamReplay {
         TimeMode.None(), OutputMode.Append())
   }
 
-  private val SpoolSchema = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", TimestampType),
-    StructField("user_id", LongType), StructField("event_type", StringType)))
-
-  val Cuts: Seq[String] = ReplayScaffold.DefaultCuts
-
-  private def writeSpool(spark: SparkSession, dir: String, spool: File): Unit = {
-    val ev = graft.Tables.events(spark, dir)
-      .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
-        col("user_id"), col("event_type"))
-    ReplayScaffold.writeTimeSplitManifest(spool, ev, "ts", Cuts)
-  }
+  private val Cols = Seq("user_id", "event_type")
 
   /** Run the replay; returns
     * `(event_type, batch, batch_rows, n_reg, n_zero, est)`. */
   def run(spark: SparkSession, dir: String): DataFrame = {
-    StreamingDedup.configureStateStore(spark)
-    val spool = ReplayScaffold.spoolFor(spark, dir, "q105", "events.parquet",
-      s"cuts=${Cuts.mkString("|")};manifest", writeSpool,
-      expectedFiles = Cuts.length + 1)
-    val runDir = ReplayScaffold.freshRunDir(spool)
+    val spool = ReplayScaffold.eventsSpool(spark, dir, "q105",
+      s"cuts=${ReplayScaffold.DefaultCuts.mkString("|")};manifest", Cols,
+      ReplayScaffold.timeSplit)
 
     import spark.implicits._
-    // batch label = the row's time slice (identical to its spool file
-    // under one-batch-per-trigger manifest replay; derived from ts so
-    // the label is a pure function of the DATA, not of file arrival)
-    val cut = Cuts.zipWithIndex.reverse.foldLeft(lit(Cuts.length)) {
-      case (acc, (c, i)) => when(col("ts") < expr(s"TIMESTAMP '$c'"), lit(i)).otherwise(acc)
-    }
-    val in = ReplayScaffold.manifestStream(spark, spool, SpoolSchema)
-      .select(col("event_type"), col("user_id"), cut.cast("int").as("cut"))
+    // batch label = the row's time slice, a pure function of the DATA,
+    // not of file arrival
+    val in = ReplayScaffold.manifestStream(spark, spool, ReplayScaffold.eventsSchema(Cols))
+      .select(col("event_type"), col("user_id"), ReplayScaffold.cutLabel.as("cut"))
       .as[HllEvent]
     val out = runningEstimate(in)
-    ReplayScaffold.runToParquet(out.toDF(), runDir).orderBy("event_type", "batch")
+    ReplayScaffold.runToParquet(out.toDF(), spool).orderBy("event_type", "batch")
   }
 }

@@ -34,16 +34,12 @@ import org.apache.spark.sql.types._
   * under a tight watermark. */
 object JoinReplay {
 
-  private val SpoolSchema = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", TimestampType),
-    StructField("user_id", LongType), StructField("value", DoubleType)))
+  private val Cols = Seq("user_id", "value")
 
   private val Split = "2024-01-16 00:00:00"
 
   private def writeSpool(spark: SparkSession, dir: String, spool: File): Unit = {
-    val ev = graft.Tables.events(spark, dir)
-      .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
-        col("user_id"), col("value"))
+    val ev = ReplayScaffold.eventRows(spark, dir, Cols)
     val a = ev.filter(col("event_id") % 2 === 1)
     val b = ev.filter(col("event_id") % 2 === 0)
     def writeBatch(df: DataFrame, sub: String, idx: Int): Unit =
@@ -70,17 +66,16 @@ object JoinReplay {
     * days) out-spans the month so the join is provably lossless; the
     * spec's tight-delay run proves the state actually evicts. */
   def run(spark: SparkSession, dir: String, delay: String = "60 days"): DataFrame = {
-    StreamingDedup.configureStateStore(spark)
     val spool = ReplayScaffold.spoolFor(spark, dir, "q85", "events.parquet",
       s"split=$Split;range=60m;b3-early;delay-independent-spool;manifest",
       writeSpool, expectedFiles = 5)
-    val runDir = ReplayScaffold.freshRunDir(spool)
 
     // manifest-ordered arrival per SIDE (each sub-spool is its own
     // manifest): B's trigger-3 early rows must arrive two triggers after
     // their A partners for the eviction story to mean anything
     def side(sub: String, suffix: String): DataFrame =
-      ReplayScaffold.manifestStream(spark, new File(spool, sub), SpoolSchema)
+      ReplayScaffold.manifestStream(spark, new File(spool, sub),
+          ReplayScaffold.eventsSchema(Cols))
         .select(col("event_id").as(s"${suffix}_id"), col("ts").as(s"ts_$suffix"),
           col("user_id").as(s"user_$suffix"), col("value").as(s"value_$suffix"))
         .withWatermark(s"ts_$suffix", delay)
@@ -92,6 +87,6 @@ object JoinReplay {
         col("ts_a"), col("ts_b"),
         (col("value_a").cast(DecimalType(12, 2)) +
           col("value_b").cast(DecimalType(12, 2))).cast("double").as("vsum"))
-    ReplayScaffold.runToParquet(joined, runDir).orderBy("a_id", "b_id")
+    ReplayScaffold.runToParquet(joined, spool).orderBy("a_id", "b_id")
   }
 }

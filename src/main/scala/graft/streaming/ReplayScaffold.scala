@@ -2,15 +2,17 @@ package graft.streaming
 
 import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ReplayState
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{StructType, TimestampType}
+import org.apache.spark.sql.types._
 
-/** Shared scaffold for the streaming replay harnesses (q52/q64/q73 and
-  * the q80-q89 state family): spool reuse + fresh per-run
-  * sink/checkpoint dirs.
+/** The one harness of the streaming replays (q52, q64, q73, q80-q89,
+  * q105, q110): spool reuse, the `events` spool writer
+  * ([[eventsSpool]]), and the one sink path ([[runToParquet]]) with its
+  * fresh per-run sink/checkpoint dir and state-partition pin. The state
+  * store itself is the session's (`graft.GraftSession`).
   *
   * A replay spool is a pure function of (corpus dir, generator config),
   * so rebuilding it on every run only re-measures the harness — a bench
@@ -88,23 +90,6 @@ object ReplayScaffold {
     }
   }
 
-  /** Split `ev` into
-    * `cuts.length + 1` staged manifest batches on a timestamp column —
-    * batch i = rows in `[cut(i-1), cut(i))` — named by index so
-    * [[ManifestReplaySource]] serves them in time order by construction. */
-  def writeTimeSplitManifest(spool: File, ev: DataFrame, tsCol: String,
-      cuts: Seq[String]): Unit = {
-    val cutCols = cuts.map(c => expr(s"TIMESTAMP '$c'"))
-    val preds = (0 to cuts.length).map { i =>
-      val lo = if (i == 0) lit(true) else col(tsCol) >= cutCols(i - 1)
-      val hi = if (i == cuts.length) lit(true) else col(tsCol) < cutCols(i)
-      lo && hi
-    }
-    preds.zipWithIndex.foreach { case (p, i) =>
-      writeManifestBatch(spool, ev.filter(p), i)
-    }
-  }
-
   /** Open `spool` as a manifest-ordered replay stream: one staged batch
     * per trigger, in filename order, via [[ManifestReplaySource]]. */
   def manifestStream(spark: SparkSession, spool: File, schema: StructType): DataFrame =
@@ -112,10 +97,72 @@ object ReplayScaffold {
       .schema(schema).option("path", spool.toString).load()
 
   /** The shared time-split instants for the cross-batch state replays
-    * (q86/q88/q89) — one source of truth so tuning batch sizes cannot
-    * silently desync the three spools from their specs' straddle checks. */
+    * (q86/q88/q89/q105/q110) — one source of truth so tuning batch sizes
+    * cannot silently desync the spools from their specs' straddle checks. */
   val DefaultCuts: Seq[String] =
     Seq("2024-01-08 00:00:00", "2024-01-16 00:00:00", "2024-01-23 00:00:00")
+
+  /** Event time of the far-future flush sentinel: a batch holding only
+    * this row drives the final watermark past every real window, session
+    * or timer, so the drain emits all of them. */
+  val FlushTs = "2030-01-01 00:00:00"
+
+  /** The `events` columns an events spool can carry: spool type, and the
+    * value the flush sentinel row holds. */
+  private val EventCols: Map[String, (DataType, Column)] = Map(
+    "event_id" -> (LongType, lit(-1L)),
+    "ts" -> (TimestampType, expr(s"TIMESTAMP '$FlushTs'")),
+    "user_id" -> (LongType, lit(-1L)),
+    "event_type" -> (StringType, lit("")),
+    "value" -> (DoubleType, lit(0.0)))
+
+  private def withKeys(cols: Seq[String]): Seq[String] = "event_id" +: "ts" +: cols
+
+  /** Schema of an events spool carrying `event_id`, `ts` and `cols`. */
+  def eventsSchema(cols: Seq[String]): StructType =
+    StructType(withKeys(cols).map(c => StructField(c, EventCols(c)._1)))
+
+  /** `events` projected to `event_id`, `ts` (cast to timestamp) and `cols`. */
+  def eventRows(spark: SparkSession, dir: String, cols: Seq[String]): DataFrame =
+    graft.Tables.events(spark, dir).select(withKeys(cols).map {
+      case "ts" => col("ts").cast("timestamp").as("ts")
+      case c => col(c)
+    }: _*)
+
+  /** Predicates splitting rows on `ts` at [[DefaultCuts]]: batch i =
+    * rows in `[cut(i-1), cut(i))`, four batches in time order. */
+  def timeSplit: Seq[Column] = {
+    val cutCols = DefaultCuts.map(c => expr(s"TIMESTAMP '$c'"))
+    (0 to DefaultCuts.length).map { i =>
+      val lo = if (i == 0) lit(true) else col("ts") >= cutCols(i - 1)
+      val hi = if (i == DefaultCuts.length) lit(true) else col("ts") < cutCols(i)
+      lo && hi
+    }
+  }
+
+  /** Index of the [[timeSplit]] batch a row's `ts` falls in, as an int —
+    * the batch label as a pure function of the data, equal to the
+    * row's staged batch under one-batch-per-trigger manifest replay. */
+  def cutLabel: Column =
+    DefaultCuts.zipWithIndex.reverse.foldLeft(lit(DefaultCuts.length)) {
+      case (acc, (c, i)) => when(col("ts") < expr(s"TIMESTAMP '$c'"), lit(i)).otherwise(acc)
+    }.cast("int")
+
+  /** Build-or-reuse ([[spoolFor]]) the `events` spool of replay `kind`:
+    * staged batch i holds the [[eventRows]] that `batches(i)` selects;
+    * with `flush`, one more batch holds only the flush sentinel row
+    * (`event_id` -1, `ts` [[FlushTs]]; callers filter it out of their
+    * output). Read it back with `manifestStream(spark, spool,
+    * eventsSchema(cols))`. */
+  def eventsSpool(spark: SparkSession, dir: String, kind: String,
+      extraStamp: String, cols: Seq[String], batches: Seq[Column],
+      flush: Boolean = false): File =
+    spoolFor(spark, dir, kind, "events.parquet", extraStamp, (s, d, spool) => {
+      val ev = eventRows(s, d, cols)
+      batches.zipWithIndex.foreach { case (p, i) => writeManifestBatch(spool, ev.filter(p), i) }
+      if (flush) writeManifestBatch(spool,
+        s.range(1).select(withKeys(cols).map(c => EventCols(c)._2.as(c)): _*), batches.length)
+    }, expectedFiles = batches.length + (if (flush) 1 else 0))
 
   /** Refcounted per-session pin of `spark.sql.shuffle.partitions`
     * (VERDICT r13 #4): the old bare set/restore raced when two replays
@@ -152,15 +199,20 @@ object ReplayScaffold {
     }
   }
 
-  /** The shared sink contract: append `streaming` to a parquet sink
-    * under `runDir`, drain it (`processAllAvailable`), stop, and hand
-    * back the materialized result for the caller to filter/order.
+  /** Shuffle partitions every replay's state is pinned to (see
+    * [[runToParquet]]). */
+  private val StatePartitions = 8
+
+  /** The shared sink contract: append `streaming` to a parquet sink in a
+    * fresh run dir next to `spool` ([[freshRunDir]]), drain it
+    * (`processAllAvailable`), stop, and hand back the materialized result
+    * for the caller to filter/order. Every replay runs through here.
     *
     * State partitioning: every trigger commits ONE state-store instance
     * per shuffle partition, so a 5-trigger replay over 32 partitions
     * pays ~160 RocksDB commits (open, changelog upload, metadata fsync)
     * for kilobytes of state — the scaffold tax VERDICT r11 #6 measured
-    * at ~33 s of the suite. The replay pins `statePartitions` (8) for
+    * at ~33 s of the suite. The replay pins [[StatePartitions]] (8) for
     * the stream's lifetime instead; per-key processing and output are
     * IDENTICAL (hash partitioning by key either way), only the commit
     * fan-out shrinks. The pin is refcounted per session ([[ShufflePin]])
@@ -168,11 +220,11 @@ object ReplayScaffold {
     * production scale this knob goes the other way — state partitions
     * should match cluster parallelism, which a fresh checkpoint picks
     * up from the session automatically. */
-  def runToParquet(streaming: DataFrame, runDir: File,
-      statePartitions: Int = 8): DataFrame = {
+  def runToParquet(streaming: DataFrame, spool: File): DataFrame = {
     val spark = streaming.sparkSession
+    val runDir = freshRunDir(spool)
     val outDir = new File(runDir, "out")
-    ShufflePin.acquire(spark, statePartitions)
+    ShufflePin.acquire(spark, StatePartitions)
     try {
       val q = streaming.writeStream.format("parquet")
         .option("path", outDir.toString)
@@ -287,7 +339,7 @@ object ReplayScaffold {
     * consumed. Three-deep same-kind concurrency would still collide;
     * the replay harnesses are at most pairwise-concurrent by
     * construction (one bench, one verify). */
-  def freshRunDir(spool: File): File = {
+  private def freshRunDir(spool: File): File = {
     val base = spool.getParentFile
     val pid = ProcessHandle.current().pid()
     def owner(name: String): Option[Long] = name.split("-") match {

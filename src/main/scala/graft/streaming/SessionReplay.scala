@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.io.File
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -34,43 +33,25 @@ import org.apache.spark.sql.types._
   * long-running stream holds only the live tail, not history. */
 object SessionReplay {
 
-  private val SpoolSchema = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", TimestampType),
-    StructField("user_id", LongType), StructField("value", DoubleType)))
-
-  private val FlushTs = "2030-01-01 00:00:00"
-
-  private def writeSpool(spark: SparkSession, dir: String, spool: File): Unit = {
-    val ev = graft.Tables.events(spark, dir)
-      .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
-        col("user_id"), col("value"))
-    ReplayScaffold.writeManifestBatch(spool, ev.filter(col("event_id") % 2 === 0), 0)
-    ReplayScaffold.writeManifestBatch(spool, ev.filter(col("event_id") % 2 === 1), 1)
-    val flush = spark.range(1).select(lit(-1L).as("event_id"),
-      expr(s"TIMESTAMP '$FlushTs'").as("ts"),
-      lit(-1L).as("user_id"), lit(0.0).as("value"))
-    ReplayScaffold.writeManifestBatch(spool, flush, 2)
-  }
+  private val Cols = Seq("user_id", "value")
 
   /** Run the replay; returns `(user_id, session_start, n_events, total)`
     * per 30-minute-gap session — q50's exact output shape. */
   def run(spark: SparkSession, dir: String): DataFrame = {
-    StreamingDedup.configureStateStore(spark)
-    val spool = ReplayScaffold.spoolFor(spark, dir, "q84", "events.parquet",
-      s"parity=2;gap=30m;delay=1h;flush=$FlushTs;manifest", writeSpool,
-      expectedFiles = 3)
-    val runDir = ReplayScaffold.freshRunDir(spool)
+    val spool = ReplayScaffold.eventsSpool(spark, dir, "q84",
+      s"parity=2;gap=30m;delay=1h;flush=${ReplayScaffold.FlushTs};manifest", Cols,
+      Seq(col("event_id") % 2 === 0, col("event_id") % 2 === 1), flush = true)
 
     // manifest-ordered arrival: watermark progression across the three
     // staged batches (halves + flush) is the semantics under test
-    val in = ReplayScaffold.manifestStream(spark, spool, SpoolSchema)
+    val in = ReplayScaffold.manifestStream(spark, spool, ReplayScaffold.eventsSchema(Cols))
     val agg = in.withWatermark("ts", "1 hour")
       .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast(DecimalType(12, 2))).cast("double").as("total"))
       .select(col("user_id"), col("session_window.start").as("session_start"),
         col("n_events"), col("total"))
-    ReplayScaffold.runToParquet(agg, runDir)
+    ReplayScaffold.runToParquet(agg, spool)
       .filter(col("user_id") >= 0)
       .orderBy("user_id", "session_start")
   }

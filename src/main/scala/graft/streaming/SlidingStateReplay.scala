@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.io.File
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
-import org.apache.spark.sql.types._
 
 /** q86 — per-key sliding EVENT-TIME window aggregation on Spark 4's
   * arbitrary-state API (`transformWithState` + `ListState`), the
@@ -84,36 +82,23 @@ object SlidingStateReplay {
         TimeMode.None(), OutputMode.Append())
   }
 
-  private val SpoolSchema = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", TimestampType),
-    StructField("user_id", LongType), StructField("value", DoubleType)))
-
-  val Cuts: Seq[String] = ReplayScaffold.DefaultCuts
-
-  private def writeSpool(spark: SparkSession, dir: String, spool: File): Unit = {
-    val ev = graft.Tables.events(spark, dir)
-      .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
-        col("user_id"), col("value"))
-    ReplayScaffold.writeTimeSplitManifest(spool, ev, "ts", Cuts)
-  }
+  private val Cols = Seq("user_id", "value")
 
   /** Run the replay; returns `(user_id, ts, value, n_win, sum_win)`. */
   def run(spark: SparkSession, dir: String): DataFrame = {
-    StreamingDedup.configureStateStore(spark)
-    val spool = ReplayScaffold.spoolFor(spark, dir, "q86", "events.parquet",
-      s"cuts=${Cuts.mkString("|")};win=24h;manifest", writeSpool,
-      expectedFiles = Cuts.length + 1)
-    val runDir = ReplayScaffold.freshRunDir(spool)
+    val spool = ReplayScaffold.eventsSpool(spark, dir, "q86",
+      s"cuts=${ReplayScaffold.DefaultCuts.mkString("|")};win=24h;manifest", Cols,
+      ReplayScaffold.timeSplit)
 
     import spark.implicits._
     // manifest-ordered arrival: trailing windows straddle the time cuts,
     // so batch order is part of the operator's semantics under test
-    val in = ReplayScaffold.manifestStream(spark, spool, SpoolSchema)
+    val in = ReplayScaffold.manifestStream(spark, spool, ReplayScaffold.eventsSchema(Cols))
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("value"))
       .as[SlidePoint]
     val out = slidingStats(in, windowUs = 24L * 3600 * 1000 * 1000)
       .select(col("user_id"), timestamp_micros(col("ts_us")).as("ts"),
         col("value"), col("n_win"), col("sum_win"))
-    ReplayScaffold.runToParquet(out.toDF(), runDir).orderBy("user_id", "ts")
+    ReplayScaffold.runToParquet(out.toDF(), spool).orderBy("user_id", "ts")
   }
 }

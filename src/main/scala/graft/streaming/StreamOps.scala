@@ -41,11 +41,6 @@ object StreamOps {
       .groupBy(session_window(col(Point.Time), gap), col(Point.Measurement))
       .agg(count(lit(1)).as("n"), avg(col("value")).as("mean"))
 
-  /** R17 — per-series high-water mark as a continuously-updated aggregate
-    * (the incremental-poll offset of lco.py:116-122, kept queryable). */
-  def watermarkByMeasurement(df: DataFrame): DataFrame =
-    df.groupBy(col(Point.Measurement)).agg(max(col(Point.Time)).as("watermark"))
-
   /** Streaming idempotence (SURVEY.md §4 at-least-once contract): drop
     * points already seen within the watermark horizon, keyed on the sink's
     * idempotence key (measurement, canonical tags, canonical fields, time),

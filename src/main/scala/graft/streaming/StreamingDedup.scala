@@ -42,42 +42,6 @@ import graft.text.TextStats
   */
 object StreamingDedup {
 
-  /** Back the streaming queries' state with RocksDB.
-    *
-    * Both dedup regimes carry state that is LINEAR IN UNIQUE CONTENT (one
-    * entry per fingerprint / band key): Spark's default HDFSBacked
-    * provider keeps every version of that map on the executor HEAP, so at
-    * 100 TB the state alone evicts the working set; RocksDB spills it to
-    * local disk with bounded block-cache memory, which is the only shape
-    * that survives an open-ended firehose. The `transformWithState`
-    * operators (q86, q87, q89) run only on RocksDB. Changelog
-    * checkpointing is enabled with it so each commit uploads a delta, not
-    * a full snapshot. */
-  def configureStateStore(spark: SparkSession): Unit = {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      "true")
-    // Short replays (a handful of triggers) never live long enough
-    // for background snapshot maintenance to help recovery, but on a
-    // slow-IO machine a maintenance pass firing mid-replay competes
-    // with the commit path for the same disk (VERDICT r15 #4).
-    // Default 60s → 600s: a replay finishes before the first tick; a
-    // production deployment running open-ended streams should lower
-    // it back (recovery replays more changelog otherwise).
-    spark.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
-    // Row-count tracking makes EVERY state put pay a RocksDB
-    // read-before-write (insert-vs-update classification) solely to
-    // feed the numTotalStateRows METRIC — query results are
-    // byte-identical either way (the oracle sweep covers every
-    // streaming query). At 100 TB state volumes that is a doubled
-    // point-lookup load on the commit path, so it stays off. The speed
-    // effect of this setting is unmeasured: no A/B of it has been run.
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
-  }
-
   /** Fingerprint + key-derived projection shared by the streaming query
     * and the oracle: every output column is a function of the normalized
     * text, so WHICH family member survives cannot affect the result. */
@@ -153,7 +117,7 @@ object StreamingDedup {
     * of a non-leader SURVIVOR — but not of any band leader it collides
     * with — is admitted. State is 8·numPerm bytes per distinct band
     * key ever seen: linear in unique content, independent of duplicate
-    * volume. [[configureStateStore]] backs it with RocksDB;
+    * volume, in the session's RocksDB state store (`graft.GraftSession`);
     * sweep long-range leakage with the periodic batch pass
     * ([[graft.dedup.Dedup.incrementalDedup]]), exactly as [[exactDedupTtl]]'s
     * doc prescribes for the exact family. */
@@ -190,14 +154,6 @@ object StreamingDedup {
   private val SpoolSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("text", StringType)))
 
-  // spool reuse + fresh run dirs: shared scaffold, see ReplayScaffold
-  private def spoolFor(spark: SparkSession, dir: String, kind: String,
-      write: (SparkSession, String, File) => Unit): File =
-    ReplayScaffold.spoolFor(spark, dir, kind, "documents.parquet", "manifest",
-      write, expectedFiles = 2)
-
-  private def freshRunDir(spool: File): File = ReplayScaffold.freshRunDir(spool)
-
   /** Spool `documents` as two parquet files so that consecutive members
     * of every duplicate family land in DIFFERENT files: rows are
     * numbered within their fingerprint family and alternate b1/b2, so a
@@ -227,22 +183,12 @@ object StreamingDedup {
     * batch `SELECT DISTINCT` over the same normalization — a hash match
     * proves per-key exactly-once emission ACROSS batch boundaries. */
   def run(spark: SparkSession, dir: String): DataFrame = {
-    configureStateStore(spark)
-    val spool = spoolFor(spark, dir, "q64", writeSpool)
-    val runDir = freshRunDir(spool)
-
+    val spool = ReplayScaffold.spoolFor(spark, dir, "q64", "documents.parquet",
+      "manifest", writeSpool, expectedFiles = 2)
     val docs = ReplayScaffold.manifestStream(spark, spool, SpoolSchema)
     val unique = exactDedup(keyed(docs, "text"), Seq("fingerprint"))
       .select("fingerprint", "norm_len")
-    val outDir = new File(runDir, "out")
-    val q = unique.writeStream.format("parquet")
-      .option("path", outDir.toString)
-      .outputMode("append")
-      .option("checkpointLocation", new File(runDir, "ckpt").toString)
-      .start()
-    ReplayScaffold.drain(q)
-
-    spark.read.parquet(outDir.toString).orderBy("fingerprint")
+    ReplayScaffold.runToParquet(unique, spool).orderBy("fingerprint")
   }
 
   /** Parity spool for [[runNear]]: even doc_ids are micro-batch 1, odd
@@ -270,25 +216,15 @@ object StreamingDedup {
     * leaders in batch 2 and flip its duplicates to survivors). */
   def runNear(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    configureStateStore(spark)
-    val spool = spoolFor(spark, dir, "q73", writeParitySpool)
-    val runDir = freshRunDir(spool)
-
+    val spool = ReplayScaffold.spoolFor(spark, dir, "q73", "documents.parquet",
+      "manifest", writeParitySpool, expectedFiles = 2)
     // manifest-ordered arrival: leadership depends on batch order
     val docs = ReplayScaffold.manifestStream(spark, spool, SpoolSchema)
     val verdicts = nearDedupVerdicts(
       bandArrivals(docs, "doc_id", "text", n = 3, numPerm = 16, bands = 4)
         .as[BandArrival],
       numPerm = 16, threshold = 0.5)
-    val outDir = new File(runDir, "out")
-    val q = verdicts.toDF().writeStream.format("parquet")
-      .option("path", outDir.toString)
-      .outputMode("append")
-      .option("checkpointLocation", new File(runDir, "ckpt").toString)
-      .start()
-    ReplayScaffold.drain(q)
-
-    spark.read.parquet(outDir.toString)
+    ReplayScaffold.runToParquet(verdicts.toDF(), spool)
       .groupBy("doc_id")
       .agg(sum(col("hit").cast("long")).as("n_hit_bands"))
       .select(col("doc_id"), col("n_hit_bands"),

@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.io.File
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** q80 harness — watermarked tumbling-window aggregation driven ACROSS
   * micro-batch boundaries with late data, the append-mode contract
@@ -42,53 +39,30 @@ import org.apache.spark.sql.types._
   * the parquet sink appends finalized windows exactly once. */
 object WindowedReplay {
 
-  private val SpoolSchema = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", TimestampType),
-    StructField("event_type", StringType), StructField("value", DoubleType)))
+  private val Cols = Seq("event_type", "value")
 
   private val Split = "2024-01-16 00:00:00"
   private val Split2 = "2024-01-23 00:00:00"
 
-  /** Three staged manifest batches — arrival order is the filename
-    * index, never an mtime. */
-  private def writeSpool(spark: SparkSession, dir: String, spool: File): Unit = {
-    val ev = graft.Tables.events(spark, dir)
-      .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
-        col("event_type"), col("value"))
-    val straggler = col("event_id") % 97 === 0
-    val early = col("ts") < expr(s"TIMESTAMP '$Split'")
-    val mid = !early && col("ts") < expr(s"TIMESTAMP '$Split2'")
-    ReplayScaffold.writeManifestBatch(spool, ev.filter(early && !straggler), 0)
-    ReplayScaffold.writeManifestBatch(spool, ev.filter(mid && !straggler), 1)
-    ReplayScaffold.writeManifestBatch(spool, ev.filter(!early && !mid || straggler), 2)
-  }
-
   /** Run the replay; returns one row per emitted (window, event_type):
     * `(ws, we, event_type, n, vmin, vmax)` ordered for the oracle. */
   def run(spark: SparkSession, dir: String): DataFrame = {
-    StreamingDedup.configureStateStore(spark)
-    val spool = ReplayScaffold.spoolFor(spark, dir, "q80", "events.parquet",
-      s"split=$Split;split2=$Split2;straggler=97;win=1h;delay=1h;manifest",
-      writeSpool, expectedFiles = 3)
-    val runDir = ReplayScaffold.freshRunDir(spool)
+    val straggler = col("event_id") % 97 === 0
+    val early = col("ts") < expr(s"TIMESTAMP '$Split'")
+    val mid = !early && col("ts") < expr(s"TIMESTAMP '$Split2'")
+    val spool = ReplayScaffold.eventsSpool(spark, dir, "q80",
+      s"split=$Split;split2=$Split2;straggler=97;win=1h;delay=1h;manifest", Cols,
+      Seq(early && !straggler, mid && !straggler, !early && !mid || straggler))
 
     // manifest-ordered arrival: the straggler/emit-once semantics are a
     // pure function of which batch carries which rows — code-owned order
-    val in = ReplayScaffold.manifestStream(spark, spool, SpoolSchema)
+    val in = ReplayScaffold.manifestStream(spark, spool, ReplayScaffold.eventsSchema(Cols))
     val agg = in.withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), min(col("value")).as("vmin"),
         max(col("value")).as("vmax"))
       .select(col("window.start").as("ws"), col("window.end").as("we"),
         col("event_type"), col("n"), col("vmin"), col("vmax"))
-    val outDir = new File(runDir, "out")
-    val q = agg.writeStream.format("parquet")
-      .option("path", outDir.toString)
-      .outputMode("append")
-      .option("checkpointLocation", new File(runDir, "ckpt").toString)
-      .start()
-    ReplayScaffold.drain(q)
-
-    spark.read.parquet(outDir.toString).orderBy("ws", "event_type")
+    ReplayScaffold.runToParquet(agg, spool).orderBy("ws", "event_type")
   }
 }

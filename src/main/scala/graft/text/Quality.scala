@@ -411,14 +411,10 @@ object Quality {
     * broadcast back as a 1-row frame, so bucketing fuses into the
     * scored scan — no global sort and no single-partition window
     * anywhere (an `ntile` over a global ORDER BY — the naive spelling
-    * — funnels every row through one task). `exact = true` uses the
+    * — funnels every row through one task). The cutoffs come from the
     * sort-based exact `percentile` aggregate (DuckDB-replayable as
-    * `quantile_cont`, the q35 parity rule) — fine up to cutoff frames
-    * that fit one aggregation buffer; at real scale flip
-    * `exact = false` for the one-pass mergeable Greenwald–Khanna
-    * sketch ([[graft.sketch.Sketches.approxQuantiles]], rank error
-    * ≤ `relativeError`) — same downstream plan, bounded-error cutoffs
-    * (QualitySpec bounds the disagreement between the two).
+    * `quantile_cont`, the q35 parity rule), which holds its whole
+    * cutoff frame in one aggregation buffer.
     *
     * The score frame is needed twice (cutoffs + bucketing), so it is
     * PERSISTED (memory-and-disk) and the cutoffs are taken EAGERLY —
@@ -433,8 +429,7 @@ object Quality {
     * somehow still holds the prior result when a new call lands, its
     * next action recomputes — slower, never wrong. */
   def perplexityBuckets(docs: DataFrame, idCol: String, textCol: String,
-      cuts: (Double, Double) = (1.0 / 3, 2.0 / 3),
-      exact: Boolean = true, relativeError: Double = 0.01): DataFrame = {
+      cuts: (Double, Double) = (1.0 / 3, 2.0 / 3)): DataFrame = {
     require(cuts._1 < cuts._2, s"cuts must be increasing, got $cuts")
     val scored = unigramCrossEntropy(docs, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -445,20 +440,13 @@ object Quality {
     Option(lastPplScored.getAndSet(scored))
       .filterNot(_.queryExecution.analyzed.sameResult(scored.queryExecution.analyzed))
       .foreach(_.unpersist(false))
-    val (c1, c2) =
-      if (exact) {
-        val r = scored.agg(
-          expr(s"percentile(nats_per_token, ${cuts._1})"),
-          expr(s"percentile(nats_per_token, ${cuts._2})")).head()
-        // empty corpus → null percentiles → NaN cutoffs; both whens are
-        // false on every (nonexistent) row, so the empty result is exact
-        (if (r.isNullAt(0)) Double.NaN else r.getDouble(0),
-          if (r.isNullAt(1)) Double.NaN else r.getDouble(1))
-      } else {
-        val Seq(a, b) = graft.sketch.Sketches.approxQuantiles(
-          scored, "nats_per_token", Seq(cuts._1, cuts._2), relativeError)
-        (a, b)
-      }
+    val r = scored.agg(
+      expr(s"percentile(nats_per_token, ${cuts._1})"),
+      expr(s"percentile(nats_per_token, ${cuts._2})")).head()
+    // empty corpus → null percentiles → NaN cutoffs; both whens are
+    // false on every (nonexistent) row, so the empty result is exact
+    val c1 = if (r.isNullAt(0)) Double.NaN else r.getDouble(0)
+    val c2 = if (r.isNullAt(1)) Double.NaN else r.getDouble(1)
     scored.select(col(idCol), col("nats_per_token"), col("n_tokens"),
       when(col("nats_per_token") <= lit(c1), "head")
         .when(col("nats_per_token") <= lit(c2), "middle")
@@ -647,7 +635,7 @@ object Quality {
     * `(idCol, clean_text, lines_kept, lines_removed)`; a document made
     * entirely of boilerplate survives with empty `clean_text`.
     *
-    * Scale shape, broadcast branch (default): the frequent-line set
+    * Scale shape: the frequent-line set
     * collapses to a single sorted array, broadcast onto the corpus scan
     * as a 1-row frame; membership and reassembly are per-row array
     * expressions, so the DOCUMENT side never shuffles at all — the only
@@ -655,20 +643,14 @@ object Quality {
     * (QualitySpec pins this). Per-line membership is a codegen BINARY
     * SEARCH of the sorted broadcast array (`sorted_contains`,
     * O(log |set|) per line — a 100k-line boilerplate set costs ~17
-    * probes, not 100k). Flip `viaBroadcast = false` when the set itself
-    * outgrows broadcast
-    * (a low `minDocs` over a web-scale crawl): lines then explode with
-    * positions, anti-join the frequent set on the line key, and
-    * reassemble with one id-keyed exchange — the standard shape when
-    * the filter set itself is data-scale. Both branches are
-    * spec-asserted identical (QualitySpec). */
+    * probes, not 100k). The frequent-line set must fit a broadcast: a
+    * low `minDocs` over a web-scale crawl can outgrow it. */
   def removeBoilerplate(docs: DataFrame, idCol: String, textCol: String,
-      sep: String = "\n", minDocs: Int = 3,
-      viaBroadcast: Boolean = true): DataFrame = {
+      sep: String = "\n", minDocs: Int = 3): DataFrame = {
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
     val qsep = java.util.regex.Pattern.quote(sep)
-    // Hashed-key discipline (the q44/PPJoin rule): the df rollup, the
-    // broadcast array, and the anti-join all carry the 8-byte xxhash64
+    // Hashed-key discipline (the q44/PPJoin rule): the df rollup and the
+    // broadcast array carry the 8-byte xxhash64
     // of the line, never line text — shuffle and broadcast bytes stay
     // flat no matter how long boilerplate lines get. 64-bit collisions
     // (a non-boilerplate line hashing onto a frequent one) are the
@@ -680,37 +662,17 @@ object Quality {
       .agg(count(lit(1)).as("doc_freq"))
       .filter(col("doc_freq") >= minDocs)
       .select("__lh")
-    if (viaBroadcast) {
-      val bpArr = bpH.agg(sort_array(collect_list(col("__lh"))).as("__bp"))
-      docs.crossJoin(broadcast(bpArr))
-        .withColumn("__lines", split(col(textCol), qsep))
-        .withColumn("__kept",
-          filter(col("__lines"), l => !graft.functions.VectorFunctions
-            .sortedContains(col("__bp"), xxhash64(l))))
-        .select(col(idCol),
-          concat_ws(sep, col("__kept")).as("clean_text"),
-          size(col("__kept")).cast("long").as("lines_kept"),
-          (size(col("__lines")) - size(col("__kept"))).cast("long")
-            .as("lines_removed"))
-    } else {
-      val ln = docs.select(col(idCol).as("__id"),
-        posexplode(split(col(textCol), qsep)).as(Seq("__pos", "line")))
-        .withColumn("__lh", xxhash64(col("line")))
-      val re = ln.join(bpH, Seq("__lh"), "left_anti")
-        .groupBy("__id").agg(
-          count(lit(1)).as("lines_kept"),
-          concat_ws(sep, transform(
-            array_sort(collect_list(struct(col("__pos"), col("line")))),
-            x => x.getField("line"))).as("clean_text"))
-      docs.select(col(idCol).as("__id"),
-          size(split(col(textCol), qsep)).cast("long").as("__total"))
-        .join(re, Seq("__id"), "left")
-        .select(col("__id").as(idCol),
-          coalesce(col("clean_text"), lit("")).as("clean_text"),
-          coalesce(col("lines_kept"), lit(0L)).as("lines_kept"),
-          (col("__total") - coalesce(col("lines_kept"), lit(0L)))
-            .as("lines_removed"))
-    }
+    val bpArr = bpH.agg(sort_array(collect_list(col("__lh"))).as("__bp"))
+    docs.crossJoin(broadcast(bpArr))
+      .withColumn("__lines", split(col(textCol), qsep))
+      .withColumn("__kept",
+        filter(col("__lines"), l => !graft.functions.VectorFunctions
+          .sortedContains(col("__bp"), xxhash64(l))))
+      .select(col(idCol),
+        concat_ws(sep, col("__kept")).as("clean_text"),
+        size(col("__kept")).cast("long").as("lines_kept"),
+        (size(col("__lines")) - size(col("__kept"))).cast("long")
+          .as("lines_removed"))
   }
 
   def chunkDocuments(docs: DataFrame, idCol: String, textCol: String,

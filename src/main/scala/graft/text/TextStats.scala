@@ -29,29 +29,20 @@ object TextStats {
   def subwordCount(text: Column): Column =
     call_function("subword_count", text)
 
-  /** Lexical diversity from a precomputed token array. */
+  /** Lexical diversity (distinct tokens / tokens) from a token array. */
   def lexicalDiversityW(t: Column): Column =
     size(array_distinct(t)).cast("double") / size(t)
 
-  /** Lexical diversity: distinct tokens / tokens. */
-  def lexicalDiversity(text: Column): Column = lexicalDiversityW(tokens(text))
-
-  /** Mean token length from a precomputed token array. */
+  /** Mean token length in characters from a token array. */
   def meanTokenLengthW(t: Column): Column =
     aggregate(transform(t, w => length(w).cast("long")), lit(0L), (a, x) => a + x)
       .cast("double") / size(t)
 
-  /** Mean token length in characters. */
-  def meanTokenLength(text: Column): Column = meanTokenLengthW(tokens(text))
-
-  /** Stopword ratio from a precomputed token array. */
+  /** Ratio of a token array's tokens that appear in `stopwords` (a
+    * quality signal: natural text has 0.2-0.5; keyboard mash and tables
+    * have ~0). */
   def stopwordRatioW(t: Column, stopwords: Seq[String]): Column =
     size(filter(t, w => w.isin(stopwords.map(lit): _*))).cast("double") / size(t)
-
-  /** Ratio of tokens that appear in `stopwords` (a quality signal: natural
-    * text has 0.2-0.5; keyboard mash and tables have ~0). */
-  def stopwordRatio(text: Column, stopwords: Seq[String]): Column =
-    stopwordRatioW(tokens(text), stopwords)
 
   /** Non-alphanumeric character ratio. Semantics: codepoints matching
     * `[^a-z0-9 ]` over total codepoints (callers lowercase first);
@@ -144,17 +135,5 @@ object TextStats {
         sum(col("new_types")).over(Window.orderBy("bucket")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select("bucket", "n_docs", "n_tokens", "new_types", "cum_vocab")
-  }
-
-  /** All text stats in one pass over a documents table. */
-  def annotate(df: DataFrame, textCol: String, stopwords: Seq[String]): DataFrame = {
-    val t = col(textCol)
-    df.withColumn("n_tokens", tokenCount(t))
-      .withColumn("lexical_diversity", round(lexicalDiversity(t), 6))
-      .withColumn("mean_token_len", round(meanTokenLength(t), 6))
-      .withColumn("stopword_ratio", round(stopwordRatio(t, stopwords), 6))
-      .withColumn("lang_pred", languageId(t))
-      .withColumn("fingerprint", fingerprint(t))
-      .withColumn("quality", qualityScore(t, stopwords))
   }
 }

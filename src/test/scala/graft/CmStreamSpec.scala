@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.streaming.CmStreamReplay
+import graft.streaming.{CmStreamReplay, ReplayScaffold}
 import graft.sketch.Sketches
 
 class CmStreamSpec extends SparkSpec {
@@ -24,7 +24,7 @@ class CmStreamSpec extends SparkSpec {
     assert(out.nonEmpty)
     val ev = Tables.events(spark, sf())
       .select(col("event_type"), col("user_id"), col("ts").cast("timestamp").as("ts"))
-    val cutsTs = CmStreamReplay.Cuts.map(java.sql.Timestamp.valueOf)
+    val cutsTs = ReplayScaffold.DefaultCuts.map(java.sql.Timestamp.valueOf)
     val evRows = ev.collect().map { r =>
       val ts = r.getTimestamp(2)
       val b = cutsTs.indexWhere(c => ts.before(c)) match {

@@ -472,24 +472,24 @@ class CorpusOpsSpec extends SparkSpec {
 
   test("robustOutliers: bucketed rank-find path is row-identical to the direct path") {
     // values straddle bucket boundaries (width 65536 cents) and include
-    // duplicates + a heavy tail; forcing directBytes=0 routes to the
-    // bucketed two-phase shape, which must reproduce the direct CDF
-    // exactly (median, MAD and flag counts are all rank statistics)
+    // duplicates + a heavy tail; the bucketed two-phase shape must
+    // reproduce the direct CDF exactly, on the values and on their
+    // absolute deviations from the median (robustOutliers' MAD pass)
     val rnd = new scala.util.Random(7)
-    val df = (1 to 400).map { i =>
+    val cents = (1 to 400).map { i =>
       (if (i % 3 == 0) "A" else "B",
-        math.abs(rnd.nextGaussian() * 900) + (if (i % 97 == 0) 50000.0 else 0.0))
-    }.toDF("g", "price")
-    def run(): Map[String, (Long, Long, Long, Long)] =
-      graft.sketch.Sketches.robustOutliers(df, Seq("g"), col("price"))
-        .collect().map(r => r.getString(0) ->
-          (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-    val direct = run()
-    spark.conf.set("spark.graft.median.directBytes", "0")
-    try {
-      val bucketed = run()
-      assert(bucketed == direct)
-    } finally spark.conf.unset("spark.graft.median.directBytes")
+        (math.abs(rnd.nextGaussian() * 900) * 100).toLong +
+          (if (i % 97 == 0) 5000000L else 0L) - 200000L)
+    }.toDF("g", "cents")
+    def medians(f: (org.apache.spark.sql.DataFrame, Seq[String], String) =>
+        org.apache.spark.sql.DataFrame, in: org.apache.spark.sql.DataFrame, v: String) =
+      f(in, Seq("g"), v).collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    import graft.sketch.Sketches.{medianBucketed, medianDirect}
+    val direct = medians(medianDirect, cents, "cents")
+    assert(medians(medianBucketed, cents, "cents") == direct)
+    val med = direct.toSeq.map { case (g, (m, _)) => (g, m) }.toDF("g", "med")
+    val dev = cents.join(med, "g").select(col("g"), abs(col("cents") - col("med")).as("adev"))
+    assert(medians(medianBucketed, dev, "adev") == medians(medianDirect, dev, "adev"))
   }
 
   test("behavioralEntropy: uniform two-type user ln2, single-type user 0") {

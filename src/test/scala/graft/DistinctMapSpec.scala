@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.streaming.DistinctMapReplay
+import graft.streaming.{DistinctMapReplay, ReplayScaffold}
 
 /** q89: MapState-backed running distinct — final counts exact, carry
   * across every cut non-vacuous (re-seen users straddle cuts). */
@@ -34,7 +34,7 @@ class DistinctMapSpec extends SparkSpec {
     // appears again after it must exist, and its re-sighting row's
     // count must NOT have incremented for it (count equals the previous
     // row's count in that type)
-    val cuts = DistinctMapReplay.Cuts.map(java.sql.Timestamp.valueOf)
+    val cuts = ReplayScaffold.DefaultCuts.map(java.sql.Timestamp.valueOf)
     val byType = out.groupBy(_.getString(0))
     val reSeen = byType.values.flatMap { rows =>
       val sorted = rows.sortBy(_.getTimestamp(1).getTime)

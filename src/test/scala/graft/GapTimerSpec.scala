@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.streaming.GapTimerReplay
+import graft.streaming.{GapTimerReplay, ReplayScaffold}
 
 /** q88: event-time timers — every series gets exactly one timer-fired
   * tail, gap rows match the batch lag computation, and some gaps
@@ -45,7 +45,7 @@ class GapTimerSpec extends SparkSpec {
   }
 
   test("the hash is earned: gaps straddle batch cuts") {
-    val cuts = GapTimerReplay.Cuts.map(java.sql.Timestamp.valueOf)
+    val cuts = ReplayScaffold.DefaultCuts.map(java.sql.Timestamp.valueOf)
     val straddling = out.filter(_.getString(1) == "gap").count { r =>
       cuts.exists(c => r.getTimestamp(2).before(c) && !r.getTimestamp(3).before(c))
     }

@@ -135,6 +135,45 @@ class HarnessSpec extends SparkSpec {
     assert(hits.isEmpty, s"environment reads outside the allowlist:\n${hits.mkString("\n")}")
   }
 
+  /** `file:line: text` of every line under `root` that `hit` flags. */
+  private def grepScala(root: String)(hit: (String, String) => Boolean): List[String] = {
+    val base = java.nio.file.Paths.get(root)
+    assert(java.nio.file.Files.isDirectory(base), s"missing $base")
+    val files = java.nio.file.Files.walk(base)
+    try files.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
+      val rel = base.relativize(f).toString
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if hit(rel, line) => s"$rel:${i + 1}: ${line.trim}"
+      }
+    }.toList finally files.close()
+  }
+
+  // The state store is a property of a query's checkpoint, fixed when it
+  // first starts: one configuration for every session, set where the
+  // session is built, so no query's store depends on what ran before it.
+  test("state-store settings live only in GraftSession") {
+    val graftSession = java.nio.file.Files
+      .readAllLines(java.nio.file.Paths.get("src/main/scala/graft/Tables.scala")).asScala
+      .indexWhere(_.startsWith("object GraftSession"))
+    assert(graftSession >= 0, "GraftSession not found in Tables.scala")
+    val hits = grepScala("src/main/scala")((_, line) =>
+      line.contains("spark.sql.streaming.stateStore."))
+    val outside = hits.filterNot { h =>
+      val Array(rel, n) = h.split(":", 3).take(2)
+      rel == "graft/Tables.scala" && n.toInt > graftSession
+    }
+    assert(hits.nonEmpty && outside.isEmpty,
+      s"state-store settings outside GraftSession:\n${outside.mkString("\n")}")
+  }
+
+  // Every replay shares one sink path (ReplayScaffold.runToParquet): its
+  // fresh run dir, state-partition pin and provider cleanup.
+  test("writeStream under graft/streaming only in ReplayScaffold") {
+    val hits = grepScala("src/main/scala/graft/streaming")((rel, line) =>
+      line.contains("writeStream") && rel != "ReplayScaffold.scala")
+    assert(hits.isEmpty, s"use ReplayScaffold.runToParquet:\n${hits.mkString("\n")}")
+  }
+
   test("attribution pass: stages for a batch query, trigger phases for a streaming one") {
     val out = java.nio.file.Files.createTempDirectory("graft-attribution").toFile
     val names = Set("q01_pricing_summary", "q81_streaming_ewma")

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.streaming.HllStreamReplay
+import graft.streaming.{HllStreamReplay, ReplayScaffold}
 import graft.sketch.Sketches
 
 class HllStreamSpec extends SparkSpec {
@@ -39,7 +39,7 @@ class HllStreamSpec extends SparkSpec {
     // form of the sketch over that key's prefix of the raw events
     val ev = Tables.events(spark, sf())
       .select(col("event_type"), col("user_id"), col("ts").cast("timestamp").as("ts"))
-    val cutsTs = HllStreamReplay.Cuts.map(java.sql.Timestamp.valueOf)
+    val cutsTs = ReplayScaffold.DefaultCuts.map(java.sql.Timestamp.valueOf)
     val evRows = ev.collect().map { r =>
       val ts = r.getTimestamp(2)
       val b = cutsTs.indexWhere(c => ts.before(c)) match {

@@ -4,7 +4,7 @@ import java.io.File
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.streaming.{SlidingStateReplay, StreamingDedup}
+import graft.streaming.SlidingStateReplay
 import graft.streaming.SlidingStateReplay.SlidePoint
 
 /** Checkpoint recovery for the arbitrary-state API: a transformWithState
@@ -60,7 +60,6 @@ class RestartRecoverySpec extends SparkSpec {
       .sortBy(t => (t._1, t._2)).toSeq
 
   test("a restarted transformWithState query restores state and matches the uninterrupted run") {
-    StreamingDedup.configureStateStore(spark)
     val base = Files.createTempDirectory("graft-restart-").toFile
     val (spoolA, outA, ckptA) = (new File(base, "spoolA"),
       new File(base, "outA"), new File(base, "ckptA"))

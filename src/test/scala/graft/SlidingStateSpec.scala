@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.streaming.SlidingStateReplay
+import graft.streaming.{SlidingStateReplay, ReplayScaffold}
 
 /** q86: the transformWithState sliding-window op equals the batch
   * RANGE-window aggregate, with windows provably straddling the
@@ -29,7 +29,7 @@ class SlidingStateSpec extends SparkSpec {
   }
 
   test("the hash is earned: windows straddle every time cut") {
-    graft.streaming.SlidingStateReplay.Cuts.foreach { c =>
+    ReplayScaffold.DefaultCuts.foreach { c =>
       val cut = java.sql.Timestamp.valueOf(c)
       val straddling = streamed.count { r =>
         val ts = r.getTimestamp(1)

@@ -34,12 +34,14 @@ class StreamingDedupSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("configureStateStore sets the RocksDB provider") {
-    spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    StreamingDedup.configureStateStore(spark)
-    assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass") ==
+  test("GraftSession builds sessions on the RocksDB state store") {
+    val conf = GraftSession.get("local[4]", 4).conf
+    assert(conf.get("spark.sql.streaming.stateStore.providerClass") ==
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    assert(spark.conf.get(
+    assert(conf.get(
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled") == "true")
+    assert(conf.get("spark.sql.streaming.stateStore.maintenanceInterval") == "600s")
+    assert(conf.get(
       "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows") == "false")
   }
 

@@ -78,7 +78,7 @@ class WindowedReplaySpec extends SparkSpec {
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("k")).agg(count(lit(1)).as("n"))
         .select(date_format(col("window.start"), "HH").as("hour"), col("k"), col("n"))
-      val got = ReplayScaffold.runToParquet(agg, ReplayScaffold.freshRunDir(spool)).collect()
+      val got = ReplayScaffold.runToParquet(agg, spool).collect()
         .map(r => (r.getString(0), r.getString(1), r.getLong(2))).sorted.toSeq
       // batch 2's 00:20 row is older than the naive watermark max(batch 1)
       // − 1 h = 00:30 yet counted: a late row is judged by its window's
