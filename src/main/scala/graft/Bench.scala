@@ -188,13 +188,14 @@ object Bench {
       org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.TimestampType),
       org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.DoubleType)))
     def calibStateOnce(): Double = {
+      val spool = stateCalibSpool
       val t = System.nanoTime()
       import spark.implicits._
       val in = graft.streaming.ReplayScaffold
-        .manifestStream(spark, stateCalibSpool, calibSchema)
+        .manifestStream(spark, spool, calibSchema)
         .as[graft.streaming.StatefulOps.SeriesPoint]
       graft.streaming.ReplayScaffold
-        .runToParquet(graft.streaming.StatefulOps.ewma(in, 0.2).toDF(), stateCalibSpool)
+        .runToParquet(graft.streaming.StatefulOps.ewma(in, 0.2).toDF(), spool)
         .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t) / 1e9
     }

@@ -107,20 +107,16 @@ object ReplayScaffold {
     * or timer, so the drain emits all of them. */
   val FlushTs = "2030-01-01 00:00:00"
 
-  /** The `events` columns an events spool can carry: spool type, and the
-    * value the flush sentinel row holds. */
-  private val EventCols: Map[String, (DataType, Column)] = Map(
-    "event_id" -> (LongType, lit(-1L)),
-    "ts" -> (TimestampType, expr(s"TIMESTAMP '$FlushTs'")),
-    "user_id" -> (LongType, lit(-1L)),
-    "event_type" -> (StringType, lit("")),
-    "value" -> (DoubleType, lit(0.0)))
+  /** Spool type of each `events` column an events spool can carry. */
+  private val EventCols: Map[String, DataType] = Map(
+    "event_id" -> LongType, "ts" -> TimestampType, "user_id" -> LongType,
+    "event_type" -> StringType, "value" -> DoubleType)
 
   private def withKeys(cols: Seq[String]): Seq[String] = "event_id" +: "ts" +: cols
 
   /** Schema of an events spool carrying `event_id`, `ts` and `cols`. */
   def eventsSchema(cols: Seq[String]): StructType =
-    StructType(withKeys(cols).map(c => StructField(c, EventCols(c)._1)))
+    StructType(withKeys(cols).map(c => StructField(c, EventCols(c))))
 
   /** `events` projected to `event_id`, `ts` (cast to timestamp) and `cols`. */
   def eventRows(spark: SparkSession, dir: String, cols: Seq[String]): DataFrame =
@@ -151,8 +147,8 @@ object ReplayScaffold {
   /** Build-or-reuse ([[spoolFor]]) the `events` spool of replay `kind`:
     * staged batch i holds the [[eventRows]] that `batches(i)` selects;
     * with `flush`, one more batch holds only the flush sentinel row
-    * (`event_id` -1, `ts` [[FlushTs]]; callers filter it out of their
-    * output). Read it back with `manifestStream(spark, spool,
+    * (`ts` [[FlushTs]], `value` 0, -1 in every other column; callers
+    * filter it out of their output). Read it back with `manifestStream(spark, spool,
     * eventsSchema(cols))`. */
   def eventsSpool(spark: SparkSession, dir: String, kind: String,
       extraStamp: String, cols: Seq[String], batches: Seq[Column],
@@ -160,8 +156,11 @@ object ReplayScaffold {
     spoolFor(spark, dir, kind, "events.parquet", extraStamp, (s, d, spool) => {
       val ev = eventRows(s, d, cols)
       batches.zipWithIndex.foreach { case (p, i) => writeManifestBatch(spool, ev.filter(p), i) }
-      if (flush) writeManifestBatch(spool,
-        s.range(1).select(withKeys(cols).map(c => EventCols(c)._2.as(c)): _*), batches.length)
+      if (flush) writeManifestBatch(spool, s.range(1).select(withKeys(cols).map {
+        case "ts" => expr(s"TIMESTAMP '$FlushTs'").as("ts")
+        case "value" => lit(0.0).as("value")
+        case c => lit(-1L).cast(EventCols(c)).as(c)
+      }: _*), batches.length)
     }, expectedFiles = batches.length + (if (flush) 1 else 0))
 
   /** Refcounted per-session pin of `spark.sql.shuffle.partitions`
@@ -206,7 +205,9 @@ object ReplayScaffold {
   /** The shared sink contract: append `streaming` to a parquet sink in a
     * fresh run dir next to `spool` ([[freshRunDir]]), drain it
     * (`processAllAvailable`), stop, and hand back the materialized result
-    * for the caller to filter/order. Every replay runs through here.
+    * for the caller to filter/order. Every replay runs through here, on
+    * a session hardened first ([[graft.Tables.harden]]), so a session
+    * the caller built runs on the engine's state store too.
     *
     * State partitioning: every trigger commits ONE state-store instance
     * per shuffle partition, so a 5-trigger replay over 32 partitions
@@ -221,7 +222,7 @@ object ReplayScaffold {
     * should match cluster parallelism, which a fresh checkpoint picks
     * up from the session automatically. */
   def runToParquet(streaming: DataFrame, spool: File): DataFrame = {
-    val spark = streaming.sparkSession
+    val spark = graft.Tables.harden(streaming.sparkSession)
     val runDir = freshRunDir(spool)
     val outDir = new File(runDir, "out")
     ShufflePin.acquire(spark, StatePartitions)

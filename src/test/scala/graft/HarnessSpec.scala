@@ -78,11 +78,18 @@ class HarnessSpec extends SparkSpec {
 
   // A driver may call the entry points with a session it built itself,
   // without GraftSession's settings or the extension's functions; the
-  // queries must harden it (Tables.harden) and still run.
+  // queries must harden it (Tables.harden) and still run. q86's
+  // transformWithState runs only on RocksDB; its spool is built first on
+  // the shared session, so the bare run reads no table and the replay
+  // itself has to set the store.
   test("entry and queries run on a session without the engine's settings") {
+    val q86 = SparkEntry.queries("q86_sliding_state")
+    val expected = q86(spark, sf()).count()
     val bare = spark.newSession()
-    Seq("spark.sql.legacy.parquet.nanosAsLong", "spark.sql.session.timeZone",
-      "spark.sql.mapKeyDedupPolicy").foreach(bare.conf.unset)
+    (Seq("spark.sql.legacy.parquet.nanosAsLong", "spark.sql.session.timeZone",
+      "spark.sql.mapKeyDedupPolicy") ++ GraftSession.StateStoreConf.keys).foreach(bare.conf.unset)
+    assert(!bare.conf.get("spark.sql.streaming.stateStore.providerClass").contains("RocksDB"))
+    assert(expected > 0 && q86(bare, sf()).count() == expected)
     bare.sql("DROP TEMPORARY FUNCTION IF EXISTS cosine_sim")
     assert(!bare.catalog.functionExists("cosine_sim"))
     assert(SparkEntry.entry(bare).count() > 0)
