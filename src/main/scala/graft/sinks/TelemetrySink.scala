@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -10,10 +10,10 @@ import graft.model.Point
   * — the Spark form of the reference's InfluxDB observer (K2,
   * cerebro/observer.py:67-130), with the idempotence contract SURVEY.md §4
   * requires: at-least-once upstream delivery is forgiven by deduping on
-  * (measurement, tags, fields, time) within each batch — fields included
-  * so same-series-same-timestamp points with distinct field sets (one
-  * device poll fanning out to many channel points) are data, not
-  * replays; the STREAMING path
+  * the idempotence key (bucket, measurement, tags, fields, fields_str,
+  * time) within each batch — fields included so same-series-same-timestamp
+  * points with distinct field sets (one device poll fanning out to many
+  * channel points) are data, not replays; the STREAMING path
   * ([[start]]) is exactly-once end-to-end because each micro-batch lands
   * in its own `__batch=<id>` partition via dynamic partition OVERWRITE —
   * a replayed batch (failure between the append and the checkpoint
@@ -22,11 +22,28 @@ import graft.model.Point
   * append: idempotence there comes from the within-batch dedup plus the
   * overlap-and-dedup read contract (SURVEY §4), i.e. at-least-once.
   *
+  * ==The idempotence key==
+  * [[dropKeyRepeats]] groups on the maps themselves, one struct of the
+  * three (Spark sorts a map grouping key by its keys, so entry order does
+  * not matter), and keeps `max(time_ns)` of the repeats. Against the sorted `k=v` string key it
+  * replaces:
+  *   - `bucket` is part of the key: two points that differ only in bucket
+  *     are both kept, each in its own leaf (one was dropped arbitrarily);
+  *   - a null map and `{}` are one key, and both are stored as `{}`;
+  *   - −0.0 ≡ 0.0, because Spark normalises floating-point grouping keys
+  *     (NaNs were one value under the string key too); the stored field
+  *     holds the normalised value, 0.0;
+  *   - tags or fields containing `=` or `,` no longer collide (the string
+  *     key merged `{"a=b":"c"}` with `{"a":"b=c"}`);
+  *   - repeats keep `max(time_ns)`, not an arbitrary row's; stored maps
+  *     come out sorted by key.
+  *
   * Partitioning rationale at scale: bucket/measurement are the universal
   * query predicates (every Flux read starts `from(bucket) |> range |>
   * filter(_measurement)`, client.py:68-80), so they become partition
   * columns and reads prune to exactly the series touched. Time-range
-  * predicates then push into parquet row-group stats within a partition.
+  * predicates reach the parquet scan but prune no row group: `time` is
+  * written as INT96, which parquet keeps no statistics for.
   */
 object TelemetrySink {
 
@@ -44,27 +61,8 @@ object TelemetrySink {
         partitions.map(StructField(_, StringType, nullable = true)))
   }
 
-  /** Canonical serialization of the tag map (sorted `k=v` pairs) — MAP
-    * columns can't be grouping/dedup keys in Spark, and map_entries order
-    * is undefined, so the idempotence key uses this stable string. */
-  def canonicalTags(tags: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    concat_ws(",", array_sort(transform(
-      map_entries(coalesce(tags, map())),
-      e => concat(e.getField("key"), lit("="), e.getField("value")))))
-
-  /** Canonical serialization of BOTH field maps, for the idempotence key.
-    * Fields are part of the key because at-least-once delivery replays
-    * IDENTICAL rows — two points on the same series+timestamp with
-    * DIFFERENT fields are distinct data (InfluxDB would merge their field
-    * sets on one row; our point-per-row model keeps both rows and readers
-    * merge downstream), e.g. the 16 thermistor channel points a single
-    * ADAM poll emits with one shared tag set (lvm.py:400-418). */
-  def canonicalFields(fields: org.apache.spark.sql.Column,
-      fieldsStr: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    concat(canonicalTags(fields), lit("|"), canonicalTags(fieldsStr))
-
-  /** Write one batch: dedup on the idempotence key (measurement, tags,
-    * fields, time), default the bucket, append partitioned files. For batch
+  /** Write one batch: default the bucket, dedup on the idempotence key
+    * ([[dropKeyRepeats]]), append partitioned files. For batch
     * backfill (K3, `ingest_dataframe_to_influxdb`, tools.py:345-411);
     * the streaming sink goes through [[writeBatchIdempotent]] instead.
     *
@@ -93,20 +91,27 @@ object TelemetrySink {
   private def dedupOnKey(batch: DataFrame, defaultBucket: String): DataFrame =
     dropKeyRepeats(
       batch.withColumn(Point.Bucket, coalesce(col(Point.Bucket), lit(defaultBucket))))
-      .drop("__tags_key", "__fields_key")
 
-  /** `df` without repeats of the idempotence key (measurement, canonical
-    * tags, canonical fields, time), with the key columns `__tags_key` and
-    * `__fields_key` still on it. `withinWatermark` keeps a streaming
-    * dedup's state bounded by the stream's watermark. */
-  def dropKeyRepeats(df: DataFrame, withinWatermark: Boolean = false): DataFrame = {
-    val keyed = df
-      .withColumn("__tags_key", canonicalTags(col(Point.Tags)))
-      .withColumn("__fields_key",
-        canonicalFields(col(Point.Fields), col(Point.FieldsStr)))
-    val key = Seq(Point.Measurement, "__tags_key", "__fields_key", Point.Time)
-    if (withinWatermark) keyed.dropDuplicatesWithinWatermark(key)
-    else keyed.dropDuplicates(key)
+  private val MapColumns = Seq(Point.Tags, Point.Fields, Point.FieldsStr)
+
+  /** `df` (the [[Point]] columns, in any order) without repeats of the
+    * idempotence key (bucket, measurement, tags, fields, fields_str, time):
+    * one hash aggregate keyed on the maps, each coalesced to `{}`, keeping
+    * `max(time_ns)`. `max` ignores row order, so the optimizer drops a sort
+    * below it (a [[graft.batch.Backfill.read]] feeding [[writeBatch]]).
+    * The key's semantics are listed in the object doc.
+    *
+    * The three maps form ONE struct key: Spark projects each map grouping
+    * key's sort into a column of a list it builds from a hash map, so with
+    * three map keys the projection's column order, and with it the
+    * generated code, changes from plan to plan, and every micro-batch and
+    * backfill would compile a new class. */
+  private[graft] def dropKeyRepeats(df: DataFrame): DataFrame = {
+    val maps = struct(MapColumns.map(c => coalesce(col(c), map()).as(c)): _*)
+    df.groupBy(col(Point.Bucket), col(Point.Measurement), maps.as("__maps"), col(Point.Time))
+      .agg(max(col(Point.TimeNs)).as(Point.TimeNs))
+      .select(df.columns.map(c =>
+        if (MapColumns.contains(c)) col(s"__maps.$c").as(c) else col(c)): _*)
   }
 
   /** Exactly-once micro-batch commit: the batch id becomes a leaf
@@ -130,7 +135,7 @@ object TelemetrySink {
   /** Read-side half of the at-least-once contract (SURVEY §4): scan a
     * store written by [[writeBatch]]/[[writeBatchIdempotent]] and
     * collapse duplicates ACROSS `__batch` leaves on the idempotence key
-    * (measurement, canonical tags, canonical fields, time) — overlapping backfill re-runs
+    * ([[dropKeyRepeats]]) — overlapping backfill re-runs
     * each land in their own leaf, so only the reader can merge them.
     * Streaming leaves are exactly-once already; set `dedup = false` for
     * a pure-streaming store to skip the shuffle. `__batch` is dropped
@@ -138,9 +143,8 @@ object TelemetrySink {
     * [[StoreSchema]], so a store with no data file yet has no rows. */
   def readStore(spark: org.apache.spark.sql.SparkSession, outDir: String,
       dedup: Boolean = true): DataFrame = {
-    val raw = spark.read.schema(StoreSchema).parquet(outDir)
-    if (!dedup) raw.drop("__batch")
-    else dropKeyRepeats(raw).drop("__tags_key", "__fields_key", "__batch")
+    val raw = spark.read.schema(StoreSchema).parquet(outDir).drop("__batch")
+    if (dedup) dropKeyRepeats(raw) else raw
   }
 
   /** SURVEY §7.4 #2 — per-measurement WIDE typed tables (the InfluxDB
@@ -180,20 +184,26 @@ object TelemetrySink {
         // carrying the field) — stable under any shuffle/partitioning,
         // where a bare last(..., ignoreNulls) flips between conflicting
         // values across re-runs.
-        val wide = slice
-          .groupBy(col(Point.Time), col("__tags_key"))
-          .agg(
-            first(col(Point.Tags)).as(Point.Tags),
-            fields.map { f =>
-              val v = element_at(col(Point.Fields), f)
-              max_by(v, when(v.isNotNull, col("__fields_key"))).as(f)
-            }: _*)
-          .select((Seq(col(Point.Time), col(Point.Tags)) ++ fields.map(col)): _*)
+        val order = canonicalFields(col(Point.Fields), col(Point.FieldsStr))
+        val values = fields.map { f =>
+          val v = element_at(col(Point.Fields), f)
+          max_by(v, when(v.isNotNull, order)).as(f)
+        }
+        val wide = slice.groupBy(col(Point.Time), col(Point.Tags))
+          .agg(values.head, values.tail: _*)
         wide.write.mode(SaveMode.Append)
           .option("mergeSchema", "true")
           .parquet(s"$outDir/wide/measurement=${m}")
       }
     } finally deduped.unpersist()
+  }
+
+  /** Both field maps as sorted `k=v` strings: [[writeWideTables]]' order
+    * key for a deterministic per-field "last write wins". */
+  private def canonicalFields(fields: Column, fieldsStr: Column): Column = {
+    def pairs(m: Column) = concat_ws(",", array_sort(transform(map_entries(coalesce(m, map())),
+      e => concat(e.getField("key"), lit("="), e.getField("value")))))
+    concat(pairs(fields), lit("|"), pairs(fieldsStr))
   }
 
   // -------------------------------------------------------------------
@@ -264,7 +274,7 @@ object TelemetrySink {
         concat_ws("\n", array_sort(collect_list(col("line")))).as("payload"))
   }
 
-  /** Continuous sink: foreachBatch → [[writeBatch]], checkpointed. The
+  /** Continuous sink: foreachBatch → [[writeBatchIdempotent]], checkpointed. The
     * reference's 1000-point write batching (R18, tools.py:354) maps to the
     * micro-batch itself — trigger interval controls batch size. */
   def start(points: DataFrame, outDir: String, checkpointDir: String,

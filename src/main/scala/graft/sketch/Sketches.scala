@@ -257,12 +257,6 @@ object Sketches {
   def approxDistinct(c: Column, rsd: Double = 0.05): Column =
     approx_count_distinct(c, rsd)
 
-  /** Greenwald-Khanna quantiles: one pass, mergeable, error bounded by
-    * `1/accuracy` of rank. */
-  def approxQuantiles(df: DataFrame, col0: String,
-      probabilities: Seq[Double], relativeError: Double = 0.01): Seq[Double] =
-    df.stat.approxQuantile(col0, probabilities.toArray, relativeError).toSeq
-
   /** Count-min sketch of a key column: point-lookup frequency estimates
     * with ε=eps over-count bound. Returns the sketch's binary for reuse. */
   def countMin(df: DataFrame, keyCol: String, eps: Double = 0.001,

@@ -50,9 +50,14 @@ object SpoolFanIn {
     * past the parallel-discovery threshold (32 paths) that listing is a
     * Spark job with one task per file — 2.5 s for a 480-file catch-up
     * batch against 44 ms listed on the driver. Spool files are local to
-    * the driver that writes them, so the fan-in's streams list there. */
-  private val ListingConf =
-    Map(SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD.key -> "10000")
+    * the driver that writes them, so the fan-in's streams list there.
+    * The scan packs files up to `maxPartitionBytes` without first spreading
+    * them over the session's cores (`minPartitionNum` 1): a live trigger's
+    * 15–20 small files scan as one task per parse branch, while a large
+    * catch-up batch still splits by bytes. */
+  private val ScanConf = Map(
+    SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD.key -> "10000",
+    SQLConf.FILES_MIN_PARTITION_NUM.key -> "1")
 
   def stream(spark: SparkSession, sources: Seq[SpoolSource]): DataFrame = {
     require(sources.nonEmpty, "no spool sources")
@@ -62,7 +67,7 @@ object SpoolFanIn {
       s.name -> p.getFileSystem(hadoopConf).makeQualified(p)
     }.toMap
     checkDirs(sources, dirs, hadoopConf)
-    ScopedConf.frame(spark, ListingConf) { scoped =>
+    ScopedConf.frame(spark, ScanConf) { scoped =>
       val points = distinctBy(sources)(s => (s.readOptions, root(dirs(s.name))))
         .flatMap { group =>
           val raw = rawStream(scoped, group, dirs)

@@ -5,8 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.batch.Backfill
 import graft.control.Metrics
-import graft.model.TelemetryPoint
-import graft.streaming.StreamOps
 
 class BackfillMetricsSpec extends SparkSpec {
   import spark.implicits._
@@ -33,40 +31,6 @@ class BackfillMetricsSpec extends SparkSpec {
     val expected = e.filter(col("ts").between(
       lit(ts("2024-01-01 00:00:00")), lit(ts("2024-01-31 00:00:00")))).count()
     assert(total.count() == expected)
-  }
-
-  test("streaming dedupWithinWatermark drops idempotence-key repeats") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[TelemetryPoint]
-    def pt(v: Double) = TelemetryPoint("m", Map("a" -> "1"), Map("v" -> v), null,
-      ts("2024-01-01 00:00:00"), None, None)
-    val q = StreamOps.dedupWithinWatermark(
-        StreamOps.normalize()(in.toDF()))
-      .writeStream.queryName("dedup_mem").format("memory").outputMode("append").start()
-    try {
-      in.addData(pt(1.0), pt(1.0)) // same key (measurement, tags, fields, time)
-      q.processAllAvailable()
-      in.addData(pt(1.0)) // repeat in later batch, inside watermark
-      q.processAllAvailable()
-      assert(spark.sql("SELECT count(*) FROM dedup_mem").head().getLong(0) == 1)
-    } finally q.stop()
-  }
-
-  test("streaming dedupWithinWatermark keeps same-time same-tag points with different fields") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[TelemetryPoint]
-    // two channel points of one poll: one tag set, one time, distinct fields
-    def pt(channel: String) = TelemetryPoint("therm", Map("a" -> "1"), Map(channel -> 1.0),
-      null, ts("2024-01-01 00:00:00"), None, None)
-    val q = StreamOps.dedupWithinWatermark(StreamOps.normalize()(in.toDF()))
-      .writeStream.queryName("dedup_fields_mem").format("memory").outputMode("append").start()
-    try {
-      in.addData(pt("channel0"), pt("channel1"))
-      q.processAllAvailable()
-      val kept = spark.sql("SELECT fields FROM dedup_fields_mem").collect()
-        .flatMap(_.getAs[Map[String, Double]](0).keys).sorted.toSeq
-      assert(kept == Seq("channel0", "channel1"))
-    } finally q.stop()
   }
 
   test("metrics listener aggregates per-query progress") {

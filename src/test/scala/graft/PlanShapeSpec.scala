@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec, InputAdapt
   SortExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.text.Bpe
@@ -541,6 +542,114 @@ class PlanShapeSpec extends SparkSpec {
       val p = plan(q)
       assert("Window \\[".r.findAllIn(p).length == 1, s"$q: one Window expected\n$p")
     }
+  }
+
+  /** The executed plans of the `n` file writes `body` runs. */
+  private def writePlans(n: Int)(body: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        AQE.collect(qe.executedPlan) { case w: DataWritingCommandExec => w }.foreach(plans.add)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (plans.size < n && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    plans.toArray(Array.empty[SparkPlan]).toSeq
+  }
+
+  private def storePoints(n: Int): DataFrame = {
+    import spark.implicits._
+    import graft.model.TelemetryPoint
+    (0 until n).map(i => TelemetryPoint("pressure", Map("sensor" -> s"s${i % 3}"),
+      Map("pz" -> i.toDouble), null, new java.sql.Timestamp(1709251200000L + i * 60000L),
+      None, Some("archive"))).toDF()
+  }
+
+  test("sink writes dedup in one hash aggregate pair: no sort on the key, no key-string lambdas") {
+    import graft.sinks.TelemetrySink
+    val store = java.nio.file.Files.createTempDirectory("graft-sink-plan-").toString
+    val plans = writePlans(2) {
+      TelemetrySink.writeBatch(storePoints(24), store)
+      TelemetrySink.writeBatchIdempotent(storePoints(24), store, batchId = 0)
+    }
+    assert(plans.length == 2, plans.mkString("\n"))
+    plans.foreach { p =>
+      val s = p.toString
+      assert(AQE.collect(p) { case a: HashAggregateExec => a }.length == 2, s)
+      assert(!s.contains("SortAggregate") && !s.contains("ObjectHashAggregate"), s)
+      // the planned write sorts on its partition columns; nothing sorts on the key
+      AQE.collect(p) { case so: SortExec => so }.foreach { so =>
+        assert(so.sortOrder.flatMap(_.references.map(_.name))
+          .forall(Set("bucket", "measurement", "__batch")), s)
+      }
+      assert(!s.contains("concat_ws") && !s.contains("array_sort"), s)
+      // the one lambda left is Spark's own float normalisation of the
+      // `fields` grouping key (transform_values over normalizenanandzero)
+      assert(s.contains("transform_values"), s)
+      assert(lambdaBodies(s).nonEmpty && lambdaBodies(s).forall(_.contains("normalizenanandzero")), s)
+    }
+  }
+
+  test("Backfill.read feeding writeBatch plans no range partitioning; alone it still sorts") {
+    import graft.batch.Backfill
+    import graft.sinks.TelemetrySink
+    import org.apache.spark.sql.functions._
+    val rows = storePoints(48).select(col("tags")("sensor").as("sensor"), col("time"),
+      col("fields")("pz").as("pz"))
+    val t0 = new java.sql.Timestamp(1709251200000L)
+    def read() = Backfill.read(spark, t0, new java.sql.Timestamp(t0.getTime + 48 * 60000L),
+      chunkSeconds = 900, overlapSeconds = 300, "time", Seq("sensor", "time")) { c =>
+      rows.filter(col("time") >= lit(c.start) && col("time") < lit(c.end))
+    }
+    val times = read().collect().map(_.getAs[java.sql.Timestamp]("time").getTime).toSeq
+    assert(times.length == 48 && times == times.sorted)
+    val store = java.nio.file.Files.createTempDirectory("graft-backfill-plan-").toString
+    val plans = writePlans(1) {
+      TelemetrySink.writeBatch(read().select(lit("pressure").as("measurement"),
+        map(lit("sensor"), col("sensor")).as("tags"), map(lit("pz"), col("pz")).as("fields"),
+        lit(null).cast("map<string,string>").as("fields_str"), col("time"),
+        lit(null).cast("long").as("time_ns"), lit("archive").as("bucket")), store)
+    }
+    assert(plans.length == 1)
+    assert(!plans.head.toString.toLowerCase.contains("rangepartitioning"), plans.head.toString)
+    assert(TelemetrySink.readStore(spark, store).count() == 48)
+  }
+
+  test("spool fan-in: a few small files scan as one partition per branch; 480 files still split") {
+    import java.nio.file.Files
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.control.EngineConfig.SourceConf
+    import graft.sources.{SpoolFanIn, SpoolSource}
+    def scanPartitions(filesPerSource: Int): Seq[Int] = {
+      val root = Files.createTempDirectory("graft-fanin-pack-")
+      val sources = Seq("sens4" -> "@253ACKQ1.10E-04,2.00E-02,3.00E-03,25.40,x\\",
+          "lvm_thermistors" -> "!01000A").map { case (parser, reply) =>
+        val dir = Files.createDirectories(root.resolve(parser))
+        (0 until filesPerSource).foreach(i =>
+          Files.writeString(dir.resolve(f"r-$i%04d.txt"), s"$reply\t${1704067205000L + i}"))
+        SpoolSource(SourceConf(parser, "spool",
+          Map("path" -> dir.toString, "parser" -> parser), None, Map.empty))
+      }
+      val q = SpoolFanIn.stream(spark, sources).writeStream
+        .option("checkpointLocation", root.resolve("ck").toString)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch((_: DataFrame, _: Long) => ())
+        .start()
+      try q.awaitTermination() finally q.stop()
+      q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan.collect {
+        case s: FileSourceScanExec => s.inputRDD.getNumPartitions
+      }
+    }
+    // one parse branch per parser, each scanning the fan-in's files
+    assert(scanPartitions(10) == Seq(1, 1))
+    val catchUp = scanPartitions(240)
+    assert(catchUp.length == 2 && catchUp.forall(_ > 1), catchUp)
   }
 
   /** Collects through adaptive plans and their query stages. */

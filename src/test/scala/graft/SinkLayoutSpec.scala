@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.model.TelemetryPoint
 import graft.sinks.TelemetrySink
-import graft.streaming.StreamOps
 
 class SinkLayoutSpec extends SparkSpec {
   import spark.implicits._
@@ -107,26 +106,6 @@ class SinkLayoutSpec extends SparkSpec {
     } finally q.stop()
     val stored = spark.read.parquet(out)
     assert(stored.count() == 4 && stored.filter(col("time").isNull).count() == 0)
-  }
-
-  test("streamingPivot widens the field map on a live stream") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[TelemetryPoint]
-    val wide = StreamOps.streamingPivot(in.toDF(), "1 minute", Seq("temp", "rh"))
-    val q = wide.writeStream.queryName("pivot_mem").format("memory")
-      .outputMode("complete").start()
-    try {
-      in.addData(
-        pt("weather", "sensors", "2024-01-01 00:00:10", Map("temp" -> 20.0)),
-        pt("weather", "sensors", "2024-01-01 00:00:20", Map("rh" -> 40.0)),
-        pt("weather", "sensors", "2024-01-01 00:01:10", Map("temp" -> 21.0)))
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT window.start AS s, temp, rh FROM pivot_mem ORDER BY s")
-        .collect()
-      assert(rows.length == 2)
-      assert(rows(0).getAs[Double]("temp") == 20.0 && rows(0).getAs[Double]("rh") == 40.0)
-      assert(rows(1).getAs[Double]("temp") == 21.0 && rows(1).isNullAt(2))
-    } finally q.stop()
   }
 
   test("lineProtocol: golden lines — escaping, sorted tags/fields, ns time") {

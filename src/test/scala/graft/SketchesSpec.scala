@@ -13,15 +13,6 @@ class SketchesSpec extends SparkSpec {
     assert(math.abs(approx - exact).toDouble / exact < 0.15)
   }
 
-  test("approx quantiles bracket exact percentiles") {
-    val li = Tables.lineitem(spark, sf())
-    val Seq(q50, q99) = Sketches.approxQuantiles(li, "l_quantity", Seq(0.5, 0.99), 0.01)
-    val exact = li.select(expr("percentile(l_quantity, 0.5)"),
-      expr("percentile(l_quantity, 0.99)")).as[(Double, Double)].head()
-    assert(math.abs(q50 - exact._1) <= 2.0)
-    assert(math.abs(q99 - exact._2) <= 2.0)
-  }
-
   test("histogram bins stay exact past 2^53 (integral floor division pinned)") {
     // The q100 oracle's `//` is true integer division; the IEEE path
     // (floor(a/b) on doubles) is only exact below 2^53. The testdata's

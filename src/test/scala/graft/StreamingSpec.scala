@@ -54,14 +54,4 @@ class StreamingSpec extends SparkSpec {
     assert(out(0).getAs[Double]("mean") == 2.0 && out(0).getAs[Long]("n") == 2)
     assert(out(1).getAs[Double]("max") == 10.0)
   }
-
-  test("sessionStats groups by activity gap") {
-    val df = Seq(
-      pt("m", "2024-01-01 00:00:00", 1.0),
-      pt("m", "2024-01-01 00:00:30", 2.0), // same session (gap < 1m)
-      pt("m", "2024-01-01 00:10:00", 3.0)).toDF() // new session
-    val out = StreamOps.sessionStats(df, "1 minute").collect()
-    assert(out.length == 2)
-    assert(out.map(_.getAs[Long]("n")).sorted.toSeq == Seq(1L, 2L))
-  }
 }
