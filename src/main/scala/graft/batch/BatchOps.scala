@@ -26,14 +26,6 @@ object BatchOps {
   def timeRange(df: DataFrame, tsCol: String, start: Timestamp, end: Timestamp): DataFrame =
     df.filter(col(tsCol).between(lit(start), lit(end)))
 
-  /** R9 — drop rows where every value column is null (tools.py:239). */
-  def dropAllNullRows(df: DataFrame, valueCols: Seq[String]): DataFrame =
-    df.filter(valueCols.map(col(_).isNotNull).reduce(_ || _))
-
-  /** R10 — drop rows null in any of the key columns (tools.py:245). */
-  def dropNullKeys(df: DataFrame, keyCols: Seq[String]): DataFrame =
-    df.na.drop(keyCols)
-
   /** R17 — last-value watermark: max event time per series, the incremental
     * poll offset (lco.py:116-122). A partial-aggregate `max`, so each
     * executor contributes one row before the final reduce. */

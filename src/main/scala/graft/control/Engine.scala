@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.yaml.snakeyaml.Yaml
 import graft.model.Point
-import graft.sources.{ActorPushSource, AmqpPushSource, LiveSource, ReplaySource, SpoolBacked, SpoolFanIn, SpoolSource, TelemetrySource}
+import graft.sources.{ActorPushSource, AmqpPushSource, HttpSource, LiveSource, ReplaySource, SpoolBacked, SpoolFanIn, SpoolSource, TelemetrySource}
 import graft.sinks.TelemetrySink
 import graft.streaming.StreamOps
 
@@ -139,10 +139,11 @@ final class Engine(spark: SparkSession) {
   /** One source per config entry, by its `type` — the Spark form of
     * `get_source_subclass` (source.py:232-244):
     *   - `replay`: point-schema parquet replay (`path`)
-    *   - `spool`: raw-reply spool directory + a wire parser
-    *     (`path`, `parser` ∈ govee|sens4|ln2_scale|lvm_thermistors,
-    *     plus per-parser options) — the config-driven form of the full
-    *     poll → parse pipeline (etc/cerebro.yaml source entries)
+    *   - `spool`: raw-reply spool directory + a wire parser (`path`,
+    *     `parser` ∈ govee|sens4|ln2_scale|lvm_thermistors|
+    *     check_file_exists|drift|amqp|tpm|actor_replies|http, plus
+    *     per-parser options) — the config-driven form of the full poll →
+    *     parse pipeline (etc/cerebro.yaml source entries)
     *   - `tcp` / `udp`: LIVE device conversation ([[graft.sources.NetPoll]]
     *     socket poll on a driver thread → spool → the same parsers) —
     *     the reference's production source shape (`TCPSource(host, port,
@@ -152,6 +153,9 @@ final class Engine(spark: SparkSession) {
     *   - `amqp`: S11 live RabbitMQ (AMQP.py) — topic-exchange reply
     *     consumer + periodic command publishes; `exchange`, `keywords:`
     *     (required), `groupers:`, `commands:`
+    *   - `http`: S15/S16 LCO environment-API poller (lco.py) — `url`
+    *     GET with a second-truncated `start_ts` watermark every `delay`
+    *     seconds (default 60); implies `parser: http`
     *   - `actor`: live actor-reply push connection */
   def buildSources(config: Config): Seq[TelemetrySource] =
     config.sources.map { c =>
@@ -160,6 +164,7 @@ final class Engine(spark: SparkSession) {
         case "spool" => SpoolSource(c)
         case "tcp" | "udp" | "drift" => LiveSource(c)
         case "amqp" => AmqpPushSource(c)
+        case "http" => HttpSource(c)
         case "actor" => ActorPushSource(c)
         case other => throw new IllegalArgumentException(s"unknown source type: $other")
       }
@@ -258,15 +263,10 @@ final class Engine(spark: SparkSession) {
 
   def stop(name: String): Unit = queries.get(name).foreach(_.stop())
 
-  /** Stop live sources' poll and consumer threads (spools stay
-    * readable) — call before draining with `processAllAvailable`, which
-    * can never settle while a poller keeps appending spool files. */
-  def stopPolling(): Unit = built.foreach {
-    case l: LiveSource => l.stopPolling()
-    case a: ActorPushSource => a.stopPush()
-    case a: AmqpPushSource => a.stopConsuming()
-    case _ => ()
-  }
+  /** Stop every source's writer thread (spools stay readable) — call
+    * before draining with `processAllAvailable`, which can never settle
+    * while a poller keeps appending spool files. */
+  def stopPolling(): Unit = built.foreach(_.stopWriter())
 
   def stopAll(): Unit = {
     stopPolling()

@@ -104,7 +104,5 @@ final case class AmqpPushSource(conf: SourceConf) extends SpoolBacked {
       conf.options + ("path" -> spoolDir) + ("parser" -> "amqp")))
   }
 
-  /** Stop the consumer and wait for its thread, so "stopped" means the
-    * spool is frozen (spool and stream remain readable). */
-  def stopConsuming(): Unit = if (consumer != null) consumer.stop()
+  override def stopWriter(): Unit = if (consumer != null) consumer.stop()
 }

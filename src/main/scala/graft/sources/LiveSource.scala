@@ -94,7 +94,7 @@ final case class LiveSource(conf: SourceConf) extends SpoolBacked {
     // downstream SpoolSource will reject (no 'parser' — nothing could
     // turn replies into points) must fail here, NOT after the poll
     // thread has started conversing with a live device it would then
-    // orphan (stopPolling is never reached on a failed start).
+    // orphan (stopWriter is never reached on a failed start).
     val p = parser
     val fn = pollFn()
     val retentionMs = opt("retention_ms").map(_.toLong).getOrElse(0L)
@@ -116,6 +116,5 @@ final case class LiveSource(conf: SourceConf) extends SpoolBacked {
       readOptions = if (retentionMs > 0) Map("ignoreMissingFiles" -> "true") else Map.empty)
   }
 
-  /** Stop the poll thread (spool and stream remain readable). */
-  def stopPolling(): Unit = if (poller != null) poller.stop()
+  override def stopWriter(): Unit = if (poller != null) poller.stop()
 }

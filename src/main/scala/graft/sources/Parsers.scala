@@ -226,6 +226,21 @@ object Parsers {
       bucket.cast(StringType).as(Point.Bucket)) ++ rawCarried(raw): _*)
   }
 
+  private val LcoRow = StructType(Seq(StructField("ts", LongType),
+    StructField("measurement", StringType), StructField("value", DoubleType)))
+
+  /** S15/S16 — an LCO environment row as [[HttpSource]] spools it
+    * (`{"ts": <epochMillis>, "measurement": ..., "value": ...}`,
+    * lco.py:116-140) → one point at the row's own event time with field
+    * `value`. Lines that do not parse are dropped. */
+  def lcoRows(raw: DataFrame, bucket: Column): DataFrame = {
+    def row(f: String): Column = col(s"__lco.$f")
+    raw.select(from_json(col("raw"), LcoRow).as("__lco") +: rawCarried(raw): _*)
+      .filter(row("ts").isNotNull && row("measurement").isNotNull)
+      .select(pointCols(row("measurement"), map(), map(lit("value"), row("value")),
+        timestamp_millis(row("ts")), bucket) ++ rawCarried(raw): _*)
+  }
+
   /** S12/S13 wire lines ([[ModbusPoll.DriftPollFn]] spool format
     * `name\tvalue\tunits\toffset`, one device read per line) lifted into
     * the [[driftDevices]] readings frame — the live-Modbus half of the

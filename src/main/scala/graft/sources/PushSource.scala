@@ -221,6 +221,5 @@ final case class ActorPushSource(conf: graft.control.EngineConfig.SourceConf)
       bucket = bucket.getOrElse("sensors"))
   }
 
-  /** Stop the push connection (spool and stream remain readable). */
-  def stopPush(): Unit = if (pusher != null) pusher.stop()
+  override def stopWriter(): Unit = if (pusher != null) pusher.stop()
 }

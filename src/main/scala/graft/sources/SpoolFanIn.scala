@@ -175,6 +175,7 @@ object SpoolFanIn {
       case "amqp" => Parsers.amqpReplies(mine, list(head, "keywords"), list(head, "groupers"),
         str("measurement_prefix", "reply."), bucket)
       case "tpm" => Parsers.tpmSnapshot(mine, bucket)
+      case "http" => Parsers.lcoRows(mine, bucket)
       case "actor_replies" => actorReplies(mine, head).withColumn(Source, lit(head.name))
       case other => throw new IllegalArgumentException(s"${head.name}: unknown parser '$other'")
     }

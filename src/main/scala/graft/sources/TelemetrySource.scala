@@ -14,6 +14,9 @@ trait TelemetrySource {
   def tags: Map[String, String]
   /** Build the streaming DataFrame. Must conform to [[Point.schema]]. */
   def stream(spark: SparkSession): DataFrame
+  /** Stop the source's writer thread, if it has one, and wait for it, so
+    * "stopped" means its spool is frozen (spool and stream stay readable). */
+  def stopWriter(): Unit = ()
 }
 
 /** Replay source: streams point-schema parquet from a directory via

@@ -37,19 +37,6 @@ object Transforms {
     }
   }
 
-  /** T6 — staleness filter (cerebro/sources/lvm.py:80-82): drop points whose
-    * device timestamp is older than `2 * delay` relative to `now`. In
-    * streaming use [[graft.streaming.StreamOps.normalize]]'s watermark instead;
-    * this is the batch form with an explicit reference clock column.
-    */
-  def stalenessFilter(tsCol: Column, now: Column, maxLagSeconds: Long): Column =
-    now.cast("long") - tsCol.cast("long") <= maxLagSeconds
-
-  /** T7 — identity guard (lvm.py:88-93): keep replies from the configured
-    * device address only. */
-  def identityGuard(df: DataFrame, addrCol: String, expected: String): DataFrame =
-    df.filter(col(addrCol) === lit(expected))
-
   /** T8 — relay decode (cerebro/sources/drift.py:149-151):
     * "closed" => true, "open" => false, anything else null. */
   def relayDecode(c: Column): Column =
@@ -117,9 +104,4 @@ object Transforms {
     }
     df.select(cols: _*)
   }
-
-  /** T2 (JSON form) — parse a JSON string column against a schema, then
-    * flatten it into dotted columns (the reference's AMQP reply bodies). */
-  def flattenJson(df: DataFrame, jsonCol: String, schema: StructType, sep: String = "."): DataFrame =
-    flattenStructs(df.withColumn(jsonCol, from_json(col(jsonCol), schema)), sep)
 }

@@ -272,7 +272,7 @@ class AmqpE2ESpec extends SparkSpec {
       waitFor("reconnected after rebind", 30000)(broker.hasConsumer)
       broker.deliver("reply.archon", """{"status":{"temperature":22.0},"controller":"sp2"}""")
       waitFor("post-rebind delivery spooled")(spooled >= 2)
-      src.stopConsuming()
+      src.stopWriter()
       val q = stream.writeStream.format("memory").queryName("amqp_pts")
         .outputMode("append").start()
       try q.processAllAvailable() finally q.stop()
@@ -282,7 +282,7 @@ class AmqpE2ESpec extends SparkSpec {
       val byTag = rows.map(r => r.getAs[Map[String, String]]("tags")("controller") ->
         r.getAs[Map[String, Double]]("fields")("status.temperature")).toMap
       assert(byTag == Map("sp1" -> 21.0, "sp2" -> 22.0))
-    } finally { src.stopConsuming(); broker.stop() }
+    } finally { src.stopWriter(); broker.stop() }
   }
 
   private def waitFor(what: String, timeoutMs: Long = 15000)(cond: => Boolean): Unit = {

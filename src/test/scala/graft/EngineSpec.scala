@@ -343,7 +343,7 @@ class EngineSpec extends SparkSpec {
     // thread runs (failing into backoff) until stopped
     val port = { val s = new java.net.ServerSocket(0); try s.getLocalPort finally s.close() }
     val work = Files.createTempDirectory("graft-stopall-work-").toString
-    val spools = Seq("lv", "ac", "aq").map(n => n -> Files.createTempDirectory(s"graft-stopall-$n-")).toMap
+    val spools = Seq("lv", "ac", "aq", "ht").map(n => n -> Files.createTempDirectory(s"graft-stopall-$n-")).toMap
     val cfg = EngineConfig.parse(
       s"""
          |sources:
@@ -351,10 +351,11 @@ class EngineSpec extends SparkSpec {
          |  ac: {type: actor, host: 127.0.0.1, port: $port, actor: boss, path: '${spools("ac")}'}
          |  aq: {type: amqp, host: 127.0.0.1, port: $port, exchange: actor_exchange,
          |       keywords: [status.temperature], path: '${spools("aq")}'}
+         |  ht: {type: http, url: "http://127.0.0.1:$port/env", path: '${spools("ht")}'}
          |observers:
          |  stopall: {type: memory}
          |""".stripMargin)
-    val threads = Set("graft-poller-lv", "graft-push-ac", "graft-amqp-aq")
+    val threads = Set("graft-poller-lv", "graft-push-ac", "graft-amqp-aq", "graft-http-ht")
     def alive(): Set[String] = Thread.getAllStackTraces.keySet.toArray
       .map(_.asInstanceOf[Thread]).filter(_.isAlive).map(_.getName).toSet.intersect(threads)
     val engine = new Engine(spark)

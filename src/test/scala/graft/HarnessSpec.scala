@@ -142,6 +142,98 @@ class HarnessSpec extends SparkSpec {
     assert(hits.isEmpty, s"environment reads outside the allowlist:\n${hits.mkString("\n")}")
   }
 
+  // Members of top-level objects in src/main that nothing in src/main or
+  // perfbench calls, each with the reason it stays. The census below
+  // fails on a new one, and on an entry here that has gained a caller.
+  private val CallerlessAllowed = Map(
+    "Bench" -> "entry point: bench.sh and `runMain graft.Bench`",
+    "GenScale" -> "entry point: `runMain graft.GenScale` writes the 16x corpus",
+    "BatchOps.watermarks" -> "R17 batch form of the last-value watermark (OperatorsSpec)",
+    "Bucketing" -> "bucketed-layout library API (BucketingSpec)",
+    "Bucketing.writeBucketed" -> "bucketed-layout library API (BucketingSpec)",
+    "Bucketing.colocatedJoin" -> "bucketed-layout library API (BucketingSpec)",
+    "Bucketing.isShuffleFree" -> "plan check for a colocated join (BucketingSpec)",
+    "Dedup.containmentBlockedVolume" -> "dry-run price of the pair gate's postings path (DedupSpec)",
+    "Dedup.hashedShingles" -> "Column form of the shingle hashes the kernels compute (DedupSpec)",
+    "Dedup.minhashFromHashes" -> "Column form of the minhash signature (DedupSpec)",
+    "Multimodal.repartitionForDecode" -> "multimodal library API (MultimodalSpec)",
+    "Multimodal.resizeImages" -> "multimodal library API (MultimodalSpec)",
+    "Multimodal.sampleFrames" -> "multimodal library API (MultimodalSpec)",
+    "Parsers.checkFileExistsPoll" -> "S6 poll fn for a PollingSource (ParsersSpec)",
+    "PhraseIndex.phraseSearchPruned" -> "phrase search over a persisted layout (PhraseIndexSpec)",
+    "PhraseIndex.writePostingsLayout" -> "writes the layout phraseSearchPruned reads (PhraseIndexSpec)",
+    "Quality.boilerplateLines" -> "cross-document boilerplate finder (QualitySpec)",
+    "Quality.hashKeep" -> "deterministic hash sample for reproducible splits (QualitySpec)",
+    "Rolling.rollingCount" -> "single-window form of withRollingColumns (PropertiesSpec)",
+    "Rolling.rollingMax" -> "R12 single-window form of withRollingColumns (OperatorsSpec)",
+    "Rolling.rollingMean" -> "R11 single-window form of withRollingColumns (OperatorsSpec)",
+    "Selection.hashedDsirWeights" -> "DSIR over hashed features for a web-scale vocabulary (SelectionSpec)",
+    "Similarity.lshTopKBanded" -> "ANN variant whose recall RecallSpec measures",
+    "Similarity.lshTopKMultiProbe" -> "ANN variant whose recall RecallSpec measures",
+    "Sketches.approxDistinct" -> "sketch library API (SketchesSpec)",
+    "Sketches.bloom" -> "sketch library API (SketchesSpec)",
+    "Sketches.countMin" -> "sketch library API (SketchesSpec)",
+    "Sketches.hllDistinct" -> "sketch library API (SketchSpec, HllStreamSpec)",
+    "StreamingDedup.exactDedupTtl" -> "bounded-state TTL form of exactDedup (StreamingDedupSpec)",
+    "TelemetryQuery.fromDF" -> "query builder over a caller's frame (TelemetryQuerySpec)",
+    "TelemetrySink.lineProtocolBatches" -> "InfluxDB line-protocol export of the store (SinkLayoutSpec)",
+    "TelemetrySink.readStore" -> "store read for callers outside the query layer (SinkLayoutSpec)",
+    "TelemetrySink.writeWideTables" -> "wide per-measurement layout (WideSinkSpoolSpec)",
+    "Transforms.bitUnpack" -> "T12 reference operator (TransformsSpec)",
+    "Transforms.dewPoint" -> "R13 reference operator (TransformsSpec)",
+    "Transforms.fahrenheitToCelsius" -> "R8 reference operator (TransformsSpec)",
+    "Transforms.flattenStructs" -> "T2 reference operator (TransformsSpec)",
+    "Transforms.floatsToF32" -> "R14 reference operator (TransformsSpec)",
+    "Transforms.relayDecode" -> "T8 reference operator (TransformsSpec)")
+
+  // A member of a top-level object is called if its name is used as a word
+  // on a code line (not a comment) of src/main or perfbench that does not
+  // declare that name. Plain `private`/`protected` members and objects are
+  // left out; qualified ones (`private[graft]`) count as public.
+  test("every public member of a top-level object in src/main has a caller") {
+    import java.nio.file.{Files, Path, Paths}
+    def files(root: String, exts: String*): List[Path] = {
+      val walk = Files.walk(Paths.get(root))
+      try walk.iterator().asScala.filter(f => exts.exists(f.toString.endsWith)).toList
+      finally walk.close()
+    }
+    val mainFiles = files("src/main", ".scala", ".java")
+    val obj = """^((?:(?:final|case|sealed|private\[\w+\]|private|protected)\s+)*)object\s+(\w+)""".r
+    val member = """^  ((?:(?:final|implicit|private\[\w+\]|private|protected)\s+)*)def\s+(\w+)""".r
+    val hidden = """\b(?:private|protected)\b(?!\[)""".r
+    val declared = mainFiles.flatMap { f =>
+      var owner: Option[String] = None
+      Files.readAllLines(f).asScala.flatMap { line =>
+        obj.findPrefixMatchOf(line) match {
+          case Some(m) =>
+            owner = Some(m.group(2)).filter(_ => hidden.findFirstIn(m.group(1)).isEmpty)
+            owner.map(o => o -> o)
+          case None if line.nonEmpty && !line.head.isWhitespace && line.head != '}' =>
+            owner = None
+            None
+          case None => for {
+            o <- owner
+            m <- member.findPrefixMatchOf(line) if hidden.findFirstIn(m.group(1)).isEmpty
+          } yield m.group(2) -> s"$o.${m.group(2)}"
+        }
+      }
+    }
+    assert(declared.size > 100, s"census scan found only ${declared.size} declarations")
+    val declares = """\b(?:def|object|class|trait|val)\s+(\w+)""".r
+    val word = "\\w+".r
+    val used = (mainFiles ++ files("perfbench", ".scala", ".py", ".sh")).iterator
+      .flatMap(f => Files.readAllLines(f).asScala)
+      .filterNot(l => Seq("//", "*", "/*").exists(l.trim.startsWith))
+      .flatMap(l => word.findAllIn(l).toSet -- declares.findAllMatchIn(l).map(_.group(1)))
+      .toSet
+    val callerless = declared.collect { case (name, full) if !used(name) => full }.toSet
+    val unexplained = callerless -- CallerlessAllowed.keySet
+    val stale = CallerlessAllowed.keySet -- callerless
+    assert(unexplained.isEmpty, s"no caller in src/main or perfbench (wire it, move it to " +
+      s"src/test, or delete it): ${unexplained.toSeq.sorted.mkString(", ")}")
+    assert(stale.isEmpty, s"allowlisted but now called or gone: ${stale.toSeq.sorted.mkString(", ")}")
+  }
+
   /** `file:line: text` of every line under `root` that `hit` flags. */
   private def grepScala(root: String)(hit: (String, String) => Boolean): List[String] = {
     val base = java.nio.file.Paths.get(root)

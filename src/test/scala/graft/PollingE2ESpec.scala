@@ -7,6 +7,7 @@ import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
+import graft.control.{Engine, EngineConfig}
 import graft.control.EngineConfig.SourceConf
 import graft.sources.{Backoff, NetPoll, PollingSource, SpoolFanIn, SpoolSource}
 import graft.sinks.TelemetrySink
@@ -81,6 +82,51 @@ final class LoopbackTcpDevice(reqTerminator: Byte, reply: String => String) {
 /** End-to-end ingest path: driver-side poller → file spool → streaming
   * parse (sens4 protocol) → normalize → idempotent parquet sink — the full
   * SURVEY.md §3.1 daemon shape with a fake device instead of a socket. */
+/** Loopback LCO environment API (lco.py:116-122 shape): `GET
+  * ?start_ts=<ISO seconds>` returns the rows with `ts >= start_ts` —
+  * INCLUSIVE, like an API that re-sends the boundary second the
+  * reference's truncated resume point re-requests — followed by the
+  * `malformed` entries verbatim. Records every request's query string. */
+final class LoopbackEnvApi {
+  val rows = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Double)]()
+  val malformed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  val requests = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  @volatile private var server = bind(0)
+  val port: Int = server.getAddress.getPort
+  def url: String = s"http://127.0.0.1:$port/env/seeing"
+
+  private def bind(port: Int): com.sun.net.httpserver.HttpServer = {
+    val s = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", port), 0)
+    s.createContext("/env/seeing", (ex: com.sun.net.httpserver.HttpExchange) => {
+      val q = Option(ex.getRequestURI.getQuery).getOrElse("")
+      requests.add(q)
+      val startTs = q.split("&").collectFirst {
+        case kv if kv.startsWith("start_ts=") =>
+          java.time.LocalDateTime.parse(kv.stripPrefix("start_ts="))
+            .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
+      }.getOrElse(0L)
+      val good = rows.toArray(Array.empty[(Long, Double)]).filter(_._1 >= startTs).sortBy(_._1)
+        .map { case (ts, v) =>
+          val iso = java.time.LocalDateTime.ofInstant(
+            java.time.Instant.ofEpochMilli(ts), java.time.ZoneOffset.UTC)
+          s"""{"ts":"$iso","measurement":"seeing","value":$v}"""
+        }
+      val body = (good ++ malformed.toArray(Array.empty[String]))
+        .mkString("[", ",", "]").getBytes(UTF_8)
+      ex.sendResponseHeaders(200, body.length)
+      ex.getResponseBody.write(body)
+      ex.close()
+    })
+    s.start()
+    s
+  }
+
+  def stop(): Unit = server.stop(0)
+  /** Rebind on the SAME port — the service coming back after an outage. */
+  def restart(): Unit = server = bind(port)
+}
+
 class PollingE2ESpec extends SparkSpec {
 
   test("poller -> spool -> parser -> normalize -> sink, with failure isolation") {
@@ -359,5 +405,109 @@ class PollingE2ESpec extends SparkSpec {
       val named = result.filter(element_at(col("tags"), "channel_name") === "ln2_r1")
       assert(named.count() >= 2)
     } finally { src.stop(); server.close() }
+  }
+
+  /** An engine with one `type: http` source `dimm` and one parquet
+    * observer `lco`, on `work` (store and checkpoint) and `spool`. */
+  private def httpEngine(api: LoopbackEnvApi, work: String, spool: String): Engine = {
+    val engine = new Engine(spark)
+    engine.start(EngineConfig.parse(
+      s"""
+         |sources:
+         |  dimm: {type: http, url: "${api.url}", delay: 0.05, path: '$spool'}
+         |observers:
+         |  lco: {type: parquet}
+         |""".stripMargin), work)
+    engine
+  }
+
+  /** `ts` of every row in the source's published spool files, sorted. */
+  private def spooledTs(spool: String): Seq[Long] =
+    Option(new java.io.File(spool).listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.endsWith(".txt")).toSeq
+      .flatMap(f => Files.readAllLines(f.toPath).toArray.toSeq.map(_.toString))
+      .map(l => "\"ts\":([0-9]+)".r.findFirstMatchIn(l).get.group(1).toLong).sorted
+
+  /** `(event time ms, value)` of every stored point, duplicates kept. */
+  private def stored(work: String): Seq[(Long, Double)] = {
+    spark.streams.active.filter(_.name == "lco").foreach(_.processAllAvailable())
+    TelemetrySink.readStore(spark, s"$work/data/lco", dedup = false).collect().toSeq
+      .map(r => (r.getAs[java.sql.Timestamp]("time").getTime,
+        r.getAs[Map[String, Double]]("fields")("value")))
+      .sorted
+  }
+
+  // 1700000002000 ms is 2023-11-14T22:13:22Z
+  private val seeing = Seq((1700000001500L, 0.8), (1700000002000L, 0.9),
+    (1700000003000L, 1.1), (1700000004000L, 1.3))
+
+  test("S15/S16 http source from YAML: second-truncated resume, boundary row once, outage and rebind") {
+    val api = new LoopbackEnvApi
+    seeing.take(2).foreach(api.rows.add)
+    val work = Files.createTempDirectory("graft-http-work-").toString
+    val spool = Files.createTempDirectory("graft-http-spool-").toString
+    val engine = httpEngine(api, work, spool)
+    try {
+      waitFor("first fetch spooled")(spooledTs(spool).size == 2)
+      assert(stored(work) == seeing.take(2), "event time must be the row's ts")
+
+      // the next request carries the last row's ts truncated to seconds,
+      // and the inclusive server re-sends that row
+      waitFor("a resumed request")(
+        api.requests.toArray.exists(_.toString == "start_ts=2023-11-14T22:13:22"))
+      api.rows.add(seeing(2))
+      waitFor("incremental fetch")(spooledTs(spool).size == 3)
+      assert(stored(work) == seeing.take(3))
+
+      // outage: the poller backs off from the SAME watermark
+      api.stop()
+      api.rows.add(seeing(3))
+      Thread.sleep(300)
+      api.restart()
+      waitFor("post-outage fetch")(spooledTs(spool).size == 4)
+      Thread.sleep(200) // a few more polls re-send the boundary row
+      assert(spooledTs(spool) == seeing.map(_._1))
+      assert(stored(work) == seeing)
+    } finally { engine.stopAll(); api.stop() }
+  }
+
+  test("S15/S16 http source restarted on its spool and checkpoint fetches only newer rows") {
+    val api = new LoopbackEnvApi
+    seeing.take(2).foreach(api.rows.add)
+    val work = Files.createTempDirectory("graft-http-restart-work-").toString
+    val spool = Files.createTempDirectory("graft-http-restart-spool-").toString
+    val first = httpEngine(api, work, spool)
+    try {
+      waitFor("first fetch spooled")(spooledTs(spool).size == 2)
+      assert(stored(work) == seeing.take(2))
+    } finally first.stopAll()
+
+    api.rows.add(seeing(2))
+    val before = api.requests.size()
+    val second = httpEngine(api, work, spool)
+    try {
+      waitFor("fetch after restart")(spooledTs(spool).size == 3)
+      // the new poller's watermark is the spool's last ts, not 0
+      val after = api.requests.toArray.drop(before).map(_.toString).toSeq
+      assert(after.headOption.contains("start_ts=2023-11-14T22:13:22"), after)
+      assert(spooledTs(spool) == seeing.take(3).map(_._1))
+      assert(stored(work) == seeing.take(3))
+    } finally { second.stopAll(); api.stop() }
+  }
+
+  test("S15/S16 http source skips a malformed row without stopping the poller") {
+    val api = new LoopbackEnvApi
+    api.rows.add(seeing.head)
+    api.malformed.add("""{"ts":"not a time","measurement":"seeing","value":1.0}""")
+    api.malformed.add("""{"ts":"2023-11-14T22:13:30","measurement":"seeing"}""")
+    val work = Files.createTempDirectory("graft-http-bad-work-").toString
+    val spool = Files.createTempDirectory("graft-http-bad-spool-").toString
+    val engine = httpEngine(api, work, spool)
+    try {
+      waitFor("first fetch spooled")(spooledTs(spool).size == 1)
+      api.rows.add(seeing(1))
+      waitFor("the poller keeps fetching")(spooledTs(spool).size == 2)
+      assert(stored(work) == seeing.take(2))
+    } finally { engine.stopAll(); api.stop() }
   }
 }

@@ -209,7 +209,7 @@ class PushE2ESpec extends SparkSpec {
           fs != null && fs.count(_.getName.endsWith(".json")) >= 2
       }
       Thread.sleep(400) // last flushed chunk lands
-      src.stopPush()
+      src.stopWriter()
       val out = Files.createTempDirectory("graft-actorpush-out-").toString
       val q = points.writeStream.format("parquet")
         .option("path", s"$out/data")
@@ -227,7 +227,7 @@ class PushE2ESpec extends SparkSpec {
       assert(tags("site") == "lab")
       assert(result.select("bucket").distinct().as[String].collect().toSeq
         == Seq("sensors"))
-    } finally { src.stopPush(); server.stop() }
+    } finally { src.stopWriter(); server.stop() }
   }
 
   test("push spool retention keeps the directory bounded without losing unread-but-recent data") {

@@ -238,7 +238,7 @@ class SpoolFanInSpec extends SparkSpec {
     val live = LiveSource(SourceConf("lv", "tcp", Map("host" -> "127.0.0.1",
       "port" -> port.toString, "parser" -> "sens4", "retention_ms" -> "3600000",
       "path" -> Files.createTempDirectory("graft-fanin-live-").toString), None, Map.empty))
-    val readOptions = try live.spool().readOptions finally live.stopPolling()
+    val readOptions = try live.spool().readOptions finally live.stopWriter()
     assert(readOptions == Map("ignoreMissingFiles" -> "true"))
 
     // a batch plans its files at listing time; SweptFileSystem deletes a

@@ -85,7 +85,7 @@ class SupervisedSpec extends AnyFunSuite {
       (1 to 3).foreach(i =>
         broker.deliver("reply.archon", s"""{"status":{"temperature":$i.0}}"""))
       waitFor("three deliveries spooled")(spool.list().length >= 3)
-    } finally { src.stopConsuming(); broker.stop() }
+    } finally { src.stopWriter(); broker.stop() }
     val names = spool.list().toSeq
     val named = "lvm_amqp-([0-9a-f]+)-([0-9]+)\\.txt".r
     assert(names.forall(named.matches), s"unexpected spool files: $names")
